@@ -51,9 +51,51 @@ object Bench {
     (System.nanoTime() - t0) / 1e9
   }
 
-  private final case class QRes(
+  private[graft] final case class QRes(
       name: String, median: Double, min: Double, max: Double, err: Option[String],
       jobs: Seq[Int])
+
+  /** The session-level fields both records carry beside the queries. */
+  private[graft] final case class Session(reps: Int, canaryStart: Double,
+      canaryEnd: Double, loadStart: String, loadEnd: String,
+      settleBoundHits: Int, sfDir: String, rawPath: String)
+
+  private def r3(d: Double): String = // 1 ms resolution keeps the stdout line compact
+    if (d == -1) "-1" else BigDecimal(d).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
+
+  private def total(results: Seq[QRes]): Double =
+    results.collect { case QRes(_, m, _, _, None, _) => m }.sum
+
+  private def common(results: Seq[QRes], s: Session): String =
+    s""""unit":"sec","reps":${s.reps},"n_queries":${results.size},"canary_sec_start":${r3(s.canaryStart)},"canary_sec_end":${r3(s.canaryEnd)},"loadavg_start":"${esc(s.loadStart)}","loadavg_end":"${esc(s.loadEnd)}","n_errors":${results.count(_.err.nonEmpty)},"jobs_settle_bound_hits":${s.settleBoundHits},"sf":"${esc(s.sfDir)}""""
+
+  /** The FULL record (exact per-query medians, per-rep spread + job
+    * counts, error detail) — written to the raw file, committed as
+    * BENCH_raw_r{N}.json. */
+  private[graft] def fullRecord(results: Seq[QRes], s: Session): String = {
+    val spread = results.filter(_.err.isEmpty)
+      .map(q => s"\"${esc(q.name)}\":[${q.min},${q.max}]")
+      .mkString("{", ",", "}")
+    val errs = results.collect { case QRes(k, _, _, _, Some(e), _) => s"\"${esc(k)}\":\"${esc(e)}\"" }
+      .mkString("{", ",", "}")
+    val jobsJson = results.filter(_.err.isEmpty)
+      .map(q => s"\"${esc(q.name)}\":[${q.jobs.mkString(",")}]")
+      .mkString("{", ",", "}")
+    s"""{"metric":"total","value":${total(results)},${common(results, s)},"queries":${results
+      .map(q => s"\"${esc(q.name)}\":" + (if (q.err.isEmpty) q.median else -1))
+      .mkString("{", ",", "}")},"spread":$spread,"jobs":$jobsJson,"errors":$errs}"""
+  }
+
+  /** The contract STDOUT record — metric/value/unit/queries/sf,
+    * one line, no newline inside (the caller appends exactly one).
+    * Per-query seconds are 1 ms-rounded to keep the line compact; the
+    * raw file keeps full precision + spread + jobs. */
+  private[graft] def stdoutLine(results: Seq[QRes], s: Session): String = {
+    val qJson = results
+      .map(q => s"\"${esc(q.name)}\":" + (if (q.err.isEmpty) r3(q.median) else "-1"))
+      .mkString("{", ",", "}")
+    s"""{"metric":"total","value":${r3(total(results))},${common(results, s)},"queries":$qJson,"raw":"${esc(s.rawPath)}"}"""
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -104,47 +146,23 @@ object Bench {
     }
     val canaryEnd = canary(spark)
     val loadEnd = loadavg()
-    def r3(d: Double): String = // 1 ms resolution keeps the stdout line compact
-      if (d == -1) "-1" else BigDecimal(d).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
-    val spread = results.filter(_.err.isEmpty)
-      .map(q => s"\"${esc(q.name)}\":[${q.min},${q.max}]")
-      .mkString("{", ",", "}")
-    val errs = results.collect { case QRes(k, _, _, _, Some(e), _) => s"\"${esc(k)}\":\"${esc(e)}\"" }
-      .mkString("{", ",", "}")
-    val jobsJson = results.filter(_.err.isEmpty)
-      .map(q => s"\"${esc(q.name)}\":[${q.jobs.mkString(",")}]")
-      .mkString("{", ",", "}")
-    val total = results.collect { case QRes(_, m, _, _, None, _) => m }.sum
-    val nErr = results.count(_.err.nonEmpty)
-    val common = s""""unit":"sec","reps":$reps,"n_queries":${results.size},"canary_sec_start":${r3(canaryStart)},"canary_sec_end":${r3(canaryEnd)},"loadavg_start":"${esc(loadStart)}","loadavg_end":"${esc(loadEnd)}","n_errors":$nErr,"jobs_settle_bound_hits":${jobCounter.boundHits.get()},"sf":"$sfDir""""
     // Per-ARM default raw path (r19 verdict #2): the driver's 8-CPU
     // scaling rerun overwrote BENCH_raw_HEAD.json, destroying its own
     // 32-core per-query record — the core count in the name keeps the
     // two arms' records distinct. SPARK_GRAFT_BENCH_OUT still wins.
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
       s"BENCH_raw_HEAD_c${GraftSession.cpus}.json")
-    // The FULL record (exact per-query medians, per-rep spread + job
-    // counts, error detail) always lands in a file — committed as
-    // BENCH_raw_r{N}.json.
-    val full = s"""{"metric":"total","value":$total,$common,"queries":${results
-      .map(q => s"\"${esc(q.name)}\":" + (if (q.err.isEmpty) q.median else -1))
-      .mkString("{", ",", "}")},"spread":$spread,"jobs":$jobsJson,"errors":$errs}"""
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(outPath), full + "\n")
-    // STDOUT gets the driver-contract record — metric/value/unit/
-    // queries/sf — as the genuinely LAST line (build.sbt routes forked
-    // stdout straight through, prefix-free, and suppresses sbt's
-    // [success] epilogue; r19 verdict #2, third and contract-honest
-    // attempt: the r19 compact line DROPPED the queries map the contract
-    // declares, and the driver recorded parsed:null all three rounds).
-    // Per-query seconds are 1 ms-rounded to keep the line compact; the
-    // raw file keeps full precision + spread + jobs. One write, with the
-    // newline attached, so the line cannot interleave with stderr even
-    // under a merged-pipe capture.
-    val qJson = results
-      .map(q => s"\"${esc(q.name)}\":" + (if (q.err.isEmpty) r3(q.median) else "-1"))
-      .mkString("{", ",", "}")
-    System.out.print(
-      s"""{"metric":"total","value":${r3(total)},$common,"queries":$qJson,"raw":"${esc(outPath)}"}""" + "\n")
+    val session = Session(reps, canaryStart, canaryEnd, loadStart, loadEnd,
+      jobCounter.boundHits.get(), sfDir, outPath)
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(outPath),
+      fullRecord(results, session) + "\n")
+    // STDOUT gets the contract record as the genuinely LAST line
+    // (build.sbt routes forked stdout straight through, prefix-free, and
+    // suppresses sbt's [success] epilogue; the r19 compact line DROPPED
+    // the queries map the contract declares and went unparsed three
+    // rounds). One write, with the newline attached, so the line cannot
+    // interleave with stderr even under a merged-pipe capture.
+    System.out.print(stdoutLine(results, session) + "\n")
     System.out.flush()
     spark.stop()
   }

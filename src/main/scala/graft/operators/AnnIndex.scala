@@ -4,213 +4,54 @@ import graft.functions.TextSim
 import graft.functions.TextSim.{spark => sprk}
 import graft.queries.TrainingData
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
 
 /** Persisted, incrementally-maintained IVF-SQ8 ANN index — t49's plan
-  * shape turned into a stateful operator, maintained the way
-  * [[SignatureIndex]] maintains the dedup index: each landing batch
-  * pays for encoding NEW vectors only.
+  * shape turned into a stateful operator on the shared [[IvfIndex]]
+  * lifecycle: each landing batch pays for encoding NEW vectors only.
   *
-  * State layout under `root/`:
-  *  - `quantizer/centroids` — `(cell, centroid)` rows, trained ONCE on
-  *    the first batch (t41's bounded deterministic k-means) and FROZEN;
-  *  - `quantizer/stats` — `(pos, mn, span)` per-dim affine int8 stats,
-  *    same freeze;
-  *  - `codes/` — `cell=<id>/` partitioned parquet of `(vec_id, codes)`,
-  *    append-only: an increment writes only its own files.
-  *
-  * The freeze is the production contract (FAISS-style): the coarse
-  * quantizer and scalar quantizer are versioned artifacts; retraining
-  * means reindexing. It is also what makes incrementality EXACT — the
-  * spec pins that N incremental batches produce byte-identical codes to
-  * one encode of the union under the same quantizer, so query results
-  * cannot drift with batch boundaries. Codes for vectors outside the
-  * first batch's per-dim range clamp to [0,255] (the affine quantizer's
-  * standard saturation).
-  *
-  * Query path ([[topK]]): queries assign their 3 probe cells scan-side
-  * (argmin over the centroid literal), the probed cell set (≤ 3·|Q|
-  * values, a bounded collect) becomes a STATIC partition filter on the
-  * codes read — only probed `cell=` directories are scanned, at any
-  * index size (partition-count asserted in `AnnIndexSpec`) — scoring
-  * dequantizes codes (asymmetric: float query × int8 corpus), and an
-  * optional exact re-rank joins the caller's float corpus for the final
-  * ordering. Per-query cost is ~(probes/cells)·n code rows at 4× less
-  * memory traffic; nothing scans the whole corpus.
-  *
-  * Deletion is tombstone-then-compact ([[Tombstones]], same shape as
-  * [[SignatureIndex]]): [[remove]] records vec_ids in a side table that
-  * [[topK]] and index reads anti-join; [[compact]] rewrites `codes/`
-  * minus tombstones under the unchanged frozen quantizer. Removal is
-  * O(removed ids); only compaction pays a rewrite.
+  * The codec's frozen artifact is `quantizer/stats` — `(pos, mn, span)`
+  * per-dim affine int8 stats, trained on the first batch beside the
+  * coarse centroids. Codes for vectors outside the first batch's
+  * per-dim range clamp to [0,255] (the affine quantizer's standard
+  * saturation). Scoring dequantizes codes asymmetrically (float query ×
+  * int8 corpus): per-query cost is ~(probes/cells)·n code rows at 4×
+  * less memory traffic; nothing scans the whole corpus.
   */
-object AnnIndex {
+object AnnIndex extends IvfIndex[(Array[Double], Array[Double])] {
 
-  val probeCells = 3
+  protected val name = "AnnIndex"
   val rerankPool = 10
-
-  /** Probe count for a cell ladder step: the scanned corpus FRACTION is
-    * what recall tracks (classical IVF: recall at fixed nprobe falls as
-    * nlist grows, which is why FAISS scales nprobe with nlist), so the
-    * persisted index probes max(3, cells/4) — ~25% of cells at every
-    * ladder step, 3-of-8 (37%) at the gate scale the recall floors were
-    * measured at. Round-13 receipts: the tier recall probe caught a
-    * refreeze HALVING recall (0.62 -> 0.32 at 2000 vectors) because the
-    * ladder doubled cells under a fixed nprobe=3 — the probed fraction,
-    * not the quantizer, was the loss. The registry queries (t41/t49/
-    * t63) keep their pinned nprobe=3 bench form; their tier recall
-    * declines by design and is reported, not floored. */
-  def probesFor(cells: Int): Int = math.max(probeCells, cells / 4)
-
-  /** An ingest's result. `allCodes` is CONSTRUCT-ON-FIRST-USE (r20):
-    * building the full-index frame costs a parquet schema-inference job
-    * plus the log's listing/manifest FS ops, and no production caller
-    * (the registry lifecycle queries, the x100 loops) ever consumes it —
-    * only specs do, and they read it before any further mutation of the
-    * root, which is the documented contract: the frame pins the log
-    * state at FIRST ACCESS, not at ingest return. */
-  final class Batch private[AnnIndex] (val newCodes: DataFrame,
-      allCodesF: () => DataFrame) {
-    lazy val allCodes: DataFrame = allCodesF()
-  }
-  object Batch {
-    def apply(newCodes: DataFrame, allCodes: => DataFrame): Batch =
-      new Batch(newCodes, () => allCodes)
-  }
 
   private def arr(a: Array[Double]): String =
     a.map(TrainingData.litD).mkString("array(", ", ", ")")
 
-  /** The directory the CURRENT quantizer artifacts live in: inside the
-    * resolved codes version (`codes/_versions/<n>/_quantizer` — written
-    * by every versioned refreeze since r19 and carried forward by
-    * compaction stages, so quantizer + codes resolve as ONE committed
-    * pair), falling back to the top-level `root/quantizer` for roots
-    * whose quantizer was first-batch-trained and never refrozen under
-    * the versioned protocol. Resolution goes through [[BatchLog]]'s
-    * snapshot cache, so inside a read section the quantizer and the
-    * codes scan pin the SAME version. */
-  private[graft] def quantizerDir(spark: SparkSession, root: String): String = {
-    val inVersion =
-      s"${BatchLog.resolve(spark, s"$root/codes")}/${RefreezeProtocol.quantStageName}"
-    if (BatchLog.hasCommittedFiles(spark, s"$inVersion/centroids")) inVersion
-    else s"$root/quantizer"
+  protected def readArtifact(spark: SparkSession, quantDir: String)
+      : (Array[Double], Array[Double]) = {
+    val st = spark.read.schema("pos BIGINT, mn DOUBLE, span DOUBLE")
+      .parquet(s"$quantDir/stats").collect().sortBy(_.getLong(0))
+    (st.map(_.getDouble(1)), st.map(_.getDouble(2)))
   }
 
-  /** Load the frozen quantizer if present. */
-  private def loadQuantizer(spark: SparkSession, root: String)
-      : Option[(Array[Array[Double]], Array[Double], Array[Double])] = {
-    val qd = quantizerDir(spark, root)
-    // Committed-data probe, not a bare directory probe: a crash DURING
-    // the centroids write leaves the directory holding only _temporary
-    // task state, which must read as "never trained" (the next first
-    // batch retrains over it) rather than as a half-quantizer that
-    // fails schema inference forever.
-    if (!BatchLog.hasCommittedFiles(spark, s"$qd/centroids")) None
-    else {
-      // Driver-side sort, NOT `.orderBy(...).collect()` (r20): these are
-      // KB-scale single-file artifacts (≤ cells rows), and a global sort
-      // plans a range exchange whose sampling + AQE stage materialization
-      // cost ~3 extra driver jobs per collect — ~¼ of a lifecycle
-      // query's whole job count across its two loads. Same rows, same
-      // total order (cell/pos are unique keys), one scan job each.
-      // Schemas are DECLARED (the operator wrote these files itself),
-      // skipping the footer-inference job each open otherwise pays.
-      val cents = spark.read.schema("cell BIGINT, centroid ARRAY<DOUBLE>")
-        .parquet(s"$qd/centroids")
-        .collect().sortBy(_.getLong(0)).map(_.getSeq[Double](1).toArray)
-      val st = spark.read.schema("pos BIGINT, mn DOUBLE, span DOUBLE")
-        .parquet(s"$qd/stats").collect().sortBy(_.getLong(0))
-      Some((cents, st.map(_.getDouble(1)), st.map(_.getDouble(2))))
-    }
+  protected def writeArtifact(spark: SparkSession,
+      q: (Array[Double], Array[Double]), quantDir: String): Unit = {
+    import spark.implicits._
+    val (mn, span) = q
+    mn.indices.map(i => (i.toLong, mn(i), span(i)))
+      .toDF("pos", "mn", "span")
+      .coalesce(1).write.mode("overwrite").parquet(s"$quantDir/stats")
   }
 
-  /** First batch trains and persists the quantizer; later batches load
-    * it. WRITE ORDER is the crash contract: stats land first, centroids
-    * LAST, and [[loadQuantizer]] probes the centroids directory — so a
-    * crash between the two writes leaves a partial the next ingest sees
-    * as "never trained" and simply retrains over (deterministic from
-    * the same first batch, overwrite mode), instead of a half-quantizer
-    * that loads centroids and then fails on missing stats forever. */
-  private def loadOrTrain(spark: SparkSession, root: String, increment: DataFrame)
-      : (Array[Array[Double]], Array[Double], Array[Double]) =
-    loadQuantizer(spark, root).getOrElse {
-      increment.createOrReplaceTempView("graft_ann_train")
-      // Stats pass FIRST, carrying the view's row count in the same
-      // aggregate (r20): the trainer's separate `SELECT count(*)` job
-      // computed a number the stats scan already knows. One fewer full
-      // pass over the increment; the trained numbers are unchanged
-      // (the count rides the existing group-by, min/max untouched).
-      val (mn, span, n) = TrainingData.quantStatsN(spark, "graft_ann_train")
-      val cents = TrainingData.trainCentroids(spark, "graft_ann_train",
-        knownN = Some(n))
-      import spark.implicits._
-      mn.indices.map(i => (i.toLong, mn(i), span(i)))
-        .toDF("pos", "mn", "span")
-        .coalesce(1).write.mode("overwrite").parquet(s"$root/quantizer/stats")
-      cents.zipWithIndex.map { case (c, i) => ((i + 1).toLong, c.toSeq) }.toSeq
-        .toDF("cell", "centroid")
-        .coalesce(1).write.mode("overwrite").parquet(s"$root/quantizer/centroids")
-      (cents, mn, span)
-    }
-
-  /** True when the live corpus has outgrown the frozen quantizer's
-    * ladder step (`ivfCells(live) > frozen cells`) — the signal an
-    * operator schedules [[refreeze]] on, mirroring
-    * [[CosineDedupIndex.occupancy]]. */
-  def needsRefreeze(spark: SparkSession, root: String): Boolean =
-    loadQuantizer(spark, root).exists { case (cents, _, _) =>
-      TextSim.ivfCellsValue(readCodes(spark, root).count()) > cents.length
-    }
-
-  /** Packaged ops snapshot ([[IndexHealth]] — one shape across the
-    * index family): live/tombstoned counts, frozen coarse-cell count,
-    * occupied cells + occupancy, and the drift predicate, in one scan
-    * of the code log (the predicate reuses the probe's live count
-    * instead of re-scanning like [[needsRefreeze]] would). Crash
-    * recovery runs before any probe — a swap-window poll must adopt
-    * the staged fold, not report live = 0. */
-  def health(spark: SparkSession, root: String): IndexHealth = {
-    ReadGuard.recoverForRead(spark, root)(recoverState(spark, root))
-    loadQuantizer(spark, root) match {
-      case None => IndexHealth.virgin
-      case Some((cents, _, _)) =>
-        BatchLog.requireFormat(spark, s"$root/codes", "AnnIndex.health")
-        if (!BatchLog.hasData(spark, s"$root/codes"))
-          IndexHealth.emptyLog(spark, root, "vec_id", cents.length.toLong)
-        else IndexHealth.probe(spark, root, readCodes(spark, root),
-          "cell", "vec_id", cents.length.toLong,
-          n => TextSim.ivfCellsValue(n) > cents.length)
-    }
+  /** Stats pass FIRST, carrying the view's row count in the same
+    * aggregate (r20) — the centroid trainer then skips its own count
+    * job, so `knownN` is not needed here. */
+  protected def train(spark: SparkSession, view: String, knownN: Option[Long])
+      : (Array[Array[Double]], (Array[Double], Array[Double])) = {
+    val (mn, span, n) = TrainingData.quantStatsN(spark, view)
+    (TrainingData.trainCentroids(spark, view, knownN = Some(n)), (mn, span))
   }
 
-  /** One scheduled maintenance poll ([[IndexMaintenance]] — the
-    * standalone-index mirror of `DedupPipeline.maintainOnce`): refreeze
-    * on drift — `corpus` is only evaluated then (retraining needs the
-    * original floats; int8 codes are lossy) — else compact past the
-    * tombstone ratio. */
-  def maintain(spark: SparkSession, root: String, corpus: => DataFrame,
-      tombstoneRatio: Double = 0.1, maxLogDirs: Int = 64): IndexMaintenance = WriterLease.withLease(spark, root) {
-    val before = health(spark, root)
-    val refrozen = before.needsRefreeze
-    if (refrozen) refreeze(spark, root, corpus)
-    // hasData gate: tombstones on a trained-but-unfed root stay pending —
-    // a compact of a log with no committed files would only clear the
-    // side table, and those tombstones must keep suppressing a later
-    // ingest of the same ids (an all-tombstoned FED root still compacts
-    // to empty; that path is pinned in IndexHealthSpec).
-    // Directory-count trigger (same contract as DedupPipeline
-    // .maintainOnce): past maxLogDirs committed batch directories the
-    // log folds even with zero tombstones, bounding the per-batch
-    // listing/open tax of an endless append loop.
-    val compacted = !refrozen && BatchLog.hasData(spark, s"$root/codes") && (
-      (before.tombstoned > 0 &&
-        before.tombstoned >= tombstoneRatio * math.max(before.live, 1L)) ||
-      BatchLog.committedKeys(spark, s"$root/codes").size > maxLogDirs)
-    if (compacted) compact(spark, root)
-    IndexMaintenance(refrozen, compacted, before, health(spark, root))
-  }
+  protected def encodeWith(vecs: DataFrame, cents: Array[Array[Double]],
+      q: (Array[Double], Array[Double])): DataFrame = encode(vecs, cents, q._1, q._2)
 
   /** Scan-side encode of a `(vec_id, embedding)` frame under a given
     * quantizer: cell assignment (argmin fold over the centroid literal)
@@ -227,364 +68,14 @@ object AnnIndex {
         s"${TrainingData.qCodes(d, "embedding", arr(mn), arr(span), mn.length.toString)} AS codes")
   }
 
-  /** One maintenance batch: encode `increment` ONLY (first batch also
-    * trains the quantizer from it), append its code files under their
-    * `cell=` directories, return the new codes and the full index. The
-    * increment must carry vec_ids not already indexed — keep-last dedup
-    * is the landing layer's job, upstream of this (same contract as
-    * [[SignatureIndex.ingest]]). */
-  def ingest(spark: SparkSession, root: String, increment: DataFrame,
-      batchKey: Option[String] = None): Batch = WriterLease.withLease(spark, root) {
-    // Full recovery (refreeze AND compaction swap) BEFORE the append: an
-    // ingest landing inside a crashed compaction's delete-to-rename
-    // window would recreate the codes dir with only this increment, and
-    // readCodes' recovery below would then drop the staged fold as an
-    // abandoned stage — the corpus lost in this very call.
-    recoverState(spark, root)
-    val (cents, mn, span) = loadOrTrain(spark, root, increment)
-    val enc = graft.CacheJanitor.register(encode(increment, cents, mn, span).persist())
-    // Batch-keyed append ([[BatchLog]]): `batch_key=<key>/cell=<id>/`
-    // directories, so a caller-keyed batch replayed after a crash
-    // replaces its own files instead of double-appending, and the
-    // `cell=` static pruning below is unchanged (cell stays a partition
-    // column, one level down).
-    BatchLog.append(enc, s"$root/codes", batchKey, "AnnIndex", partitionBy = Seq("cell"))
-    Batch(enc, readCodes(spark, root))
-  }
+  // Scoring never materializes a dequantized array: the codegen'd SQ8
+  // kernels dequantize-and-fold in one tight loop per pair (the hot
+  // inner loop of the whole index at corpus scale).
+  override protected def scoreSide(codes: DataFrame,
+      q: (Array[Double], Array[Double])): DataFrame =
+    codes.selectExpr("vec_id", "cell", "codes",
+      s"graft_sq8_norm2(codes, ${arr(q._1)}, ${arr(q._2)}) AS dqn2")
 
-  /** Live code rows: the snapshot (cell cast back to its canonical
-    * BIGINT — partition-column inference reads `cell=` dirs as INT)
-    * minus tombstoned vec_ids. */
-  /** Crash recovery alone (refreeze + compaction swap windows) — run
-    * by every mutating or reading entry point before touching state. */
-  private[operators] def recoverState(spark: SparkSession, root: String): Unit = {
-    refreezeRecover(spark, root)
-    Tombstones.recoverCompaction(spark, root, s"$root/codes.__compact_tmp", s"$root/codes")
-    // Crashed migration swap (see SignatureIndex.recoverState).
-    Tombstones.recoverSwap(spark, s"$root/codes.__migrate_tmp", s"$root/codes")
-  }
-
-  private def readCodes(spark: SparkSession, root: String): DataFrame = {
-    ReadGuard.recoverForRead(spark, root)(recoverState(spark, root))
-    // Tombstones pinned BEFORE the codes read resolves (excluding): the
-    // versioned swap protocol's one silent-wrong interleaving is old
-    // codes paired with a just-cleared side table.
-    Tombstones.excluding(spark, root, "vec_id") {
-      BatchLog.read(spark, s"$root/codes", "AnnIndex")
-        .withColumn("cell", col("cell").cast("long"))
-    }
-  }
-
-  /** One-time upgrade of a legacy flat-append root into the batch-keyed
-    * layout (rows unchanged; `cell=` partitioning preserved). */
-  def migrateLegacy(spark: SparkSession, root: String): Unit =
-    WriterLease.withLease(spark, root) {
-      BatchLog.adoptLegacy(spark, s"$root/codes", partitionBy = Seq("cell"))
-    }
-
-  /** Tombstone vec_ids out of the index (takedowns, re-embeds, dedup
-    * keeper changes). Appends to the side table only — `cell=` code
-    * files stay byte-untouched (spec-pinned); the ids stop appearing as
-    * [[topK]] neighbors from this call on. The frozen quantizer is
-    * unaffected: removal never retrains (same contract as ingest). */
-  def remove(spark: SparkSession, root: String, ids: DataFrame): Unit = WriterLease.withLease(spark, root) {
-    // Compaction recovery too: a tombstone appended inside a crashed
-    // compaction's swap window would be cleared when a later reader
-    // adopts the staged fold (the adopt path drops the side table).
-    recoverState(ids.sparkSession, root)
-    Tombstones.append(root, ids, "vec_id")
-  }
-
-  def remove(spark: SparkSession, root: String, ids: Seq[Long]): Unit = {
-    import spark.implicits._
-    remove(spark, root, ids.toDF("vec_id"))
-  }
-
-  /** Rewrite `codes/` minus tombstones (same `cell=` layout, so the
-    * probed-partition-only read path is unchanged) and clear the side
-    * table. Content-identical to a frozen-quantizer [[encode]] of the
-    * surviving vectors (spec-pinned). */
-  def compact(spark: SparkSession, root: String): Unit = WriterLease.withLease(spark, root) {
-    val dest = s"$root/codes"
-    val tmp = s"$root/codes.__compact_tmp"
-    BatchLog.stageRewrite(readCodes(spark, root), dest, tmp, partitionBy = Seq("cell"))
-    copyQuantizerIntoStage(spark, root, tmp)
-    Tombstones.commitCompaction(spark, root, tmp, dest)
-  }
-
-  /** Carry the current quantizer into a codes stage (`_quantizer`
-    * subdir): every committed codes version is then SELF-CONTAINED —
-    * without this, a compaction committed after a versioned refreeze
-    * would create a version whose quantizer fallback resolves to the
-    * stale top-level dir (silently wrong cells). KB-scale copy. */
-  private def copyQuantizerIntoStage(spark: SparkSession, root: String,
-      tmp: String): Unit = {
-    val src = quantizerDir(spark, root)
-    if (BatchLog.hasCommittedFiles(spark, s"$src/centroids"))
-      RefreezeProtocol.copyDir(spark, src,
-        s"$tmp/${RefreezeProtocol.quantStageName}")
-  }
-
-  // ---------------------------------------------------------------- refreeze
-
-  private def codesRefreezeTmp(root: String): String = s"$root/codes.__refreeze_tmp"
-  private def quantRefreezeTmp(root: String): String = s"$root/quantizer.__refreeze_tmp"
-  /** Hidden subdir of the codes stage holding the staged quantizer
-    * artifacts — staged TOGETHER with the codes so the failure model
-    * can never split them (see [[refreeze]]). `quantRefreezeTmp` is the
-    * older side-by-side layout: installed by [[commitRefreeze]] when
-    * recovering a stage that release sealed, swept as a stray
-    * otherwise. */
-  private val quantStage = RefreezeProtocol.quantStageName
-
-  /** Ladder-step migration — the escape hatch for a quantizer frozen on
-    * a first batch the corpus has long outgrown (cells sized for the
-    * wrong √n, per-dim ranges clamping too much mass). Retrains the
-    * coarse + scalar quantizers on the SURVIVING vectors (`corpus` must
-    * supply `(vec_id, embedding)` floats for at least the live ids —
-    * int8 codes are lossy, so retraining needs the originals; same as
-    * FAISS re-indexing), re-encodes every survivor, folds tombstones
-    * out, and atomically swaps BOTH the quantizer and the codes.
-    * Afterwards the state is content-identical to a from-scratch first
-    * ingest of the survivors, and [[topK]] semantics carry over with
-    * the new cell geometry.
-    *
-    * Crash safety: the codes are FULLY staged first, then the quantizer
-    * lands INSIDE the same stage directory (a hidden subdir — one stage,
-    * so no failure can split the pair), a completion marker lands last,
-    * then the commit swaps quantizer first, codes second.
-    * [[refreezeRecover]] (probed by every entry point) completes a
-    * marked commit idempotently — the quantizer swap is skipped when its
-    * staged subdir is already gone, i.e. already renamed — and drops an
-    * unmarked partial stage, so readers can never see a new quantizer
-    * with old codes or vice versa. */
-  def refreeze(spark: SparkSession, root: String, corpus: DataFrame): Unit = WriterLease.withLease(spark, root) {
-    refreezeRecover(spark, root, deletePartial = true) // clear any prior attempt
-    val liveIds = readCodes(spark, root).select("vec_id")
-    // With no tombstones pending, live == committed log rows, served
-    // driver-side from the write-time sidecars (the DedupPipeline.health
-    // pattern, r20) — the full-scan count job runs only while takedowns
-    // are pending (when the anti-joined count genuinely differs).
-    val liveN =
-      if (Tombstones.isEmpty(spark, root))
-        BatchLog.committedRowCount(spark, s"$root/codes").getOrElse(liveIds.count())
-      else liveIds.count()
-    if (liveN == 0L) return // nothing to migrate
-    val survivors = graft.CacheJanitor.register(
-      corpus.select(col("vec_id"), col("embedding"))
-        .join(liveIds, Seq("vec_id"), "left_semi").persist())
-    try {
-      // The corpus must supply exactly the live ids, once each: missing
-      // ids would silently SHRINK the index on commit (the semi-join
-      // just drops them); duplicate ids would commit duplicate code
-      // rows. Refuse both loudly, before anything destructive. One
-      // fused agg (count + exact countDistinct) — the separate
-      // distinct().count() and count() jobs this replaces computed the
-      // same two numbers in two passes over the persisted survivors
-      // (r19 optimization).
-      val chk = survivors.agg(count(lit(1)).as("n"),
-        countDistinct(col("vec_id")).as("nd")).head
-      val matched = chk.getLong(1)
-      require(matched == liveN,
-        s"refreeze corpus is missing ${liveN - matched} of $liveN live " +
-          "vec_ids — it must supply embeddings for every live id; " +
-          "aborting before any commit")
-      require(chk.getLong(0) == liveN,
-        "refreeze corpus supplies duplicate vec_ids; aborting before any commit")
-      survivors.createOrReplaceTempView("graft_ann_refreeze")
-      // The validated liveN IS the view's row count (the require above
-      // pinned count == liveN) — the trainer's own count job would
-      // re-derive it from the same persisted frame (r20).
-      val cents = TrainingData.trainCentroids(spark, "graft_ann_refreeze",
-        knownN = Some(liveN))
-      val (mn, span) = TrainingData.quantStats(spark, "graft_ann_refreeze")
-      import spark.implicits._
-      val ctmp = codesRefreezeTmp(root)
-      RefreezeProtocol.deleteIfExists(spark, ctmp)
-      BatchLog.stageRewrite(encode(survivors, cents, mn, span),
-        s"$root/codes", ctmp, partitionBy = Seq("cell"))
-      // The quantizer stages INSIDE the codes stage (a hidden subdir):
-      // ONE stage directory means the protocol's failure model (crashes
-      // + whole-directory deletions by a racing recovery) can never
-      // split the quantizer from the codes it encodes — the commit
-      // either finds both staged together or abandons both. A separate
-      // quantizer tmp could be deleted out from under the stage and
-      // silently skipped at commit, installing new codes under the OLD
-      // quantizer.
-      cents.zipWithIndex.map { case (c, i) => ((i + 1).toLong, c.toSeq) }.toSeq
-        .toDF("cell", "centroid")
-        .coalesce(1).write.mode("overwrite").parquet(s"$ctmp/$quantStage/centroids")
-      mn.indices.map(i => (i.toLong, mn(i), span(i)))
-        .toDF("pos", "mn", "span")
-        .coalesce(1).write.mode("overwrite").parquet(s"$ctmp/$quantStage/stats")
-      RefreezeProtocol.sealStage(spark, ctmp, "ann")
-      commitRefreeze(spark, root)
-    } finally graft.CacheJanitor.drain()
-  }
-
-  /** Commit a sealed stage. VERSIONED roots (the default): the staged
-    * quantizer STAYS inside the codes stage, and the one commit step is
-    * the versioned codes commit — quantizer + codes land together as
-    * `codes/_versions/<n+1>`, so a read entering mid-commit resolves
-    * either the old (quantizer, codes) pair or the new, never a mix and
-    * never a retry (the r18 verdict's last loud-retry window, closed;
-    * [[ReadGuard]] leaves the sealed stage non-blocking when the
-    * in-stage quantizer is present). A stage sealed by the OLD
-    * side-by-side release (`quantizer.__refreeze_tmp`) is upgraded in
-    * place — its quantizer copies into the stage before the commit (the
-    * marker landed after both writes, so the side tmp is complete).
-    * The superseded top-level `root/quantizer` is left for readers
-    * still pinned to pre-refreeze versions (it is their fallback until
-    * grace-GC retires those versions; later versions carry their own
-    * `_quantizer`, so it is never resolved again).
-    *
-    * IN-PLACE roots (versioning disabled, never versioned): the
-    * pre-r19 protocol — quantizer into place first (its absence with
-    * the staged codes intact means a prior commit attempt already
-    * renamed it), then the codes swap. Idempotent under
-    * crash-and-rerun at every step in both protocols. */
-  private def commitRefreeze(spark: SparkSession, root: String): Unit = {
-    val ctmp = codesRefreezeTmp(root)
-    val staged = s"$ctmp/$quantStage"
-    val dest = s"$root/codes"
-    val fs = new org.apache.hadoop.fs.Path(dest)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (VersionedState.enabled || VersionedState.isVersioned(fs, dest)) {
-      // Atomic install (copy-to-tmp + one rename): this runs POST-
-      // marker, so a crash-and-rerun must find the staged quantizer
-      // complete or absent — never half-copied-then-committed.
-      if (!RefreezeProtocol.exists(spark, staged) &&
-          RefreezeProtocol.exists(spark, quantRefreezeTmp(root)))
-        RefreezeProtocol.copyDirAtomic(spark, quantRefreezeTmp(root), staged)
-      Tombstones.commitCompaction(spark, root, ctmp, dest)
-      RefreezeProtocol.deleteIfExists(spark, quantRefreezeTmp(root))
-    } else {
-      if (RefreezeProtocol.exists(spark, staged))
-        RefreezeProtocol.swapIfStaged(spark, staged, s"$root/quantizer")
-      else
-        RefreezeProtocol.swapIfStaged(spark, quantRefreezeTmp(root), s"$root/quantizer")
-      Tombstones.commitCompaction(spark, root, ctmp, dest)
-    }
-  }
-
-  /** Complete or abandon a crashed [[refreeze]] — see its scaladoc. */
-  private def refreezeRecover(spark: SparkSession, root: String,
-      deletePartial: Boolean = false): Unit = {
-    val ctmp = codesRefreezeTmp(root)
-    if (RefreezeProtocol.exists(spark, ctmp)) {
-      if (RefreezeProtocol.readMarker(spark, ctmp).isDefined) {
-        // Commit only when the staged codes still hold committed data
-        // files — a marker-only husk (its stage deleted out from under
-        // an in-flight refreeze) must be dropped, never swapped over
-        // the live codes (see RefreezeProtocol.hasStagedData).
-        if (RefreezeProtocol.hasStagedData(spark, ctmp))
-          commitRefreeze(spark, root)
-        else {
-          RefreezeProtocol.deleteIfExists(spark, ctmp)
-          RefreezeProtocol.deleteIfExists(spark, quantRefreezeTmp(root))
-        }
-      } else if (deletePartial) {
-        RefreezeProtocol.deleteIfExists(spark, ctmp)
-        RefreezeProtocol.deleteIfExists(spark, quantRefreezeTmp(root))
-      }
-    } else if (deletePartial)
-      // A quantizer tmp without a codes tmp is a stage that died before
-      // the codes were staged — never committable.
-      RefreezeProtocol.deleteIfExists(spark, quantRefreezeTmp(root))
-  }
-
-  /** Approximate (or exactly re-ranked) top-k neighbors for a
-    * `(query_id, embedding)` frame against the persisted index. */
-  def topK(spark: SparkSession, root: String, queries: DataFrame, k: Int = 3,
-      rerank: Option[DataFrame] = None, nprobe: Option[Int] = None): DataFrame = {
-    // FULL recovery (refreeze AND compaction swap), matching readCodes:
-    // a compaction that crashed mid-copy leaves a torn codes dir with
-    // intent+tmp siblings; reading it without the swap recovery would
-    // silently return partial neighbors (or fail on a half-copied fold
-    // manifest) — the r15 advisory's finding. Lease-guarded from this
-    // read-only entry (ReadGuard): recovery mutates, and a live writer's
-    // in-flight swap must fail the read retryably, never race it.
-    ReadGuard.recoverForRead(spark, root)(recoverState(spark, root))
-    topKRecovered(spark, root, queries, k, rerank, nprobe)
-  }
-
-  /** [[topK]] after recovery — read-only, so the whole query runs
-    * against one manifest snapshot (repeat consults of the codes log's
-    * fold manifests cost zero FS ops). */
-  private def topKRecovered(spark: SparkSession, root: String, queries: DataFrame,
-      k: Int, rerank: Option[DataFrame],
-      nprobe: Option[Int]): DataFrame = BatchLog.withManifestSnapshot {
-    // Tombstones pinned FIRST — before the quantizer load resolves the
-    // codes version (the versioned-swap consistency order,
-    // [[Tombstones.excluding]]'s contract): resolving data first could
-    // pair old codes with a just-cleared side table and resurface
-    // removed ids. The codes read below shares this section's
-    // resolution snapshot, so quantizer and codes pin ONE version.
-    val tomb = Tombstones.read(spark, root, "vec_id")
-    val (cents, mn, span) = loadQuantizer(spark, root)
-      .getOrElse(sys.error(s"no ANN index at $root — ingest at least one batch first"))
-    val d = sprk
-    val cl = TrainingData.centsLit(cents)
-    val np = nprobe.getOrElse(probesFor(cents.length))
-    val qs = queries
-      .selectExpr("query_id", "embedding",
-        s"${TextSim.dotHof(d, "embedding", "embedding")} AS n2",
-        s"transform(sequence(1, ${cents.length}), ci -> ${TextSim.dist2(d, "embedding", s"element_at($cl, ci)")}) AS ds")
-      .selectExpr("query_id", "embedding", "n2",
-        s"${TrainingData.topNCells(d, "ds", np)} AS probes")
-    val qp = graft.CacheJanitor.register(
-      qs.selectExpr("query_id", "embedding", "n2", "explode(probes) AS cell").persist())
-    // Bounded collect (≤ np·|Q| longs, np = max(probeCells, cells/4) by
-    // default — the bound GROWS with the cell ladder, ~cells/4·|Q|) →
-    // static partition filter: only probed cell= directories are read.
-    val probed = qp.select("cell").distinct().collect().map(_.getLong(0)).toSeq
-    // Partition filter FIRST (on the raw inferred partition column, so
-    // the `cell=` pruning is static — batch_key dirs above it prune
-    // per-batch, cells prune within), then the tombstone anti-join —
-    // removed vec_ids must never surface as neighbors (the side table
-    // was pinned at entry, before any data resolution). The read goes
-    // through BatchLog (r15): a compaction/refreeze fold serves its
-    // cell files from the fold manifest — zero listings over the
-    // corpus-sized directory tree — while flat-era increments keep the
-    // listing read; the isin filter prunes identically in both.
-    val codes = BatchLog.read(spark, s"$root/codes", "AnnIndex")
-      .where(col("cell").isin(probed: _*))
-      .withColumn("cell", col("cell").cast("long"))
-      .join(tomb, Seq("vec_id"), "left_anti")
-    // Scoring never materializes a dequantized array: the codegen'd SQ8
-    // kernels dequantize-and-fold in one tight loop per pair (the hot
-    // inner loop of the whole index at corpus scale).
-    val withNorm = codes.selectExpr("vec_id", "cell", "codes",
-      s"graft_sq8_norm2(codes, ${arr(mn)}, ${arr(span)}) AS dqn2")
-    val scored = qp.join(withNorm, Seq("cell"))
-      .where(col("vec_id") =!= col("query_id"))
-      .selectExpr("query_id", "vec_id AS neighbor_id", "cell",
-        s"graft_sq8_dot(embedding, codes, ${arr(mn)}, ${arr(span)}) / (sqrt(n2) * sqrt(dqn2)) AS approx_cosine")
-    val byApprox = Window.partitionBy("query_id")
-      .orderBy(col("approx_cosine").desc, col("neighbor_id"))
-    rerank match {
-      case None =>
-        scored.withColumn("rnk", row_number().over(byApprox).cast("long"))
-          .where(col("rnk") <= k)
-      case Some(corpus) =>
-        // Pool never smaller than k: a k > rerankPool call must return k
-        // rows (short only when the probed cells hold fewer candidates),
-        // not silently cap at the default pool size.
-        val pool = scored.withColumn("rka", row_number().over(byApprox))
-          .where(col("rka") <= math.max(k, rerankPool))
-        val vn = corpus.selectExpr("vec_id",
-          "embedding", s"${TextSim.dotHof(d, "embedding", "embedding")} AS fn2")
-        val qn = vn.toDF("q_id", "q_emb", "q_n2")
-        val nn = vn.toDF("n_id", "n_emb", "n_n2")
-        val exact = pool
-          .join(qn, pool("query_id") === qn("q_id"))
-          .join(nn, pool("neighbor_id") === nn("n_id"))
-          .selectExpr("query_id", "neighbor_id", "cell", "approx_cosine",
-            s"${TextSim.dotHof(d, "q_emb", "n_emb")} / (sqrt(q_n2) * sqrt(n_n2)) AS cosine")
-        val byExact = Window.partitionBy("query_id")
-          .orderBy(col("cosine").desc, col("neighbor_id"))
-        exact.withColumn("rnk", row_number().over(byExact).cast("long"))
-          .where(col("rnk") <= k)
-    }
-  }
+  protected def approxCosine(q: (Array[Double], Array[Double])): String =
+    s"graft_sq8_dot(embedding, codes, ${arr(q._1)}, ${arr(q._2)}) / (sqrt(n2) * sqrt(dqn2))"
 }

@@ -33,9 +33,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * holding data files but no marker predates this format (flat appends;
   * for [[SignatureIndex]] also pre-sorted-signature rows, whose unsorted
   * arrays would silently break the two-pointer intersect kernel) and is
-  * REFUSED loudly — [[adoptLegacy]] migrates such a root in place with
-  * the same stage-then-atomic-swap commit as compaction. All probes and
-  * moves use the Hadoop FileSystem API so the same code runs on
+  * REFUSED loudly — such a root is rebuilt from scratch. All probes
+  * and moves use the Hadoop FileSystem API so the same code runs on
   * HDFS/object-store roots, not just local disk.
   */
 private[graft] object BatchLog {
@@ -337,9 +336,9 @@ private[graft] object BatchLog {
       require(legacy.isEmpty,
         s"$op: $path holds a legacy (unversioned) index layout " +
           s"(${legacy.take(3).mkString(", ")}…). Its rows predate the " +
-          "batch-keyed format (and build-time-sorted signatures); run " +
-          "the operator's migrateLegacy(root) once, or rebuild from " +
-          "scratch — reading it in place would silently corrupt results.")
+          "batch-keyed format (and build-time-sorted signatures); rebuild " +
+          "the index from scratch — reading it in place would silently " +
+          "corrupt results.")
     }
   }
 
@@ -958,8 +957,9 @@ private[graft] object BatchLog {
     writeMarker(df.sparkSession, tmpPath)
   }
 
-  /** Stage a layout-only rewrite (legacy migration) into `tmpPath`:
-    * single batch directory plus marker, no keys retired. */
+  /** Stage a single-fold rewrite into `tmpPath`: one batch directory
+    * plus marker, no keys retired (specs fabricate crashed refreeze
+    * stages with it; real rewrites go through [[stageRewrite]]). */
   def stage(df: DataFrame, tmpPath: String, partitionBy: Seq[String] = Nil): Unit =
     writeFold(df, tmpPath, "a00001", partitionBy, Map.empty)
 
@@ -1035,28 +1035,5 @@ private[graft] object BatchLog {
       (keys(spark, srcPath) ++ retiredKeys(spark, srcPath))
         .filter(_.startsWith("b")).toSet))
     foldKey
-  }
-
-  /** Migrate a legacy flat-append root in place: read its rows, apply
-    * `transform` (e.g. re-sorting signature arrays), rewrite into one
-    * batch-keyed directory, and atomically swap. Tombstone state (a
-    * SIBLING of the log dir) is untouched — this is a re-layout, not a
-    * compaction. */
-  def adoptLegacy(spark: SparkSession, path: String,
-      transform: DataFrame => DataFrame = identity,
-      partitionBy: Seq[String] = Nil): Unit = {
-    val fs = fsOf(spark, path)
-    val dest = new HPath(path)
-    val tmpP = new HPath(s"$path.__migrate_tmp")
-    // Complete a crashed commit first — the intent-marked swap recovery
-    // (and the pre-intent delete-to-rename window) both live there.
-    Tombstones.recoverSwap(spark, tmpP.toString, path)
-    // recoverSwap adopted a staged tmp if one existed; still absent
-    // means there was never anything here.
-    require(fs.exists(dest), s"no index at $path to migrate")
-    val rp = resolve(spark, path) // versioned roots carry their marker inside
-    if (fs.exists(new HPath(rp, markerName))) return // already current
-    stage(transform(spark.read.parquet(rp)), tmpP.toString, partitionBy)
-    Tombstones.commitSwap(spark, tmpP.toString, path)
   }
 }

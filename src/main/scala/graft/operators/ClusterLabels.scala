@@ -52,11 +52,8 @@ object ClusterLabels {
     * rename; on a copy+delete FS it would have ADOPTED a torn dest.
     * The shared recovery also still handles the pre-intent legacy
     * states identically. */
-  private def recover(spark: SparkSession, root: String): Unit = {
+  private def recover(spark: SparkSession, root: String): Unit =
     Tombstones.recoverSwap(spark, s"${dir(root)}.__compact_tmp", dir(root))
-    // Crashed migration swap (see SignatureIndex.recoverState).
-    Tombstones.recoverSwap(spark, s"${dir(root)}.__migrate_tmp", dir(root))
-  }
 
   /** Current labels `(doc_id, label)`: keep-last per doc over the
     * append-only delta log (later batches win). Empty frame when no
@@ -67,7 +64,7 @@ object ClusterLabels {
     // hasData sees no batch_key= dirs in a flat-append root and would
     // otherwise report the log as EMPTY — silently ignoring the entire
     // accumulated label history (merge() already refuses via
-    // requireFormat; read paths must agree). [[migrateLegacy]] upgrades.
+    // requireFormat; read paths must agree).
     BatchLog.requireFormat(spark, dir(root), "ClusterLabels.read")
     if (!BatchLog.hasData(spark, dir(root))) emptyLabels(spark)
     else
@@ -508,12 +505,4 @@ object ClusterLabels {
           s"[graft] ClusterLabels.compact: expected one folded batch dir, saw $ks; skipping stats sidecar")
     }
   }
-
-  /** One-time upgrade of a legacy flat-append label log into the
-    * batch-keyed layout (rows carry their batch column already — this
-    * is a re-layout, not a transform), closing the dead end where
-    * [[BatchLog.requireFormat]]'s message points at an operator
-    * migrateLegacy that every OTHER index had. */
-  def migrateLegacy(spark: SparkSession, root: String): Unit =
-    WriterLease.withLease(spark, root) { BatchLog.adoptLegacy(spark, dir(root)) }
 }

@@ -149,7 +149,7 @@ object CosineDedupIndex {
   }
 
   /** `allCodes` construct-on-first-use (r20) — same contract as
-    * [[AnnIndex.Batch]]: pins the log at first access; the pruned pair
+    * [[IvfIndex.Batch]]: pins the log at first access; the pruned pair
     * path never consumes it. `deltaPairs` stays eager (the batch's
     * verified delta at ingest time). */
   final class Batch private[CosineDedupIndex] (val newCodes: DataFrame,
@@ -288,14 +288,7 @@ object CosineDedupIndex {
     refreezeRecover(spark, root)
     Tombstones.recoverCompaction(spark, root,
       s"${codesDir(root)}.__compact_tmp", codesDir(root))
-    // Crashed migration swap (see SignatureIndex.recoverState).
-    Tombstones.recoverSwap(spark, s"${codesDir(root)}.__migrate_tmp", codesDir(root))
   }
-
-  /** One-time upgrade of a legacy flat-append root into the batch-keyed
-    * layout (rows unchanged — codes carry no ordering precondition). */
-  def migrateLegacy(spark: SparkSession, root: String): Unit =
-    WriterLease.withLease(spark, root) { BatchLog.adoptLegacy(spark, codesDir(root)) }
 
   /** Tombstone vec_ids out of the index — snapshot files stay
     * byte-untouched; the ids vanish from reads and deltas immediately.
@@ -389,7 +382,7 @@ object CosineDedupIndex {
 
   /** Drift predicate: true when the LIVE count's ladder step exceeds
     * the frozen mask — the scheduling signal for [[refreeze]], the
-    * mask-family mirror of `AnnIndex.needsRefreeze` (same contract:
+    * mask-family mirror of `IvfIndex.needsRefreeze` (same contract:
     * false on an untrained root, false again right after a refreeze).
     * [[occupancy]] is the continuous form when an operator wants a
     * threshold of its own. */
@@ -426,9 +419,9 @@ object CosineDedupIndex {
     val before = health(spark, root)
     val refrozen = before.needsRefreeze
     if (refrozen) refreeze(spark, root)
-    // hasData gate: see [[AnnIndex.maintain]] — unfed-root tombstones
+    // hasData gate: see [[IvfIndex.maintain]] — unfed-root tombstones
     // stay pending rather than being cleared by an empty-log compact.
-    // Directory-count trigger: see [[AnnIndex.maintain]].
+    // Directory-count trigger: see [[IvfIndex.maintain]].
     val compacted = !refrozen && BatchLog.hasData(spark, codesDir(root)) && (
       (before.tombstoned > 0 &&
         before.tombstoned >= tombstoneRatio * math.max(before.live, 1L)) ||

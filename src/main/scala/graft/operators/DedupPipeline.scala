@@ -215,7 +215,7 @@ object DedupPipeline {
     // hasData gate: tombstones recorded before the first committed batch
     // stay pending — compacting a log with no committed files would only
     // clear the side table, and those tombstones must keep suppressing a
-    // later ingest of the same ids (same contract as AnnIndex.maintain).
+    // later ingest of the same ids (same contract as IvfIndex.maintain).
     val logDir =
       if (vector) CosineDedupIndex.codesDir(root) else s"$root/signatures"
     val indexCompacted = !refrozen && BatchLog.hasData(spark, logDir) && (

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** One ops-snapshot shape across the persisted index family
-  * ([[CosineDedupIndex.health]], [[AnnIndex.health]], [[PqIndex.health]]),
+  * ([[CosineDedupIndex.health]], [[IvfIndex.health]]),
   * mirroring [[DedupPipeline.health]] for pipeline roots — so a scheduler
   * polls every index kind through the same fields:
   *
@@ -33,7 +33,7 @@ final case class IndexHealth(
     needsRefreeze: Boolean)
 
 /** What one index-maintenance poll did ([[CosineDedupIndex.maintain]],
-  * [[AnnIndex.maintain]], [[PqIndex.maintain]] — the standalone-index
+  * [[IvfIndex.maintain]] — the standalone-index
   * mirror of [[DedupPipeline.maintainOnce]]): refreeze when the drift
   * predicate fired (the rewrite folds tombstones into its own swap, so
   * the separate compaction is skipped as redundant), else compaction

@@ -4,63 +4,29 @@ import graft.functions.TextSim
 import graft.functions.TextSim.{spark => sprk}
 import graft.queries.TrainingData
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
 
 /** Persisted, incrementally-maintained IVF-PQ ANN index — t63's plan
-  * shape as a stateful operator, maintained exactly like [[AnnIndex]]
-  * (which persists the IVF-SQ8 form): each landing batch encodes NEW
-  * vectors only; the quantizers are trained once and FROZEN.
+  * shape as a stateful operator on the shared [[IvfIndex]] lifecycle
+  * (which [[AnnIndex]] runs with the IVF-SQ8 codec).
   *
-  * State layout under `root/`:
-  *  - `quantizer/centroids` — `(cell, centroid)` coarse cells, t41's
-  *    bounded deterministic k-means on the FIRST batch, frozen;
-  *  - `quantizer/codebooks` — `(subspace, code, centroid)` PQ
-  *    sub-centroids (pqM × pqK rows), trained per-subspace on the same
-  *    first batch (t62's bounded Lloyd contract), frozen;
-  *  - `codes/` — `cell=<id>/` partitioned parquet of
-  *    `(vec_id, codes, pn2)`: pqM 4-bit codes (stored as BIGINT
-  *    positions 1..pqK) plus the precomputed reconstruction norm² —
-  *    the ADC denominator, paid once at encode time, never at query
-  *    time. Append-only: an increment writes only its own files.
+  * The codec's frozen artifact is `quantizer/codebooks` —
+  * `(subspace, code, centroid)` PQ sub-centroids (pqM × pqK rows),
+  * trained per-subspace on the first batch (t62's bounded Lloyd
+  * contract). Code rows are `(vec_id, codes, pn2)`: pqM 4-bit codes
+  * (stored as BIGINT positions 1..pqK) plus the precomputed
+  * reconstruction norm² — the ADC denominator, paid once at encode
+  * time, never at query time.
   *
-  * Freezing both quantizers is what makes incrementality EXACT
-  * (spec-pinned: N batches produce byte-identical codes to one encode
-  * of the union), and the versioned-artifact contract a production
-  * index ships with — retraining means reindexing.
-  *
-  * Query path ([[topK]]): queries compute their pqM·pqK ADC LUT and 3
-  * probe cells scan-side; the probed cell set (≤ 3·|Q| values, a
-  * bounded collect) becomes a STATIC partition filter so only probed
-  * `cell=` directories are read at any index size; scoring is pqM
+  * Queries compute their pqM·pqK ADC LUT scan-side; scoring is pqM
   * lookups + a fold per candidate (8 small codes per row moved — the
-  * 64×-compressed regime where the index fits cluster RAM outright);
-  * optional exact re-rank (pool 25 — 4-bit ADC ranking is cruder than
-  * SQ8's, t62's compensation) joins the caller's float corpus.
-  *
-  * Deletion is tombstone-then-compact ([[Tombstones]], same shape as
-  * [[AnnIndex]]/[[SignatureIndex]]): removal is O(removed ids), code
-  * files stay byte-untouched until [[compact]] rewrites survivors
-  * under the unchanged frozen quantizers. The streaming composition
-  * is the same foreachBatch shape `StreamingAnnIndexSpec` pins for
-  * the SQ8 index (first micro-batch freezes, later ones append).
+  * 64×-compressed regime where the index fits cluster RAM outright).
+  * The exact re-rank pool is 25 — 4-bit ADC ranking is cruder than
+  * SQ8's, t62's compensation.
   */
-object PqIndex {
+object PqIndex extends IvfIndex[Array[Array[Array[Double]]]] {
 
-  val probeCells = 3
+  protected val name = "PqIndex"
   val rerankPool = 25
-
-  /** An ingest's result — `allCodes` construct-on-first-use, same
-    * contract and rationale as [[AnnIndex.Batch]] (r20): the frame pins
-    * the log state at first access; no production caller consumes it. */
-  final class Batch private[PqIndex] (val newCodes: DataFrame,
-      allCodesF: () => DataFrame) {
-    lazy val allCodes: DataFrame = allCodesF()
-  }
-  object Batch {
-    def apply(newCodes: DataFrame, allCodes: => DataFrame): Batch =
-      new Batch(newCodes, () => allCodes)
-  }
 
   private def cbLit(cb: Array[Array[Array[Double]]]): String =
     cb.map(ck => ck.map(cv => cv.map(TrainingData.litD).mkString("array(", ", ", ")"))
@@ -71,112 +37,32 @@ object PqIndex {
       .map(TrainingData.litD).mkString("array(", ", ", ")"))
       .mkString("array(", ", ", ")")
 
-  /** The directory the CURRENT quantizer artifacts live in — see
-    * [[AnnIndex]]'s quantizerDir: in-version `_quantizer` (the ONE-
-    * committed-pair protocol) with the top-level fallback for
-    * never-versioned-refrozen roots. */
-  private def quantizerDir(spark: SparkSession, root: String): String = {
-    val inVersion =
-      s"${BatchLog.resolve(spark, s"$root/codes")}/${RefreezeProtocol.quantStageName}"
-    if (BatchLog.hasCommittedFiles(spark, s"$inVersion/centroids")) inVersion
-    else s"$root/quantizer"
+  protected def readArtifact(spark: SparkSession, quantDir: String)
+      : Array[Array[Array[Double]]] = {
+    val rows = spark.read
+      .schema("subspace BIGINT, code BIGINT, centroid ARRAY<DOUBLE>")
+      .parquet(s"$quantDir/codebooks").collect()
+    rows.groupBy(_.getLong(0)).toSeq.sortBy(_._1)
+      .map(_._2.sortBy(_.getLong(1)).map(_.getSeq[Double](2).toArray).toArray).toArray
   }
 
-  /** Load the frozen quantizers if present. */
-  private def loadQuantizer(spark: SparkSession, root: String)
-      : Option[(Array[Array[Double]], Array[Array[Array[Double]]])] = {
-    val qd = quantizerDir(spark, root)
-    // Committed-data probe, not a bare directory probe: a crash DURING
-    // the centroids write leaves the directory holding only _temporary
-    // task state, which must read as "never trained" (the next first
-    // batch retrains over it) rather than as a half-quantizer that
-    // fails schema inference forever.
-    if (!BatchLog.hasCommittedFiles(spark, s"$qd/centroids")) None
-    else {
-      // Driver-side sort, not `.orderBy(...).collect()` — see
-      // [[AnnIndex.loadQuantizer]] (r20): a global sort on these
-      // KB-scale artifacts costs ~3 extra driver jobs per collect. The
-      // codebooks grouping below already re-sorts by (subspace, code),
-      // so its Spark-side orderBy was pure plan tax even before.
-      // Declared schemas (the operator wrote these files itself) skip
-      // the footer-inference job each open otherwise pays.
-      val cents = spark.read.schema("cell BIGINT, centroid ARRAY<DOUBLE>")
-        .parquet(s"$qd/centroids")
-        .collect().sortBy(_.getLong(0)).map(_.getSeq[Double](1).toArray)
-      val rows = spark.read
-        .schema("subspace BIGINT, code BIGINT, centroid ARRAY<DOUBLE>")
-        .parquet(s"$qd/codebooks").collect()
-      val cb = rows.groupBy(_.getLong(0)).toSeq.sortBy(_._1)
-        .map(_._2.sortBy(_.getLong(1)).map(_.getSeq[Double](2).toArray).toArray).toArray
-      Some((cents, cb))
-    }
+  protected def writeArtifact(spark: SparkSession,
+      cb: Array[Array[Array[Double]]], quantDir: String): Unit = {
+    import spark.implicits._
+    (for { j <- cb.indices; c <- cb(j).indices }
+      yield ((j + 1).toLong, (c + 1).toLong, cb(j)(c).toSeq))
+      .toDF("subspace", "code", "centroid")
+      .coalesce(1).write.mode("overwrite").parquet(s"$quantDir/codebooks")
   }
 
-  /** First batch trains and persists both quantizers; later batches
-    * load. WRITE ORDER is the crash contract (same as
-    * [[AnnIndex.loadOrTrain]]): codebooks first, centroids LAST — the
-    * existence probe is on centroids, so a crash between the writes
-    * reads as "never trained" and the retry retrains deterministically
-    * over the partial, never loading a half-quantizer. */
-  private def loadOrTrain(spark: SparkSession, root: String, increment: DataFrame)
-      : (Array[Array[Double]], Array[Array[Array[Double]]]) =
-    loadQuantizer(spark, root).getOrElse {
-      increment.createOrReplaceTempView("graft_pq_train")
-      val cents = TrainingData.trainCentroids(spark, "graft_pq_train")
-      val cb = TrainingData.trainPqCodebooks(spark, "graft_pq_train")
-      import spark.implicits._
-      (for { j <- cb.indices; c <- cb(j).indices }
-        yield ((j + 1).toLong, (c + 1).toLong, cb(j)(c).toSeq))
-        .toDF("subspace", "code", "centroid")
-        .coalesce(1).write.mode("overwrite").parquet(s"$root/quantizer/codebooks")
-      cents.zipWithIndex.map { case (c, i) => ((i + 1).toLong, c.toSeq) }.toSeq
-        .toDF("cell", "centroid")
-        .coalesce(1).write.mode("overwrite").parquet(s"$root/quantizer/centroids")
-      (cents, cb)
-    }
-
-  /** True when the live corpus has outgrown the frozen coarse
-    * quantizer's ladder step — the [[refreeze]] scheduling signal
-    * (same contract as [[AnnIndex.needsRefreeze]]). */
-  def needsRefreeze(spark: SparkSession, root: String): Boolean =
-    loadQuantizer(spark, root).exists { case (cents, _) =>
-      TextSim.ivfCellsValue(readCodes(spark, root).count()) > cents.length
-    }
-
-  /** Packaged ops snapshot — same [[IndexHealth]] shape and one-scan
-    * cost as [[AnnIndex.health]]; see there for the contract. */
-  def health(spark: SparkSession, root: String): IndexHealth = {
-    ReadGuard.recoverForRead(spark, root)(recoverState(spark, root))
-    loadQuantizer(spark, root) match {
-      case None => IndexHealth.virgin
-      case Some((cents, _)) =>
-        BatchLog.requireFormat(spark, s"$root/codes", "PqIndex.health")
-        if (!BatchLog.hasData(spark, s"$root/codes"))
-          IndexHealth.emptyLog(spark, root, "vec_id", cents.length.toLong)
-        else IndexHealth.probe(spark, root, readCodes(spark, root),
-          "cell", "vec_id", cents.length.toLong,
-          n => TextSim.ivfCellsValue(n) > cents.length)
-    }
+  protected def train(spark: SparkSession, view: String, knownN: Option[Long])
+      : (Array[Array[Double]], Array[Array[Array[Double]]]) = {
+    val cents = TrainingData.trainCentroids(spark, view, knownN)
+    (cents, TrainingData.trainPqCodebooks(spark, view))
   }
 
-  /** One scheduled maintenance poll — same contract as
-    * [[AnnIndex.maintain]] (`corpus` only evaluated when the drift
-    * predicate fires). */
-  def maintain(spark: SparkSession, root: String, corpus: => DataFrame,
-      tombstoneRatio: Double = 0.1, maxLogDirs: Int = 64): IndexMaintenance = WriterLease.withLease(spark, root) {
-    val before = health(spark, root)
-    val refrozen = before.needsRefreeze
-    if (refrozen) refreeze(spark, root, corpus)
-    // hasData gate: see [[AnnIndex.maintain]] — unfed-root tombstones
-    // stay pending rather than being cleared by an empty-log compact.
-    // Directory-count trigger: see [[AnnIndex.maintain]].
-    val compacted = !refrozen && BatchLog.hasData(spark, s"$root/codes") && (
-      (before.tombstoned > 0 &&
-        before.tombstoned >= tombstoneRatio * math.max(before.live, 1L)) ||
-      BatchLog.committedKeys(spark, s"$root/codes").size > maxLogDirs)
-    if (compacted) compact(spark, root)
-    IndexMaintenance(refrozen, compacted, before, health(spark, root))
-  }
+  protected def encodeWith(vecs: DataFrame, cents: Array[Array[Double]],
+      cb: Array[Array[Array[Double]]]): DataFrame = encode(vecs, cents, cb)
 
   /** Scan-side encode of a `(vec_id, embedding)` frame under frozen
     * quantizers: cell argmin + pqM code positions + reconstruction
@@ -195,275 +81,11 @@ object PqIndex {
         s"${TrainingData.pqPn2Expr(d, pn2Lit(cb), "codes")} AS pn2")
   }
 
-  /** One maintenance batch — same contract as [[AnnIndex.ingest]]: the
-    * increment must carry vec_ids not already indexed. `batchKey` is
-    * the replay-idempotence handle ([[BatchLog]]). */
-  def ingest(spark: SparkSession, root: String, increment: DataFrame,
-      batchKey: Option[String] = None): Batch = WriterLease.withLease(spark, root) {
-    // Full recovery (refreeze AND compaction swap) BEFORE the append —
-    // see [[AnnIndex.ingest]]: appending inside a crashed compaction's
-    // swap window would cost the corpus in this very call.
-    recoverState(spark, root)
-    val (cents, cb) = loadOrTrain(spark, root, increment)
-    val enc = graft.CacheJanitor.register(encode(increment, cents, cb).persist())
-    BatchLog.append(enc, s"$root/codes", batchKey, "PqIndex", partitionBy = Seq("cell"))
-    Batch(enc, readCodes(spark, root))
-  }
+  override protected def queryInputs: Seq[String] = Seq(s"${TrainingData.pqVe(sprk)} AS ve")
 
-  /** Live code rows: snapshot minus tombstoned vec_ids. */
-  /** Crash recovery alone (refreeze + compaction swap windows) — run
-    * by every mutating or reading entry point before touching state. */
-  private[operators] def recoverState(spark: SparkSession, root: String): Unit = {
-    refreezeRecover(spark, root)
-    Tombstones.recoverCompaction(spark, root, s"$root/codes.__compact_tmp", s"$root/codes")
-    // Crashed migration swap (see SignatureIndex.recoverState).
-    Tombstones.recoverSwap(spark, s"$root/codes.__migrate_tmp", s"$root/codes")
-  }
+  override protected def queryExtras(cb: Array[Array[Array[Double]]]): Seq[(String, String)] =
+    Seq("luts" -> TrainingData.pqLutExpr(sprk, cbLit(cb)))
 
-  private def readCodes(spark: SparkSession, root: String): DataFrame = {
-    ReadGuard.recoverForRead(spark, root)(recoverState(spark, root))
-    // Tombstones pinned BEFORE the codes read resolves — see
-    // [[Tombstones.excluding]].
-    Tombstones.excluding(spark, root, "vec_id") {
-      BatchLog.read(spark, s"$root/codes", "PqIndex")
-        .withColumn("cell", col("cell").cast("long"))
-    }
-  }
-
-  /** One-time upgrade of a legacy flat-append root into the batch-keyed
-    * layout (rows unchanged; `cell=` partitioning preserved). */
-  def migrateLegacy(spark: SparkSession, root: String): Unit =
-    WriterLease.withLease(spark, root) {
-      BatchLog.adoptLegacy(spark, s"$root/codes", partitionBy = Seq("cell"))
-    }
-
-  /** Tombstone vec_ids out of the index — code files stay byte-untouched;
-    * the frozen quantizers are never retrained. */
-  def remove(spark: SparkSession, root: String, ids: DataFrame): Unit = WriterLease.withLease(spark, root) {
-    // Compaction recovery too — see [[AnnIndex.remove]].
-    recoverState(ids.sparkSession, root)
-    Tombstones.append(root, ids, "vec_id")
-  }
-
-  def remove(spark: SparkSession, root: String, ids: Seq[Long]): Unit = {
-    import spark.implicits._
-    remove(spark, root, ids.toDF("vec_id"))
-  }
-
-  /** Rewrite `codes/` minus tombstones (same `cell=` layout) and clear
-    * the side table — content-identical to a frozen-quantizer
-    * [[encode]] of the survivors (spec-pinned). */
-  def compact(spark: SparkSession, root: String): Unit = WriterLease.withLease(spark, root) {
-    val dest = s"$root/codes"
-    val tmp = s"$root/codes.__compact_tmp"
-    BatchLog.stageRewrite(readCodes(spark, root), dest, tmp, partitionBy = Seq("cell"))
-    copyQuantizerIntoStage(spark, root, tmp)
-    Tombstones.commitCompaction(spark, root, tmp, dest)
-  }
-
-  /** Carry the current quantizer into a codes stage — see
-    * [[AnnIndex]]'s copyQuantizerIntoStage (every committed version is
-    * self-contained once the pair protocol is in effect). */
-  private def copyQuantizerIntoStage(spark: SparkSession, root: String,
-      tmp: String): Unit = {
-    val src = quantizerDir(spark, root)
-    if (BatchLog.hasCommittedFiles(spark, s"$src/centroids"))
-      RefreezeProtocol.copyDir(spark, src,
-        s"$tmp/${RefreezeProtocol.quantStageName}")
-  }
-
-  // ---------------------------------------------------------------- refreeze
-
-  private def codesRefreezeTmp(root: String): String = s"$root/codes.__refreeze_tmp"
-  private def quantRefreezeTmp(root: String): String = s"$root/quantizer.__refreeze_tmp"
-  /** Hidden subdir of the codes stage holding the staged quantizer
-    * artifacts — staged TOGETHER with the codes so the failure model
-    * can never split them (see [[refreeze]]). `quantRefreezeTmp` is the
-    * older side-by-side layout: installed by [[commitRefreeze]] when
-    * recovering a stage that release sealed, swept as a stray
-    * otherwise. */
-  private val quantStage = RefreezeProtocol.quantStageName
-
-  /** Ladder-step migration, same contract and crash story as
-    * [[AnnIndex.refreeze]]: retrain coarse centroids AND the per-
-    * subspace PQ codebooks on the surviving floats (`corpus` supplies
-    * `(vec_id, embedding)` — PQ codes are lossy), re-encode survivors,
-    * fold tombstones out, swap quantizers + codes atomically under the
-    * marker-gated recovery protocol. */
-  def refreeze(spark: SparkSession, root: String, corpus: DataFrame): Unit = WriterLease.withLease(spark, root) {
-    refreezeRecover(spark, root, deletePartial = true) // clear any prior attempt
-    val liveIds = readCodes(spark, root).select("vec_id")
-    // Sidecar-served live count while no takedowns are pending (the
-    // DedupPipeline.health pattern, r20) — see [[AnnIndex.refreeze]].
-    val liveN =
-      if (Tombstones.isEmpty(spark, root))
-        BatchLog.committedRowCount(spark, s"$root/codes").getOrElse(liveIds.count())
-      else liveIds.count()
-    if (liveN == 0L) return // nothing to migrate
-    val survivors = graft.CacheJanitor.register(
-      corpus.select(col("vec_id"), col("embedding"))
-        .join(liveIds, Seq("vec_id"), "left_semi").persist())
-    try {
-      // Same corpus-completeness contract as [[AnnIndex.refreeze]]:
-      // exactly the live ids, once each, or abort loudly. One fused agg
-      // (count + exact countDistinct) — the separate distinct().count()
-      // and count() jobs this replaces computed the same two numbers in
-      // two passes over the persisted survivors (r19 optimization).
-      val chk = survivors.agg(count(lit(1)).as("n"),
-        countDistinct(col("vec_id")).as("nd")).head
-      val matched = chk.getLong(1)
-      require(matched == liveN,
-        s"refreeze corpus is missing ${liveN - matched} of $liveN live " +
-          "vec_ids — it must supply embeddings for every live id; " +
-          "aborting before any commit")
-      require(chk.getLong(0) == liveN,
-        "refreeze corpus supplies duplicate vec_ids; aborting before any commit")
-      survivors.createOrReplaceTempView("graft_pq_refreeze")
-      // The validated liveN IS the view's row count — see
-      // [[AnnIndex.refreeze]] (r20): no re-count job.
-      val cents = TrainingData.trainCentroids(spark, "graft_pq_refreeze",
-        knownN = Some(liveN))
-      val cb = TrainingData.trainPqCodebooks(spark, "graft_pq_refreeze")
-      import spark.implicits._
-      val ctmp = codesRefreezeTmp(root)
-      RefreezeProtocol.deleteIfExists(spark, ctmp)
-      BatchLog.stageRewrite(encode(survivors, cents, cb),
-        s"$root/codes", ctmp, partitionBy = Seq("cell"))
-      // Quantizers INSIDE the codes stage — one stage directory, so the
-      // failure model (crashes + whole-dir deletions) can never split
-      // them from the codes they encode (see AnnIndex.refreeze).
-      cents.zipWithIndex.map { case (c, i) => ((i + 1).toLong, c.toSeq) }.toSeq
-        .toDF("cell", "centroid")
-        .coalesce(1).write.mode("overwrite").parquet(s"$ctmp/$quantStage/centroids")
-      (for { j <- cb.indices; c <- cb(j).indices }
-        yield ((j + 1).toLong, (c + 1).toLong, cb(j)(c).toSeq))
-        .toDF("subspace", "code", "centroid")
-        .coalesce(1).write.mode("overwrite").parquet(s"$ctmp/$quantStage/codebooks")
-      RefreezeProtocol.sealStage(spark, ctmp, "pq")
-      commitRefreeze(spark, root)
-    } finally graft.CacheJanitor.drain()
-  }
-
-  /** Commit a sealed stage — see [[AnnIndex]]'s commitRefreeze: on
-    * versioned roots the quantizer rides the codes commit as ONE
-    * version (wait-free for readers); the in-place protocol (and the
-    * old side-by-side stage upgrade) is preserved for the rest. */
-  private def commitRefreeze(spark: SparkSession, root: String): Unit = {
-    val ctmp = codesRefreezeTmp(root)
-    val staged = s"$ctmp/$quantStage"
-    val dest = s"$root/codes"
-    val fs = new org.apache.hadoop.fs.Path(dest)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (VersionedState.enabled || VersionedState.isVersioned(fs, dest)) {
-      // Atomic install — post-marker path, see AnnIndex.commitRefreeze.
-      if (!RefreezeProtocol.exists(spark, staged) &&
-          RefreezeProtocol.exists(spark, quantRefreezeTmp(root)))
-        RefreezeProtocol.copyDirAtomic(spark, quantRefreezeTmp(root), staged)
-      Tombstones.commitCompaction(spark, root, ctmp, dest)
-      RefreezeProtocol.deleteIfExists(spark, quantRefreezeTmp(root))
-    } else {
-      if (RefreezeProtocol.exists(spark, staged))
-        RefreezeProtocol.swapIfStaged(spark, staged, s"$root/quantizer")
-      else
-        RefreezeProtocol.swapIfStaged(spark, quantRefreezeTmp(root), s"$root/quantizer")
-      Tombstones.commitCompaction(spark, root, ctmp, dest)
-    }
-  }
-
-  /** Complete or abandon a crashed [[refreeze]]. */
-  private def refreezeRecover(spark: SparkSession, root: String,
-      deletePartial: Boolean = false): Unit = {
-    val ctmp = codesRefreezeTmp(root)
-    if (RefreezeProtocol.exists(spark, ctmp)) {
-      if (RefreezeProtocol.readMarker(spark, ctmp).isDefined) {
-        // Commit only when the staged codes still hold committed data
-        // files — a marker-only husk (its stage deleted out from under
-        // an in-flight refreeze) must be dropped, never swapped over
-        // the live codes (see RefreezeProtocol.hasStagedData).
-        if (RefreezeProtocol.hasStagedData(spark, ctmp))
-          commitRefreeze(spark, root)
-        else {
-          RefreezeProtocol.deleteIfExists(spark, ctmp)
-          RefreezeProtocol.deleteIfExists(spark, quantRefreezeTmp(root))
-        }
-      } else if (deletePartial) {
-        RefreezeProtocol.deleteIfExists(spark, ctmp)
-        RefreezeProtocol.deleteIfExists(spark, quantRefreezeTmp(root))
-      }
-    } else if (deletePartial)
-      RefreezeProtocol.deleteIfExists(spark, quantRefreezeTmp(root))
-  }
-
-  /** ADC top-k neighbors for a `(query_id, embedding)` frame against the
-    * persisted index; optional exact re-rank against a float corpus. */
-  def topK(spark: SparkSession, root: String, queries: DataFrame, k: Int = 3,
-      rerank: Option[DataFrame] = None, nprobe: Option[Int] = None): DataFrame = {
-    // FULL recovery (refreeze AND compaction swap), lease-guarded from
-    // this read-only entry — see [[AnnIndex.topK]].
-    ReadGuard.recoverForRead(spark, root)(recoverState(spark, root))
-    topKRecovered(spark, root, queries, k, rerank, nprobe)
-  }
-
-  /** [[topK]] after recovery — read-only, one manifest snapshot (see
-    * [[AnnIndex]]). */
-  private def topKRecovered(spark: SparkSession, root: String, queries: DataFrame,
-      k: Int, rerank: Option[DataFrame],
-      nprobe: Option[Int]): DataFrame = BatchLog.withManifestSnapshot {
-    // Tombstones pinned FIRST, before the quantizer load resolves the
-    // codes version — see [[AnnIndex]]'s topKRecovered.
-    val tomb = Tombstones.read(spark, root, "vec_id")
-    val (cents, cb) = loadQuantizer(spark, root)
-      .getOrElse(sys.error(s"no PQ index at $root — ingest at least one batch first"))
-    val d = sprk
-    val cl = TrainingData.centsLit(cents)
-    // Ladder-aware probe count — see [[AnnIndex.probesFor]]: the probed
-    // corpus fraction, not the probe COUNT, is what recall tracks.
-    val np = nprobe.getOrElse(AnnIndex.probesFor(cents.length))
-    val qs = queries
-      .selectExpr("query_id", "embedding", s"${TrainingData.pqVe(d)} AS ve",
-        s"${TextSim.dotHof(d, "embedding", "embedding")} AS n2",
-        s"transform(sequence(1, ${cents.length}), ci -> ${TextSim.dist2(d, "embedding", s"element_at($cl, ci)")}) AS ds")
-      .selectExpr("query_id", "embedding", "n2",
-        s"${TrainingData.pqLutExpr(d, cbLit(cb))} AS luts",
-        s"${TrainingData.topNCells(d, "ds", np)} AS probes")
-    val qp = graft.CacheJanitor.register(
-      qs.selectExpr("query_id", "embedding", "n2", "luts", "explode(probes) AS cell").persist())
-    // Bounded collect (≤ np·|Q| longs, np = max(probeCells, cells/4) by
-    // default — grows with the cell ladder) → static partition filter.
-    val probed = qp.select("cell").distinct().collect().map(_.getLong(0)).toSeq
-    // Manifest-aware read (r15, same as AnnIndex.topK): fold cell files
-    // come from the fold manifest, zero listings; flat increments list.
-    // Tombstone anti-join against the set pinned at entry.
-    val codes = BatchLog.read(spark, s"$root/codes", "PqIndex")
-      .where(col("cell").isin(probed: _*))
-      .withColumn("cell", col("cell").cast("long"))
-      .join(tomb, Seq("vec_id"), "left_anti")
-    val scored = qp.join(codes, Seq("cell"))
-      .where(col("vec_id") =!= col("query_id"))
-      .selectExpr("query_id", "vec_id AS neighbor_id", "cell",
-        s"${TrainingData.pqApproxDot(d, "luts", "codes")} / (sqrt(n2) * sqrt(pn2)) AS approx_cosine")
-    val byApprox = Window.partitionBy("query_id")
-      .orderBy(col("approx_cosine").desc, col("neighbor_id"))
-    rerank match {
-      case None =>
-        scored.withColumn("rnk", row_number().over(byApprox).cast("long"))
-          .where(col("rnk") <= k)
-      case Some(corpus) =>
-        val pool = scored.withColumn("rka", row_number().over(byApprox))
-          .where(col("rka") <= math.max(k, rerankPool))
-        val vn = corpus.selectExpr("vec_id",
-          "embedding", s"${TextSim.dotHof(d, "embedding", "embedding")} AS fn2")
-        val qn = vn.toDF("q_id", "q_emb", "q_n2")
-        val nn = vn.toDF("n_id", "n_emb", "n_n2")
-        val exact = pool
-          .join(qn, pool("query_id") === qn("q_id"))
-          .join(nn, pool("neighbor_id") === nn("n_id"))
-          .selectExpr("query_id", "neighbor_id", "cell", "approx_cosine",
-            s"${TextSim.dotHof(d, "q_emb", "n_emb")} / (sqrt(q_n2) * sqrt(n_n2)) AS cosine")
-        val byExact = Window.partitionBy("query_id")
-          .orderBy(col("cosine").desc, col("neighbor_id"))
-        exact.withColumn("rnk", row_number().over(byExact).cast("long"))
-          .where(col("rnk") <= k)
-    }
-  }
+  protected def approxCosine(cb: Array[Array[Array[Double]]]): String =
+    s"${TrainingData.pqApproxDot(sprk, "luts", "codes")} / (sqrt(n2) * sqrt(pn2))"
 }

@@ -21,15 +21,12 @@ import org.apache.spark.sql.SparkSession
   *    a retryable error ([[ConcurrentMaintenanceException]] at entry;
   *    Spark's own missing-file failure if the swap lands mid-scan),
   *    never a silent partial or empty result;
-  *  - a SEALED refreeze stage blocks at entry ONLY for the legacy
-  *    layouts: since r19 the staged quantizer rides the versioned
-  *    codes commit as ONE `codes/_versions/<n>` state (quantizer +
-  *    codes resolve together — [[AnnIndex]]/[[PqIndex]] quantizerDir),
-  *    so the new protocol's sealed window is wait-free too; only a
-  *    side-by-side legacy stage (whose commit swaps `root/quantizer`
-  *    in place — a mid-commit read could pair a new quantizer with old
-  *    codes, a silently WRONG mix) or an in-place codes commit keeps
-  *    the loud retry;
+  *  - a SEALED refreeze stage blocks at entry ONLY when its commit is
+  *    in place (versioning disabled on a never-versioned root): on
+  *    versioned roots the staged quantizer rides the codes commit as
+  *    ONE `codes/_versions/<n>` state (quantizer + codes resolve
+  *    together — [[IvfIndex.quantizerDir]]), so the sealed window is
+  *    wait-free too;
   *  - a reader whose scan outlives the GC grace period loses files
   *    loudly (FileNotFound), same as every LSM store — the retention
   *    knobs are sized against the longest query.
@@ -39,7 +36,7 @@ import org.apache.spark.sql.SparkSession
   *  1. ONE listing of the operator root classifies swap debris — every
   *     staged-swap artifact is a root-level sibling whose name contains
   *     the reserved `.__` infix (`.__compact_tmp`, `.__refreeze_tmp`,
-  *     `.__migrate_tmp`, `.__swap_intent`).
+  *     `.__swap_intent`).
   *  2. No debris (the steady state): read, zero lease traffic, zero
   *     mutation — same cost as before.
   *  3. Debris present: recovery MUTATES (adopts/drops staged swaps), so
@@ -110,27 +107,14 @@ private[graft] object ReadGuard {
       else if (!fs.exists(new HPath(root, base))) true // orphan tmp: legacy mid-swap
       else if (n.endsWith(".__refreeze_tmp")) {
         // Sealed stage ⇒ the commit is imminent or half-done; unsealed
-        // ⇒ still staging, dest consistent (never blocking). Since r19
-        // a SEALED stage blocks only when its commit will touch live
-        // state IN PLACE:
-        //  - the dest's codes commit is in-place (versioning disabled
-        //    on a never-versioned root), or
-        //  - the family has a quantizer but the stage lacks the
-        //    in-stage `_quantizer` (a legacy side-by-side stage, whose
-        //    commit swaps `root/quantizer` in place — a read entering
-        //    that window could pair a new quantizer with old codes).
-        // The new protocol's stage (in-stage quantizer + versioned
-        // dest) commits quantizer + codes as ONE version — committed
-        // state untouched, readers wait-free, non-blocking.
-        val tmpP = new HPath(root, n)
-        if (!fs.exists(new HPath(tmpP, RefreezeProtocol.markerName))) false
-        else {
-          val destVersioned = VersionedState.enabled ||
-            VersionedState.isVersioned(fs, new HPath(root, base).toString)
-          if (!destVersioned) true
-          else fs.exists(new HPath(root, "quantizer")) &&
-            !fs.exists(new HPath(tmpP, RefreezeProtocol.quantStageName))
-        }
+        // ⇒ still staging, dest consistent (never blocking). A SEALED
+        // stage blocks only when its commit touches live state IN PLACE
+        // (versioning disabled on a never-versioned root); a versioned
+        // commit lands quantizer + codes as ONE new version — committed
+        // state untouched, readers wait-free.
+        fs.exists(new HPath(new HPath(root, n), RefreezeProtocol.markerName)) &&
+          !(VersionedState.enabled ||
+            VersionedState.isVersioned(fs, new HPath(root, base).toString))
       }
       else false
     }

@@ -4,13 +4,12 @@ import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.sql.SparkSession
 
 /** Shared plumbing for the index refreeze (ladder-step migration)
-  * commits ([[CosineDedupIndex.refreeze]], [[AnnIndex.refreeze]],
-  * [[PqIndex.refreeze]]): stage EVERYTHING, write a completion marker
-  * LAST, then run the destructive commit — so recovery can always
-  * classify a crash unambiguously (marker present = stage complete,
-  * finish the commit idempotently; marker absent = partial stage, drop
-  * it). Hadoop FileSystem API throughout, same as the compaction
-  * commits. */
+  * commits ([[CosineDedupIndex.refreeze]], [[IvfIndex.refreeze]]):
+  * stage EVERYTHING, write a completion marker LAST, then run the
+  * destructive commit — so recovery can always classify a crash
+  * unambiguously (marker present = stage complete, finish the commit
+  * idempotently; marker absent = partial stage, drop it). Hadoop
+  * FileSystem API throughout, same as the compaction commits. */
 private[graft] object RefreezeProtocol {
 
   val markerName = "_refreeze_complete"
@@ -28,11 +27,9 @@ private[graft] object RefreezeProtocol {
 
   /** Recursive small-dir copy (quantizer artifacts are a few KB-scale
     * files) — used to carry the current quantizer forward into
-    * compaction/migration stages so every committed codes version
-    * stays self-contained once the pair protocol is in effect. Safe
-    * ONLY pre-marker (a crash mid-copy leaves an unmarked/unintended
-    * stage that recovery drops whole); post-marker paths must use
-    * [[copyDirAtomic]]. */
+    * compaction stages so every committed codes version stays
+    * self-contained. Safe ONLY pre-marker: a crash mid-copy leaves an
+    * unmarked/unintended stage that recovery drops whole. */
   def copyDir(spark: SparkSession, src: String, dst: String): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = fsOf(spark, src)
@@ -40,27 +37,6 @@ private[graft] object RefreezeProtocol {
       require(org.apache.hadoop.fs.FileUtil.copy(
         fs, new HPath(src), fs, new HPath(dst), false, true, conf),
         s"could not copy $src into $dst")
-  }
-
-  /** [[copyDir]] made crash-idempotent for POST-MARKER use (the
-    * legacy-stage upgrade inside commitRefreeze): the copy lands in a
-    * sibling tmp and installs by ONE rename. The commit path guards on
-    * `!exists(dst)` before copying, so a crash-and-rerun either sees no
-    * `dst` (tmp swept, copy re-runs whole) or a COMPLETE `dst` — never
-    * a half-copied quantizer committed as a real one (which would
-    * resolve new codes under the stale top-level fallback: the silent
-    * old-quantizer/new-codes mix this protocol exists to prevent). */
-  def copyDirAtomic(spark: SparkSession, src: String, dst: String): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = fsOf(spark, src)
-    if (!fs.exists(new HPath(src))) return
-    val tmp = s"$dst.__copy_tmp"
-    fs.delete(new HPath(tmp), true)
-    require(org.apache.hadoop.fs.FileUtil.copy(
-      fs, new HPath(src), fs, new HPath(tmp), false, true, conf),
-      s"could not copy $src into $tmp")
-    require(fs.rename(new HPath(tmp), new HPath(dst)),
-      s"could not install $tmp at $dst")
   }
 
   private def fsOf(spark: SparkSession, path: String): FileSystem =

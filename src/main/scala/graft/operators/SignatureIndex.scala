@@ -81,7 +81,7 @@ object SignatureIndex {
     * pairs. The increment must carry doc_ids not already in the index
     * (keep-last dedup is the landing layer's job, upstream of this). */
   /** `allSigs` is construct-on-first-use (r20, same contract as
-    * [[AnnIndex.Batch]]): its construction costs a schema-inference job
+    * [[IvfIndex.Batch]]): its construction costs a schema-inference job
     * + the log's listing FS ops, and on the indexed pair path nothing
     * consumes it. It pins the log state at FIRST ACCESS — read it before
     * further mutations of the root (every existing caller does).
@@ -177,7 +177,7 @@ object SignatureIndex {
     * postings, candidates, and exact-verify rows immediately — without
     * touching the append-only snapshot files. A pre-batch-format root is
     * refused here (its arrays predate the sorted-at-build contract the
-    * intersect kernel needs) — [[migrateLegacy]] upgrades it in place. */
+    * intersect kernel needs). */
   def readIndex(spark: SparkSession, root: String, table: String = "signatures"): DataFrame = {
     ReadGuard.recoverForRead(spark, root)(recoverState(spark, root, table))
     // Read-only from here: one manifest snapshot for the whole read
@@ -271,24 +271,8 @@ object SignatureIndex {
     * an existence probe during the swap window would otherwise misread
     * a fully-staged compaction as an empty index. */
   private[operators] def recoverState(spark: SparkSession, root: String,
-      table: String = "signatures"): Unit = {
+      table: String = "signatures"): Unit =
     Tombstones.recoverCompaction(spark, root, s"$root/$table.__compact_tmp", s"$root/$table")
-    // A crashed MIGRATION swap too (round 17): only adoptLegacy's own
-    // entry recovered it before, so a migrate that died between its
-    // delete and rename read as a silent-empty log on every other
-    // entry point until someone re-ran migrateLegacy.
-    Tombstones.recoverSwap(spark, s"$root/$table.__migrate_tmp", s"$root/$table")
-  }
-
-  /** One-time upgrade of a legacy flat-append root: re-sorts every
-    * stored shingle array (pre-change rows were `array_distinct` order,
-    * which the two-pointer kernel would silently miscount) and rewrites
-    * into the batch-keyed layout with an atomic swap. */
-  def migrateLegacy(spark: SparkSession, root: String, table: String = "signatures"): Unit =
-    WriterLease.withLease(spark, root) {
-      BatchLog.adoptLegacy(spark, s"$root/$table",
-        _.select(col("doc_id"), sort_array(col("shs")).as("shs")))
-    }
 
   /** Tombstone doc_ids out of the index. Appends to the side table only
     * — snapshot files stay byte-untouched (spec-pinned); the ids vanish

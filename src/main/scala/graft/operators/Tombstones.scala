@@ -177,7 +177,7 @@ private[graft] object Tombstones {
     * the tombstone root the commit clears, when it does). The r15
     * marker was an empty file keyed by dest alone, and SEVERAL
     * protocols swap into the same dest (`__compact_tmp`,
-    * `__migrate_tmp`, `__refreeze_tmp`): a recoverer probing a
+    * `__refreeze_tmp`): a recoverer probing a
     * DIFFERENT protocol's tmp would find it absent, conclude "rename
     * finished", drop the intent, and — on the compaction path — clear
     * the tombstone side table while the crashed swap's own tmp still

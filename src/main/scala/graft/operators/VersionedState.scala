@@ -43,10 +43,9 @@ import org.apache.spark.sql.SparkSession
   * an operator sizes against its longest query, exactly as in every
   * LSM store. [[ReadGuard]]'s loud-retry remains the fallback ONLY for
   * roots that predate the upgrade (their swaps stay in-place until the
-  * first versioned commit) and for legacy-shaped refreeze stages:
-  * since r19 the refreeze protocol stages its quantizer artifacts
-  * INSIDE the codes stage, so quantizer + codes commit as ONE version
-  * (`codes/_versions/<n>/_quantizer`) and the sealed window is
+  * first versioned commit): the refreeze protocol stages its quantizer
+  * artifacts INSIDE the codes stage, so quantizer + codes commit as ONE
+  * version (`codes/_versions/<n>/_quantizer`) and the sealed window is
   * wait-free too — see [[RefreezeProtocol.quantStageName]].
   *
   * Increments APPEND INSIDE the current version directory (fold
@@ -243,11 +242,15 @@ private[graft] object VersionedState {
     * without-new-commit property), while a steady loop pays ~4 sweeps
     * per grace window instead of one per batch. */
   def gcAllAmortized(spark: SparkSession, root: String, force: Boolean): Unit = {
+    // Keyed on the qualified path so `root` and `root/` share one stamp;
+    // stamped only after the sweep returns, so a sweep that throws is
+    // retried by the next poll instead of skipped for graceMs/4.
+    val key = fsOf(spark, root).makeQualified(new HPath(root)).toString
     val now = System.currentTimeMillis()
-    val last = Option(lastGcAllMs.get(root)).map(_.longValue).getOrElse(0L)
+    val last = Option(lastGcAllMs.get(key)).map(_.longValue).getOrElse(0L)
     if (force || now - last >= graceMs / 4) {
-      lastGcAllMs.put(root, now)
       gcAll(spark, root)
+      lastGcAllMs.put(key, now)
     }
   }
 

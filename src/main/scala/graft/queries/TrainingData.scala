@@ -725,15 +725,24 @@ object TrainingData {
     * position, so any position's value count IS the row count — the
     * caller's separate `SELECT count(*)` sizing job becomes free. The
     * (mn, span) numbers are untouched (same scan, same group-by, same
-    * min/max arithmetic). */
+    * min/max arithmetic). The explode is OUTER so a NULL or empty
+    * embedding surfaces as a NULL-`pos` group instead of silently
+    * dropping out of the count (an undercounted n picks a smaller cell
+    * ladder step); such rows, and ragged dims, are refused. */
   private[graft] def quantStatsN(s: SparkSession, view: String)
       : (Array[Double], Array[Double], Long) = {
-    val stats = s.sql(
+    val all = s.sql(
       s"""SELECT pos, min(CAST(col AS DOUBLE)) AS mn, max(CAST(col AS DOUBLE)) AS mx,
          |  CAST(count(*) AS BIGINT) AS c
-         |FROM $view LATERAL VIEW posexplode(embedding) t AS pos, col
-         |GROUP BY pos""".stripMargin).collect().sortBy(_.getInt(0))
+         |FROM $view LATERAL VIEW OUTER posexplode(embedding) t AS pos, col
+         |GROUP BY pos""".stripMargin).collect()
+    val (nulls, stats0) = all.partition(_.isNullAt(0))
+    require(nulls.isEmpty, s"$view holds ${nulls.map(_.getLong(3)).sum} rows " +
+      "with a NULL or empty embedding — the quantizer cannot be trained on them")
+    val stats = stats0.sortBy(_.getInt(0))
     val n = if (stats.isEmpty) 0L else stats(0).getLong(3)
+    require(stats.forall(_.getLong(3) == n),
+      s"$view holds embeddings of differing dimensions — every row needs ${stats.length}")
     (stats.map(_.getDouble(1)), stats.map(r => r.getDouble(2) - r.getDouble(1)), n)
   }
 

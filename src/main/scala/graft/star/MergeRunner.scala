@@ -472,7 +472,7 @@ object MergeRunner {
       "policy" -> wanted,
       "refs_version" ->
         LandingLog.currentVersion(s"$processedRoot/$sourcesDir", refsTable).toString))
-    graft.CacheJanitor.drain()
+    graft.CacheJanitor.drain(blocking = true)
     written.result()
   }
 

@@ -307,7 +307,7 @@ object Runner {
       if ups(t) && ks.nonEmpty => s"folded|$t" -> ks.max }.toMap)
     // Release operator-internal persists (sequentialId's sorted frames)
     // now that every snapshot write has materialized them.
-    graft.CacheJanitor.drain()
+    graft.CacheJanitor.drain(blocking = true)
     w
   }
 

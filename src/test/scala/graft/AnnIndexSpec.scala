@@ -59,6 +59,19 @@ class AnnIndexSpec extends SparkSpec {
       "incremental codes must be identical to a frozen-quantizer full encode")
   }
 
+  test("a first batch holding a NULL embedding fails loudly — no quantizer trained on an undercount") {
+    val root = Files.createTempDirectory("graft_annidx_null").toString
+    val nullRow = vecs.where(col("vec_id") === 100)
+      .select(col("vec_id"), lit(null).cast(vecs.schema("embedding").dataType).as("embedding"))
+    val e = intercept[IllegalArgumentException] {
+      AnnIndex.ingest(spark, root, vecs.where(col("vec_id") < 100).unionByName(nullRow))
+    }
+    assert(e.getMessage.contains("NULL or empty embedding"), e.getMessage)
+    CacheJanitor.drain()
+    assert(!Files.exists(Paths.get(s"$root/quantizer/centroids")),
+      "the refused batch must not persist a quantizer")
+  }
+
   test("topK reads only the probed cell partitions and re-ranks to the exact local order") {
     val root = Files.createTempDirectory("graft_annidx2").toString
     AnnIndex.ingest(spark, root, vecs.where(col("vec_id") < 250))

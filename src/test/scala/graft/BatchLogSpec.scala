@@ -12,8 +12,7 @@ import org.apache.spark.sql.functions._
   * standard at-least-once retry) must leave every index byte-equivalent
   * to a single ingest — no duplicate signature/code rows, no inflated
   * delta pairs or stats, no burned label batch numbers. Plus the legacy
-  * (pre-batch-format) layout gate: unversioned roots are refused loudly
-  * and migrate in place. */
+  * (pre-batch-format) layout gate: unversioned roots are refused loudly. */
 class BatchLogSpec extends SparkSpec {
   import spark.implicits._
 
@@ -333,50 +332,36 @@ class BatchLogSpec extends SparkSpec {
       "a batch committing after the fold's listing must stay replayable")
   }
 
-  test("a crashed refreeze sealed under the old side-by-side layout installs its quantizer on recovery") {
-    val root = Files.createTempDirectory("graft_bk_oldstage").toString
+  test("a sealed IVF refreeze stage without its in-stage quantizer is dropped, never committed") {
+    val root = Files.createTempDirectory("graft_bk_husk").toString
     val vecs = Tables.embeddings(spark, "/root/testdata/sf0.01")
       .select("vec_id", "embedding")
     AnnIndex.ingest(spark, root, vecs.where(col("vec_id") < 100))
     CacheJanitor.drain()
-    // Fabricate the crash state the PREVIOUS release could leave:
-    // quantizer staged side-by-side, codes staged, marker landed,
-    // commit never ran.
-    val qtmp = s"$root/quantizer.__refreeze_tmp"
-    spark.read.parquet(s"$root/quantizer/centroids")
-      .coalesce(1).write.parquet(s"$qtmp/centroids")
-    spark.read.parquet(s"$root/quantizer/stats")
-      .coalesce(1).write.parquet(s"$qtmp/stats")
-    val stagedParts = Files.list(Paths.get(s"$qtmp/centroids")).iterator().asScala
-      .map(_.getFileName.toString).filter(_.endsWith(".parquet")).toSet
+    val q0 = vecs.where(col("vec_id") === 0)
+      .select(col("vec_id").as("query_id"), col("embedding"))
+    def top() = AnnIndex.topK(spark, root, q0, k = 3).collect().map(_.toString).toSet
+    val clean = top()
+    def files(dir: String): Map[String, (Long, Long)] =
+      Files.walk(Paths.get(dir)).iterator().asScala.filter(Files.isRegularFile(_))
+        .map(f => f.toString -> (Files.size(f), Files.getLastModifiedTime(f).toMillis)).toMap
+    val before = files(s"$root/codes") ++ files(s"$root/quantizer")
+    val resolvedBefore = BatchLog.resolve(spark, s"$root/codes")
+    // A husk: staged codes and the completion marker, but no in-stage
+    // `_quantizer`. Committing it would install new codes under the old
+    // quantizer; recovery must drop it like a marker-only husk.
     val ctmp = s"$root/codes.__refreeze_tmp"
     BatchLog.stageRewrite(
       BatchLog.read(spark, s"$root/codes", "test"), s"$root/codes", ctmp,
       partitionBy = Seq("cell"))
     RefreezeProtocol.sealStage(spark, ctmp, "ann")
-    // Any entry point triggers recovery; committing the staged codes
-    // while skipping the staged quantizer would serve new codes under
-    // the old centroids — the quantizer must install from the old tmp.
-    val q0 = vecs.where(col("vec_id") === 0)
-      .select(col("vec_id").as("query_id"), col("embedding"))
-    assert(AnnIndex.topK(spark, root, q0, k = 1).count() == 1)
+    assert(top() == clean)
     CacheJanitor.drain()
-    assert(!Files.exists(Paths.get(qtmp)), "the staged quantizer must be consumed, not skipped")
-    assert(!Files.exists(Paths.get(ctmp)))
-    // Since r19 recovery UPGRADES a legacy stage into the versioned
-    // pair protocol: the staged quantizer rides the codes commit as
-    // `codes/_versions/<n>/_quantizer` (one committed state — a read
-    // can never pair the new codes with the old centroids), while the
-    // top-level `quantizer` dir stays untouched as the fallback for
-    // readers still pinned to pre-refreeze versions.
-    val resolved = BatchLog.resolve(spark, s"$root/codes")
-    assert(resolved.contains("_versions"),
-      "recovery must commit the legacy stage through the versioned protocol")
-    val installedParts = Files.list(Paths.get(s"$resolved/_quantizer/centroids"))
-      .iterator().asScala.map(_.getFileName.toString)
-      .filter(_.endsWith(".parquet")).toSet
-    assert(installedParts == stagedParts,
-      "recovery must install the quantizer the crashed refreeze staged, in-version")
+    assert(!Files.exists(Paths.get(ctmp)), "recovery must drop the husk")
+    assert(BatchLog.resolve(spark, s"$root/codes") == resolvedBefore,
+      "the husk must not commit a new codes version")
+    assert(files(s"$root/codes") ++ files(s"$root/quantizer") == before,
+      "live codes and quantizer must be left untouched")
   }
 
   test("refreeze refuses a corpus with missing or duplicate live ids") {
@@ -436,7 +421,7 @@ class BatchLogSpec extends SparkSpec {
     assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 3L), got)
   }
 
-  test("a legacy flat label log is refused loudly on READ paths and migrates in place") {
+  test("a legacy flat label log is refused loudly on READ paths") {
     val root = Files.createTempDirectory("graft_bk_legacy_labels").toString
     // Pre-batch-format label log: flat parquet rows, no marker.
     Seq((1L, 1L, 1L), (2L, 1L, 1L), (3L, 3L, 2L))
@@ -451,14 +436,9 @@ class BatchLogSpec extends SparkSpec {
       val e = intercept[IllegalArgumentException](probe())
       assert(e.getMessage.contains("legacy"), e.getMessage)
     }
-    ClusterLabels.migrateLegacy(spark, root)
-    val got = ClusterLabels.read(spark, root)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 3L))
-    assert(ClusterLabels.latestBatch(spark, root) == 2L)
   }
 
-  test("a legacy flat-append root is refused loudly and migrates in place") {
+  test("a legacy flat-append root is refused loudly") {
     val root = Files.createTempDirectory("graft_bk_legacy").toString
     // Simulate a pre-change index: flat parquet files, UNSORTED shingle
     // arrays (array_distinct order), no format marker.
@@ -472,20 +452,7 @@ class BatchLogSpec extends SparkSpec {
     val e2 = intercept[IllegalArgumentException](
       SignatureIndex.ingest(spark, root, docs(batchB: _*)))
     assert(e2.getMessage.contains("legacy"), e2.getMessage)
-    CacheJanitor.drain()
-
-    // Migration re-sorts rows (the intersect kernel's precondition) and
-    // adopts the batch-keyed layout; ingest then proceeds normally.
-    SignatureIndex.migrateLegacy(spark, root)
-    val migrated = SignatureIndex.readIndex(spark, root)
-      .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
-    assert(migrated.keySet == Set(1L, 2L, 3L))
-    assert(migrated.values.forall(s => s == s.sorted), "migration must re-sort signatures")
-    val b2 = SignatureIndex.ingest(spark, root, docs(batchB: _*), batchKey = Some("b2"))
-    // Post-migration pair detection is exact: the cross-batch exact dup
-    // (3,6) at jaccard 1.0 must surface — it is precisely the pair an
-    // unsorted legacy row would have silently dropped.
-    assert(pairSet(b2.deltaPairs).contains((3L, 6L)))
+    assert(e2.getMessage.contains("rebuild"), e2.getMessage)
     CacheJanitor.drain()
   }
 

@@ -260,6 +260,30 @@ class ReaderMaintenanceSpec extends SparkSpec {
       "fresh reads clean after the maintenance sweep")
   }
 
+  test("amortized gcAll stamps a root only after its sweep returns, keyed on the qualified path") {
+    import graft.operators.VersionedState
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.listfail.impl", classOf[ListFailFileSystem].getName)
+    val root = s"listfail://${Files.createTempDirectory("graft_rdrmaint_gcstamp")}"
+    def sweeps(poll: => Unit): Int = {
+      val n0 = ListFailFileSystem.lists.get()
+      poll
+      ListFailFileSystem.lists.get() - n0
+    }
+    // A sweep that throws must not stamp the root: the next NON-forced
+    // poll retries it instead of skipping it for graceMs/4.
+    ListFailFileSystem.failing = true
+    try intercept[java.io.IOException] {
+      VersionedState.gcAllAmortized(spark, root, force = false)
+    } finally ListFailFileSystem.failing = false
+    assert(sweeps(VersionedState.gcAllAmortized(spark, root, force = false)) == 1,
+      "a failed sweep must be retried on the next poll")
+    // `root/` is the same root: one stamp, so no second sweep.
+    assert(sweeps(VersionedState.gcAllAmortized(spark, s"$root/", force = false)) == 0,
+      "root and root/ must share one stamp")
+    assert(sweeps(VersionedState.gcAllAmortized(spark, s"$root/", force = true)) == 1)
+  }
+
   test("refreeze unit is versioned: a topK planned before a refreeze completes after it; quantizer + codes resolve as one pair") {
     import graft.operators.AnnIndex
     import org.apache.spark.sql.functions.col
@@ -309,7 +333,7 @@ class ReaderMaintenanceSpec extends SparkSpec {
     assert(rows(AnnIndex.topK(spark, root, queries, k = 3)).nonEmpty)
   }
 
-  test("a SEALED refreeze stage no longer blocks readers when the stage carries its quantizer (versioned protocol); legacy stages still do") {
+  test("a SEALED refreeze stage on a versioned root never blocks readers, with or without its in-stage quantizer") {
     import graft.operators.AnnIndex
     import org.apache.spark.sql.functions.col
     val root = hostileRoot("sealednonblock")
@@ -345,19 +369,18 @@ class ReaderMaintenanceSpec extends SparkSpec {
       // versioned rename; the committed state is untouched either way.
       assert(rows(AnnIndex.topK(spark, root, queries, k = 3)) == clean,
         "a sealed in-stage-quantizer stage must not block reads")
-      // Legacy shape (no in-stage quantizer, root quantizer present):
-      // the commit would swap root/quantizer IN PLACE — loud retry.
+      // No in-stage quantizer: a husk the versioned commit would never
+      // install (recovery drops it) — the committed state is untouched,
+      // so the read still serves it.
       fs.delete(new org.apache.hadoop.fs.Path(s"$tmp/_quantizer"), true)
-      intercept[ConcurrentMaintenanceException] {
-        AnnIndex.topK(spark, root, queries, k = 3)
-      }
+      assert(rows(AnnIndex.topK(spark, root, queries, k = 3)) == clean,
+        "a sealed stage without its quantizer must not block reads")
     } finally { release.countDown(); writer.join(30000) }
     assert(!writer.isAlive)
     // Writer gone: the stage is crash debris now; recovery under the
-    // lease completes the (legacy-shaped) commit or drops it, and reads
-    // converge. Drop the husk to keep the root clean for the tail read.
-    fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
+    // lease drops the husk, and reads converge.
     assert(rows(AnnIndex.topK(spark, root, queries, k = 3)) == clean)
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(tmp)), "recovery must drop the husk")
   }
 
   test("a read entry during a live writer's blocking window throws retryable, then succeeds after release") {
@@ -486,35 +509,6 @@ class ReaderMaintenanceSpec extends SparkSpec {
     assert(rows(ClusterLabels.read(spark, root)) == want)
   }
 
-  test("a migration crashed mid-swap heals on the NEXT READ — never a silent-empty log") {
-    // Round-17: only adoptLegacy's own entry recovered a crashed
-    // migrate swap; every other entry point saw dest absent + no
-    // compact debris and read the log as EMPTY until someone happened
-    // to re-run migrateLegacy. recoverState now completes the migrate
-    // swap too, so the first read after the crash heals it.
-    import graft.operators.SignatureIndex
-    import org.apache.spark.sql.functions.{col, reverse}
-    val root = hostileRoot("migratecrash")
-    val legacyRows = SignatureIndex.signatures(
-      (1L to 5L).map(i => (i, (0 until 9).map(j => s"m${i}w$j").mkString(" ")))
-        .toDF("doc_id", "text"))
-      .select(col("doc_id"), reverse(col("shs")).as("shs"))
-    legacyRows.write.mode("append").parquet(s"$root/signatures")
-    // Crash the migration inside its commit swap (dest deleted, staged
-    // tmp complete, intent marker up).
-    HostileFileSystem.armCrash("before-copy", "/signatures/_versions/00000001")
-    val e = intercept[Exception] { SignatureIndex.migrateLegacy(spark, root) }
-    HostileFileSystem.disarm()
-    CacheJanitor.drain()
-    assert(e != null)
-    // The next plain read heals the swap and serves the migrated rows.
-    val got = SignatureIndex.readIndex(spark, root)
-      .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
-    assert(got.keySet == (1L to 5L).toSet,
-      s"crashed migration must heal on read, got keys ${got.keySet}")
-    assert(got.values.forall(s => s == s.sorted), "healed rows carry the migrated sort")
-  }
-
   test("crashed blocking debris with a free lease: concurrent readers converge through lease-guarded recovery") {
     val root = hostileRoot("crashrace")
     seed(root)
@@ -559,4 +553,21 @@ class ReaderMaintenanceSpec extends SparkSpec {
     assert(!fsOf(root).exists(new org.apache.hadoop.fs.Path(s"$root/codes.__swap_intent")),
       "recovery must have completed the crashed swap")
   }
+}
+
+/** `listfail://` over local disk: counts every listStatus, and throws
+  * from it while [[ListFailFileSystem.failing]] is set. */
+class ListFailFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getScheme: String = "listfail"
+  override def getUri: java.net.URI = java.net.URI.create("listfail:///")
+  override def listStatus(f: org.apache.hadoop.fs.Path): Array[org.apache.hadoop.fs.FileStatus] = {
+    ListFailFileSystem.lists.incrementAndGet()
+    if (ListFailFileSystem.failing) throw new java.io.IOException("injected listStatus failure")
+    super.listStatus(f)
+  }
+}
+
+object ListFailFileSystem {
+  @volatile var failing = false
+  val lists = new java.util.concurrent.atomic.AtomicInteger(0)
 }

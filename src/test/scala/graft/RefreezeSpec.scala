@@ -168,20 +168,6 @@ class RefreezeSpec extends SparkSpec {
       .orderBy("rnk").collect().map(_.getAs[Long]("neighbor_id")).toSeq
     assert(top(root) == top(fresh))
     CacheJanitor.drain()
-
-    // An orphan quantizer stage (crash before the codes staged) is
-    // never installed. Readers leave it alone — a delete from a read
-    // path could race an in-flight refreeze's stage — and the next
-    // refreeze sweeps it before staging anew.
-    val qtmp = Paths.get(s"$root/quantizer.__refreeze_tmp")
-    Files.createDirectories(qtmp)
-    Files.writeString(qtmp.resolve("junk"), "partial")
-    AnnIndex.topK(spark, root, queries, k = 1).collect()
-    CacheJanitor.drain()
-    assert(Files.isDirectory(qtmp), "readers must not delete an in-flight stage")
-    AnnIndex.refreeze(spark, root, vecs)
-    CacheJanitor.drain()
-    assert(!Files.isDirectory(qtmp), "a fresh refreeze sweeps the orphan")
   }
 
   test("a marker-only refreeze husk is abandoned — never swapped over live codes") {

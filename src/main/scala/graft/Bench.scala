@@ -34,7 +34,7 @@ object Bench {
   private def canary(spark: SparkSession): Double = {
     val t0 = System.nanoTime()
     // bit_xor, not sum: ANSI mode overflows a sum of full-range
-    // xxhash64 longs (the r15 SigPruneBench gotcha).
+    // xxhash64 longs.
     val r = spark.range(0L, 50000000L, 1L, 32)
       .selectExpr("id", "xxhash64(id) AS h")
       .groupBy(org.apache.spark.sql.functions.pmod(

@@ -927,26 +927,15 @@ private[graft] object BatchLog {
     finally out.close()
   }
 
-  /** The point-lookup fold layout's kill/contrast switch (JVM property
-    * `graft.fold.point.layout.disable=true`): fold writes fall back to
-    * the pre-r19 arrival-order rows + default row groups — the
-    * ProdLookupBench contrast arm and the ops rollback. Read by the
-    * fold writers (the within-partition id sort) and by
-    * [[pointLookupWriteOptions]]. */
-  def pointLayoutDisabled: Boolean =
-    java.lang.Boolean.getBoolean("graft.fold.point.layout.disable")
-
   /** Parquet row-group byte bound for point-lookup-adopted fold writes
     * (r18 pricing, SCALEBENCH_r18_pointlookup: id-sorted rows + 1 MB
     * row groups turn a pushed `In(id)` into a row-group-pruned read —
     * ×0.08 of the arrival-order bytes at k=1, corpus-independent). The
     * sort itself is the CALLER's (`sortWithinPartitions` ahead of the
     * stage call — partition-local, no extra shuffle); this option rides
-    * the fold write so min/max windows stay ~1 MB instead of 128 MB.
-    * Empty when the layout is disabled ([[pointLayoutDisabled]]). */
+    * the fold write so min/max windows stay ~1 MB instead of 128 MB. */
   def pointLookupWriteOptions: Map[String, String] =
-    if (pointLayoutDisabled) Map.empty
-    else Map("parquet.block.size" -> (1L << 20).toString)
+    Map("parquet.block.size" -> (1L << 20).toString)
 
   private def writeFold(df: DataFrame, tmpPath: String, key: String,
       partitionBy: Seq[String], writeOptions: Map[String, String]): Unit = {
@@ -956,12 +945,6 @@ private[graft] object BatchLog {
     writeFoldManifest(df.sparkSession, dirFor(tmpPath, key))
     writeMarker(df.sparkSession, tmpPath)
   }
-
-  /** Stage a single-fold rewrite into `tmpPath`: one batch directory
-    * plus marker, no keys retired (specs fabricate crashed refreeze
-    * stages with it; real rewrites go through [[stageRewrite]]). */
-  def stage(df: DataFrame, tmpPath: String, partitionBy: Seq[String] = Nil): Unit =
-    writeFold(df, tmpPath, "a00001", partitionBy, Map.empty)
 
   /** Stage a full-log REWRITE (compaction, refreeze) of the log at
     * `srcPath` into `tmpPath` — one FRESH-auto-keyed fold directory plus

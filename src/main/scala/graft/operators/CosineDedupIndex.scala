@@ -120,12 +120,10 @@ object CosineDedupIndex {
     * pushed `In(vec_id)` ([[fetch]]) prunes to ~K row groups. Probe
     * reads are order-blind (they filter on `pgrp` and join on bucket),
     * so the bucket road is untouched. */
-  private def foldFrame(live: DataFrame, g: Int): DataFrame = {
-    val base = live.withColumn(pgrpCol, pmod(col("bucket"), lit(g.toLong)))
+  private def foldFrame(live: DataFrame, g: Int): DataFrame =
+    live.withColumn(pgrpCol, pmod(col("bucket"), lit(g.toLong)))
       .repartition(col(pgrpCol))
-    if (BatchLog.pointLayoutDisabled) base
-    else base.sortWithinPartitions(col(pgrpCol), col("vec_id"))
-  }
+      .sortWithinPartitions(col(pgrpCol), col("vec_id"))
 
   /** The frozen bucket mask, or None before the first batch. Stored
     * through the atomic snapshot protocol (`LandingLog.writeSnapshot`):

@@ -332,6 +332,12 @@ object Relational {
         else df.localCheckpoint(eager = false)
       (out, (scCc.getPersistentRDDs.keySet -- before).toSet)
     }
+    // Freed while the NEXT round's cached frame still carries these
+    // blocks in its lineage: safe only in local mode, where losing an
+    // executor kills the whole JVM, so that lineage is never recomputed.
+    // A cluster deployment (recoverable executor loss) must defer the
+    // free by one round, or a lost cached partition recomputes into the
+    // freed checkpoint blocks and fails the job.
     def freeRdds(ids: Set[Int]): Unit =
       ids.foreach(id => scCc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
     val p2 = graft.CacheJanitor.register(pairs.toDF("a", "b").persist())
@@ -345,7 +351,6 @@ object Relational {
       // edge type (a (INT, BIGINT) pair frame coerces src to BIGINT).
       // `undirected` is plan-only here — schema resolution runs no job.
       val nodeType = undirected.schema.head.dataType
-      val tUf = System.nanoTime()
       // Directed pairs suffice for union-find: both endpoints register,
       // and isolated nodes don't occur in a pair list by definition
       // (the self-loops exist for the distributed loop's groupBy).
@@ -370,8 +375,6 @@ object Relational {
         if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
       }
       val out = parent.keysIterator.map(n => (n, find(n))).toSeq
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        println(f"[cc] small-graph union-find ${es.length} edges ${(System.nanoTime() - tUf) / 1e9}%.2f s")
       import spark0.implicits._
       return out.toDF("node", "label")
         .select(col("node").cast(nodeType).as("node"), col("label").cast(nodeType).as("label"))
@@ -389,16 +392,12 @@ object Relational {
     // separate identity-labels distinct (a shuffle) and its own
     // materializing action disappear. One action covers round-0 state
     // + the starting convergence sum.
-    val tInit = System.nanoTime()
     var (labels, labelRdds) = truncate(
       edges.groupBy(col("src").as("node")).agg(min(col("dst")).as("label")))
     var prevSum = labelSum(labels)
-    if (sys.env.contains("GRAFT_CC_DEBUG"))
-      println(f"[cc] init+round0 ${(System.nanoTime() - tInit) / 1e9}%.2f s sum $prevSum")
     var converged = false
     var rounds = 1
     while (!converged && rounds < maxRounds) {
-      val tRound = System.nanoTime()
       val prop = edges.join(labels, edges("dst") === labels("node"))
         .groupBy(edges("src").as("node")).agg(min(col("label")).as("label"))
       // Pointer doubling (deferred): a label is itself a node, so look
@@ -425,8 +424,6 @@ object Relational {
       // changed — one overflow-free aggregate is the full convergence
       // test (and the action that materializes this round's cache).
       val nextSum = labelSum(next)
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        println(f"[cc] round $rounds total ${(System.nanoTime() - tRound) / 1e9}%.2f s sum $nextSum")
       converged = nextSum.compareTo(prevSum) == 0
       prevSum = nextSum
       // This round is materialized; the previous round's blocks (cache

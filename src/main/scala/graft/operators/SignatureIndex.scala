@@ -75,11 +75,6 @@ object SignatureIndex {
         s"sort_array(array_distinct(${TextSim.shingleHashes(sprk, "wh")})) AS shs")
   }
 
-  /** One maintenance batch: signatures for `increment` ONLY, appended to
-    * the snapshot at `root/table`; returns the new-side signatures, the
-    * full index as read back from disk, and the batch's verified delta
-    * pairs. The increment must carry doc_ids not already in the index
-    * (keep-last dedup is the landing layer's job, upstream of this). */
   /** `allSigs` is construct-on-first-use (r20, same contract as
     * [[IvfIndex.Batch]]): its construction costs a schema-inference job
     * + the log's listing FS ops, and on the indexed pair path nothing
@@ -98,7 +93,13 @@ object SignatureIndex {
       new Batch(newSigs, () => allSigs, deltaPairs)
   }
 
-  /** `batchKey` is the replay-idempotence handle ([[BatchLog]]): pass
+  /** One maintenance batch: signatures for `increment` ONLY, appended to
+    * the snapshot at `root/table`; returns the new-side signatures, the
+    * full index as read back from disk, and the batch's verified delta
+    * pairs. The increment must carry doc_ids not already in the index
+    * (keep-last dedup is the landing layer's job, upstream of this).
+    *
+    * `batchKey` is the replay-idempotence handle ([[BatchLog]]): pass
     * the landing batch id and a crash-after-commit retry of the same
     * batch REPLACES its own files instead of double-appending; `None`
     * mints a fresh auto key (not replay-idempotent). */
@@ -155,16 +156,14 @@ object SignatureIndex {
   /** Signature-log row count at which [[ingest]] switches pair
     * detection from the frame recompute to the posting/df side tables
     * (see the path-choice comment in [[ingest]]). */
-  val indexedPathMinRows: Long =
-    sys.env.getOrElse("SPARK_GRAFT_INDEXED_PAIRS_MIN_ROWS", "100000").toLong
+  val indexedPathMinRows: Long = 100000L
 
   /** Increment-size ceiling for the indexed path: above this many
     * signature rows the increment's own postings stop being a sane
     * broadcast (~100k docs × ~150 shingles ≈ 15M 8-byte keys ≈ a few
     * hundred MB of broadcast relation) and the frame path's shuffle
     * joins take over. */
-  val indexedPathMaxIncrementRows: Long =
-    sys.env.getOrElse("SPARK_GRAFT_INDEXED_PAIRS_MAX_INCREMENT_ROWS", "100000").toLong
+  val indexedPathMaxIncrementRows: Long = 100000L
 
   /** On-disk byte bound under which the pending tombstone side table is
     * explicitly broadcast inside [[deltaPairsIndexed]] (8-byte ids
@@ -238,13 +237,13 @@ object SignatureIndex {
             val base = BatchLog.readKeysWithKey(spark, path, ksame,
               "SignatureIndex.fetch")
             gOpt match {
-              case Some(g) if !pruningDisabled =>
+              case Some(g) =>
                 // One union LEG per hit group, each pushing ONLY that
                 // group's ids: a global In across several group files
                 // saturates min/max geometry (every spread id matches
                 // one row group in EVERY scanned file — the value
                 // windows can't express the mod-G structure; measured
-                // re-reading the whole fold at k=16, ProdLookupBench),
+                // re-reading the whole fold at k=16, r19 pricing),
                 // while a per-group id set matches only its own rows'
                 // groups — ~ids-per-group row groups per file.
                 val byGrp = ids.groupBy(i => java.lang.Math.floorMod(i, g.toLong).toInt)
@@ -324,20 +323,14 @@ object SignatureIndex {
     // to ~K row groups instead of K whole group files (×0.08 bytes at
     // k=1, SCALEBENCH_r18_pointlookup). Row SET unchanged — the
     // content-identical-to-rebuild contract is order-free.
-    // `graft.fold.point.layout.disable=true` writes the pre-r19
-    // arrival-order fold — the measurement contrast arm
-    // (ProdLookupBench) and the ops rollback switch.
-    val adopt = !BatchLog.pointLayoutDisabled
-    def laid(df: DataFrame, cols: org.apache.spark.sql.Column*): DataFrame =
-      if (adopt) df.sortWithinPartitions(cols: _*) else df
-    val opts = if (adopt) BatchLog.pointLookupWriteOptions else Map.empty[String, String]
+    val opts = BatchLog.pointLookupWriteOptions
     if (g >= 2 && rowsOpt.exists(_ >= foldLayoutMinRows)) {
       val fk = BatchLog.stageRewrite(
-        laid(live.withColumn(dgrpCol, pmod(col("doc_id"), lit(g.toLong)).cast("int"))
-          .repartition(col(dgrpCol)), col(dgrpCol), col("doc_id")),
+        live.withColumn(dgrpCol, pmod(col("doc_id"), lit(g.toLong)).cast("int"))
+          .repartition(col(dgrpCol)).sortWithinPartitions(col(dgrpCol), col("doc_id")),
         path, tmp, partitionBy = Seq(dgrpCol), writeOptions = opts)
       BatchLog.writeGroupsSidecar(spark, BatchLog.dirOf(tmp, fk), dgrpSidecarName, g)
-    } else BatchLog.stageRewrite(laid(live, col("doc_id")),
+    } else BatchLog.stageRewrite(live.sortWithinPartitions(col("doc_id")),
       path, tmp, writeOptions = opts)
     Tombstones.commitCompaction(spark, root, tmp, path)
     // Rebuild the derived posting/df logs from the fold eagerly —
@@ -469,6 +462,21 @@ object SignatureIndex {
     * would touch most group directories anyway — take the plain read. */
   private val hgrpSaturation = 0.7
 
+  /** Sys-prop/env long knob with the same "unreadable ⇒ safe default"
+    * convention as every sidecar read in this path: a malformed override
+    * warns and falls back instead of throwing NumberFormatException deep
+    * inside a compaction. */
+  private def longKnob(prop: String, env: String, default: Long): Long = {
+    val raw = sys.props.get(prop).orElse(sys.env.get(env))
+    raw.flatMap { s =>
+      scala.util.Try(s.trim.toLong).toOption.orElse {
+        System.err.println(
+          s"[graft] SignatureIndex: malformed $prop/$env value '$s'; using default $default")
+        None
+      }
+    }.getOrElse(default)
+  }
+
   /** Fold group count for a directory expected to hold `bytes`: groups
     * are FLOORED IN BYTES (default 512 KB, `graft.fold.group.bytes` /
     * `SPARK_GRAFT_FOLD_GROUP_BYTES` override — specs shrink it to get
@@ -488,21 +496,6 @@ object SignatureIndex {
     * alternative: zero file tax, but the page-pruning savings are
     * invisible on warm local storage and the per-row In evaluation made
     * probes SLOWER than full scans — rejected on wall-clock evidence.) */
-  /** Sys-prop/env long knob with the same "unreadable ⇒ safe default"
-    * convention as every sidecar read in this path: a malformed override
-    * warns and falls back instead of throwing NumberFormatException deep
-    * inside a compaction. */
-  private def longKnob(prop: String, env: String, default: Long): Long = {
-    val raw = sys.props.get(prop).orElse(sys.env.get(env))
-    raw.flatMap { s =>
-      scala.util.Try(s.trim.toLong).toOption.orElse {
-        System.err.println(
-          s"[graft] SignatureIndex: malformed $prop/$env value '$s'; using default $default")
-        None
-      }
-    }.getOrElse(default)
-  }
-
   private[graft] def foldGroupBytes: Long =
     longKnob("graft.fold.group.bytes", "SPARK_GRAFT_FOLD_GROUP_BYTES", 512L * 1024L)
 
@@ -546,13 +539,6 @@ object SignatureIndex {
   private[graft] val dgrpCol = "dgrp"
   private[graft] val dgrpSidecarName = "_dgrp_groups"
 
-  /** Measurement escape hatch (and ops kill switch): JVM property
-    * `graft.fold.pruning.disable=true` forces every probe onto the
-    * unpruned reads — the contrast arm SigPruneBench records. Answers
-    * are pinned identical either way. */
-  private def pruningDisabled: Boolean =
-    java.lang.Boolean.getBoolean("graft.fold.pruning.disable")
-
   /** Each partitioned key's group-count sidecar, read ONCE per probe —
     * [[hgrpProbeSet]] gates on the values and [[groupPrunedRead]] groups
     * directories by them, without re-reading the same sidecar twice
@@ -576,7 +562,6 @@ object SignatureIndex {
       incShingles: DataFrame, batchKey: Option[String],
       dfGs: Map[String, Option[Int]],
       postGs: Map[String, Option[Int]]): Option[Array[Long]] = {
-    if (pruningDisabled) return None
     val gs = (dfGs.values ++ postGs.values).toSeq
     if (gs.isEmpty) return None
     if (gs.exists(_.isEmpty)) return None // un-sidecarred fold: never guess
@@ -816,7 +801,7 @@ object SignatureIndex {
     // tombstone pin, the exact data-before-tombstones order the
     // versioned swap protocol's one silent-wrong interleaving needs;
     // lease-held ingest was safe, but the unleased tool/query callers —
-    // T74Probe, TrainingData, SigPruneBench — racing a compaction could
+    // TrainingData, FsOpsBench — racing a compaction could
     // pair old df counts with a cleared side table). Tombstones.read
     // lists the resolved side table eagerly, so the set is pinned here.
     val tombRaw = Tombstones.read(spark, root, "doc_id")
@@ -975,7 +960,7 @@ object SignatureIndex {
     val sigParted = BatchLog.partitionedKeys(spark, s"$root/$table", dgrpCol)
     val sigGs = sidecarGs(spark, s"$root/$table", sigParted, dgrpSidecarName)
     val candProbe =
-      if (pruningDisabled || !aligned || !matched.exists(sigParted)) None
+      if (!aligned || !matched.exists(sigParted)) None
       else Some(candIds.collect().map(_.getLong(0)))
     val sigsBase =
       if (aligned)

@@ -428,11 +428,6 @@ object TrainingData {
     * (dedup resolution over the pair graph). Candidates only ever come
     * from the probe→bucket equi-join; no corpus×corpus join exists in
     * the chain. */
-  /** The rendered Spark-side pair SQL on its own — the stage boundary
-    * `tools.Profile` times independently of the CC resolution loop. */
-  def lshPairsSql: String =
-    s"WITH ${lshPairCtes(sprk)}\nSELECT vec_a, vec_b FROM pairs"
-
   private def lshPairCtes(d: Dialect): String = {
     s"""cnt AS (SELECT CAST(count(*) AS BIGINT) AS n FROM embeddings),
        |m AS (SELECT ${TextSim.lshMask("n")} AS mask FROM cnt),

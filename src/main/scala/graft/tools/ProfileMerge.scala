@@ -9,9 +9,9 @@ import org.apache.spark.sql.functions._
   * per batch at sf0.01 against replay's ~8.8 s at shallow log depth —
   * the slope is killed, but the fixed per-batch cost must also win at
   * bench scale before the merge path is the default recommendation.
-  * House discipline is profile-before-optimize (ProfileIngest found
-  * file-count overhead where "df rescan" was blamed; ProfileStar did
-  * the same for the replay path), so this main runs the SAME merge
+  * House discipline is profile-before-optimize (profiling found
+  * file-count overhead where "df rescan" was blamed, and did the same
+  * for the replay path), so this main runs the SAME merge
   * loop StarLoopBench times, with [[MergeRunner]]'s phase hook
   * installed, and prints the per-phase p50 decomposition plus Spark
   * job counts per batch. The hook wraps the one real implementation —

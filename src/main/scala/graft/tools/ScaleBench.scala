@@ -86,7 +86,7 @@ object ScaleBench {
       length(text).cast("long").as("n_chars"))
   }
 
-  private[tools] def rotatedEmbeddings(emb: DataFrame, r: Int): DataFrame =
+  private def rotatedEmbeddings(emb: DataFrame, r: Int): DataFrame =
     emb.select(
       (col("vec_id") + lit(r * idStride)).as("vec_id"),
       expr(s"transform(embedding, (x, i) -> element_at(embedding, ((cast(i AS INT) + $r) % size(embedding)) + 1))")

@@ -85,8 +85,8 @@ class RefreezeSpec extends SparkSpec {
     // the old state kept intact.
     val live = CosineDedupIndex.readIndex(spark, root)
     val newMask = TextSim.lshMaskValue(live.count()).toLong
-    BatchLog.stage(CosineDedupIndex.encode(
-      live.select(col("vec_id"), col("embedding")), newMask), tmp)
+    BatchLog.stageRewrite(CosineDedupIndex.encode(
+      live.select(col("vec_id"), col("embedding")), newMask), s"$root/codes", tmp)
     CacheJanitor.drain()
     assert(CosineDedupIndex.readIndex(spark, root).count() == 500)
     assert(CosineDedupIndex.frozenMask(spark, root).contains(oldMask),
@@ -106,8 +106,8 @@ class RefreezeSpec extends SparkSpec {
     // (b) Crash AFTER the marker but before any commit step: the next
     // read completes the whole commit — new mask AND new codes together.
     val live2 = CosineDedupIndex.readIndex(spark, root)
-    BatchLog.stage(CosineDedupIndex.encode(
-      live2.select(col("vec_id"), col("embedding")), newMask), tmp)
+    BatchLog.stageRewrite(CosineDedupIndex.encode(
+      live2.select(col("vec_id"), col("embedding")), newMask), s"$root/codes", tmp)
     RefreezeProtocol.writeMarker(spark, tmp, newMask.toString)
     CacheJanitor.drain()
     val recovered = CosineDedupIndex.readIndex(spark, root)

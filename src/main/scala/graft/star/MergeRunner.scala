@@ -116,24 +116,6 @@ object MergeRunner {
     else { val t0 = System.nanoTime(); val r = f; h(tag, (System.nanoTime() - t0) / 1e9); r }
   }
 
-  /** Run independent per-table work from a bounded driver-thread pool —
-    * the same wall-clock lever [[Runner.ingestOnce]] applies to the 11
-    * ingest gates: Spark interleaves the small jobs, and the profiler
-    * showed the batch constant dominated by N sequential increment-sized
-    * pipelines, not by any one of them. */
-  private def inParallel[A, B](items: Seq[A], width: Int)(f: A => B): Seq[B] = {
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    if (items.size <= 1) items.map(f)
-    else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(items.size, width))
-      implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
-      try Await.result(Future.sequence(items.map(i => Future(f(i)))), Duration.Inf)
-      finally pool.shutdown()
-    }
-  }
-
   private def fsOf(spark: SparkSession, path: String) =
     new HPath(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
@@ -243,7 +225,7 @@ object MergeRunner {
 
     // ---- 1. non-fact sources: keep-last upsert into the currents ----
     val nonFactChanged = (changed -- Runner.factSources).toSeq.sorted
-    inParallel(nonFactChanged, 8) { t =>
+    Runner.inParallel(nonFactChanged, Runner.driverPoolWidth) { t =>
       timed(s"current:$t") {
         val pk = Schemas.sources(t)._2
         val inc = StarSchema.currentSnapshot(t)(
@@ -270,7 +252,7 @@ object MergeRunner {
     }
     val dimKeys = nonFactChanged.flatMap(Runner.dependencies(_)).distinct.sorted
       .filter(k => k.startsWith("dim-") && k != "dim-date")
-    inParallel(dimKeys, 8) { k =>
+    Runner.inParallel(dimKeys, Runner.driverPoolWidth) { k =>
       timed(s"dim:$k") {
         val dim = buildDim(k)
         LandingLog.writeSnapshot(dim, processedRoot, k)
@@ -420,7 +402,7 @@ object MergeRunner {
       // 15.9 s batch p50 in probes alone). `factSink` implementations
       // must accept concurrent per-table calls (the JDBC upsert opens
       // one connection per call; tables are distinct).
-      val factResults = inParallel(factChanged, factChanged.size)(factOne)
+      val factResults = Runner.inParallel(factChanged, Runner.driverPoolWidth)(factOne)
       val deltas = factResults.flatMap(_._1)
       written ++= factResults.flatMap(_._2)
 

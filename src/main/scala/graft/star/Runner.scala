@@ -6,6 +6,9 @@ import graft.sources.{Extract, LandingLog, WatermarkStore}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import scala.concurrent.{Await, Promise}
+import scala.concurrent.duration.Duration
+
 /** The incremental batch driver — the three reference Lambdas collapsed
   * into one Spark application (SURVEY.md §3: the process-boundary hops,
   * their async-invoke defects included, become plain function calls).
@@ -116,57 +119,80 @@ object Runner {
     if (!fs.exists(p)) 0L else fs.getContentSummary(p).getLength
   }
 
+  /** Width of the driver pool every per-table fan-out in this package
+    * runs from (ingest gates, star builds, warehouse loads, merge
+    * stages). A pool thread only schedules Spark jobs, so the bound caps
+    * driver-side fan-out (source connections, concurrent commits), not
+    * executor work. */
+  private[graft] val driverPoolWidth = 8
+
+  /** Run `f` over `items` from a pool of at most `width` driver threads;
+    * results come back in input order. Items START in input order, so an
+    * item may wait on a signal from an earlier item without deadlock.
+    *
+    * Every item is awaited before the call returns, even after one fails;
+    * then the first failure in input order is rethrown. A fail-fast join
+    * would return while siblings still write snapshots, CSVs or
+    * watermarks behind a caller that has moved on (and, in
+    * [[runOnce]], released its writer lease).
+    *
+    * `f` runs on pool threads, which do not hold the caller's
+    * [[WriterLease]] (the lease is per-thread): `f` must never call
+    * `WriterLease.withLease` on the caller's root, or it is refused. */
+  private[graft] def inParallel[A, B](items: Seq[A], width: Int)(f: A => B): Seq[B] =
+    if (items.size <= 1) items.map(f)
+    else {
+      import java.util.concurrent.{Callable, ExecutionException, Executors}
+      val pool = Executors.newFixedThreadPool(math.min(items.size, width))
+      try {
+        val running = items.map(i => pool.submit(new Callable[B] { def call(): B = f(i) }))
+        val outcomes = running.map { r =>
+          try Right(r.get()) catch { case e: ExecutionException => Left(e.getCause) }
+        }
+        outcomes.collectFirst { case Left(t) => throw t }
+        outcomes.collect { case Right(b) => b }
+      } finally pool.shutdown()
+    }
+
   /** Stage 1 — ingest: for each source relation, gate on max(last_updated)
     * vs the stored watermark, extract the strict increment, land it as an
     * immutable CSV batch, bump the watermark. Returns updated tables
     * (deterministic name order regardless of completion order).
     *
-    * The per-table gates run CONCURRENTLY (a bounded pool of driver
-    * threads, each scheduling its own probe + extract jobs): the gates
+    * The per-table gates run CONCURRENTLY from [[inParallel]]'s bounded
+    * pool, each thread scheduling its own probe + extract jobs: the gates
     * are independent — separate watermark keys (updates serialize inside
     * the synchronized, atomic [[WatermarkStore.update]]), separate
     * landing directories — and the dominant cost is source round-trip
     * latency (a JDBC max-probe per table in production), so running the
     * reference's 11-table loop serially puts wall-clock on the floor at
-    * 100× source count. Spark's scheduler interleaves the small jobs;
-    * `maxConcurrentGates` bounds driver-side connection fan-out. Crash
-    * semantics are unchanged from the serial loop: each table commits
-    * its landing file before its watermark bump, independently. */
+    * 100× source count. Crash semantics are unchanged from the serial
+    * loop: each table commits its landing file before its watermark
+    * bump, independently, and a failing gate is rethrown only once every
+    * other gate has settled. */
   def ingestOnce(
       sources: Map[String, DataFrame],
       landingRoot: String,
       store: WatermarkStore,
-      batchId: String,
-      maxConcurrentGates: Int = 8): Seq[String] = {
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.max(1, math.min(sources.size, maxConcurrentGates)))
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
-    try {
-      val gates = sources.toSeq.sortBy(_._1).map { case (table, src) =>
-        Future {
-          val wm = store.watermark(table)
-          // Compare TIMESTAMP VALUES, not strings: Timestamp.toString emits
-          // variable-length fractions ("…00.0" vs the sentinel's "…000000"),
-          // so a lexicographic gate can skip an epoch-exact max or break on
-          // format drift — the reference's P2 defect, fixed here like the
-          // extract filter (Extract.increment parses the watermark too).
-          val wmTs = java.sql.Timestamp.valueOf(wm)
-          Extract.maxLastUpdated(src) match {
-            case Some(maxTs) if maxTs.after(wmTs) =>
-              val projection = Schemas.sources(table)._1.fieldNames.toSeq
-              val inc = Extract.increment(src, projection, wm)
-              LandingLog.writeIncrement(inc, landingRoot, table, batchId)
-              store.update(Map(table -> maxTs.toString))
-              Some(table)
-            case _ => None
-          }
-        }
+      batchId: String): Seq[String] =
+    inParallel(sources.toSeq.sortBy(_._1), driverPoolWidth) { case (table, src) =>
+      val wm = store.watermark(table)
+      // Compare TIMESTAMP VALUES, not strings: Timestamp.toString emits
+      // variable-length fractions ("…00.0" vs the sentinel's "…000000"),
+      // so a lexicographic gate can skip an epoch-exact max or break on
+      // format drift — the reference's P2 defect, fixed here like the
+      // extract filter (Extract.increment parses the watermark too).
+      val wmTs = java.sql.Timestamp.valueOf(wm)
+      Extract.maxLastUpdated(src) match {
+        case Some(maxTs) if maxTs.after(wmTs) =>
+          val projection = Schemas.sources(table)._1.fieldNames.toSeq
+          val inc = Extract.increment(src, projection, wm)
+          LandingLog.writeIncrement(inc, landingRoot, table, batchId)
+          store.update(Map(table -> maxTs.toString))
+          Some(table)
+        case _ => None
       }
-      gates.flatMap(g => Await.result(g, Duration.Inf))
-    } finally pool.shutdown()
-  }
+    }.flatten
 
   /** Stage 2 — process: rebuild exactly the star tables whose inputs
     * changed; any fact-input change also rebuilds dim_date and (under
@@ -182,7 +208,19 @@ object Runner {
     * exactly why stable ids are the default. Flipping the policy over an
     * EXISTING snapshot is detected from the stored dim_date's id range
     * and forces a one-time full fact rebuild, so pre-flip FKs can never
-    * dangle (the round-3 advisory's migration hazard). */
+    * dangle (the round-3 advisory's migration hazard).
+    *
+    * The per-table builds run CONCURRENTLY from [[inParallel]]'s bounded
+    * pool: each dimension and dim_date builds, stages and commits its
+    * snapshot on its own thread. The fact builds depend on dim_date:
+    * each starts only after dim_date's write returns, because that write
+    * fills the shared fact-input and dim_date caches (an earlier start
+    * would replay the landing logs again). Replay state, the load-pending
+    * marker and the cache release stay after the pool, so a crash at any
+    * per-table commit leaves some complete per-table commits and no
+    * replay record — the retry rebuilds them all. The pool threads do not
+    * hold this call's writer lease (it is per-thread), so nothing they
+    * run may call `WriterLease.withLease` on the processed root. */
   def processBatch(
       spark: SparkSession,
       landingRoot: String,
@@ -214,25 +252,28 @@ object Runner {
     val ups = updates ++ keysByTable.collect { case (t, ks)
       if ks.nonEmpty && replayState.get(s"folded|$t").forall(_ < ks.max) => t }
 
-    val written = Seq.newBuilder[String]
-    def put(key: String, df: DataFrame, partitionBy: Seq[String] = Nil): Unit = {
+    def put(key: String, df: DataFrame, partitionBy: Seq[String] = Nil): Option[String] = {
       LandingLog.writeSnapshot(df, processedRoot, key, partitionBy)
-      written += key
+      Some(key)
     }
 
-    if (ups("address")) put("dim-location", StarSchema.dimLocation(log("address")))
-    if (ups("address") || ups("counterparty"))
-      put("dim-counterparty", StarSchema.dimCounterparty(log("counterparty"), log("address")))
-    if (ups("currency")) put("dim-currency", StarSchema.dimCurrency(log("currency")))
-    if (ups("design")) put("dim-design", StarSchema.dimDesign(log("design")))
-    if (ups("payment_type"))
-      put("dim-payment_type", StarSchema.dimPaymentType(log("payment_type")))
-    if (ups("staff") || ups("department"))
-      put("dim-staff", StarSchema.dimStaff(log("staff"), log("department")))
-    if (ups("transaction"))
-      put("dim-transaction", StarSchema.dimTransaction(log("transaction")))
+    // One pool item per star table to rebuild: its build, stage and
+    // commit. The dimension items are independent of each other.
+    val dims: Seq[() => Option[String]] = Seq(
+      (ups("address"), () => put("dim-location", StarSchema.dimLocation(log("address")))),
+      (ups("address") || ups("counterparty"), () =>
+        put("dim-counterparty", StarSchema.dimCounterparty(log("counterparty"), log("address")))),
+      (ups("currency"), () => put("dim-currency", StarSchema.dimCurrency(log("currency")))),
+      (ups("design"), () => put("dim-design", StarSchema.dimDesign(log("design")))),
+      (ups("payment_type"), () =>
+        put("dim-payment_type", StarSchema.dimPaymentType(log("payment_type")))),
+      (ups("staff") || ups("department"), () =>
+        put("dim-staff", StarSchema.dimStaff(log("staff"), log("department")))),
+      (ups("transaction"), () =>
+        put("dim-transaction", StarSchema.dimTransaction(log("transaction")))))
+      .collect { case (true, item) => item }
 
-    if ((ups & factSources).nonEmpty) {
+    val (factItems, factCaches) = if ((ups & factSources).isEmpty) (Nil, Nil) else {
       // One-time id-policy migration guard: if the STORED dim_date was
       // built under the OTHER id policy (dense ids are 1..n < 10^7;
       // stable ids are yyyymmdd >= 19700101), facts skipped by the
@@ -271,7 +312,14 @@ object Runner {
       val po = StarSchema.currentSnapshot("purchase_order")(log("purchase_order")).persist(factLevel)
       val so = StarSchema.currentSnapshot("sales_order")(log("sales_order")).persist(factLevel)
       val dates = StarSchema.dimDate(pay, po, so, stableDateIds).cache()
-      put("dim-date", dates)
+      // The dim_date write is the job that fills the four caches, so the
+      // fact items wait for it: a fact starting earlier would replay and
+      // dedup the landing logs a second time. dim_date precedes the facts
+      // in the item list, so it always starts before any of them waits.
+      val datesWritten = Promise[Unit]()
+      val dateItem = () =>
+        try { val k = put("dim-date", dates); datesWritten.success(()); k }
+        catch { case t: Throwable => datesWritten.failure(t); throw t }
       // Dense (reference) date ids renumber when a rebuild discovers a new
       // earlier date, which would leave any fact NOT rebuilt this batch
       // holding stale FKs (the reference's live defect). So under dense
@@ -281,18 +329,25 @@ object Runner {
       // Facts are date-partitioned on created_date (the 100 TB layout —
       // replay/downstream reads prune date directories, incl. via DPP
       // through the dim_date join).
-      def fact(src: String, key: String, snap: DataFrame, build: => DataFrame): Unit =
+      def fact(src: String, key: String, snap: DataFrame, build: => DataFrame) = () => {
+        Await.result(datesWritten.future, Duration.Inf)
         if (ups(src) || ((!stableDateIds || storedPolicyMismatch) && !snap.isEmpty))
           put(key, build, partitionBy = Seq("created_date"))
-      fact("payment", "fact-payment", pay,
-        StarSchema.factPayment(pay, dates, stableRecordIds))
-      fact("purchase_order", "fact-purchase_order", po,
-        StarSchema.factPurchaseOrder(po, dates, stableRecordIds))
-      fact("sales_order", "fact-sales_order", so,
-        StarSchema.factSalesOrder(so, dates, stableRecordIds))
-      Seq(dates, pay, po, so).foreach(_.unpersist())
-      writeRecordPolicy(spark, processedRoot, stableRecordIds)
+        else None
+      }
+      (Seq(dateItem,
+        fact("payment", "fact-payment", pay,
+          StarSchema.factPayment(pay, dates, stableRecordIds)),
+        fact("purchase_order", "fact-purchase_order", po,
+          StarSchema.factPurchaseOrder(po, dates, stableRecordIds)),
+        fact("sales_order", "fact-sales_order", so,
+          StarSchema.factSalesOrder(so, dates, stableRecordIds))),
+        Seq(dates, pay, po, so))
     }
+    val w =
+      try inParallel(dims ++ factItems, driverPoolWidth)(_.apply()).flatten
+      finally factCaches.foreach(_.unpersist())
+    if (factCaches.nonEmpty) writeRecordPolicy(spark, processedRoot, stableRecordIds)
     // Record the landing keys this replay absorbed — AFTER every
     // snapshot write, through the crash-safe state swap, so a crash
     // anywhere above re-detects the batch as pending and replays it
@@ -300,7 +355,6 @@ object Runner {
     // The load-pending marker lands FIRST: once replay state says
     // "folded", nothing re-runs this replay, so the written keys must
     // already be durably owed to the warehouse (see [[loadPendingName]]).
-    val w = written.result()
     if (w.nonEmpty)
       writeLoadPending(processedRoot, readLoadPending(processedRoot) ++ w)
     replayStore.update(keysByTable.collect { case (t, ks)
@@ -336,7 +390,14 @@ object Runner {
     * EXTERNAL CATALOG TABLE over its parquet path so the SQL layer sees
     * named tables, plus the preview/export surface (S11–S13). Parquet
     * stands in for the JDBC warehouse here; `Extract.jdbcOverwrite` is the
-    * production sink. */
+    * production sink.
+    *
+    * The per-key loads run CONCURRENTLY from [[inParallel]]'s bounded
+    * pool (full refreshes of distinct tables are independent); the
+    * LIMIT-10 previews are printed after the pool, in key order, so
+    * their output never interleaves. Pool threads do not hold the
+    * caller's writer lease, so nothing they run may call
+    * `WriterLease.withLease` on the processed root. */
   def loadWarehouse(
       spark: SparkSession,
       processedRoot: String,
@@ -344,21 +405,21 @@ object Runner {
       keys: Seq[String],
       preview: Boolean = false): Seq[String] = {
     spark.sql(s"CREATE DATABASE IF NOT EXISTS $warehouseDb")
-    val loaded = keys.map { key =>
+    val loaded = inParallel(keys, driverPoolWidth) { key =>
       val table = key.replaceFirst("^dim-", "").replaceFirst("^fact-", "").replace("-", "_")
       // One read shared by the emptiness probe, the warehouse write, and
       // the preview export: the probe's partial scan and the write both
       // populate the cache, so the CSV extract never re-reads the
       // snapshot (previously preview mode read it twice end-to-end).
       val df = LandingLog.readSnapshot(spark, processedRoot, key).persist()
-      try {
-        if (!df.isEmpty) {
+      val nonEmpty = try {
+        val has = !df.isEmpty
+        if (has) {
           df.write.mode("overwrite")
             .option("path", s"$warehouseRoot/$table")
             .format("parquet")
             .saveAsTable(s"$warehouseDb.$table")
           if (preview) {
-            previewTable(spark, table).show(truncate = false)
             // Single-file CSV only for dimension-sized tables (measured on
             // the cached frame — free here); a fact table exports as a
             // DIRECTORY of part files at full parallelism. The reference's
@@ -370,16 +431,19 @@ object Runner {
               .csv(s"$warehouseRoot/extracts/$table")
           }
         }
+        has
       } finally df.unpersist(blocking = false)
-      table
+      (table, nonEmpty)
     }
+    if (preview)
+      loaded.filter(_._2).foreach { case (table, _) => previewTable(spark, table).show(truncate = false) }
     // Every load path absorbs the keys it just loaded from the pending-
     // load marker (not only Runner.runOnce/fullReload): a composed caller
     // (StarBench, MergeRunner's dense-policy delegation) that pairs
     // processBatch with its own load otherwise leaves the marker
     // permanently set, and the next runOnce on the root never no-ops.
     absorbLoadPending(processedRoot, keys)
-    loaded
+    loaded.map(_._1)
   }
 
   /** Subtract `loaded` keys from the pending-load marker (no-op when the

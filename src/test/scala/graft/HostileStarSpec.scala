@@ -13,10 +13,11 @@ import org.apache.spark.sql.functions._
   * this runs the composed pipelines, landing + processed + state roots
   * ALL on `hostile://`, and crashes them mid-batch):
   *
-  *  1. [[Runner.runOnce]]: a batch crashed inside a SNAPSHOT STAGE
-  *     (injected at a parquet job-commit rename — the mid-publish
-  *     window) leaves the previous snapshots readable, and the NEXT
-  *     batch converges to exactly the snapshots a clean three-batch
+  *  1. [[Runner.processBatch]]: a batch crashed at ANY parquet
+  *     job-commit rename of its concurrent per-table builds (a sweep
+  *     over every commit point) leaves each snapshot serving a whole
+  *     version — the previous one or this batch's — and no replay
+  *     record, and the RETRY converges to exactly the snapshots a clean
   *     run produces;
   *  2. [[MergeRunner.runOnce]]: a batch crashed mid-merge (intent flag
   *     set, merge state not advanced) heals through the intent-replay
@@ -119,76 +120,88 @@ class HostileStarSpec extends SparkSpec {
       assert(gr == wr, s"$key rows diverged for $key:\n${gr.mkString("\n")}\n-- vs clean --\n${wr.mkString("\n")}")
     }
 
-  private def crashedBy(e: Throwable): Boolean = {
-    var t: Throwable = e
-    while (t != null) {
-      if (t.getMessage != null && t.getMessage.contains("injected crash")) return true
-      t = t.getCause
-    }
-    false
-  }
+  private def crashMessage(e: Throwable): Option[String] =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).map(_.getMessage)
+      .find(m => m != null && m.contains("injected crash"))
 
-  test("Runner.runOnce on hostile roots: a crash inside a snapshot stage converges on RETRY") {
-    val root = hostileRoot("runner")
-    val landing = s"$root/landing"
-    val processed = s"$root/processed"
-    val warehouse = s"$root/warehouse"
-    val state = s"$root/state/tracking.json"
+  private def crashedBy(e: Throwable): Boolean = crashMessage(e).isDefined
 
-    // Batch 1, clean, end-to-end on hostile.
-    val w1 = Runner.runOnce(spark, sources(1), landing, processed, warehouse,
-      state, batchIds(0))
-    assert(w1.nonEmpty, s"first hostile batch must write: $w1")
-    val afterB1 = starKeys.map(k => k -> dump(processed, k)).toMap
-
-    // Batch 2: crash the FIRST parquet job-commit rename of the process
-    // stage — mid-publish of a snapshot stage directory. Ingest (landing
-    // CSV + watermark bumps) completes before the process stage starts,
-    // so the crash leaves landed-but-unprocessed increments.
-    HostileFileSystem.armCrash("after-copy", ".parquet")
-    val e = intercept[Exception] {
-      Runner.runOnce(spark, sources(2), landing, processed, warehouse,
-        state, batchIds(1))
-    }
-    HostileFileSystem.disarm()
-    assert(crashedBy(e), s"expected the injected crash, got: $e")
-    CacheJanitor.drain()
-
-    // The crashed stage is invisible: every snapshot still serves its
-    // batch-1 content (stale-but-consistent, never torn).
-    starKeys.foreach { k =>
-      assert(dump(processed, k) == afterB1(k),
-        s"$k must keep serving the pre-crash snapshot")
-    }
-    // The watermark state survived the batch (bumped before the crash,
-    // readable after it).
-    assert(new WatermarkStore(state).watermark("address") > "2025-09-01 08:00:00")
-
-    // THE RETRY CONVERGES: the source gates see no new rows (watermarks
-    // already bumped), but the replay state detects the landed-but-
-    // unprocessed increments and rebuilds their tables. (Before the
-    // replay-state fix this drill found, the retry was a no-op and the
-    // snapshots stayed stale until the source next changed.)
-    val retried = Runner.runOnce(spark, sources(2), landing, processed, warehouse,
-      state, batchIds(1))
-    assert(retried.nonEmpty, "the retry must fold the stranded landing increments")
-
-    // Clean arm, batches 1..2 — the retried hostile root must already
-    // match it exactly.
+  test("Runner: a crash at any process-stage commit rename leaves whole per-table snapshots and converges on RETRY") {
+    // Clean arm, local roots: the batch-1 and batch-2 snapshots every
+    // crashed root is held against.
     val cleanRoot = Files.createTempDirectory("graft_hstar_clean").toString
     def cleanBatch(v: Int): Unit = {
       Runner.runOnce(spark, sources(v), s"$cleanRoot/landing", s"$cleanRoot/processed",
         s"$cleanRoot/warehouse", s"$cleanRoot/state/tracking.json", batchIds(v - 1))
       ()
     }
-    cleanBatch(1); cleanBatch(2)
-    assertEqualStar(processed, s"$cleanRoot/processed")
+    def snapshots(root: String) = starKeys.map(k => k -> dump(root, k)).toMap
+    cleanBatch(1)
+    val batch1 = snapshots(s"$cleanRoot/processed")
+    cleanBatch(2)
+    val batch2 = snapshots(s"$cleanRoot/processed")
+    starKeys.foreach(k => assert(batch1(k) != batch2(k),
+      s"spec shape broken: batch 2 must change $k, or a torn state could pass as batch 1"))
+
+    // The process stage builds and commits its tables concurrently, so
+    // which table a given crash hits varies from run to run. Sweep every
+    // commit point instead: crash the k-th job-commit rename of batch 2's
+    // process stage, for k = 0, 1, ... until a k passes every rename.
+    // Unpartitioned snapshots commit part files (".parquet"); the
+    // date-partitioned fact commits whole partition directories. Ingest,
+    // which lands CSV, runs before the arm. Returns the crashed table.
+    var lastCrashed = ""
+    def drill(suffix: String, k: Int): Option[String] = {
+      val root = hostileRoot("runner")
+      val landing = s"$root/landing"
+      val processed = s"$root/processed"
+      val warehouse = s"$root/warehouse"
+      val state = s"$root/state/tracking.json"
+      val at = s"$suffix, k=$k"
+      assert(Runner.runOnce(spark, sources(1), landing, processed, warehouse,
+        state, batchIds(0)).nonEmpty, "first hostile batch must write")
+      val updated = Runner.ingestOnce(sources(2), landing, new WatermarkStore(state), batchIds(1))
+      HostileFileSystem.armCrash("after-copy", suffix, skip = k)
+      val crash =
+        try { Runner.processBatch(spark, landing, processed, updated.toSet); None }
+        catch { case e: Exception => Some(e) }
+        finally HostileFileSystem.disarm()
+      crash.map { e =>
+        assert(crashedBy(e), s"$at: expected the injected crash, got: $e")
+        CacheJanitor.drain()
+        // Each table serves a whole snapshot: batch 1's, or batch 2's
+        // when its own commit landed before or beside the crash.
+        starKeys.foreach { key =>
+          val got = dump(processed, key)
+          assert(got == batch1(key) || got == batch2(key),
+            s"$at: $key serves neither its batch-1 nor its batch-2 snapshot")
+        }
+        // The replay marker lands only after every table: still pending.
+        assert(Runner.pendingReplay(spark, landing, processed).nonEmpty,
+          s"$at: the replay marker must not land in a crashed process stage")
+        assert(new WatermarkStore(state).watermark("address") > "2025-09-01 08:00:00")
+        // THE RETRY CONVERGES: the source gates see no new rows
+        // (watermarks already bumped), but the replay state detects the
+        // landed-but-unprocessed increments and rebuilds their tables.
+        assert(Runner.runOnce(spark, sources(2), landing, processed, warehouse,
+          state, batchIds(1)).nonEmpty, s"$at: the retry must fold the stranded landing increments")
+        assertEqualStar(processed, s"$cleanRoot/processed")
+        lastCrashed = root
+        crashMessage(e).flatMap("""/processed/([^/]+)/""".r.findFirstMatchIn)
+          .map(_.group(1)).getOrElse(s"$at: no table in $e")
+      }
+    }
+    val crashed = Seq(".parquet", "/__p_created_date=202509").flatMap { suffix =>
+      Iterator.range(0, 64).map(drill(suffix, _)).takeWhile(_.isDefined).flatten.toSeq
+    }
+    assert(crashed.toSet == starKeys.toSet,
+      s"spec shape broken: the sweep must crash every table's commit, crashed $crashed")
 
     // A further clean batch on both arms stays converged.
-    Runner.runOnce(spark, sources(3), landing, processed, warehouse,
-      state, batchIds(2))
+    Runner.runOnce(spark, sources(3), s"$lastCrashed/landing", s"$lastCrashed/processed",
+      s"$lastCrashed/warehouse", s"$lastCrashed/state/tracking.json", batchIds(2))
     cleanBatch(3)
-    assertEqualStar(processed, s"$cleanRoot/processed")
+    assertEqualStar(s"$lastCrashed/processed", s"$cleanRoot/processed")
   }
 
   test("Runner: a crash between the replay-state commit and the warehouse load converges on RETRY") {

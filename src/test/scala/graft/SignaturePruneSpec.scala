@@ -10,8 +10,12 @@ import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStag
 /** The shingle-group (`hgrp=`) fold layout + pruned probe reads on the
   * posting/df side tables (round-14: the scale ledger's "residual
   * corpus term" — the df-log scan — gets the cosine log's bucket-group
-  * treatment). Pins, on a synthetic corpus big enough for a real group
-  * count (8192 unique-vocabulary docs → G = 32):
+  * treatment). Pins, on a synthetic corpus of 8192 unique-vocabulary
+  * docs whose group counts come from its bytes: the df log gets
+  * G_df = ⌊0.1 · sigBytes / groupBytes⌋, where sigBytes is the first
+  * signature batch's on-disk size (~345 KB plus ~0.9 KB per writer
+  * file, one file per local core) — about 33–36 at 1–32 cores with the
+  * first test's 1024-byte group floor:
   *
   *  1. the first-batch rebuild writes BOTH side tables under `hgrp=`
   *     directories with group-count sidecars, one file per occupied
@@ -78,11 +82,15 @@ class SignaturePruneSpec extends SparkSpec {
       .map(_.getPath.getName.stripPrefix("hgrp=").toInt).toSet
   }
 
-  private def hitGroups(sigs: DataFrame, g: Int): Set[Int] = {
+  /** The frame's distinct shingle hashes (the probe keys, K of them). */
+  private def shingleHashes(sigs: DataFrame): Set[Long] = {
     import org.apache.spark.sql.functions._
     sigs.select(explode(col("shs")).as("h")).distinct().collect()
-      .map(r => java.lang.Math.floorMod(r.getLong(0), g.toLong).toInt).toSet
+      .map(_.getLong(0)).toSet
   }
+
+  private def hitGroups(sigs: DataFrame, g: Int): Set[Int] =
+    shingleHashes(sigs).map(h => java.lang.Math.floorMod(h, g.toLong).toInt)
 
   /** The production fold-layout threshold is 64k rows (gate-scale dirs
     * stay flat — see `foldLayoutMinRows`); these specs exercise the
@@ -104,7 +112,12 @@ class SignaturePruneSpec extends SparkSpec {
     BatchLog.readGroupsSidecar(spark, BatchLog.dirOfResolved(spark, log, key), name)
       .getOrElse(fail(s"missing group sidecar in $log/$key"))
 
-  test("hgrp fold layout: pruned df/posting scans read only hit groups; answer == frame recompute") { withFoldProps(1024L, 2048L) {
+  // Group floor from the saturation bound, not the writer count: the
+  // increment below has K = 14 distinct shingles, and hits <= K for any
+  // placement, so the shape guard holds once G_df·7/10 > 14, i.e.
+  // G_df >= 22, i.e. groupBytes <= ⌊0.1 · 344 994 / 22⌋ = 1568 at any
+  // core count (sigBytes is smallest at one core). 1024 gives G_df 33–36.
+  test("hgrp fold layout: pruned df/posting scans read only hit groups; answer == frame recompute") { withFoldProps(1024L, 1024L) {
     val root = Files.createTempDirectory("graft_sigprune").toString
     val n = 8192L
     SignatureIndex.ingest(spark, root,
@@ -145,6 +158,13 @@ class SignaturePruneSpec extends SparkSpec {
     assert(truth.contains((7L, 9001L)),
       s"the planted near-dup pair must survive pruning: ${truth.keySet}")
 
+    // Placement-free shape guard: hits <= K under ANY hash placement,
+    // so K below both gates means the guard after it cannot trip on
+    // where the K hashes happen to land — a fixture drifting toward
+    // saturation fails here, at the cause.
+    val k = shingleHashes(b2.newSigs).size
+    assert(k < gDf * 7 / 10 && k < gPost * 7 / 10,
+      s"spec shape broken: K=$k increment shingles reach a gate (df G=$gDf, post G=$gPost)")
     // Scan-file pins from the executed plan: the partitioned b1 dirs
     // contribute exactly the hit groups' files; b2's flat dirs (one
     // file each) are read whole.

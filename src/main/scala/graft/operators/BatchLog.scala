@@ -413,9 +413,12 @@ private[graft] object BatchLog {
     * batch-key mechanism exists to prevent, resurfacing across
     * maintenance). Returns whether the batch directory was WRITTEN
     * (false = retired no-op), so callers that stow layout sidecars
-    * beside the data can gate on it instead of assuming. */
+    * beside the data can gate on it instead of assuming. `writeOptions`
+    * ride the parquet write (e.g. [[pointLookupWriteOptions]] for an
+    * id-sorted batch that probe reads prune by row-group min/max). */
   def appendResolved(df: DataFrame, path: String, key: String,
-      op: String, partitionBy: Seq[String] = Nil): Boolean = {
+      op: String, partitionBy: Seq[String] = Nil,
+      writeOptions: Map[String, String] = Map.empty): Boolean = {
     val spark = df.sparkSession
     requireFormat(spark, path, op)
     if (retiredKeys(spark, path).contains(key)) return false
@@ -425,7 +428,7 @@ private[graft] object BatchLog {
     // advances the version pointer.
     val rp = resolve(spark, path)
     writeMarker(spark, rp)
-    writeCounted(df, dirFor(rp, key), partitionBy, Map.empty)
+    writeCounted(df, dirFor(rp, key), partitionBy, writeOptions)
     true
   }
 

@@ -1,8 +1,9 @@
 package graft.operators
 
 import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** Incrementally-maintained near-dup CLUSTER LABELS — the resolution
   * half of the incremental dedup story [[SignatureIndex]] starts: the
@@ -300,7 +301,7 @@ object ClusterLabels {
     *
     * Unlike [[mergeFrames]] (which takes the full old table), the
     * persisted path never folds the whole log: it keep-last-folds ONLY
-    * rows semi-joined to the batch — touched docs, then rows carrying a
+    * the log rows of touched docs, then the rows carrying a
     * touched-component label. The label filter is sound because RETIRED
     * LABEL VALUES NEVER RETURN: a label is the min doc_id of its
     * component, components only ever merge (per-doc labels are monotone
@@ -313,9 +314,29 @@ object ClusterLabels {
     * yields exactly the touched components' current membership
     * (ClusterLabelsSpec pins equality with a from-scratch resolve,
     * including re-touching a component that holds stale retired-label
-    * rows). Per-batch shuffle is therefore O(increment ∪ touched
-    * components' history), never the corpus; the log is only ever
-    * SCANNED (for the semi-joins and the 1-row max-batch agg).
+    * rows).
+    *
+    * Two paths, one result. Below the small-graph gate
+    * ([[Relational.ccSmallGraphMaxEdges]]: 2·|pairs| and the new-doc
+    * count both within it, and the touched components' members too) the
+    * batch resolves ON THE DRIVER: the pairs and new doc ids are
+    * collected once, the log is read twice through pushed-down filters
+    * (`doc_id IN (touched ∪ new)`, then `label IN (touched labels)`),
+    * each read folded keep-last on the driver, one
+    * [[Relational.unionFind]] runs over pairs ∪ member edges, and one
+    * local frame, sorted on `doc_id`, is appended with
+    * [[BatchLog.pointLookupWriteOptions]] — so later id reads can skip
+    * the batch's row groups by min/max. A handful of Spark jobs per
+    * batch instead of ~26; the reads still scan every row group their
+    * filters cannot prune (SCALE.md prices them at 100 TB, where the
+    * label read scans the log). Above the gate the same
+    * resolution runs as Spark joins (semi-joins against the log, the
+    * distributed [[Relational.connectedComponents]]), O(increment ∪
+    * touched components' history) shuffle, never the corpus.
+    *
+    * A NULL doc id in `pairs` or `newDocs` is refused with an
+    * `IllegalArgumentException` on both paths, before anything is
+    * written (it would otherwise land as a NULL label row).
     *
     * `batchKey` is the replay-idempotence handle ([[BatchLog]]): the
     * delta lands under `batch_key=<key>` and the state computation
@@ -325,42 +346,55 @@ object ClusterLabels {
     * overwriting itself. `None` mints a fresh auto key (not
     * replay-idempotent, the pre-change behavior). */
   def merge(spark: SparkSession, root: String, pairs: DataFrame,
-      newDocs: DataFrame, batchKey: Option[String] = None): DataFrame = WriterLease.withLease(spark, root) {
+      newDocs: DataFrame, batchKey: Option[String] = None): DataFrame =
+    merge(spark, root, pairs, newDocs, batchKey, Relational.ccSmallGraphMaxEdges)
+
+  /** [[merge]] with an explicit driver-path gate: `0` forces the
+    * distributed path (specs run both, as RelationalSpec does for CC). */
+  private[graft] def merge(spark: SparkSession, root: String, pairs: DataFrame,
+      newDocs: DataFrame, batchKey: Option[String],
+      smallGraphMaxEdges: Long): DataFrame = WriterLease.withLease(spark, root) {
+    mergeBatch(spark, root, pairs, newDocs, batchKey, smallGraphMaxEdges)
+    read(spark, root)
+  }
+
+  /** Row counts of a merge's inputs (`newDocs` rows, `pairs` rows), known
+    * for free when the driver path collected them. */
+  private[graft] final case class BatchCounts(newDocs: Long, pairs: Long)
+
+  /** [[merge]] without building its returned [[read]] frame (one
+    * schema-inference job a maintenance loop discards). Returns the
+    * input row counts when the driver path ran, `None` on the
+    * distributed path. */
+  private[graft] def mergeBatch(spark: SparkSession, root: String, pairs: DataFrame,
+      newDocs: DataFrame, batchKey: Option[String],
+      smallGraphMaxEdges: Long = Relational.ccSmallGraphMaxEdges): Option[BatchCounts] =
+      WriterLease.withLease(spark, root) {
     recover(spark, root)
     BatchLog.requireFormat(spark, dir(root), "ClusterLabels")
     val key = BatchLog.resolveKey(spark, dir(root), batchKey)
-    val p = graft.CacheJanitor.register(
-      pairs.select(col("doc_a").cast("long").as("doc_a"),
-        col("doc_b").cast("long").as("doc_b")).persist())
+    val pairCols = pairs.select(col("doc_a").cast("long").as("doc_a"),
+      col("doc_b").cast("long").as("doc_b"))
+    val docCols = newDocs.select(col("doc_id").cast("long").as("doc_id"))
     val hasLog = BatchLog.hasData(spark, dir(root))
     val log =
       if (hasLog)
         // Through the version pointer: a compacted label log serves its
-        // committed state from the current _versions/<n> dir.
-        spark.read.parquet(BatchLog.resolve(spark, dir(root)))
+        // committed state from the current _versions/<n> dir. Declared
+        // schema: no footer-inference job per read.
+        spark.read.schema(logSchema).parquet(BatchLog.resolve(spark, dir(root)))
           .where(col("batch_key") =!= lit(key)).drop("batch_key")
       else spark.range(0).select(col("id").as("doc_id"),
         col("id").as("label"), col("id").as("batch"))
-    val touched = p.select(col("doc_a").as("doc_id"))
-      .union(p.select(col("doc_b").as("doc_id"))).distinct()
-    val touchedLabels = currentOf(log.join(touched, Seq("doc_id"), "left_semi"))
-      .select("label").distinct()
-    // Persisted: feeds the CC edge set AND the stats-sidecar counts
-    // below (touched-component-sized, never the corpus).
-    val members = graft.CacheJanitor.register(
-      currentOf(log.join(touchedLabels, Seq("label"), "left_semi")).persist())
-    val edges = p.union(members.select(col("doc_id"), col("label")))
-    val relabeled = Relational.connectedComponents(edges)
-      .select(col("node").cast("long").as("doc_id"), col("label").cast("long").as("label"))
-    val nd = newDocs.select(col("doc_id").cast("long").as("doc_id")).distinct()
-    val knownNew = log.join(nd, Seq("doc_id"), "left_semi")
-      .select("doc_id").distinct()
-    val singletons = nd
-      .join(relabeled.select("doc_id"), Seq("doc_id"), "left_anti")
-      .join(knownNew, Seq("doc_id"), "left_anti")
-      .select(col("doc_id"), col("doc_id").as("label"))
-    val delta = graft.CacheJanitor.register(
-      relabeled.unionByName(singletons).persist())
+    val collected =
+      if (smallGraphMaxEdges <= 0) None
+      else for {
+        ps <- boundedCollect(pairCols, smallGraphMaxEdges / 2)
+        ds <- boundedCollect(docCols, smallGraphMaxEdges)
+      } yield (ps, ds)
+    val resolved = collected
+      .flatMap { case (ps, ds) => resolveOnDriver(root, log, hasLog, ps, ds, smallGraphMaxEdges) }
+      .getOrElse(resolveDistributed(root, log, pairCols, docCols, smallGraphMaxEdges))
     val committedBefore = BatchLog.committedKeys(spark, dir(root))
     // Read BEFORE the append: for a replayed key the append overwrites
     // the directory (and its old sidecar) — the replay branch below
@@ -381,19 +415,13 @@ object ClusterLabels {
         val r = log.agg(max(col("batch"))).head
         if (r.isNullAt(0)) 1L else r.getLong(0) + 1L
       }
-    // ONE file per batch directory: the delta is O(increment ∪ touched
-    // components) rows by contract, but its lineage (CC output unioned
-    // with singletons) arrives at shuffle-partition granularity — at 32
-    // partitions that is ~64 near-empty files per batch, and every
-    // later merge/fold re-opens ALL of them (measured: 3.7k label files
-    // by batch 55 of the x100 loop, a file-open tax growing linearly
-    // with batch count). repartition, not coalesce: the single-file
-    // collapse must not serialize the upstream CC/singleton stages into
-    // one task — safe either way because the delta is touched-sized,
-    // never the corpus.
-    BatchLog.appendResolved(
-      delta.withColumn("batch", lit(nextBatch)).repartition(1),
-      dir(root), key, "ClusterLabels")
+    // ONE file per batch directory (both paths hand over a
+    // single-partition delta): every later merge/fold re-opens every
+    // label file, so near-empty shuffle-partition files were a file-open
+    // tax growing with batch count (3.7k label files by batch 55 of the
+    // x100 loop before the collapse).
+    BatchLog.appendResolved(resolved.delta.withColumn("batch", lit(nextBatch)),
+      dir(root), key, "ClusterLabels", writeOptions = resolved.writeOptions)
     // Stats sidecar for the O(1) health poll ([[labelStats]]). Only
     // written when the append actually landed (the retired-keys ledger
     // can veto a replay of a compaction-absorbed batch — no dir, no
@@ -415,15 +443,7 @@ object ClusterLabels {
           // new docs (relabeled ⊇ members; singletons are new): so
           //   labelled' = labelled − |members| + |delta|
           //   keepers'  = keepers − keepers(members) + keepers(delta)
-          // Two touched-sized aggregates over frames the merge already
-          // materialized — never a corpus fold.
-          def agg2(df: DataFrame): (Long, Long) = {
-            val r = df.agg(count(lit(1)),
-              sum(when(col("doc_id") === col("label"), 1L).otherwise(0L))).head
-            (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
-          }
-          val (mN, mK) = agg2(members)
-          val (dN, dK) = agg2(delta)
+          val ((mN, mK), (dN, dK)) = resolved.totals()
           val (pL, pK) =
             if (committedBefore.isEmpty) (0L, 0L)
             else { val t = prevSidecars.maxBy(_.batch); (t.labelled, t.keepers) }
@@ -440,7 +460,127 @@ object ClusterLabels {
         LabelStats(nextBatch, labelled, keepers, committedAfter.size,
           keySetHash(committedAfter)))
     }
-    read(spark, root)
+    collected.map { case (ps, ds) => BatchCounts(ds.length.toLong, ps.length.toLong) }
+  }
+
+  /** Label-log file schema, `batch_key` being the batch-directory
+    * partition column. */
+  private val logSchema = StructType(Seq(
+    StructField("doc_id", LongType), StructField("label", LongType),
+    StructField("batch", LongType), StructField("batch_key", StringType)))
+
+  /** One batch resolved against the log: `delta` = the single-partition
+    * `(doc_id, label)` rows it (re)defines, written with `writeOptions`;
+    * `totals` = `(count, keepers)` of the touched components' old
+    * members and of the delta — the sidecar arithmetic's inputs, only
+    * evaluated when the chain is intact. */
+  private final case class Resolved(delta: DataFrame,
+      writeOptions: Map[String, String], totals: () => ((Long, Long), (Long, Long)))
+
+  /** At most `max` rows of `df` on the driver, or `None` when it holds
+    * more — a size gate paid by the collect the driver path needs anyway. */
+  private def boundedCollect(df: DataFrame, max: Long): Option[Array[Row]] = {
+    val cap = math.max(0L, math.min(max, Int.MaxValue - 1L))
+    val rows = df.limit(cap.toInt + 1).collect()
+    if (rows.length > cap) None else Some(rows)
+  }
+
+  private def refuseNullIds(root: String, what: String): Nothing =
+    throw new IllegalArgumentException(
+      s"ClusterLabels.merge on $root: NULL doc id in the batch's $what — " +
+        "every pair endpoint and new doc needs an id")
+
+  /** Keep-last per doc over collected `(doc_id, label, batch)` rows. */
+  private def keepLast(rows: Array[Row]): Map[Long, Long] = {
+    val best = scala.collection.mutable.HashMap.empty[Long, (Long, Long)]
+    rows.foreach { r =>
+      val (d, b) = (r.getLong(0), r.getLong(2))
+      if (best.get(d).forall(_._1 < b)) best(d) = (b, r.getLong(1))
+    }
+    best.iterator.map { case (d, (_, l)) => d -> l }.toMap
+  }
+
+  private def totalsOf(rows: Iterable[(Long, Long)]): (Long, Long) =
+    (rows.size.toLong, rows.count { case (d, l) => d == l }.toLong)
+
+  /** The driver path: `None` when the touched components' members
+    * would overflow the gate (the caller then runs the distributed
+    * path). */
+  private def resolveOnDriver(root: String, log: DataFrame, hasLog: Boolean,
+      ps: Array[Row], ds: Array[Row], gate: Long): Option[Resolved] = {
+    if (ps.exists(r => r.isNullAt(0) || r.isNullAt(1))) refuseNullIds(root, "pairs")
+    if (ds.exists(_.isNullAt(0))) refuseNullIds(root, "newDocs")
+    val pairIds = ps.map(r => (r.getLong(0), r.getLong(1)))
+    val touched = pairIds.iterator.flatMap { case (a, b) => Iterator(a, b) }.toSet
+    val nd = ds.iterator.map(_.getLong(0)).toSet
+    val rowCols = Seq(col("doc_id"), col("label"), col("batch"))
+    // First read: every log row of a touched or new doc.
+    val probed = touched ++ nd
+    val seen =
+      if (!hasLog || probed.isEmpty) Array.empty[Row]
+      else log.where(col("doc_id").isin(probed.toSeq: _*)).select(rowCols: _*).collect()
+    val touchedLabels = keepLast(seen.filter(r => touched(r.getLong(0)))).values.toSet
+    val knownNew = seen.iterator.map(_.getLong(0)).filter(nd).toSet
+    // Second read: every member row of the touched components.
+    val memberRows =
+      if (touchedLabels.isEmpty) Some(Array.empty[Row])
+      else boundedCollect(
+        log.where(col("label").isin(touchedLabels.toSeq: _*)).select(rowCols: _*),
+        gate / 2 - pairIds.length)
+    memberRows.map { rows =>
+      val members = keepLast(rows)
+      // label(d) is the min doc_id of d's old component, so (d, label(d))
+      // is a real doc-doc edge and the resolved label is the min doc_id
+      // over the merged component — a from-scratch run's contract.
+      val relabeled = Relational.unionFind(pairIds.iterator ++ members.iterator)
+      val singletons = nd.iterator.filterNot(d => relabeled.contains(d) || knownNew(d))
+      val delta = (relabeled.iterator ++ singletons.map(d => d -> d)).toArray.sortBy(_._1)
+      val spark = log.sparkSession
+      Resolved(
+        spark.createDataFrame(delta.toSeq).toDF("doc_id", "label")
+          .coalesce(1).sortWithinPartitions("doc_id"),
+        BatchLog.pointLookupWriteOptions,
+        () => (totalsOf(members), totalsOf(delta)))
+    }
+  }
+
+  /** The distributed path: the same resolution as Spark joins. */
+  private def resolveDistributed(root: String, log: DataFrame, pairCols: DataFrame,
+      docCols: DataFrame, gate: Long): Resolved = {
+    val p = graft.CacheJanitor.register(pairCols.persist())
+    if (!p.where(col("doc_a").isNull || col("doc_b").isNull).isEmpty)
+      refuseNullIds(root, "pairs")
+    if (!docCols.where(col("doc_id").isNull).isEmpty) refuseNullIds(root, "newDocs")
+    val touched = p.select(col("doc_a").as("doc_id"))
+      .union(p.select(col("doc_b").as("doc_id"))).distinct()
+    val touchedLabels = currentOf(log.join(touched, Seq("doc_id"), "left_semi"))
+      .select("label").distinct()
+    // Persisted: feeds the CC edge set AND the stats-sidecar counts
+    // (touched-component-sized, never the corpus).
+    val members = graft.CacheJanitor.register(
+      currentOf(log.join(touchedLabels, Seq("label"), "left_semi")).persist())
+    val edges = p.union(members.select(col("doc_id"), col("label")))
+    val relabeled = Relational.connectedComponents(edges, smallGraphMaxEdges = gate)
+      .select(col("node").cast("long").as("doc_id"), col("label").cast("long").as("label"))
+    val nd = docCols.distinct()
+    val knownNew = log.join(nd, Seq("doc_id"), "left_semi")
+      .select("doc_id").distinct()
+    val singletons = nd
+      .join(relabeled.select("doc_id"), Seq("doc_id"), "left_anti")
+      .join(knownNew, Seq("doc_id"), "left_anti")
+      .select(col("doc_id"), col("doc_id").as("label"))
+    val delta = graft.CacheJanitor.register(
+      relabeled.unionByName(singletons).persist())
+    // Two touched-sized aggregates over frames the merge already
+    // materialized — never a corpus fold.
+    def agg2(df: DataFrame): (Long, Long) = {
+      val r = df.agg(count(lit(1)),
+        sum(when(col("doc_id") === col("label"), 1L).otherwise(0L))).head
+      (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
+    }
+    // repartition, not coalesce: the single-file collapse must not
+    // serialize the upstream CC/singleton stages into one task.
+    Resolved(delta.repartition(1), Map.empty, () => (agg2(members), agg2(delta)))
   }
 
   /** Keeper manifest under the engine's min-id policy (t34/t42/t54):

@@ -55,13 +55,14 @@ object DedupPipeline {
       batchKey: Option[String] = None): BatchStats = WriterLease.withLease(spark, root) {
     val b = SignatureIndex.ingest(spark, root, increment, batchKey = batchKey)
     // One materialization of the batch's pairs, shared by the label
-    // merge and the stats count — without it the count re-runs the
-    // whole posting-join + Jaccard verify (measured ~2.9 s/recompute
-    // at sf0.1).
+    // merge and, when the merge ran distributed, the stats count —
+    // without it the count re-runs the whole posting-join + Jaccard
+    // verify (measured ~2.9 s/recompute at sf0.1).
     val pairs = graft.CacheJanitor.register(
       b.deltaPairs.select(col("doc_a"), col("doc_b")).persist())
-    ClusterLabels.merge(spark, root, pairs, increment.select(col("doc_id")), batchKey)
-    val stats = batchStats(spark, root, increment.count(), pairs.count())
+    val counts = ClusterLabels.mergeBatch(spark, root, pairs,
+      increment.select(col("doc_id")), batchKey)
+    val stats = batchStats(spark, root, increment, pairs, counts)
     graft.CacheJanitor.drain()
     stats
   }
@@ -72,11 +73,15 @@ object DedupPipeline {
     * returned table per batch — a measured corpus-linear term in the
     * x100 loop's runOnce. `clusters == keepers` by the min-id keeper
     * invariant: every component's label is its min member's id, so
-    * exactly one doc per cluster satisfies `doc_id == label`. */
-  private def batchStats(spark: SparkSession, root: String,
-      newDocs: Long, deltaPairs: Long): BatchStats = {
+    * exactly one doc per cluster satisfies `doc_id == label`. The input
+    * counts come from the driver-side merge's collected arrays when it
+    * ran (`counts`), else from one count per frame. */
+  private def batchStats(spark: SparkSession, root: String, increment: DataFrame,
+      pairs: DataFrame, counts: Option[ClusterLabels.BatchCounts]): BatchStats = {
     val (_, _, keepers) = ClusterLabels.labelStats(spark, root)
-    BatchStats(newDocs = newDocs, deltaPairs = deltaPairs,
+    BatchStats(
+      newDocs = counts.fold(increment.count())(_.newDocs),
+      deltaPairs = counts.fold(pairs.count())(_.pairs),
       clusters = keepers, keepers = keepers)
   }
 
@@ -95,9 +100,9 @@ object DedupPipeline {
     val pairs = graft.CacheJanitor.register(
       b.deltaPairs.select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b"))
         .persist())
-    ClusterLabels.merge(spark, root, pairs,
+    val counts = ClusterLabels.mergeBatch(spark, root, pairs,
       increment.select(col("vec_id").as("doc_id")), batchKey)
-    val stats = batchStats(spark, root, increment.count(), pairs.count())
+    val stats = batchStats(spark, root, increment, pairs, counts)
     graft.CacheJanitor.drain()
     stats
   }

@@ -304,6 +304,30 @@ object Relational {
     * the distributed loop (tests do). */
   val ccSmallGraphMaxEdges: Long = 1000000L
 
+  /** Driver-side union-find over an edge list: every endpoint mapped to
+    * the min node id of its component — the label contract of
+    * [[connectedComponents]]. The larger root always attaches under the
+    * smaller, so each root IS its component's min id, whatever the edge
+    * order (deterministic). Shared by the small-graph path of
+    * [[connectedComponents]] and [[ClusterLabels]]' driver-side merge. */
+  private[graft] def unionFind(edges: Iterator[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.HashMap.empty[Long, Long]
+    def find(x: Long): Long = {
+      var r = x
+      while (parent(r) != r) r = parent(r)
+      var c = x
+      while (parent(c) != r) { val n = parent(c); parent(c) = r; c = n }
+      r
+    }
+    edges.foreach { case (a, b) =>
+      if (!parent.contains(a)) parent(a) = a
+      if (!parent.contains(b)) parent(b) = b
+      val ra = find(a); val rb = find(b)
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    parent.keysIterator.map(n => n -> find(n)).toMap
+  }
+
   def connectedComponents(pairs: DataFrame, maxRounds: Int = 25,
       checkpointDir: Option[String] = None,
       smallGraphMaxEdges: Long = ccSmallGraphMaxEdges): DataFrame = {
@@ -355,26 +379,7 @@ object Relational {
       // and isolated nodes don't occur in a pair list by definition
       // (the self-loops exist for the distributed loop's groupBy).
       val es = p2.select(col("a").cast("long"), col("b").cast("long")).collect()
-      val parent = scala.collection.mutable.HashMap.empty[Long, Long]
-      def find(x: Long): Long = {
-        var r = x
-        while (parent(r) != r) r = parent(r)
-        var c = x
-        while (parent(c) != r) { val n = parent(c); parent(c) = r; c = n }
-        r
-      }
-      es.foreach { r =>
-        val a = r.getLong(0); val b = r.getLong(1)
-        if (!parent.contains(a)) parent(a) = a
-        if (!parent.contains(b)) parent(b) = b
-        val ra = find(a); val rb = find(b)
-        // Always attach the larger root under the smaller, so every
-        // root is the min node id of its component — the exact label
-        // contract of the distributed loop (min is order-independent,
-        // so the result is deterministic whatever the edge order).
-        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-      }
-      val out = parent.keysIterator.map(n => (n, find(n))).toSeq
+      val out = unionFind(es.iterator.map(r => (r.getLong(0), r.getLong(1)))).toSeq
       import spark0.implicits._
       return out.toDF("node", "label")
         .select(col("node").cast(nodeType).as("node"), col("label").cast(nodeType).as("label"))

@@ -92,6 +92,11 @@ object GraftSession {
       // sessions graft didn't build.
       .config("spark.sql.extensions", classOf[GraftExtensions].getName)
       .config("spark.sql.shuffle.partitions", shufflePartitions)
+      // Local disk without native libhadoop: Hadoop's own file: class
+      // forks a `chmod` per created file, .crc and directory. This one
+      // sets the same mode bits in-process and states the strict
+      // rename rule the commit protocols rely on.
+      .config("spark.hadoop.fs.file.impl", classOf[ForkFreeLocalFileSystem].getName)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.ui.enabled", "false")
@@ -121,6 +126,14 @@ object GraftSession {
         java.nio.file.Files.createTempDirectory("graft_wh").toString)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    // Hadoop caches one file: instance per JVM, whatever configuration
+    // made it. One made before this session (a bare `new Configuration()`
+    // read of a state file, say) would keep its class for every later
+    // lookup; closing it drops it from the cache, so the next lookup
+    // builds the class registered above.
+    val local = org.apache.hadoop.fs.FileSystem.get(
+      java.net.URI.create("file:///"), spark.sparkContext.hadoopConfiguration)
+    if (!local.isInstanceOf[ForkFreeLocalFileSystem]) local.close()
     graft.functions.GraftFunctions.registerAll(spark)
     spark
   }

@@ -491,9 +491,19 @@ private[graft] object BatchLog {
     // manifest (legacy roots, increment-only logs): with a manifested
     // fold in the log, the split read below serves the fold's (many)
     // group files listing-free and only lists the flat increments.
-    if (byLayout.size <= 1 && mans.values.forall(_.isEmpty))
-      spark.read.parquet(rp).drop("batch_key")
-    else {
+    if (byLayout.size <= 1 && mans.values.forall(_.isEmpty)) {
+      // A flat root whose first versioned commit lands between the
+      // resolve above and this listing shows the reader-too-old
+      // sentinel here (as a file with no footer). The committed state
+      // moved to a version dir: plan against that instead.
+      val flat = try Right(spark.read.parquet(rp)) catch { case e: Exception => Left(e) }
+      val sentinel = "/" + VersionedState.upgradedSentinelName
+      val sawSentinel = flat.fold(_ => true, _.inputFiles.exists(_.endsWith(sentinel)))
+      if (sawSentinel && rp == path && VersionedState.isVersioned(fs, path)) {
+        Option(resolveSnapshot.get()).foreach(_.remove(path))
+        read(spark, path, op)
+      } else flat.fold(e => throw e, _.drop("batch_key"))
+    } else {
       val common = byLayout.keys.reduce(_ & _)
       byLayout.toSeq.sortBy { case (cols, _) => (cols.size, cols.toSeq.sorted.mkString(",")) }
         .map { case (cols, group) =>

@@ -438,12 +438,17 @@ object LandingLog {
 final class WatermarkStore(path: String) {
   val sentinel = "1970-01-01 00:00:00.000000"
 
-  def read(): Map[String, String] =
+  /** Synchronized with [[update]]: ingest's concurrent gates read here
+    * while a sibling publishes, and a read racing the swap can open the
+    * old file and the new `.crc` (a checksum error) or find neither the
+    * main file nor the `.tmp`. */
+  def read(): Map[String, String] = this.synchronized {
     StateFile.read(path) { txt =>
       // A blank file is "no state yet" (same as absent); anything else
       // must parse exactly — malformed state fails loudly, never silently.
       if (txt.trim.isEmpty) Map.empty[String, String] else MiniJson.parseFlat(txt)
     }.getOrElse(Map.empty)
+  }
 
   def watermark(table: String): String = read().getOrElse(table, sentinel)
 

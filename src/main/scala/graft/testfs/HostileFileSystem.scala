@@ -5,9 +5,11 @@ import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileUtil, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{FileUtil, Path}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.util.Progressable
+
+import graft.ForkFreeRawLocalFileSystem
 
 /** Hostile-filesystem test mode (round-15: the r14 verdict's item 2 —
   * "exercise the object-store bindings instead of documenting them").
@@ -34,8 +36,10 @@ import org.apache.hadoop.util.Progressable
   * `hostile:///abs/path` roots. All graft protocols reach storage
   * through `path.getFileSystem(conf)`, so they run here unmodified.
   * Test/evidence harness only — never on a production data path.
+  * Its raw layer is the session `file:` class's, so creates do not
+  * fork `chmod` here either.
   */
-class HostileFileSystem extends RawLocalFileSystem {
+class HostileFileSystem extends ForkFreeRawLocalFileSystem {
 
   import HostileFileSystem._
 

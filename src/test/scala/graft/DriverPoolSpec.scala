@@ -72,4 +72,24 @@ class DriverPoolSpec extends SparkSpec {
       "the slow gate's watermark must be bumped before the call returns")
     assert(LandingLog.logKeys(spark, landing, "address").isEmpty)
   }
+
+  test("concurrent gates read the watermark store while another gate publishes, and never fail") {
+    // ingestOnce's gates call watermark() while a sibling's update()
+    // swaps the file. A read that opens the old data file and then the
+    // new .crc fails its checksum, and by then no .tmp is left to fall
+    // back to, so the whole runOnce would throw.
+    val root = Files.createTempDirectory("graft_pool_wm").toString
+    val store = new WatermarkStore(s"$root/state/tracking.json")
+    store.update(Map("t0" -> "0"))
+    val updates = 200
+    val out = Runner.inParallel((0 until 4).toList, Runner.driverPoolWidth) {
+      case 0 => (1 to updates).foreach(i => store.update(Map("t0" -> i.toString))); 0
+      case _ =>
+        var reads = 0
+        while (store.watermark("t0") != updates.toString) reads += 1
+        reads
+    }
+    assert(out.head == 0)
+    assert(store.read() == Map("t0" -> updates.toString))
+  }
 }

@@ -58,9 +58,9 @@ private[graft] object BatchLog {
 
   /** The physical directory holding `path`'s CURRENT committed state —
     * [[VersionedState.resolve]], snapshot-cached inside read-only
-    * sections. Every public entry point resolves through this, so a
-    * table dir upgraded to the versioned layout (first compaction/
-    * refreeze commit) is transparent to operators: appends land inside
+    * sections. Every public entry point resolves through this, so the
+    * versioned layout a table dir gets at its first compaction/refreeze
+    * commit is transparent to operators: appends land inside
     * the current version, reads plan against it, and superseded
     * versions linger for in-flight readers until grace-GC. */
   def resolve(spark: SparkSession, path: String): String =
@@ -85,19 +85,6 @@ private[graft] object BatchLog {
         (c >= 'a' && c <= 'z') || c == '.' || c == '-')) c.toString
       else f"_${c.toInt}%04x"
     }
-
-  /** The pre-injective mapping (kept `_` literal, collapsed every other
-    * unsafe char to `_`) — consulted so batches WRITTEN by the older
-    * release keep their replay idempotence across the upgrade: a replay
-    * whose key resolves differently under the new escape must find (and
-    * overwrite) its ORIGINAL directory, and a ledger entry recorded
-    * under the old name must still veto the replay. Old-mapping names
-    * are only ever honoured when the [[legacyKeys]] snapshot lists them
-    * (see [[resolveKey]]) — a live directory probe would let a
-    * NEW-mapping directory whose name happens to equal some other key's
-    * old mapping be hijacked and overwritten. */
-  private def legacySanitize(key: String): String =
-    "b" + key.replaceAll("[^0-9A-Za-z_.\\-]", "_")
 
   private def dirFor(path: String, key: String): String =
     s"$path/batch_key=$key"
@@ -124,34 +111,11 @@ private[graft] object BatchLog {
     * construction). */
   def committedKeys(spark: SparkSession, path: String): Seq[String] = {
     val rp = resolve(spark, path)
-    val ks = keys(spark, path).filter { k =>
+    keys(spark, path).filter { k =>
       val d = dirFor(rp, k)
       readFoldManifest(spark, d).map(_.files.nonEmpty)
         .getOrElse(hasCommittedFiles(spark, d))
     }
-    if (ks.isEmpty) requireNotMidSwap(spark, path)
-    ks
-  }
-
-  /** The silent-empty belt of the reader contract ([[ReadGuard]]): a
-    * log that reads as EMPTY while its sibling swap-intent marker is up
-    * is not empty — it is mid-replacement (the whole-directory
-    * delete→rename window of a compaction/refreeze/migration commit on
-    * another driver), and concluding "no data" here would propagate a
-    * silent wrong answer (e.g. "no pairs in the corpus"). Thrown as the
-    * retryable [[ConcurrentMaintenanceException]]; probed ONLY when a
-    * read is about to answer empty/absent, so steady-state reads never
-    * pay it. */
-  private def requireNotMidSwap(spark: SparkSession, path: String): Unit = {
-    val intent = new HPath(s"$path.__swap_intent")
-    // A VERSIONED commit never replaces the committed state, so an
-    // empty read under its intent is a genuinely empty log (e.g. an
-    // all-tombstoned compaction's empty fold), not a swap window.
-    if (fsOf(spark, path).exists(intent) &&
-        !Tombstones.intentIsVersioned(spark, s"$path.__swap_intent"))
-      throw new ConcurrentMaintenanceException(
-        s"$path reads as empty while its swap-intent marker is up — a " +
-          "maintenance commit is replacing the directory; retry the read")
   }
 
   // ---------------------------------------------------- row-count sidecars
@@ -304,13 +268,11 @@ private[graft] object BatchLog {
     * trip over it meanwhile. */
   def hasData(spark: SparkSession, path: String): Boolean = {
     val rp = resolve(spark, path)
-    val any = keys(spark, path).exists { k =>
+    keys(spark, path).exists { k =>
       val d = dirFor(rp, k)
       readFoldManifest(spark, d).map(_.files.nonEmpty)
         .getOrElse(hasCommittedFiles(spark, d))
     }
-    if (!any) requireNotMidSwap(spark, path) // see the committedKeys belt
-    any
   }
 
   private def nextAutoKey(spark: SparkSession, path: String): String = {
@@ -344,18 +306,8 @@ private[graft] object BatchLog {
 
   private def writeMarker(spark: SparkSession, path: String): Unit = {
     val fs = fsOf(spark, path)
-    val dir = new HPath(path)
-    fs.mkdirs(dir)
-    // First write by the injective-escape release: snapshot the caller
-    // -key directory names that already exist — they (and only they)
-    // were minted by the pre-injective mapping. The snapshot lands
-    // BEFORE this write creates any new-mapping directory, so the two
-    // namespaces can never be confused afterwards (see [[legacyKeys]]).
-    if (!fs.exists(new HPath(dir, legacyName)))
-      writeLegacy(spark, path,
-        (keys(spark, path) ++ retiredKeys(spark, path))
-          .filter(_.startsWith("b")).toSet)
-    val m = new HPath(dir, markerName)
+    fs.mkdirs(new HPath(path))
+    val m = new HPath(path, markerName)
     if (!fs.exists(m)) fs.create(m, true).close()
   }
 
@@ -364,35 +316,7 @@ private[graft] object BatchLog {
     * append (to exclude its own prior rows on a replay) resolves once
     * and hands the result to [[appendResolved]]. */
   def resolveKey(spark: SparkSession, path: String, batchKey: Option[String]): String =
-    batchKey.map { k =>
-      val neu = sanitize(k)
-      val old = legacySanitize(k)
-      if (old == neu) neu
-      else {
-        // Upgrade compatibility. The pre-upgrade names are read from the
-        // [[legacyKeys]] snapshot, NOT probed live: a live probe would
-        // let this key hijack a NEW-mapping directory whose name happens
-        // to equal its old mapping (e.g. caller key "x*005f0abc"
-        // old-maps to "bx_005f0abc" — the new mapping of the UNRELATED
-        // key "x_0abc") and silently overwrite that batch. Only a root
-        // never yet written by this release (no snapshot) probes live —
-        // every directory there IS pre-upgrade by definition.
-        val legacy = legacyKeys(spark, path).getOrElse(
-          (keys(spark, path) ++ retiredKeys(spark, path))
-            .filter(_.startsWith("b")).toSet)
-        // The converse collision — this key's NEW mapping landing on a
-        // name a pre-upgrade directory of a DIFFERENT key already owns —
-        // cannot be resolved safely in either direction (append would
-        // overwrite the old batch; after a compaction the retired-name
-        // veto would silently swallow the new batch). Refuse loudly.
-        require(!legacy.contains(neu),
-          s"batch key '$k' maps to directory name '$neu', which a " +
-            "pre-upgrade batch of a different caller key already owns — " +
-            "compact the log (folding the old batches) and rename this " +
-            "key, or rebuild the root")
-        if (legacy.contains(old)) old else neu
-      }
-    }.getOrElse(nextAutoKey(spark, path))
+    batchKey.map(sanitize).getOrElse(nextAutoKey(spark, path))
 
   /** Append one batch: `df` lands under `path/batch_key=<key>/` with
     * `mode("overwrite")` — a replay of the same caller key replaces its
@@ -488,22 +412,12 @@ private[graft] object BatchLog {
           .map(_.getPath.getName.takeWhile(_ != '=')).toSet)
     val byLayout = ks.groupBy(partColsOf)
     // The one-listing whole-tree read only when NO directory carries a
-    // manifest (legacy roots, increment-only logs): with a manifested
-    // fold in the log, the split read below serves the fold's (many)
-    // group files listing-free and only lists the flat increments.
-    if (byLayout.size <= 1 && mans.values.forall(_.isEmpty)) {
-      // A flat root whose first versioned commit lands between the
-      // resolve above and this listing shows the reader-too-old
-      // sentinel here (as a file with no footer). The committed state
-      // moved to a version dir: plan against that instead.
-      val flat = try Right(spark.read.parquet(rp)) catch { case e: Exception => Left(e) }
-      val sentinel = "/" + VersionedState.upgradedSentinelName
-      val sawSentinel = flat.fold(_ => true, _.inputFiles.exists(_.endsWith(sentinel)))
-      if (sawSentinel && rp == path && VersionedState.isVersioned(fs, path)) {
-        Option(resolveSnapshot.get()).foreach(_.remove(path))
-        read(spark, path, op)
-      } else flat.fold(e => throw e, _.drop("batch_key"))
-    } else {
+    // manifest (increment-only logs): with a manifested fold in the
+    // log, the split read below serves the fold's (many) group files
+    // listing-free and only lists the flat increments.
+    if (byLayout.size <= 1 && mans.values.forall(_.isEmpty))
+      spark.read.parquet(rp).drop("batch_key")
+    else {
       val common = byLayout.keys.reduce(_ & _)
       byLayout.toSeq.sortBy { case (cols, _) => (cols.size, cols.toSeq.sorted.mkString(",")) }
         .map { case (cols, group) =>
@@ -906,40 +820,6 @@ private[graft] object BatchLog {
       finally out.close()
     }
 
-  // -------------------------------------------------------- legacy keys
-
-  private val legacyName = "_graft_legacy_keys"
-
-  /** The caller-key directory names that existed when the injective
-    * -escape release FIRST wrote this root — the complete set of names
-    * minted by the pre-injective mapping, snapshotted by [[writeMarker]]
-    * before any new-mapping directory can exist. [[resolveKey]]'s legacy
-    * fallback honours ONLY these names; the file's presence (even empty,
-    * the fresh-root case) means every other directory was named by the
-    * injective escape. `None` = the root was last written by the older
-    * release (or never written): every caller-key directory there is
-    * pre-upgrade, so the fallback may probe live. */
-  def legacyKeys(spark: SparkSession, path: String): Option[Set[String]] = {
-    val fs = fsOf(spark, path)
-    val f = new HPath(resolve(spark, path), legacyName)
-    if (!fs.exists(f)) None
-    else {
-      val in = fs.open(f)
-      try Some(new String(
-        org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8")
-        .split("\n").map(_.trim).filter(_.nonEmpty).toSet)
-      finally in.close()
-    }
-  }
-
-  private def writeLegacy(spark: SparkSession, path: String, ks: Set[String]): Unit = {
-    val fs = fsOf(spark, path)
-    fs.mkdirs(new HPath(path))
-    val out = fs.create(new HPath(path, legacyName), true)
-    try out.write(ks.toSeq.sorted.mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-  }
-
   /** Parquet row-group byte bound for point-lookup-adopted fold writes
     * (r18 pricing, SCALEBENCH_r18_pointlookup: id-sorted rows + 1 MB
     * row groups turn a pushed `In(id)` into a row-group-pruned read —
@@ -1024,12 +904,6 @@ private[graft] object BatchLog {
     val foldKey = nextAutoKey(spark, srcPath)
     writeFold(df, tmpPath, foldKey, partitionBy, writeOptions)
     writeRetired(spark, tmpPath, folded)
-    // The legacy-name snapshot must survive the swap: post-compaction
-    // replays of pre-upgrade keys still resolve through it (and are then
-    // vetoed by the retired ledger carrying their old names).
-    writeLegacy(spark, tmpPath, legacyKeys(spark, srcPath).getOrElse(
-      (keys(spark, srcPath) ++ retiredKeys(spark, srcPath))
-        .filter(_.startsWith("b")).toSet))
     foldKey
   }
 }

@@ -27,7 +27,7 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   * batch appends only the rows it (re)defines, stamped with a monotone
   * batch number; [[read]] folds the log keep-last per doc (one shuffle on
   * doc_id); [[compact]] rewrites the fold and atomically swaps it in (the
-  * same Hadoop-FS rename commit as [[Tombstones.commitCompaction]]).
+  * same versioned commit as [[Tombstones.commitCompaction]]).
   * Batch write cost is O(changed rows); only compaction pays a corpus
   * rewrite, on the operator's schedule.
   *
@@ -43,16 +43,13 @@ object ClusterLabels {
   private def emptyLabels(spark: SparkSession): DataFrame =
     spark.range(0).select(col("id").as("doc_id"), col("id").as("label"))
 
-  /** Crash recovery for [[compact]]'s swap window — MANDATORY before
-    * any existence probe of the label dir: "dir missing" normally means
-    * "no labels yet" (an EMPTY state), so a compaction that died
-    * between its delete and rename would otherwise read as silent data
-    * loss, not an error. Round 17: delegated to the shared intent-
-    * marked protocol ([[Tombstones.recoverSwap]]) — the hand-rolled
-    * rule here ("both present ⇒ drop tmp") was only sound under atomic
-    * rename; on a copy+delete FS it would have ADOPTED a torn dest.
-    * The shared recovery also still handles the pre-intent legacy
-    * states identically. */
+  /** Crash recovery for [[compact]]'s swap window, run before every
+    * read: the shared intent-recorded protocol
+    * ([[Tombstones.recoverSwap]]). A compaction that died after its
+    * intent is completed from its recorded stage — on a copy+delete FS
+    * a crash mid-copy leaves a TORN version dir, which recovery
+    * replaces from the complete stage instead of adopting; a stage
+    * without an intent never began its commit and is dropped. */
   private def recover(spark: SparkSession, root: String): Unit =
     Tombstones.recoverSwap(spark, s"${dir(root)}.__compact_tmp", dir(root))
 
@@ -621,13 +618,8 @@ object ClusterLabels {
     val dest = dir(root)
     val tmp = s"$dest.__compact_tmp"
     BatchLog.stageRewrite(read(spark, root).withColumn("batch", lit(1L)), dest, tmp)
-    // Intent-marked swap (round 17): this was the LAST hand-rolled
-    // delete+rename commit — on a copy+delete FS a crash mid-copy
-    // leaves a PARTIAL dest with tmp present, and the pre-intent
-    // recovery rule ("both present ⇒ drop tmp") would have adopted the
-    // torn dest as the label log. Tombstones.commitSwap is the same
-    // swap under the intent marker every other operator got in r15;
-    // ClusterLabels has no tombstone side table, so the swap-only form.
+    // The shared versioned swap; ClusterLabels has no tombstone side
+    // table, so the swap-only form.
     Tombstones.commitSwap(spark, tmp, dest)
     // Fresh stats sidecar for the folded directory (the fold dropped any
     // per-batch sidecars with the history) — this is also what HEALS a

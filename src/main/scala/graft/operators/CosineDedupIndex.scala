@@ -170,10 +170,10 @@ object CosineDedupIndex {
   def ingest(spark: SparkSession, root: String, increment: DataFrame,
       batchKey: Option[String] = None): Batch = WriterLease.withLease(spark, root) {
     // Full recovery (refreeze AND compaction swap) BEFORE the append: an
-    // ingest landing inside a crashed compaction's delete-to-rename
-    // window would recreate the codes dir with only this increment, and
-    // readIndex's recovery below would then drop the staged fold as an
-    // abandoned stage — the corpus lost in this very call.
+    // ingest landing inside a crashed compaction's commit window would
+    // append to the old version, and readIndex's recovery below would
+    // then commit the staged fold over it — this increment lost in this
+    // very call.
     recoverState(spark, root)
     val mask = frozenMask(spark, root).getOrElse {
       val m = TextSim.lshMaskValue(increment.count()).toLong
@@ -251,7 +251,7 @@ object CosineDedupIndex {
   }
 
   /** Live code rows: the snapshot minus tombstoned vec_ids (compaction
-    * crash-recovery probed first — see [[Tombstones.recoverCompaction]]).
+    * crash-recovery probed first — see [[Tombstones.recoverSwap]]).
     * `pgrp` is a fold-layout artifact, never part of the row contract —
     * dropped whatever mix of fold and flat directories the log holds. */
   def readIndex(spark: SparkSession, root: String): DataFrame = {
@@ -284,7 +284,7 @@ object CosineDedupIndex {
     * ([[DedupPipeline.health]]); see `SignatureIndex.recoverState`. */
   private[operators] def recoverState(spark: SparkSession, root: String): Unit = {
     refreezeRecover(spark, root)
-    Tombstones.recoverCompaction(spark, root,
+    Tombstones.recoverSwap(spark,
       s"${codesDir(root)}.__compact_tmp", codesDir(root))
   }
 
@@ -297,7 +297,7 @@ object CosineDedupIndex {
     import spark.implicits._
     // Compaction recovery too: a tombstone appended inside a crashed
     // compaction's swap window would be cleared when a later reader
-    // adopts the staged fold (the adopt path drops the side table).
+    // adopts the staged fold (the recorded commit clears the side table).
     recoverState(spark, root)
     Tombstones.append(root, ids.toDF("vec_id"), "vec_id")
   }

@@ -128,11 +128,10 @@ object DedupPipeline {
     */
   def health(spark: SparkSession, root: String,
       vector: Boolean = false): Health = {
-    // Crash recovery BEFORE any existence probe (the same contract as
-    // ClusterLabels.recover): during a compaction/refreeze swap window
-    // the log dir is legitimately absent while the fully-staged tmp is
-    // present — probing without recovering would report liveDocs = 0
-    // for an index that lost nothing.
+    // Crash recovery BEFORE any probe (the same contract as
+    // ClusterLabels.recover): a compaction/refreeze commit that died
+    // after its intent is completed first, so the probe reports the
+    // state that commit was landing (tombstones cleared with it).
     ReadGuard.recoverForRead(spark, root)(
       if (vector) CosineDedupIndex.recoverState(spark, root)
       else SignatureIndex.recoverState(spark, root))

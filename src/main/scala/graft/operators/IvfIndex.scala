@@ -82,7 +82,7 @@ private[graft] abstract class IvfIndex[Q] {
 
   /** The directory the CURRENT quantizer lives in: inside the resolved
     * codes version (`codes/_versions/<n>/_quantizer` — written by every
-    * versioned refreeze and carried forward by compaction, so quantizer
+    * refreeze and carried forward by compaction, so quantizer
     * + codes resolve as ONE committed pair), else the first batch's
     * top-level `root/quantizer`. Resolution goes through [[BatchLog]]'s
     * snapshot cache, so a read section pins ONE version for both. */
@@ -140,8 +140,8 @@ private[graft] abstract class IvfIndex[Q] {
     * occupied cells + occupancy, and the drift predicate, in one scan
     * of the code log (the predicate reuses the probe's live count
     * instead of re-scanning like [[needsRefreeze]] would). Crash
-    * recovery runs before any probe — a swap-window poll must adopt
-    * the staged fold, not report live = 0. */
+    * recovery runs before any probe — a swap-window poll reports the
+    * state the crashed commit was landing. */
   def health(spark: SparkSession, root: String): IndexHealth = {
     ReadGuard.recoverForRead(spark, root)(recoverState(spark, root))
     loadQuantizer(spark, root) match {
@@ -214,7 +214,7 @@ private[graft] abstract class IvfIndex[Q] {
     * by every mutating or reading entry point before touching state. */
   private[operators] def recoverState(spark: SparkSession, root: String): Unit = {
     refreezeRecover(spark, root)
-    Tombstones.recoverCompaction(spark, root, s"$root/codes.__compact_tmp", s"$root/codes")
+    Tombstones.recoverSwap(spark, s"$root/codes.__compact_tmp", s"$root/codes")
   }
 
   /** Live code rows: the snapshot (cell cast back to its canonical
@@ -239,7 +239,7 @@ private[graft] abstract class IvfIndex[Q] {
   def remove(spark: SparkSession, root: String, ids: DataFrame): Unit = WriterLease.withLease(spark, root) {
     // Compaction recovery too: a tombstone appended inside a crashed
     // compaction's swap window would be cleared when a later reader
-    // adopts the staged fold (the adopt path drops the side table).
+    // adopts the staged fold (the recorded commit clears the side table).
     recoverState(ids.sparkSession, root)
     Tombstones.append(root, ids, "vec_id")
   }
@@ -276,12 +276,6 @@ private[graft] abstract class IvfIndex[Q] {
   // ---------------------------------------------------------------- refreeze
 
   private def codesRefreezeTmp(root: String): String = s"$root/codes.__refreeze_tmp"
-
-  private def versioned(spark: SparkSession, dest: String): Boolean = {
-    val fs = new org.apache.hadoop.fs.Path(dest)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    VersionedState.enabled || VersionedState.isVersioned(fs, dest)
-  }
 
   /** Ladder-step migration for a quantizer frozen on a first batch the
     * corpus has outgrown: retrains both quantizers on the SURVIVING
@@ -341,38 +335,30 @@ private[graft] abstract class IvfIndex[Q] {
     } finally graft.CacheJanitor.drain()
   }
 
-  /** Commit a sealed stage. VERSIONED roots (the default): one versioned
-    * codes commit lands quantizer + codes together as
-    * `codes/_versions/<n+1>` — a read resolves the old pair or the new,
-    * never a mix, never a retry. The top-level `root/quantizer` stays as
-    * the fallback of readers pinned to pre-refreeze versions.
-    * IN-PLACE roots (versioning disabled, never versioned): the staged
-    * quantizer is swapped into `root/quantizer` first (its absence with
-    * the staged codes intact means a prior attempt already renamed it),
-    * then the codes swap. Idempotent under crash-and-rerun. */
-  private def commitRefreeze(spark: SparkSession, root: String): Unit = {
-    val ctmp = codesRefreezeTmp(root)
-    if (!versioned(spark, s"$root/codes"))
-      RefreezeProtocol.swapIfStaged(spark, s"$ctmp/$quantStage", s"$root/quantizer")
-    Tombstones.commitCompaction(spark, root, ctmp, s"$root/codes")
-  }
+  /** Commit a sealed stage: one versioned codes commit lands quantizer
+    * + codes together as `codes/_versions/<n+1>` — a read resolves the
+    * old pair or the new, never a mix, never a retry. The top-level
+    * `root/quantizer` stays as the fallback of readers pinned to
+    * versions that predate the first refreeze. Idempotent under
+    * crash-and-rerun. */
+  private def commitRefreeze(spark: SparkSession, root: String): Unit =
+    Tombstones.commitCompaction(spark, root, codesRefreezeTmp(root), s"$root/codes")
 
   /** Complete or abandon a crashed [[refreeze]]. A marked stage commits
-    * only when whole: staged codes with committed data files AND, on
-    * versioned roots, its in-stage quantizer (the versioned commit never
-    * moves it out of the stage). Anything else is a husk — its stage
-    * deleted out from under an in-flight refreeze — and committing it
-    * would install new codes under the old quantizer, so it is dropped.
-    * Unmarked partials are dropped only by a fresh refreeze
-    * (`deletePartial`): a reader could race one legitimately mid-stage. */
+    * only when whole: staged codes with committed data files AND its
+    * in-stage quantizer (the commit never moves it out of the stage).
+    * Anything else is a husk — its stage deleted out from under an
+    * in-flight refreeze — and committing it would install new codes
+    * under the old quantizer, so it is dropped. Unmarked partials are
+    * dropped only by a fresh refreeze (`deletePartial`): a reader could
+    * race one legitimately mid-stage. */
   private def refreezeRecover(spark: SparkSession, root: String,
       deletePartial: Boolean = false): Unit = {
     val ctmp = codesRefreezeTmp(root)
     if (RefreezeProtocol.exists(spark, ctmp)) {
       if (RefreezeProtocol.readMarker(spark, ctmp).isDefined) {
         val whole = RefreezeProtocol.hasStagedData(spark, ctmp) &&
-          (BatchLog.hasCommittedFiles(spark, s"$ctmp/$quantStage/centroids") ||
-            !versioned(spark, s"$root/codes"))
+          BatchLog.hasCommittedFiles(spark, s"$ctmp/$quantStage/centroids")
         if (whole) commitRefreeze(spark, root)
         else RefreezeProtocol.deleteIfExists(spark, ctmp)
       } else if (deletePartial) RefreezeProtocol.deleteIfExists(spark, ctmp)
@@ -383,9 +369,9 @@ private[graft] abstract class IvfIndex[Q] {
     * `(query_id, embedding)` frame against the persisted index. */
   def topK(spark: SparkSession, root: String, queries: DataFrame, k: Int = 3,
       rerank: Option[DataFrame] = None, nprobe: Option[Int] = None): DataFrame = {
-    // FULL recovery (refreeze AND compaction swap), matching readCodes —
-    // a torn compaction would otherwise serve partial neighbors. Lease-
-    // guarded (ReadGuard): a live writer's swap fails the read retryably.
+    // FULL recovery (refreeze AND compaction swap), matching readCodes.
+    // Lease-guarded (ReadGuard): with a live writer mid-swap the read
+    // serves the committed version and leaves the debris to the writer.
     ReadGuard.recoverForRead(spark, root)(recoverState(spark, root))
     topKRecovered(spark, root, queries, k, rerank, nprobe)
   }

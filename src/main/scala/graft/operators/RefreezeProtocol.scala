@@ -6,7 +6,7 @@ import org.apache.spark.sql.SparkSession
 /** Shared plumbing for the index refreeze (ladder-step migration)
   * commits ([[CosineDedupIndex.refreeze]], [[IvfIndex.refreeze]]):
   * stage EVERYTHING, write a completion marker LAST, then run the
-  * destructive commit — so recovery can always classify a crash
+  * versioned commit — so recovery can always classify a crash
   * unambiguously (marker present = stage complete, finish the commit
   * idempotently; marker absent = partial stage, drop it). Hadoop
   * FileSystem API throughout, same as the compaction commits. */
@@ -20,9 +20,8 @@ private[graft] object RefreezeProtocol {
     * round 19 it also RIDES THE VERSIONED COMMIT into
     * `codes/_versions/<n>/_quantizer` — quantizer + codes are ONE
     * committed version, so a read entering mid-refreeze resolves
-    * either the old pair or the new, never a mix (the last loud-retry
-    * window, closed). Underscore-prefixed: invisible to parquet
-    * readers and every BatchLog walk. */
+    * either the old pair or the new, never a mix. Underscore-prefixed:
+    * invisible to parquet readers and every BatchLog walk. */
   val quantStageName = "_quantizer"
 
   /** Recursive small-dir copy (quantizer artifacts are a few KB-scale
@@ -91,21 +90,6 @@ private[graft] object RefreezeProtocol {
       try Some(new String(
         org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8").trim)
       finally in.close()
-    }
-  }
-
-  /** Replace `dest` with `tmp` (delete-then-rename; the caller's
-    * recovery owns the crash window). Skips when `tmp` is absent —
-    * the idempotent-retry case where an earlier attempt already
-    * renamed it. */
-  def swapIfStaged(spark: SparkSession, tmp: String, dest: String): Unit = {
-    val fs = fsOf(spark, tmp)
-    val tmpP = new HPath(tmp)
-    if (fs.exists(tmpP)) {
-      val destP = new HPath(dest)
-      if (fs.exists(destP)) fs.delete(destP, true)
-      require(fs.rename(tmpP, destP),
-        s"refreeze commit failed: could not move $tmp into $dest")
     }
   }
 }

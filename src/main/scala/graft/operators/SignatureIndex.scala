@@ -107,11 +107,9 @@ object SignatureIndex {
       table: String = "signatures", batchKey: Option[String] = None): Batch = WriterLease.withLease(spark, root) {
     val path = s"$root/$table"
     // Recovery BEFORE the append: an ingest landing inside a crashed
-    // compaction's delete-to-rename window would otherwise recreate the
-    // snapshot dir with only this increment — and the recovery probe
-    // below (readIndex), seeing dest present ∧ tmp present, would drop
-    // the fully-staged fold as an abandoned stage: the corpus lost in
-    // this very call.
+    // compaction's commit window would otherwise append to the old
+    // version — and the recovery probe below (readIndex) would commit
+    // the staged fold over it: this increment lost in this very call.
     recoverState(spark, root, table)
     // Cache BEFORE the write so the append populates the cache and the
     // delta join below reads it back instead of re-scanning the text.
@@ -271,7 +269,7 @@ object SignatureIndex {
     * a fully-staged compaction as an empty index. */
   private[operators] def recoverState(spark: SparkSession, root: String,
       table: String = "signatures"): Unit =
-    Tombstones.recoverCompaction(spark, root, s"$root/$table.__compact_tmp", s"$root/$table")
+    Tombstones.recoverSwap(spark, s"$root/$table.__compact_tmp", s"$root/$table")
 
   /** Tombstone doc_ids out of the index. Appends to the side table only
     * — snapshot files stay byte-untouched (spec-pinned); the ids vanish
@@ -282,8 +280,8 @@ object SignatureIndex {
   def remove(spark: SparkSession, root: String, ids: DataFrame): Unit = WriterLease.withLease(spark, root) {
     // Recovery first: a tombstone appended inside a crashed compaction's
     // swap window would be cleared when a later reader adopts the staged
-    // fold (the adopt path drops the side table, whose removals the fold
-    // already absorbed — this id's removal would vanish with them).
+    // fold (the recorded commit clears the side table, whose removals the
+    // fold already absorbed — this id's removal would vanish with them).
     recoverState(spark, root)
     Tombstones.append(root, ids, "doc_id")
   }
@@ -312,7 +310,7 @@ object SignatureIndex {
     val rowsOpt = BatchLog.committedRowCount(spark, path)
     // Bytes over the RESOLVED current version, not the logical dir: a
     // versioned root's top-level content summary includes retained
-    // superseded `_versions` and pre-upgrade flat state inside the
+    // superseded `_versions` and the first swap's flat state inside the
     // grace window — 2-3× the live log, silently oversizing G (the r18
     // advisory's sibling of the Tombstones.bytesOnDisk fix).
     val g = groupsForBytes(dirBytes(spark, BatchLog.resolve(spark, path)))

@@ -91,12 +91,12 @@ object SketchLog {
   }
 
   /** Crash recovery for the compaction swap window (same protocol as
-    * the index logs — the staged fold is adopted if the swap died
-    * between delete and rename). Swap-only: this operator has no
-    * tombstone side table, and `root/tombstones` — if present — belongs
-    * to a sibling index sharing the root; the full
-    * [[Tombstones.recoverCompaction]]/`commitCompaction` pair would
-    * delete it, silently resurrecting that index's removed ids. */
+    * the index logs — a swap that died after its intent is completed
+    * from the recorded stage). This operator commits with
+    * [[Tombstones.commitSwap]], whose intent records no tombstone root:
+    * `root/tombstones` — if present — belongs to a sibling index sharing
+    * the root, and `commitCompaction` would clear it, silently
+    * resurrecting that index's removed ids. */
   private def recoverState(spark: SparkSession, root: String, table: String): Unit =
     Tombstones.recoverSwap(spark, s"$root/$table.__compact_tmp", s"$root/$table")
 

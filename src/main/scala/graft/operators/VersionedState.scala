@@ -5,21 +5,16 @@ import org.apache.spark.sql.SparkSession
 
 /** Pointer-indirected versioned layout for the swapped index state
   * directories (the fold logs under `root/codes`, `root/signatures*`,
-  * `root/labels`, sketch tables, and the tombstone side table) — the
-  * round-17 verdict's top structural item: make index READS WAIT-FREE
-  * under maintenance.
+  * `root/labels`, sketch tables, and the tombstone side table): the one
+  * commit protocol for index state, and what makes index READS
+  * WAIT-FREE under maintenance.
   *
-  * Before this, a compaction/refreeze/migration commit REPLACED the
-  * table directory in place (delete → rename, intent-marked —
-  * [[Tombstones.commitSwap]]), so a reader whose scan was planned
-  * before the swap lost its planned files mid-job, and [[ReadGuard]]
-  * turned the window into a LOUD RETRY. Correct, but the 100 TB
-  * deployment shape (one maintenance driver + N query drivers) pays a
-  * retry storm on every commit. The LSM-standard answer — retired
-  * state lingers for in-flight readers, GC'd after a grace period — is
-  * exactly the star snapshots' `_versions/<n>` + marker scheme
-  * ([[graft.sources.LandingLog.writeSnapshot]]), extended here to the
-  * index swap unit (a whole table directory):
+  * A compaction/refreeze commit never replaces the table directory in
+  * place. It applies the LSM-standard answer (retired state lingers
+  * for in-flight readers, GC'd after a grace period), the same
+  * `_versions/<n>` + marker scheme as the star snapshots
+  * ([[graft.sources.LandingLog.writeSnapshot]]), with the index swap
+  * unit (a whole table directory) as the version:
   *
   * {{{
   * root/codes/                      # the LOGICAL table dir (pointer)
@@ -28,11 +23,12 @@ import org.apache.spark.sql.SparkSession
   *     _graft_batched_v1            #    marker + ledgers ride inside)
   *   _versions/00000002/...
   *   _commits/00000002              # marker NAME is the commit
-  *   batch_key=b2026.../...         # pre-upgrade FLAT state ("v0"),
-  * }}}                              #   GC'd like any superseded version
+  *   batch_key=b2026.../...         # FLAT state before the first swap
+  * }}}                              #   ("v0"), GC'd like any superseded version
   *
   * Readers resolve the newest committed version ONCE at plan time
-  * ([[resolve]]) and scan inside it; a commit creates the NEXT version
+  * ([[resolve]]) and scan inside it; a root that has never been swapped
+  * resolves to its flat top level. A commit creates the NEXT version
   * directory (one rename of the staged tmp — the committed state is
   * never deleted, never renamed, never partially visible) and the
   * superseded version stays on disk until [[gc]] expires it — newest
@@ -41,18 +37,21 @@ import org.apache.spark.sql.SparkSession
   * reader therefore completes against its planned file set as long as
   * its scan takes less than the grace period — the retention contract
   * an operator sizes against its longest query, exactly as in every
-  * LSM store. [[ReadGuard]]'s loud-retry remains the fallback ONLY for
-  * roots that predate the upgrade (their swaps stay in-place until the
-  * first versioned commit): the refreeze protocol stages its quantizer
-  * artifacts INSIDE the codes stage, so quantizer + codes commit as ONE
-  * version (`codes/_versions/<n>/_quantizer`) and the sealed window is
-  * wait-free too — see [[RefreezeProtocol.quantStageName]].
+  * LSM store. The refreeze protocol stages its quantizer artifacts
+  * INSIDE the codes stage, so quantizer + codes commit as ONE version
+  * (`codes/_versions/<n>/_quantizer`) — see
+  * [[RefreezeProtocol.quantStageName]].
   *
   * Increments APPEND INSIDE the current version directory (fold
   * directories stay immutable; the version dir gains sibling
   * `batch_key=` dirs) — append-only, so a reader's earlier listing
   * snapshot is never invalidated by them. Only a swap advances the
   * version.
+  *
+  * A raw `spark.read.parquet(<logical dir>)` bypasses the pointer: once
+  * the root has been swapped it reads the superseded flat state until
+  * [[gc]] sweeps it, then nothing. Read through [[resolve]] (or
+  * [[BatchLog.resolve]]) instead.
   *
   * Storage envelope: each retained superseded version is one full fold
   * of the log, so the extra bytes are (compactions per grace window)
@@ -61,19 +60,11 @@ import org.apache.spark.sql.SparkSession
   * `graft.swap.keep.versions` / `SPARK_GRAFT_SWAP_KEEP_VERSIONS`
   * (superseded versions kept regardless of grace; default 0) and
   * `graft.swap.grace.ms` / `SPARK_GRAFT_SWAP_GRACE_MS` (default
-  * 10 min).
-  * `graft.swap.versioned=false` disables the upgrade for NEW roots
-  * (contrast/compat switch); an already-versioned root always stays
-  * versioned — mixing protocols on one root would re-introduce the
-  * delete window. */
+  * 10 min). */
 private[graft] object VersionedState {
 
   private def prop(p: String, e: String): Option[String] =
     sys.props.get(p).orElse(sys.env.get(e)).map(_.trim).filter(_.nonEmpty)
-
-  /** Whether NEW swaps upgrade their root to the versioned layout. */
-  def enabled: Boolean =
-    prop("graft.swap.versioned", "SPARK_GRAFT_SWAP_VERSIONED").forall(_.toBoolean)
 
   /** Grace period a superseded version must outlive before GC. */
   def graceMs: Long =
@@ -92,37 +83,6 @@ private[graft] object VersionedState {
   def versionsDir(dir: String): String = s"$dir/_versions"
   def commitsDir(dir: String): String = s"$dir/_commits"
   def versionDir(dir: String, v: Long): String = s"${versionsDir(dir)}/${vname(v)}"
-
-  /** On-disk format guard for PRE-UPGRADE readers (r18 advisory #1):
-    * after a root's first versioned commit, a pre-upgrade binary (the
-    * one-maintenance-driver + N-query-drivers shape mid-rollout) would
-    * still read the flat top level — parquet skips the underscore-
-    * prefixed `_versions`/`_commits` — so it silently serves stale v0
-    * state, and after [[gc]]'s flat sweep an EMPTY log: the
-    * silent-empty failure class this repo guards loudly everywhere
-    * else. [[markUpgraded]] closes it with the two levers the OLD
-    * release's own `requireFormat` reacts to: the flat batched-format
-    * marker is DELETED (new readers never consult it — they resolve to
-    * the version dir, which carries its own marker inside) and this
-    * NON-hidden sentinel file is dropped at the logical top level, so
-    * the old release's legacy-layout check ("non-hidden non-batch_key
-    * names without a marker ⇒ refuse loudly") fires on every read path
-    * instead of serving flat/empty state. The name spells out the fix
-    * because it is what the old error message prints. */
-  val upgradedSentinelName = "GRAFT-VERSIONED-LAYOUT-READER-TOO-OLD"
-
-  /** Idempotent; called right after every versioned commit marker (and
-    * from versioned-commit recovery). */
-  def markUpgraded(fs: FileSystem, dir: String): Unit = {
-    val s = new HPath(dir, upgradedSentinelName)
-    if (!fs.exists(s)) fs.create(s, true).close()
-    // The flat marker now belongs to superseded v0 state; removing it
-    // (ahead of the grace-GC sweep that would take it anyway) is what
-    // makes pre-upgrade readers fail IMMEDIATELY rather than serving
-    // stale flat state for the rest of the grace window.
-    fs.delete(new HPath(dir, "_graft_batched_v1"), false)
-    fs.delete(new HPath(dir, "._graft_batched_v1.crc"), false)
-  }
 
   def fsOf(spark: SparkSession, path: String): FileSystem =
     new HPath(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -146,16 +106,13 @@ private[graft] object VersionedState {
       .filter(v => fs.exists(new HPath(versionDir(dir, v))))
       .sorted
 
-  /** Highest committed version, 0 = unversioned (flat/legacy) root. */
+  /** Highest committed version, 0 = a root never swapped (flat state). */
   def currentVersion(fs: FileSystem, dir: String): Long =
     committedVersions(fs, dir).lastOption.getOrElse(0L)
 
-  def isVersioned(fs: FileSystem, dir: String): Boolean =
-    currentVersion(fs, dir) > 0
-
   /** The physical directory holding the CURRENT committed state: the
     * newest committed version dir, or the logical dir itself for
-    * flat/legacy (and never-written) roots. Idempotent — a version
+    * roots never swapped (and never written). Idempotent — a version
     * directory has no `_commits` child, so resolving a resolved path
     * returns it unchanged. Readers call this ONCE at plan time; the
     * returned directory's committed content is immutable except for
@@ -174,7 +131,7 @@ private[graft] object VersionedState {
     * grace window (a reader inside its sized retention bound losing
     * planned files). [[gc]] takes the MAX of the two timestamps, so
     * skew in either direction can only LENGTHEN retention, never
-    * shorten it; pre-r19 empty markers fall back to mtime alone. */
+    * shorten it; a torn (empty) marker falls back to mtime alone. */
   def writeMarker(fs: FileSystem, dir: String, v: Long): Unit = {
     val c = new HPath(commitsDir(dir))
     fs.mkdirs(c)
@@ -208,9 +165,9 @@ private[graft] object VersionedState {
     *    its SUCCESSOR (the commit that made it stale) is ≥ [[graceMs]]
     *    old — i.e. every reader that could have planned against it had
     *    a full grace period to finish;
-    *  - pre-upgrade FLAT state (the logical dir's own `batch_key=`
-    *    dirs, marker, ledgers — "version 0") is GC'd by the same rule,
-    *    keyed to version 1's marker age;
+    *  - the FLAT state a root held before its first swap (the logical
+    *    dir's own `batch_key=` dirs, marker, ledgers — "version 0") is
+    *    GC'd by the same rule, keyed to version 1's marker age;
     *  - an UNMARKED version dir BELOW the current version is a crashed
     *    commit's abandoned partial — deleted (an unmarked dir above
     *    current is an IN-FLIGHT commit and is never touched here; its
@@ -296,15 +253,14 @@ private[graft] object VersionedState {
       .filter(v => v < current && !marks.exists(_._1 == v))
       .foreach(v => fs.delete(new HPath(versionDir(dir, v)), true))
     // Flat "version 0": everything at the logical dir's top level other
-    // than the version machinery is pre-upgrade state, superseded by
-    // version 1's commit.
+    // than the version machinery is the state before the first swap,
+    // superseded by version 1's commit.
     val v1Mtime = marks.headOption.map(_._2)
     if (v1Mtime.exists(mt => now - mt >= graceMs))
       list(fs, new HPath(dir))
         .filter { s =>
           val n = s.getPath.getName
-          n != "_versions" && n != "_commits" && n != upgradedSentinelName &&
-            n != s".$upgradedSentinelName.crc"
+          n != "_versions" && n != "_commits"
         }
         .foreach(s => fs.delete(s.getPath, true))
   }

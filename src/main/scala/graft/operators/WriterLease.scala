@@ -11,20 +11,6 @@ import org.apache.spark.sql.SparkSession
   * root), not retry-in-a-loop; the refusal message names the holder. */
 final class ConcurrentWriterException(msg: String) extends RuntimeException(msg)
 
-/** A READ arrived while another driver's maintenance swap holds the
-  * root in an untrusted state (intent marker up, or a half-committed
-  * multi-directory swap) — the read CANNOT serve a consistent snapshot
-  * right now, and the state is the live writer's in-flight work, not
-  * crash debris this reader may recover. Unlike
-  * [[ConcurrentWriterException]], this IS retryable: the swap window is
-  * small-file operations (intent → delete → rename → intent clear), so
-  * a bounded retry converges as soon as the writer's commit lands.
-  * This is the reader half of the concurrency contract (SCALE.md):
-  * reads serve a committed snapshot or fail loudly-retryable — never a
-  * silent partial/empty result. */
-final class ConcurrentMaintenanceException(msg: String, cause: Throwable = null)
-  extends RuntimeException(msg, cause)
-
 /** Single-writer discipline for persisted index / pipeline roots.
   *
   * Every mutating entry point of the persisted-index family
@@ -34,7 +20,8 @@ final class ConcurrentMaintenanceException(msg: String, cause: Throwable = null)
   * (marker-gated refreeze, stage-then-swap compaction, batch-keyed
   * replay) make every mutation atomic against READERS — but two
   * concurrent WRITERS could still interleave, e.g. a compaction's
-  * delete-to-rename swap with another process's ingest staging. The
+  * versioned swap with another process's ingest appending to the
+  * version it supersedes. The
   * lease closes that: one writer proceeds, any second writer refuses
   * loudly ([[ConcurrentWriterException]]) instead of corrupting state.
   *

@@ -3,7 +3,7 @@ package graft
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
-import graft.operators.{AnnIndex, BatchLog, ClusterLabels, CosineDedupIndex, PqIndex, RefreezeProtocol, SignatureIndex, Tombstones}
+import graft.operators.{AnnIndex, BatchLog, ClusterLabels, CosineDedupIndex, PqIndex, RefreezeProtocol, SignatureIndex, Tombstones, VersionedState}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -78,7 +78,7 @@ class BatchLogSpec extends SparkSpec {
     CacheJanitor.drain()
     val want = labelMap()
     val wantBatch = ClusterLabels.latestBatch(spark, root)
-    val wantLogRows = spark.read.parquet(ClusterLabels.dir(root)).count()
+    val wantLogRows = spark.read.parquet(BatchLog.resolve(spark, ClusterLabels.dir(root))).count()
 
     // Replay batch 2 after a simulated crash-after-commit.
     ClusterLabels.merge(spark, root,
@@ -89,7 +89,7 @@ class BatchLogSpec extends SparkSpec {
     assert(labelMap() == want, "labels must be unchanged by the replay")
     assert(ClusterLabels.latestBatch(spark, root) == wantBatch,
       "replay must not burn a batch number")
-    assert(spark.read.parquet(ClusterLabels.dir(root)).count() == wantLogRows,
+    assert(spark.read.parquet(BatchLog.resolve(spark, ClusterLabels.dir(root))).count() == wantLogRows,
       "replay must not grow the label log")
     assert(batchDirs(ClusterLabels.dir(root)) == Seq("batch_key=bb1", "batch_key=bb2"))
     // keeperDelta of the replayed batch is still one coherent delta.
@@ -154,7 +154,7 @@ class BatchLogSpec extends SparkSpec {
     SignatureIndex.ingest(spark, root, docs(batchB: _*), batchKey = Some("b2"))
     CacheJanitor.drain()
     val log = s"$root/signatures"
-    val footer = spark.read.parquet(log).count()
+    val footer = spark.read.parquet(BatchLog.resolve(spark, log)).count()
     assert(BatchLog.committedRowCount(spark, log).contains(footer),
       "sidecar total must equal the footer count")
 
@@ -175,9 +175,8 @@ class BatchLogSpec extends SparkSpec {
 
     // Compaction rewrites the log into one fold directory WITH a fresh
     // sidecar — the fast path heals along with the stats chain. The
-    // footer read must RESOLVE first: the versioned commit dropped the
-    // reader-too-old sentinel at the logical top level (by design — a
-    // raw read here is exactly the pre-upgrade read it refuses).
+    // footer read must RESOLVE first: a raw read of the logical dir
+    // would count the superseded flat state that grace-GC has not swept.
     SignatureIndex.compact(spark, root)
     assert(BatchLog.committedRowCount(spark, log)
       .contains(spark.read.parquet(BatchLog.resolve(spark, log)).count()))
@@ -242,70 +241,18 @@ class BatchLogSpec extends SparkSpec {
       "an uncommitted partial's key must not be retired by compaction")
   }
 
-  test("pre-upgrade batch directories keep their replay idempotence") {
-    val root = Files.createTempDirectory("graft_bk_upgrade").toString
-    SignatureIndex.ingest(spark, root, docs(batchA: _*), batchKey = Some("mb_0"))
-    CacheJanitor.drain()
-    // Simulate a root written by the pre-injective release: the same
-    // caller key landed under the old lossy mapping (literal '_'), and
-    // no legacy-name snapshot exists yet (that file is this release's).
-    val sigs = Paths.get(s"$root/signatures")
-    Files.move(sigs.resolve(s"batch_key=${BatchLog.sanitize("mb_0")}"),
-      sigs.resolve("batch_key=bmb_0"))
-    Files.deleteIfExists(sigs.resolve("_graft_legacy_keys"))
-    // The replay must resolve to the ORIGINAL directory and overwrite
-    // it — a second directory beside it would be the double-append the
-    // key mechanism exists to prevent.
-    SignatureIndex.ingest(spark, root, docs(batchA: _*), batchKey = Some("mb_0"))
-    CacheJanitor.drain()
-    assert(batchDirs(s"$root/signatures") == Seq("batch_key=bmb_0"),
-      "a pre-upgrade directory must keep receiving its key's replays")
-    assert(SignatureIndex.readIndex(spark, root).count() == 3)
-    // The old name must keep working THROUGH a compaction: the fold
-    // retires it (under the old name), so a later replay is a no-op,
-    // not a double-append under the new mapping.
-    SignatureIndex.compact(spark, root)
-    SignatureIndex.ingest(spark, root, docs(batchA: _*), batchKey = Some("mb_0"))
-    CacheJanitor.drain()
-    assert(SignatureIndex.readIndex(spark, root).count() == 3,
-      "a folded pre-upgrade key must stay retired across the upgrade")
-    assert(batchDirs(s"$root/signatures").forall(_.startsWith("batch_key=a")),
-      "the replay must not mint a new-mapping directory beside the fold")
-  }
-
   test("a new-mapping directory is never hijacked through the legacy fallback") {
     val root = Files.createTempDirectory("graft_bk_hijack").toString
-    // Key 1's NEW mapping escapes '_' to _005f: directory bx_005f0abc.
+    // Key 1's mapping escapes '_' to _005f: directory bx_005f0abc.
     SignatureIndex.ingest(spark, root, docs(batchA: _*), batchKey = Some("x_0abc"))
-    // Key 2's OLD mapping ('*' collapsed to '_') is ALSO bx_005f0abc —
-    // a live-probe fallback would resolve key 2 there and overwrite
-    // key 1's batch. The legacy snapshot (written before key 1's
-    // directory existed, hence empty) refuses the fallback.
+    // Key 2 escapes '*' to _002a: bx_002a005f0abc. A lossy mapping that
+    // collapsed '*' to '_' would have named it bx_005f0abc — key 1's
+    // directory — and overwritten key 1's batch.
     SignatureIndex.ingest(spark, root, docs(batchB: _*), batchKey = Some("x*005f0abc"))
     CacheJanitor.drain()
     assert(batchDirs(s"$root/signatures").size == 2,
-      "a fresh root's keys must never resolve through the legacy mapping")
+      "a fresh root's keys must never resolve through a lossy mapping")
     assert(SignatureIndex.readIndex(spark, root).count() == 6)
-  }
-
-  test("a key whose new mapping lands on another key's pre-upgrade name is refused") {
-    val root = Files.createTempDirectory("graft_bk_collide").toString
-    SignatureIndex.ingest(spark, root, docs(batchA: _*), batchKey = Some("k0"))
-    CacheJanitor.drain()
-    // Simulate a pre-upgrade root holding a directory whose old-mapping
-    // name equals the NEW mapping of the (different) key "x_0abc".
-    val sigs = Paths.get(s"$root/signatures")
-    Files.move(sigs.resolve(s"batch_key=${BatchLog.sanitize("k0")}"),
-      sigs.resolve("batch_key=bx_005f0abc"))
-    Files.deleteIfExists(sigs.resolve("_graft_legacy_keys"))
-    // Neither overwriting the old batch nor silently swallowing the new
-    // one is acceptable — the ambiguity must refuse loudly.
-    val e = intercept[IllegalArgumentException](
-      SignatureIndex.ingest(spark, root, docs(batchB: _*), batchKey = Some("x_0abc")))
-    assert(e.getMessage.contains("pre-upgrade"), e.getMessage)
-    CacheJanitor.drain()
-    assert(SignatureIndex.readIndex(spark, root).count() == 3,
-      "the refused append must leave the old batch untouched")
   }
 
   test("compaction retires only the batches its fold actually read") {
@@ -458,58 +405,72 @@ class BatchLogSpec extends SparkSpec {
 
   // ----------------------- swap-intent cross-protocol recovery (r16 HIGH)
 
-  private def writeIntent(dest: String, tmp: String, root: Option[String]): Unit = {
-    val body = graft.sources.MiniJson.renderFlat(
-      Map("v" -> "2", "tmp" -> tmp) ++ root.map(r => "root" -> r))
-    Files.write(Paths.get(s"$dest.__swap_intent"), (body + "\n").getBytes("UTF-8"))
+  /** Stage a full fold of the log at `dest` into `tmp`, as a swap's
+    * stage step would (the raw log: tombstoned rows included). */
+  private def stageFold(dest: String, tmp: String): Unit = {
+    BatchLog.stageRewrite(BatchLog.read(spark, dest, "test"), dest, tmp)
     ()
   }
 
-  test("a finished MIGRATE's dangling intent must not make compaction recovery clear tombstones") {
-    // The r16 advisory's HIGH finding: adoptLegacy commits via
-    // commitSwap(dest.__migrate_tmp, dest); a crash after its rename but
-    // before the intent delete leaves the marker with NO tmp on disk.
-    // The old (dest-keyed, content-less) marker made the next reader's
-    // recoverCompaction — probing its OWN __compact_tmp, absent —
-    // conclude "rename finished", drop the intent, and DELETE the
-    // tombstone side table: removed ids silently resurfacing. The v2
-    // marker records the swap; a migrate intent never clears tombstones.
+  test("a finished swap's dangling intent must not make compaction recovery clear tombstones") {
+    // The r16 advisory's HIGH finding: several protocols swap into one
+    // dest, and a crash after a swap's rename but before its intent
+    // delete leaves the marker with NO tmp on disk. A dest-keyed,
+    // content-less marker made the next reader's compaction recovery —
+    // probing its OWN __compact_tmp, absent — conclude "rename
+    // finished" and CLEAR the tombstone side table: removed ids
+    // silently resurfacing. The marker records the swap; a swap that
+    // records no tombstone root never clears tombstones.
     val root = Files.createTempDirectory("graft_bk_intent1").toString
     val dest = s"$root/signatures"
     SignatureIndex.ingest(spark, root, docs(batchA: _*), batchKey = Some("b1"))
     CacheJanitor.drain()
     SignatureIndex.remove(spark, root, Seq(2L))
     assert(!SignatureIndex.readIndex(spark, root).collect().map(_.getLong(0)).contains(2L))
-    // Crash state: migrate's rename FINISHED (tmp gone), intent remains.
-    writeIntent(dest, s"$dest.__migrate_tmp", root = None)
-    // Any reader path runs recoverCompaction(root, dest.__compact_tmp, dest).
+    // Crash state: another swap (any tmp but the reader's own
+    // __compact_tmp) renamed its stage into version 1 — tmp gone — and
+    // lost its commit marker and intent delete. Its fold still holds
+    // the tombstoned row 2.
+    val tmp = s"$dest.__other_tmp"
+    stageFold(dest, tmp)
+    Files.createDirectories(Paths.get(VersionedState.versionsDir(dest)))
+    Files.move(Paths.get(tmp), Paths.get(VersionedState.versionDir(dest, 1)))
+    SwapCrash.intent(spark, dest, tmp, ver = 1, clears = None)
+    // Any reader path runs recoverSwap(dest.__compact_tmp, dest).
     val ids = SignatureIndex.readIndex(spark, root).collect().map(_.getLong(0)).toSet
     assert(ids == Set(1L, 3L),
-      s"a foreign (migrate) intent must not clear the tombstone table: $ids")
+      s"a foreign intent must not clear the tombstone table: $ids")
     assert(!Files.exists(Paths.get(s"$dest.__swap_intent")),
       "recovery must clear the completed swap's intent")
+    assert(BatchLog.resolve(spark, dest) == VersionedState.versionDir(dest, 1),
+      "recovery must commit the version the intent records")
     CacheJanitor.drain()
   }
 
-  test("a MIGRATE crashed mid-swap is completed from ITS recorded tmp by any recoverer") {
+  test("a swap crashed mid-rename is completed from ITS recorded tmp by any recoverer") {
     val root = Files.createTempDirectory("graft_bk_intent2").toString
     val dest = s"$root/signatures"
     SignatureIndex.ingest(spark, root, docs(batchA: _*), batchKey = Some("b1"))
     CacheJanitor.drain()
     val want = SignatureIndex.readIndex(spark, root)
       .collect().map(r => (r.getLong(0), r.getSeq[Long](1))).toSet
-    // Crash state: the staged migrate tmp is complete, dest was deleted,
-    // the rename never ran (the delete-to-rename window), intent present.
-    val tmp = s"$dest.__migrate_tmp"
-    Files.move(Paths.get(dest), Paths.get(tmp))
-    writeIntent(dest, tmp, root = None)
-    // The reader's compaction recovery (probing __compact_tmp) must
-    // adopt the RECORDED migrate tmp, not conclude completion over a
-    // missing dest.
+    // Crash state: the staged tmp is complete, the intent records it,
+    // and a copy-based rename died mid-copy — version 1 holds a torn
+    // partial copy and no commit marker.
+    val tmp = s"$dest.__other_tmp"
+    stageFold(dest, tmp)
+    SwapCrash.intent(spark, dest, tmp, ver = 1, clears = None)
+    val torn = Paths.get(VersionedState.versionDir(dest, 1))
+    Files.createDirectories(torn)
+    Files.write(torn.resolve("garbage.parquet"), "torn".getBytes("UTF-8"))
+    // The reader's recovery (probing __compact_tmp) must adopt the
+    // RECORDED tmp, not conclude completion over the torn version.
     val got = SignatureIndex.readIndex(spark, root)
       .collect().map(r => (r.getLong(0), r.getSeq[Long](1))).toSet
     assert(got == want, "recovery must complete the recorded swap")
     assert(!Files.exists(Paths.get(tmp)) && !Files.exists(Paths.get(s"$dest.__swap_intent")))
+    assert(BatchLog.resolve(spark, dest) == VersionedState.versionDir(dest, 1),
+      "the recorded tmp must land as the recorded version")
     CacheJanitor.drain()
   }
 
@@ -521,10 +482,11 @@ class BatchLogSpec extends SparkSpec {
     SignatureIndex.remove(spark, root, Seq(2L))
     SignatureIndex.compact(spark, root) // clean commit: tombstones cleared
     CacheJanitor.drain()
-    // Crash state: rename finished, tombstone clear + intent delete lost
-    // (the dest fold already excludes id 2; the side table still lists it).
+    // Crash state: the rename into version 1 finished, tombstone clear +
+    // intent delete lost (the fold already excludes id 2; the side table
+    // still lists it).
     Tombstones.append(root, Seq(2L).toDF("doc_id"), "doc_id")
-    writeIntent(dest, s"$dest.__compact_tmp", root = Some(root))
+    SwapCrash.intent(spark, dest, s"$dest.__compact_tmp", ver = 1, clears = Some(root))
     val ids = SignatureIndex.readIndex(spark, root).collect().map(_.getLong(0)).toSet
     assert(ids == Set(1L, 3L))
     assert(graft.operators.Tombstones.bytesOnDisk(spark, root) == 0L,

@@ -116,7 +116,7 @@ class ClusterLabelsSpec extends SparkSpec {
       Seq((1L, 2L), (3L, 4L)).toDF("doc_a", "doc_b"), Seq(1L, 2L, 3L, 4L).toDF("doc_id"))
     ClusterLabels.merge(spark, root,
       Seq((5L, 6L)).toDF("doc_a", "doc_b"), Seq(5L, 6L).toDF("doc_id"))
-    val batch2 = spark.read.parquet(ClusterLabels.dir(root))
+    val batch2 = spark.read.parquet(graft.operators.BatchLog.resolve(spark, ClusterLabels.dir(root)))
       .where(col("batch") === 2L).select("doc_id")
       .collect().map(_.getLong(0)).toSet
     assert(batch2 === Set(5L, 6L),
@@ -137,11 +137,11 @@ class ClusterLabelsSpec extends SparkSpec {
     ClusterLabels.merge(spark, root,
       Seq((1L, 2L)).toDF("doc_a", "doc_b"), Seq(1L, 2L, 3L).toDF("doc_id"))
     val before = labelMap(ClusterLabels.read(spark, root))
-    // Crash between compact's delete and rename: dest gone, tmp complete.
-    // Without recovery, read() would see "no labels yet" — SILENT loss.
+    // Crash between compact's intent and its rename: tmp complete, the
+    // intent records it; read() must land it, not leave it dangling.
     val dest = java.nio.file.Paths.get(ClusterLabels.dir(root))
-    val tmp = java.nio.file.Paths.get(ClusterLabels.dir(root) + ".__compact_tmp")
-    Files.move(dest, tmp)
+    val tmp = java.nio.file.Paths.get(SwapCrash.beforeRename(spark, dest.toString,
+      graft.operators.BatchLog.read(spark, dest.toString, "test"), clears = None))
     assert(labelMap(ClusterLabels.read(spark, root)) === before,
       "read must complete the crashed swap and return the full state")
     assert(Files.isDirectory(dest) && !Files.exists(tmp))

@@ -149,7 +149,7 @@ class CosineDedupIndexSpec extends SparkSpec {
       q.processAllAvailable() // checkpointed no-op: nothing ingests twice
     } finally q.stop()
 
-    assert(spark.read.parquet(s"$root/codes").count() == batchA.size + batchB.size,
+    assert(spark.read.parquet(graft.operators.BatchLog.resolve(spark, s"$root/codes")).count() == batchA.size + batchB.size,
       "checkpointed re-run must not re-ingest")
     val all = CosineDedupIndex.readIndex(spark, root)
     val full = pairSet(CosineDedupIndex.deltaPairs(all, all))
@@ -222,8 +222,9 @@ class CosineDedupIndexSpec extends SparkSpec {
     val before = CosineDedupIndex.readIndex(spark, root)
       .collect().map(_.toString).sorted.toSeq
     val dest = java.nio.file.Paths.get(s"$root/codes")
-    val tmp = java.nio.file.Paths.get(s"$root/codes.__compact_tmp")
-    Files.move(dest, tmp) // = crashed between delete and rename
+    // Crashed after the commit's intent, before its rename.
+    val tmp = java.nio.file.Paths.get(SwapCrash.beforeRename(spark, dest.toString,
+      graft.operators.BatchLog.read(spark, dest.toString, "test"), clears = Some(root)))
     val after = CosineDedupIndex.readIndex(spark, root)
       .collect().map(_.toString).sorted.toSeq
     CacheJanitor.drain()

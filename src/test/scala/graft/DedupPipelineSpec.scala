@@ -225,21 +225,17 @@ class DedupPipelineSpec extends SparkSpec {
 
   test("health: recovers a crashed compaction swap before probing; refuses legacy roots") {
     import java.nio.file.Paths
-    import graft.operators.{BatchLog, SignatureIndex, Tombstones}
-    // Crash state: compaction died between commitCompaction's delete of
-    // the live log and the rename of the fully-staged tmp — the log dir
-    // is absent while every row sits in the stage. A bare existence
-    // probe would report liveDocs = 0 (total data loss to an ops poll);
-    // health must run the index's crash recovery first.
+    import graft.operators.{SignatureIndex, Tombstones}
+    // Crash state: compaction died between commitCompaction's intent
+    // and the rename of the fully-staged tmp. Health must run the
+    // index's crash recovery first, landing the recorded stage.
     val root = Files.createTempDirectory("graft_dp_health_swap").toString
     DedupPipeline.runOnce(spark, root, docs(batchA: _*), batchKey = Some("b1"))
     CacheJanitor.drain()
     val dest = s"$root/signatures"
-    val tmp = s"$dest.__compact_tmp"
-    BatchLog.stageRewrite(SignatureIndex.readIndex(spark, root), dest, tmp)
+    val tmp = SwapCrash.beforeRename(spark, dest,
+      SignatureIndex.readIndex(spark, root), clears = Some(root))
     CacheJanitor.drain()
-    // Replicate the crash: dest deleted, rename never ran.
-    org.apache.commons.io.FileUtils.deleteDirectory(Paths.get(dest).toFile)
     val h = DedupPipeline.health(spark, root)
     // 3, not 4: doc 7 is unshingleable and never enters the signature
     // log (it is a singleton by definition in the label state).

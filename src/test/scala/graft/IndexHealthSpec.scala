@@ -278,14 +278,14 @@ class IndexHealthSpec extends SparkSpec {
       batchKey = Some("b1"))
     CacheJanitor.drain()
     val dest = s"$root/codes"
-    val tmp = s"$dest.__compact_tmp"
-    BatchLog.stageRewrite(CosineDedupIndex.readIndex(spark, root), dest, tmp)
+    // Crash window: fold staged, intent up, rename never ran.
+    val tmp = SwapCrash.beforeRename(spark, dest,
+      CosineDedupIndex.readIndex(spark, root), clears = Some(root))
     CacheJanitor.drain()
-    // Crash window: dest deleted, rename never ran.
-    org.apache.commons.io.FileUtils.deleteDirectory(Paths.get(dest).toFile)
     val h = CosineDedupIndex.health(spark, root)
     assert(h.live == 100, s"health must adopt the staged compaction, got $h")
     assert(!java.nio.file.Files.exists(Paths.get(tmp)),
       "recovery must complete the swap, not leave the stage behind")
+    assert(BatchLog.resolve(spark, dest) == s"$dest/_versions/00000001")
   }
 }

@@ -1,25 +1,23 @@
 package graft
 
-import java.nio.file.{Files, Path, Paths}
-import scala.jdk.CollectionConverters._
+import java.nio.file.{Files, Paths}
 
-import graft.operators.{AnnIndex, BatchLog, CosineDedupIndex, PqIndex, SignatureIndex, Tombstones}
+import graft.operators.{AnnIndex, BatchLog, CosineDedupIndex, PqIndex, SignatureIndex}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Mutating entry points must run swap recovery BEFORE touching state.
   *
   * The failure this pins (found in review, fixed across every index):
-  * a compaction that crashed between its delete and rename leaves the
-  * snapshot dir missing and the fold fully staged in `__compact_tmp`.
-  * An ingest landing in that window used to recreate the dir with only
-  * its own increment — after which recovery (its own read path's, in
-  * the SAME call) saw dest present ∧ tmp present and dropped the staged
-  * fold as an abandoned stage: the whole pre-compaction corpus silently
-  * lost. Likewise a tombstone appended in the window was cleared when
-  * the fold was adopted (the adopt path drops the side table). Each
-  * test stages the window for real and proves the post-fix sequencing:
-  * adopt first, then mutate. */
+  * a compaction that crashed between its intent and its rename leaves
+  * the fold fully staged in `__compact_tmp` and the intent recording it.
+  * An ingest landing in that window without recovering first appends
+  * its increment to the OLD version — after which recovery commits the
+  * staged fold as the next version, and the increment is silently
+  * lost. Likewise a tombstone appended in the window is cleared when
+  * the fold is adopted (the intent records the tombstone clear). Each
+  * test stages the window for real and proves the sequencing: adopt
+  * first, then mutate. */
 class IngestRecoverySpec extends SparkSpec {
   import spark.implicits._
 
@@ -28,17 +26,14 @@ class IngestRecoverySpec extends SparkSpec {
   private def vecs: DataFrame =
     Tables.embeddings(spark, dir).select("vec_id", "embedding")
 
-  private def rmTree(p: Path): Unit =
-    Files.walk(p).iterator().asScala.toSeq.reverse.foreach(Files.delete)
-
-  /** Stage a compaction fold of `path` into its tmp and delete `path` —
-    * the exact on-disk state of a compact() that died before its
-    * rename. */
+  /** Stage a compaction fold of `path` into its tmp and put up its
+    * intent — the exact on-disk state of a compact() that died before
+    * its rename. */
   private def stageCrashWindow(path: String, op: String,
       partitionBy: Seq[String] = Nil): Unit = {
-    val folded = BatchLog.read(spark, path, op)
-    BatchLog.stageRewrite(folded, path, s"$path.__compact_tmp", partitionBy)
-    rmTree(Paths.get(path))
+    SwapCrash.beforeRename(spark, path, BatchLog.read(spark, path, op),
+      clears = Some(Paths.get(path).getParent.toString), partitionBy)
+    ()
   }
 
   private def docs(rows: (Long, String)*) = rows.toDF("doc_id", "text")

@@ -48,7 +48,6 @@ class KnobInventorySpec extends AnyFunSuite {
     "graft.fold.min.rows", "SPARK_GRAFT_FOLD_MIN_ROWS",
     "graft.fold.group.bytes", "SPARK_GRAFT_FOLD_GROUP_BYTES",
     // VersionedState swaps
-    "graft.swap.versioned", "SPARK_GRAFT_SWAP_VERSIONED",
     "graft.swap.grace.ms", "SPARK_GRAFT_SWAP_GRACE_MS",
     "graft.swap.keep.versions", "SPARK_GRAFT_SWAP_KEEP_VERSIONS",
     // Secrets provider chain

@@ -3,7 +3,7 @@ package graft
 import java.nio.file.Files
 import java.util.concurrent.CountDownLatch
 
-import graft.operators.{BatchLog, ConcurrentMaintenanceException, CosineDedupIndex, WriterLease}
+import graft.operators.{BatchLog, CosineDedupIndex, WriterLease}
 import graft.testfs.HostileFileSystem
 import org.apache.spark.sql.DataFrame
 
@@ -21,14 +21,10 @@ import org.apache.spark.sql.DataFrame
   *     knob says so, and is swept once expired — after which a stale
   *     planned frame fails LOUDLY (missing file), the documented
   *     longest-query bound every LSM store has;
-  *  3. a read ENTRY during a live writer's IN-PLACE blocking window
-  *     (torn/v2 intent up, lease held) still throws
-  *     [[ConcurrentMaintenanceException]] — the loud-retry fallback for
-  *     pre-upgrade roots;
-  *  4. the silent-empty belt: a log that reads as absent while an
-  *     in-place swap-intent marker is up throws retryable instead of
-  *     answering "no data";
-  *  5. crashed commits (mid-copy torn version dirs, lost intents) heal
+  *  3. a read ENTRY during a live writer's commit window (intent up,
+  *     stage on disk, lease held) serves the committed state — no
+  *     exception, no retry;
+  *  4. crashed commits (mid-copy torn version dirs, lost intents) heal
   *     on the next read, under the lease, with concurrent readers
   *     converging — and the committed state stays readable THROUGHOUT
   *     the crash window (the versioned protocol's whole point).
@@ -148,55 +144,41 @@ class ReaderMaintenanceSpec extends SparkSpec {
     } finally System.clearProperty("graft.swap.grace.ms")
     // Fresh reads stay clean throughout (modulo the two removals).
     assert(rows(CosineDedupIndex.readIndex(spark, root)).size == clean.size - 2)
-    assert(VersionedState.isVersioned(fs, codes))
+    assert(VersionedState.currentVersion(fs, codes) > 0)
   }
 
-  test("first versioned commit trips the pre-upgrade format guard: flat marker deleted, sentinel dropped, commit time recorded") {
-    import graft.operators.VersionedState
-    val root = hostileRoot("formatguard")
+  test("versioned commits record the committing driver's wall clock in their markers — codes and tombstone clear") {
+    import graft.operators.{Tombstones, VersionedState}
+    val root = hostileRoot("wallclock")
     seed(root)
     val codes = s"$root/codes"
     val fs = fsOf(root)
-    def topNames(): Seq[String] =
-      fs.listStatus(new org.apache.hadoop.fs.Path(codes)).map(_.getPath.getName).toSeq
-    // Pre-upgrade shape: flat marker present, no sentinel.
-    assert(topNames().contains("_graft_batched_v1"))
+    // The commit marker records the committing driver's wall clock
+    // (grace expiry takes max(mtime, recorded) so cross-machine clock
+    // skew can only lengthen grace).
+    def assertWallClockMarkers(dir: String): Unit = {
+      val markers = fs.listStatus(
+        new org.apache.hadoop.fs.Path(VersionedState.commitsDir(dir)))
+        .filter(s => s.isFile && !s.getPath.getName.startsWith("."))
+      assert(markers.nonEmpty)
+      markers.foreach { m =>
+        val in = fs.open(m.getPath)
+        val body = try new String(
+          org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8").trim
+        finally in.close()
+        assert(body.nonEmpty && body.forall(_.isDigit), s"marker body not a wall time: '$body'")
+        assert(math.abs(body.toLong - System.currentTimeMillis()) < 3600000L)
+      }
+    }
     val before = rows(CosineDedupIndex.readIndex(spark, root))
     CosineDedupIndex.compact(spark, root); CacheJanitor.drain()
-    // After the first versioned commit: sentinel present, flat marker
-    // GONE — a pre-upgrade binary's requireFormat (marker absent +
-    // non-hidden non-batch_key names present) now refuses loudly
-    // instead of silently reading stale flat state (or, post-GC, an
-    // empty log). Replicate the old release's check verbatim:
-    val names = topNames()
-    assert(names.contains(VersionedState.upgradedSentinelName), s"sentinel missing in $names")
-    assert(!names.contains("_graft_batched_v1"), "flat marker must be deleted at upgrade")
-    val oldLegacyCheck = names
-      .filterNot(n => n.startsWith("_") || n.startsWith(".") || n.startsWith("batch_key="))
-    assert(oldLegacyCheck.nonEmpty,
-      "the old release's requireFormat must see a non-empty legacy list and refuse")
-    // New readers are unaffected; the commit marker records the
-    // committing driver's wall clock (grace expiry takes max(mtime,
-    // recorded) so cross-machine clock skew can only lengthen grace).
     assert(rows(CosineDedupIndex.readIndex(spark, root)) == before)
-    val markers = fs.listStatus(
-      new org.apache.hadoop.fs.Path(s"$codes/_commits"))
-      .filter(s => s.isFile && !s.getPath.getName.startsWith("."))
-    assert(markers.nonEmpty)
-    markers.foreach { m =>
-      val in = fs.open(m.getPath)
-      val body = try new String(
-        org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8").trim
-      finally in.close()
-      assert(body.nonEmpty && body.forall(_.isDigit), s"marker body not a wall time: '$body'")
-      assert(math.abs(body.toLong - System.currentTimeMillis()) < 3600000L)
-    }
-    // The tombstone side table gets the same guard on its versioned clear.
+    assertWallClockMarkers(codes)
+    // The tombstone side table's clear commits through the same markers.
     CosineDedupIndex.remove(spark, root, Seq(5L))
     CosineDedupIndex.compact(spark, root); CacheJanitor.drain()
-    val tnames = fs.listStatus(new org.apache.hadoop.fs.Path(s"$root/tombstones"))
-      .map(_.getPath.getName).toSeq
-    assert(tnames.contains(VersionedState.upgradedSentinelName), s"tombstone sentinel missing in $tnames")
+    assert(Tombstones.bytesOnDisk(spark, root) == 0L, "compaction must clear the tombstones")
+    assertWallClockMarkers(Tombstones.dir(root))
     assert(rows(CosineDedupIndex.readIndex(spark, root)).size == before.size - 1)
   }
 
@@ -235,7 +217,8 @@ class ReaderMaintenanceSpec extends SparkSpec {
     // last superseded fold pending forever; the x100 loop ended 345 vs
     // 298 MB) — expires it. A frame planned against the swept flat
     // state fails LOUD (the longest-query bound); a fresh read is
-    // clean.
+    // clean. (A raw read of the logical dir's flat batch on purpose:
+    // that is the superseded state this frame must be planned against.)
     val stale = spark.read.parquet(s"$codes/batch_key=${BatchLog.sanitize("b1")}")
     System.setProperty("graft.swap.grace.ms", "0")
     try {
@@ -383,59 +366,53 @@ class ReaderMaintenanceSpec extends SparkSpec {
     assert(!fs.exists(new org.apache.hadoop.fs.Path(tmp)), "recovery must drop the husk")
   }
 
-  test("a read entry during a live writer's blocking window throws retryable, then succeeds after release") {
+  test("a read entry during a live writer's commit window serves the committed state without an exception") {
+    import graft.operators.{Tombstones, VersionedState}
     val root = hostileRoot("livewriter")
     seed(root)
     val clean = rows(CosineDedupIndex.readIndex(spark, root))
-    val intent = new org.apache.hadoop.fs.Path(s"$root/codes.__swap_intent")
+    val codes = s"$root/codes"
+    val tmp = s"$codes.__compact_tmp"
+    val intent = new org.apache.hadoop.fs.Path(s"$codes.__swap_intent")
     val fs = fsOf(root)
     val inWindow = new CountDownLatch(1)
     val release = new CountDownLatch(1)
     @volatile var writerErr: Option[Throwable] = None
     val writer = new Thread(() => {
       try WriterLease.withLease(spark, root) {
-        // Simulate the commit's blocking window: intent marker up while
-        // the lease is live (the real window is exactly this state,
-        // between writeIntent and the intent clear).
-        fs.create(intent, true).close()
+        // The commit window of a compaction: its fold staged, its
+        // intent (recording the stage and the target version) up, the
+        // rename not yet run — while the lease is live.
+        SwapCrash.beforeRename(spark, codes, BatchLog.read(spark, codes, "test"),
+          clears = Some(root))
         inWindow.countDown()
         release.await()
-        fs.delete(intent, false)
+        // Finish the commit the way a restarted writer would.
+        Tombstones.recoverSwap(spark, tmp, codes)
       } catch { case t: Throwable => writerErr = Some(t); inWindow.countDown() }
     }, "rdrmaint-writer")
     writer.start()
     inWindow.await()
     assert(writerErr.isEmpty, s"writer thread failed: $writerErr")
     try {
-      // Entry-time refusal — readIndex AND the health probe.
-      intercept[ConcurrentMaintenanceException] {
-        CosineDedupIndex.readIndex(spark, root)
-      }
-      intercept[ConcurrentMaintenanceException] {
-        CosineDedupIndex.health(spark, root)
-      }
+      assert(fs.exists(intent) && fs.exists(new org.apache.hadoop.fs.Path(tmp)),
+        "spec shape broken: the window must hold the intent and its stage")
+      // Every read entry serves the committed (flat) state as is.
+      assert(rows(CosineDedupIndex.readIndex(spark, root)) == clean)
+      assert(CosineDedupIndex.health(spark, root).live == clean.size)
+      assert(BatchLog.hasData(spark, codes))
+      assert(BatchLog.resolve(spark, codes) == codes,
+        "the in-flight version must stay invisible until its marker lands")
     } finally {
       release.countDown()
       writer.join(30000)
     }
     assert(!writer.isAlive, "writer thread must have released")
     assert(writerErr.isEmpty, s"writer thread failed: $writerErr")
-    // The window closed: the same read now serves the clean answer.
+    // The window closed: the commit landed and reads serve it.
+    assert(BatchLog.resolve(spark, codes) == VersionedState.versionDir(codes, 1))
+    assert(!fs.exists(intent))
     assert(rows(CosineDedupIndex.readIndex(spark, root)) == clean)
-  }
-
-  test("silent-empty belt: an absent log with its swap-intent marker up reads as RETRYABLE, not as empty") {
-    val root = Files.createTempDirectory("graft_rdrmaint_belt").toString
-    val log = s"$root/signatures"
-    val fs = fsOf(root)
-    // Genuinely-empty root: plain false, no throw.
-    assert(!BatchLog.hasData(spark, log))
-    // Mid-delete window shape: log absent, sibling intent marker up.
-    fs.create(new org.apache.hadoop.fs.Path(s"$log.__swap_intent"), true).close()
-    intercept[ConcurrentMaintenanceException] { BatchLog.hasData(spark, log) }
-    intercept[ConcurrentMaintenanceException] { BatchLog.committedKeys(spark, log) }
-    fs.delete(new org.apache.hadoop.fs.Path(s"$log.__swap_intent"), false)
-    assert(!BatchLog.hasData(spark, log), "marker cleared: back to a plain empty read")
   }
 
   test("star snapshots: keepVersions is the count-based GRACE knob — an in-flight reader survives one overwrite") {
@@ -513,8 +490,8 @@ class ReaderMaintenanceSpec extends SparkSpec {
     val root = hostileRoot("crashrace")
     seed(root)
     val clean = rows(CosineDedupIndex.readIndex(spark, root))
-    // Crash a compaction inside its commit swap: intent up, dest gone,
-    // tmp complete — the worst blocking state, with no live writer.
+    // Crash a compaction inside its commit swap: intent up, the new
+    // version not yet copied, tmp complete — with no live writer.
     HostileFileSystem.armCrash("before-copy", "/codes/_versions/00000001")
     val e = intercept[Exception] { CosineDedupIndex.compact(spark, root) }
     HostileFileSystem.disarm()
@@ -523,8 +500,7 @@ class ReaderMaintenanceSpec extends SparkSpec {
     assert(fsOf(root).exists(new org.apache.hadoop.fs.Path(s"$root/codes.__swap_intent")),
       "spec shape broken: the crash must land inside the intent window")
     // N concurrent readers: recovery must run under the lease (at most
-    // one recoverer), every reader converges to the clean answer with a
-    // bounded retry on the retryable refusal.
+    // one recoverer), every reader converges to the clean answer.
     val results = new java.util.concurrent.ConcurrentHashMap[Int, Set[String]]()
     val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
     val readers = (0 until 3).map { i =>
@@ -536,7 +512,6 @@ class ReaderMaintenanceSpec extends SparkSpec {
             tries += 1
             try got = Some(rows(CosineDedupIndex.readIndex(spark, root)))
             catch {
-              case _: ConcurrentMaintenanceException => Thread.sleep(100)
               case _: graft.operators.ConcurrentWriterException => Thread.sleep(100)
             }
           }

@@ -100,16 +100,14 @@ class SketchLogSpec extends SparkSpec {
     SketchLog.ingest(spark, root, events(batchA: _*), "event_type", "user_id",
       batchKey = Some("b1"))
     val before = estimates(root)
-    // Simulate the swap window: fold fully staged, dest deleted, crash
+    // Simulate the swap window: fold fully staged, intent up, crash
     // before the rename.
     val path = java.nio.file.Paths.get(root, "sketches")
-    val tmp = java.nio.file.Paths.get(root, "sketches.__compact_tmp")
     val folded = graft.operators.BatchLog.read(spark, path.toString, "SketchLog")
-    graft.operators.BatchLog.stageRewrite(folded, path.toString, tmp.toString)
-    import scala.jdk.CollectionConverters._
-    Files.walk(path).iterator().asScala.toSeq.reverse.foreach(Files.delete)
-    // Without recovery-first this ingest would recreate the root with
-    // only batch B and the next reader would drop the staged fold.
+    SwapCrash.beforeRename(spark, path.toString, folded, clears = None)
+    // Without recovery-first this ingest would append batch B to the
+    // old state, and the next reader's recovery would commit the staged
+    // fold (batch A only) over it.
     SketchLog.ingest(spark, root, events(batchB: _*), "event_type", "user_id",
       batchKey = Some("b2"))
     assert(estimates(root) === Map(

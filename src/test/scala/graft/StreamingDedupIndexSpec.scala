@@ -68,7 +68,7 @@ class StreamingDedupIndexSpec extends SparkSpec {
       batchKey = Some("mb1"))
     assert(SignatureIndex.readIndex(spark, root).count() == 6,
       "re-delivered micro-batch must not double-append")
-    val allSigs = spark.read.parquet(s"$root/signatures")
+    val allSigs = spark.read.parquet(graft.operators.BatchLog.resolve(spark, s"$root/signatures"))
     val full = SignatureIndex.deltaPairs(allSigs, allSigs)
       .select("doc_a", "doc_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     CacheJanitor.drain()
@@ -200,7 +200,7 @@ class StreamingDedupIndexSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     // From-scratch oracle: CC over ALL pairs of the full corpus plus
     // self-labels for pairless docs with signatures.
-    val allSigs = spark.read.parquet(s"$root/signatures")
+    val allSigs = spark.read.parquet(graft.operators.BatchLog.resolve(spark, s"$root/signatures"))
     val pairs = SignatureIndex.deltaPairs(allSigs, allSigs).select("doc_a", "doc_b")
     val cc = graft.operators.Relational.connectedComponents(pairs)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap

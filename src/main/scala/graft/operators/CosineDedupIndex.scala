@@ -130,7 +130,9 @@ object CosineDedupIndex {
     * a crash mid-write of the 1-row meta can never leave a torn state
     * the next ingest misreads — it either sees the committed mask or
     * none at all (and re-freezes identically from the same first
-    * batch). */
+    * batch). Superseded meta versions (one per refreeze) are retained
+    * and expired by [[VersionedState]]'s grace rule, like the codes
+    * log beside them. */
   def frozenMask(spark: SparkSession, root: String): Option[Long] =
     graft.sources.LandingLog.readSnapshotIfExists(spark, root, "meta")
       .map(_.head.getLong(0))

@@ -256,13 +256,12 @@ object DedupPipeline {
   /** Materialize a PINNED manifest snapshot through the atomic
     * versioned-snapshot protocol — the scheduled (compaction-cadence)
     * operation for consumers that need reproducibility or a plain-scan
-    * read path; `keepVersions >= 2` retains history for time travel
-    * (and for readers overlapping the next refresh). */
-  def snapshotManifest(spark: SparkSession, root: String,
-      keepVersions: Int = 1): Unit = WriterLease.withLease(spark, root) {
-    LandingLog.writeSnapshot(keeperManifest(spark, root), root,
-      "keeper_manifest", keepVersions = keepVersions)
-  }
+    * read path. Superseded pins follow [[VersionedState]]'s retention,
+    * the rule [[maintainOnce]]'s sweep applies to the whole root. */
+  def snapshotManifest(spark: SparkSession, root: String): Unit =
+    WriterLease.withLease(spark, root) {
+      LandingLog.writeSnapshot(keeperManifest(spark, root), root, "keeper_manifest")
+    }
 
   /** Read back the newest pinned snapshot from [[snapshotManifest]]. */
   def pinnedManifest(spark: SparkSession, root: String): DataFrame =

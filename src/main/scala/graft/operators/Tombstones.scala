@@ -109,7 +109,7 @@ private[graft] object Tombstones {
       fs.mkdirs(vdir)
       VersionedState.writeMarker(fs, d, next)
     }
-    VersionedState.gc(spark, d)
+    VersionedState.gc(fs, d)
   }
 
   /** `df` minus tombstoned rows (anti-join on `idCol`).
@@ -223,7 +223,7 @@ private[graft] object Tombstones {
       s"versioned commit failed: could not move $tmp into $vdir")
     VersionedState.writeMarker(fs, dest, next)
     clearTombstonesOf.foreach(root => clear(spark, root))
-    VersionedState.gc(spark, dest)
+    VersionedState.gc(fs, dest)
     fs.delete(intentPath(dest), false)
   }
 
@@ -264,7 +264,7 @@ private[graft] object Tombstones {
           VersionedState.writeMarker(fs, dest, ver)
           recRoot.foreach(root => clear(spark, root))
         }
-        VersionedState.gc(spark, dest)
+        VersionedState.gc(fs, dest)
         fs.delete(intentP, false)
       case None =>
         // Torn/empty marker: the writer died INSIDE the marker write,

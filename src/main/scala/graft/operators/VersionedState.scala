@@ -3,18 +3,15 @@ package graft.operators
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.sql.SparkSession
 
-/** Pointer-indirected versioned layout for the swapped index state
-  * directories (the fold logs under `root/codes`, `root/signatures*`,
-  * `root/labels`, sketch tables, and the tombstone side table): the one
-  * commit protocol for index state, and what makes index READS
-  * WAIT-FREE under maintenance.
-  *
-  * A compaction/refreeze commit never replaces the table directory in
-  * place. It applies the LSM-standard answer (retired state lingers
-  * for in-flight readers, GC'd after a grace period), the same
-  * `_versions/<n>` + marker scheme as the star snapshots
-  * ([[graft.sources.LandingLog.writeSnapshot]]), with the index swap
-  * unit (a whole table directory) as the version:
+/** Pointer-indirected versioned layout: the ONE commit protocol for
+  * every whole-directory state the engine replaces — the swapped index
+  * state directories (fold logs, sketch tables, the tombstone side
+  * table) and the snapshots ([[graft.sources.LandingLog.writeSnapshot]]:
+  * star tables, source currents, CosineDedupIndex `meta`, the pinned
+  * keeper manifest) — and what makes reads WAIT-FREE under maintenance
+  * and star commits. A commit never replaces the table directory in
+  * place (the LSM answer: retired state lingers for in-flight readers,
+  * GC'd after a grace period); a whole table directory is the version:
   *
   * {{{
   * root/codes/                      # the LOGICAL table dir (pointer)
@@ -28,19 +25,17 @@ import org.apache.spark.sql.SparkSession
   *
   * Readers resolve the newest committed version ONCE at plan time
   * ([[resolve]]) and scan inside it; a root that has never been swapped
-  * resolves to its flat top level. A commit creates the NEXT version
-  * directory (one rename of the staged tmp — the committed state is
-  * never deleted, never renamed, never partially visible) and the
-  * superseded version stays on disk until [[gc]] expires it — newest
-  * [[keepVersions]] always retained, older versions only deleted once
-  * their successor's commit marker is at least [[graceMs]] old. A
-  * reader therefore completes against its planned file set as long as
-  * its scan takes less than the grace period — the retention contract
-  * an operator sizes against its longest query, exactly as in every
-  * LSM store. The refreeze protocol stages its quantizer artifacts
-  * INSIDE the codes stage, so quantizer + codes commit as ONE version
-  * (`codes/_versions/<n>/_quantizer`) — see
-  * [[RefreezeProtocol.quantStageName]].
+  * resolves to its flat top level. A commit fills the NEXT version
+  * directory (a staged tmp renamed in, or a snapshot written there —
+  * the committed state is never deleted, renamed or partially visible)
+  * and publishes it with one marker create ([[writeMarker]]). [[gc]]
+  * keeps the newest [[keepVersions]] superseded versions and deletes an
+  * older one only once its successor's marker is [[graceMs]] old, so a
+  * reader completes against its planned files as long as its scan is
+  * shorter than the grace period; the same two knobs are the snapshots'
+  * time-travel window ([[graft.sources.LandingLog.readSnapshotAt]]).
+  * Refreeze stages its quantizer INSIDE the codes stage, so quantizer +
+  * codes commit as ONE version — see [[RefreezeProtocol.quantStageName]].
   *
   * Increments APPEND INSIDE the current version directory (fold
   * directories stay immutable; the version dir gains sibling
@@ -53,10 +48,9 @@ import org.apache.spark.sql.SparkSession
   * [[gc]] sweeps it, then nothing. Read through [[resolve]] (or
   * [[BatchLog.resolve]]) instead.
   *
-  * Storage envelope: each retained superseded version is one full fold
-  * of the log, so the extra bytes are (compactions per grace window)
-  * × fold size — bounded by the maintenance schedule, not the corpus
-  * growth rate. Both knobs are operator-tunable (sys-prop / env):
+  * Storage envelope: each retained superseded version is one full copy
+  * of its directory (a fold, or a whole snapshot), so the extra bytes
+  * are (commits per grace window) × directory size. Knobs (sys-prop / env):
   * `graft.swap.keep.versions` / `SPARK_GRAFT_SWAP_KEEP_VERSIONS`
   * (superseded versions kept regardless of grace; default 0) and
   * `graft.swap.grace.ms` / `SPARK_GRAFT_SWAP_GRACE_MS` (default
@@ -124,14 +118,11 @@ private[graft] object VersionedState {
   }
 
   /** Create the commit marker for `v` (idempotent). The marker BODY is
-    * the committing driver's wall-clock millis (r18 advisory #2): grace
-    * expiry must not depend on the FS-assigned mtime alone — on an
-    * HDFS/object-store root that mtime is the NAMENODE/STORE clock, and
-    * skew against the GC driver's clock would silently shorten the
-    * grace window (a reader inside its sized retention bound losing
-    * planned files). [[gc]] takes the MAX of the two timestamps, so
-    * skew in either direction can only LENGTHEN retention, never
-    * shorten it; a torn (empty) marker falls back to mtime alone. */
+    * the committing driver's wall-clock millis: on an HDFS/object-store
+    * root the mtime is the STORE clock, and skew against the GC driver's
+    * clock would silently shorten the grace window. [[gc]] takes the MAX
+    * of the two, so skew can only LENGTHEN retention; a torn (empty)
+    * marker falls back to mtime alone. */
   def writeMarker(fs: FileSystem, dir: String, v: Long): Unit = {
     val c = new HPath(commitsDir(dir))
     fs.mkdirs(c)
@@ -156,6 +147,49 @@ private[graft] object VersionedState {
       else mtime
     } catch { case _: Exception => mtime }
 
+  private val lastGcAllMs =
+    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+
+  /** [[gcAll]] amortized to the GRACE timescale: retention can only
+    * expire at graceMs granularity, so a sweep on EVERY maintenance poll
+    * pays driver FS ops that cannot find anything new. A poll sweeps
+    * when (a) maintenance just committed (`force`), or (b) at least
+    * graceMs/4 passed since this root's last sweep — the last superseded
+    * fold of a log that stops compacting still expires within ~1.25× its
+    * grace (ReaderMaintenanceSpec pins this), while a steady loop pays
+    * ~4 sweeps per grace window instead of one per batch. */
+  def gcAllAmortized(spark: SparkSession, root: String, force: Boolean): Unit = {
+    // Keyed on the qualified path so `root` and `root/` share one stamp;
+    // stamped only after the sweep returns, so a sweep that throws is
+    // retried by the next poll instead of skipped for graceMs/4.
+    val key = fsOf(spark, root).makeQualified(new HPath(root)).toString
+    val now = System.currentTimeMillis()
+    val last = Option(lastGcAllMs.get(key)).map(_.longValue).getOrElse(0L)
+    if (force || now - last >= graceMs / 4) {
+      gcAll(spark, root)
+      lastGcAllMs.put(key, now)
+    }
+  }
+
+  /** Enforce grace retention on EVERY versioned table dir one level
+    * under `root` (r19): [[gc]] otherwise runs only on commit paths,
+    * so a superseded version whose grace expires AFTER its log's last
+    * commit would linger until that log's next compaction — a steady
+    * loop that folds each log once then only appends would retain the
+    * superseded fold forever (observed: the x100 loop ending at
+    * 345 MB root with the old fold pending). Driver-side FS ops only
+    * (one listStatus of the root + one `_commits` probe per child +
+    * the gc marker scans); call under the root's writer lease — the
+    * maintenance loop is where retention enforcement belongs. */
+  def gcAll(spark: SparkSession, root: String): Unit = {
+    val fs = fsOf(spark, root)
+    val rp = new HPath(root)
+    if (!fs.exists(rp)) return
+    list(fs, rp).filter(_.isDirectory).map(_.getPath).foreach { d =>
+      if (fs.exists(new HPath(d, "_commits"))) gc(fs, d.toString)
+    }
+  }
+
   /** Superseded-state GC, grace-aware (single-writer contract — runs
     * under the root's lease, from commit and recovery paths):
     *
@@ -171,57 +205,9 @@ private[graft] object VersionedState {
     *  - an UNMARKED version dir BELOW the current version is a crashed
     *    commit's abandoned partial — deleted (an unmarked dir above
     *    current is an IN-FLIGHT commit and is never touched here; its
-    *    intent marker owns it). */
-  /** Enforce grace retention on EVERY versioned table dir one level
-    * under `root` (r19): [[gc]] otherwise runs only on commit paths,
-    * so a superseded version whose grace expires AFTER its log's last
-    * commit would linger until that log's next compaction — a steady
-    * loop that folds each log once then only appends would retain the
-    * superseded fold forever (observed: the x100 loop ending at
-    * 345 MB root with the old fold pending). Driver-side FS ops only
-    * (one listStatus of the root + one `_commits` probe per child +
-    * the gc marker scans); call under the root's writer lease — the
-    * maintenance loop is where retention enforcement belongs. */
-  private val lastGcAllMs =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-
-  /** [[gcAll]] amortized to the GRACE timescale (r19 verdict #4: the
-    * versioned-refreeze/gcAll commits added per-batch commit-protocol FS
-    * ops to the steady maintenance path). Grace retention can only
-    * expire at graceMs granularity, so sweeping every versioned child's
-    * marker files on EVERY maintenance poll pays driver FS ops for
-    * sweeps that cannot find anything new. A poll sweeps when (a)
-    * maintenance just committed (`force` — a new version supersedes an
-    * old one, and commit-path [[gc]] may have left older expired state),
-    * or (b) at least graceMs/4 passed since this root's last sweep — the
-    * last superseded fold of a log that stops compacting still expires
-    * within ~1.25× its grace (ReaderMaintenanceSpec pins the sweep-
-    * without-new-commit property), while a steady loop pays ~4 sweeps
-    * per grace window instead of one per batch. */
-  def gcAllAmortized(spark: SparkSession, root: String, force: Boolean): Unit = {
-    // Keyed on the qualified path so `root` and `root/` share one stamp;
-    // stamped only after the sweep returns, so a sweep that throws is
-    // retried by the next poll instead of skipped for graceMs/4.
-    val key = fsOf(spark, root).makeQualified(new HPath(root)).toString
-    val now = System.currentTimeMillis()
-    val last = Option(lastGcAllMs.get(key)).map(_.longValue).getOrElse(0L)
-    if (force || now - last >= graceMs / 4) {
-      gcAll(spark, root)
-      lastGcAllMs.put(key, now)
-    }
-  }
-
-  def gcAll(spark: SparkSession, root: String): Unit = {
-    val fs = fsOf(spark, root)
-    val rp = new HPath(root)
-    if (!fs.exists(rp)) return
-    list(fs, rp).filter(_.isDirectory).map(_.getPath).foreach { d =>
-      if (fs.exists(new HPath(d, "_commits"))) gc(spark, d.toString)
-    }
-  }
-
-  def gc(spark: SparkSession, dir: String): Unit = {
-    val fs = fsOf(spark, dir)
+    *    intent marker owns it, and a crashed snapshot stage there is
+    *    overwritten by the next stage that reaches its number). */
+  def gc(fs: FileSystem, dir: String): Unit = {
     // Commit times are the conservative max(mtime, recorded wall) —
     // see [[writeMarker]]; content reads happen only here, in the
     // maintenance path, never on reads.

@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.operators.VersionedState
 import org.apache.hadoop.fs.{FileStatus, Path => HPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -27,16 +28,9 @@ object LandingLog {
   def fileKey(batchId: String): String =
     batchId.replace(' ', '_').replace(':', '.')
 
-  /** The Hadoop configuration behind every path probe here — the same
-    * API choice [[logKeys]] already made, now for the whole log+snapshot
-    * protocol (round-15: exercised under the hostile test FS instead of
-    * assumed): a java.nio probe silently misreads any non-local root. */
-  private def hconf: org.apache.hadoop.conf.Configuration =
-    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
-      .map(_.sparkContext.hadoopConfiguration)
-      .getOrElse(new org.apache.hadoop.conf.Configuration())
-
-  private def fsOf(path: String) = new HPath(path).getFileSystem(hconf)
+  /** Hadoop FileSystem, not java.nio: a java.nio probe silently
+    * misreads any non-local root. */
+  private def fsOf(path: String) = StateFile.fs(path)
 
   private def ls(dir: String): Seq[FileStatus] = {
     val fs = fsOf(dir)
@@ -114,12 +108,15 @@ object LandingLog {
           .schema(schema).csv(s"$root/$table")
       else
         spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    base.withColumn(
-      "_ingest_ts",
-      coalesce(
-        nullif(regexp_extract(input_file_name(), "/([^/]+)\\.batch/[^/]+$", 1), lit("")),
-        regexp_extract(input_file_name(), "/([^/]+)\\.csv$", 1)))
+    withIngestTs(base)
   }
+
+  /** `_ingest_ts` = the batch id parsed from the single-file name OR the
+    * `.batch` directory name. */
+  private def withIngestTs(base: DataFrame): DataFrame =
+    base.withColumn("_ingest_ts", coalesce(
+      nullif(regexp_extract(input_file_name(), "/([^/]+)\\.batch/[^/]+$", 1), lit("")),
+      regexp_extract(input_file_name(), "/([^/]+)\\.csv$", 1)))
 
   /** The landing batch FILE KEYS present for a table, ascending
     * (lexicographic = chronological by the [[fileKey]] contract) —
@@ -161,11 +158,7 @@ object LandingLog {
       else
         spark.read.option("header", "true").option("recursiveFileLookup", "true")
           .schema(schema).csv(paths: _*)
-    base.withColumn(
-      "_ingest_ts",
-      coalesce(
-        nullif(regexp_extract(input_file_name(), "/([^/]+)\\.batch/[^/]+$", 1), lit("")),
-        regexp_extract(input_file_name(), "/([^/]+)\\.csv$", 1)))
+    withIngestTs(base)
   }
 
   /** Parquet snapshot sink (reference S7: one logical snapshot per star
@@ -183,59 +176,39 @@ object LandingLog {
     * rebuild). A reader filtering on the key prunes whole ranges.
     *
     * ATOMIC COMMIT: the reference gets overwrite atomicity for free from
-    * a single-object S3 PUT (src/process_lambda.py:59-66, one
-    * `{table}.parquet` key); a multi-file directory overwrite has no such
-    * guarantee — a crash mid-write would leave a half-deleted snapshot
-    * the next read happily scans. So a snapshot write here is
-    * stage-then-commit: [[stageSnapshot]] writes the data into a fresh
-    * versioned directory (`_versions/<n>`) that NO reader resolves, and
-    * [[commitSnapshot]] publishes it with one atomic marker-file rename.
-    * A crash anywhere before the commit leaves the previous version the
-    * current one; a retry restages the same version number (overwrite
-    * clears the partial). On HDFS the marker rename is atomic natively;
-    * on S3 the marker becomes a single-object PUT — the same primitive
-    * the reference relies on, now carrying a pointer instead of data. */
+    * a single-object S3 PUT (src/process_lambda.py:59-66); a multi-file
+    * directory overwrite has no such guarantee. So a snapshot write is
+    * stage-then-commit through [[graft.operators.VersionedState]], the
+    * engine's one versioned-directory protocol: [[stageSnapshot]] writes
+    * the next version directory, which NO reader resolves, and
+    * [[commitSnapshot]] publishes it with one marker create (on S3 a
+    * single-object PUT carrying a pointer instead of data). Superseded
+    * versions follow VersionedState's retention (`graft.swap.grace.ms`
+    * plus `graft.swap.keep.versions`), so a reader that resolved version
+    * N — a training scan, a warehouse view planned before the next batch
+    * — completes against it within the grace period. */
   def writeSnapshot(df: DataFrame, root: String, table: String,
-      partitionBy: Seq[String] = Nil, rangeSize: Long = 100,
-      keepVersions: Int = 1): Unit = {
+      partitionBy: Seq[String] = Nil, rangeSize: Long = 100): Unit = {
     val v = stageSnapshot(df, root, table, partitionBy, rangeSize)
-    commitSnapshot(root, table, v, keepVersions)
+    commitSnapshot(root, table, v)
   }
 
-  private def vname(v: Long): String = f"$v%08d"
-  private def versionDir(root: String, table: String, v: Long): String =
-    s"$root/$table/_versions/${vname(v)}"
-  private def commitsDir(root: String, table: String): String =
-    s"$root/$table/_commits"
-
-  /** Highest committed snapshot version (0 = never written): max marker
-    * in `_commits/` whose data directory exists. Markers are zero-padded
-    * so lexicographic = numeric. Both bookkeeping dirs are
-    * underscore-prefixed, so a NAIVE `spark.read.parquet(tableDir)` sees
-    * no data files and fails loudly — it can never silently union
-    * versions; readers resolve through [[snapshotDataDir]]. */
-  def currentVersion(root: String, table: String): Long =
-    listVersions(root, table).lastOption.getOrElse(0L)
-
   /** Resolve the directory holding the CURRENT committed snapshot data:
-    * the newest committed version dir, or (unversioned layout) the
-    * table directory itself when it holds data directly — plain data
-    * files (snapshots written by hand or by older builds) OR `__p_*`
-    * mirror-partition trees (the incremental star path's fact tables,
-    * which live unversioned so per-batch upserts swap single partition
-    * directories instead of staging whole versions). None = never
+    * the newest committed version dir, or (VersionedState's flat
+    * "version 0") the table directory itself when it holds data
+    * directly — plain data files OR `__p_*` mirror-partition trees (the
+    * incremental star path's fact tables, which live unversioned so
+    * per-batch upserts swap single partition directories). None = never
     * written. */
   def snapshotDataDir(root: String, table: String): Option[String] = {
-    val v = currentVersion(root, table)
-    if (v > 0) Some(versionDir(root, table, v))
-    else {
-      val dir = s"$root/$table"
-      if (isDir(dir) && ls(dir).exists { s =>
-        val n = s.getPath.getName
-        (!n.startsWith("_") && !n.startsWith(".")) || n.startsWith("__p_")
-      }) Some(dir)
-      else None
-    }
+    val dir = s"$root/$table"
+    val v = VersionedState.currentVersion(fsOf(dir), dir)
+    if (v > 0) Some(VersionedState.versionDir(dir, v))
+    else if (isDir(dir) && ls(dir).exists { s =>
+      val n = s.getPath.getName
+      (!n.startsWith("_") && !n.startsWith(".")) || n.startsWith("__p_")
+    }) Some(dir)
+    else None
   }
 
   /** Stage (but do not publish) the next snapshot version: the full data
@@ -246,8 +219,9 @@ object LandingLog {
     * (mode overwrite clears any partial files). */
   def stageSnapshot(df: DataFrame, root: String, table: String,
       partitionBy: Seq[String] = Nil, rangeSize: Long = 100): Long = {
-    val next = currentVersion(root, table) + 1
-    val dest = versionDir(root, table, next)
+    val dir = s"$root/$table"
+    val next = VersionedState.currentVersion(fsOf(dir), dir) + 1
+    val dest = VersionedState.versionDir(dir, next)
     if (partitionBy.isEmpty) df.write.mode("overwrite").parquet(dest)
     else writePartitioned(df, dest, partitionBy, rangeSize)
     next
@@ -270,90 +244,38 @@ object LandingLog {
       .write.mode("overwrite").partitionBy(mirrors: _*).parquet(dest)
   }
 
-  /** Publish a staged version: ONE small marker-file create in
-    * `_commits/` — the single-object-PUT commit primitive on every
-    * store (the marker's NAME is the commit; its content is never
-    * read, so even a torn create commits correctly: the staged data
-    * directory was complete before this call by [[stageSnapshot]]'s
-    * contract). Round-15: Hadoop FileSystem API end-to-end, so the
-    * same code runs (and is crash-tested) on non-POSIX roots.
-    * Everything after the marker is best-effort GC; a crash mid-GC
-    * only leaves orphan directories the next commit's GC removes.
-    *
-    * `keepVersions` (default 1) is the TIME-TRAVEL retention knob: the
-    * newest k committed versions survive GC and stay readable via
-    * [[readSnapshotAt]] — snapshot-level reproducibility ("the corpus
-    * exactly as training run X saw it") for the cost of k× storage,
-    * bounded and operator-chosen. Crashed/abandoned stages are removed
-    * regardless of retention.
-    *
-    * READER-vs-GC RACE: at `keepVersions = 1` version N's directory is
-    * deleted the instant N+1 commits, so a reader that resolved N via
-    * [[snapshotDataDir]] and is still scanning loses files mid-job
-    * (FileNotFoundException — loud, never wrong data). The single-writer
-    * contract does NOT imply single-reader: any deployment where readers
-    * overlap commits (a training job scanning while the maintenance loop
-    * runs) must set `keepVersions >= 2` so the previous version outlives
-    * in-flight scans for one full commit interval. */
-  def commitSnapshot(root: String, table: String, version: Long,
-      keepVersions: Int = 1): Unit = {
-    require(keepVersions >= 1, s"keepVersions must be >= 1, got $keepVersions")
-    val cdir = commitsDir(root, table)
-    val fs = fsOf(cdir)
-    fs.mkdirs(new HPath(cdir))
-    val out = fs.create(new HPath(cdir, vname(version)), true)
-    try out.write(vname(version).getBytes("UTF-8")) finally out.close()
-    // GC (single-writer contract): keep the newest `keepVersions`
-    // committed versions; everything else — older versions AND
-    // crashed/abandoned unmarked stages — goes, dirs and markers both.
-    val keep = listVersions(root, table).takeRight(keepVersions)
-      .map(vname).toSet + vname(version)
-    val vdir = s"$root/$table/_versions"
-    ls(vdir).filterNot(s => keep(s.getPath.getName))
-      .foreach(s => fs.delete(s.getPath, true))
-    ls(cdir).filterNot(s => keep(stripCrc(s.getPath.getName)))
-      .foreach(s => fs.delete(s.getPath, true))
+  /** Publish a staged version: VersionedState's marker create (the
+    * staged directory is complete by [[stageSnapshot]]'s contract), then
+    * its grace GC, which a crash may cut short harmlessly. */
+  def commitSnapshot(root: String, table: String, version: Long): Unit = {
+    val dir = s"$root/$table"
+    val fs = fsOf(dir)
+    VersionedState.writeMarker(fs, dir, version)
+    VersionedState.gc(fs, dir)
   }
 
-  /** The local (checksummed) FileSystem writes a `.<name>.crc` sibling
-    * for every created file; GC must key it to its marker, not treat it
-    * as an abandoned stage of its own. */
-  private def stripCrc(name: String): String =
-    if (name.startsWith(".") && name.endsWith(".crc"))
-      name.stripPrefix(".").stripSuffix(".crc")
-    else name
-
-  /** All committed, still-present versions of a snapshot, ascending. */
-  def listVersions(root: String, table: String): Seq[Long] = {
-    val c = commitsDir(root, table)
-    if (!isDir(c)) Seq.empty
-    else ls(c).map(s => s.getPath.getName)
-      .filter(n => n.nonEmpty && n.forall(_.isDigit)).map(_.toLong)
-      .filter(v => isDir(versionDir(root, table, v)))
-      .sorted
-  }
-
-  /** Time-travel read of a specific committed version (must still be
-    * within the writer's `keepVersions` retention). */
+  /** Time-travel read of a committed version still inside
+    * VersionedState's retention. */
   def readSnapshotAt(spark: SparkSession, root: String, table: String,
       version: Long): DataFrame = {
-    require(listVersions(root, table).contains(version),
+    val dir = s"$root/$table"
+    val committed = VersionedState.committedVersions(fsOf(dir), dir)
+    require(committed.contains(version),
       s"version $version of $table is not committed (or was GC'd); " +
-        s"available: ${listVersions(root, table).mkString(", ")}")
-    val raw = spark.read.parquet(versionDir(root, table, version))
-    raw.drop(raw.columns.filter(_.startsWith("__p_")).toSeq: _*)
+        s"available: ${committed.mkString(", ")}")
+    dropMirrors(spark.read.parquet(VersionedState.versionDir(dir, version)))
   }
 
   /** Snapshot read; mirror partition keys are dropped so the frame is
     * schema-identical to what [[writeSnapshot]] was given, whatever the
     * physical layout. Pruning readers scan the resolved version dir
     * directly and filter on `__p_*` before the drop. */
-  def readSnapshot(spark: SparkSession, root: String, table: String): DataFrame = {
-    val dir = snapshotDataDir(root, table)
+  def readSnapshot(spark: SparkSession, root: String, table: String): DataFrame =
+    readSnapshotIfExists(spark, root, table)
       .getOrElse(sys.error(s"no committed snapshot for $table under $root"))
-    val raw = spark.read.parquet(dir)
+
+  private def dropMirrors(raw: DataFrame): DataFrame =
     raw.drop(raw.columns.filter(_.startsWith("__p_")).toSeq: _*)
-  }
 
   /** Range-partition-aware snapshot join — the READ-side payoff of
     * [[writeSnapshot]]'s mirror-key layout: join the partitioned snapshot
@@ -391,17 +313,15 @@ object LandingLog {
     * been written (the reference's head_object → 404 → None path,
     * src/process_lambda.py:69-88). */
   def readSnapshotIfExists(spark: SparkSession, root: String, table: String): Option[DataFrame] =
-    snapshotDataDir(root, table).map { dir =>
-      val raw = spark.read.parquet(dir)
-      raw.drop(raw.columns.filter(_.startsWith("__p_")).toSeq: _*)
-    }
+    snapshotDataDir(root, table).map(dir => dropMirrors(spark.read.parquet(dir)))
 
   /** List all COMMITTED snapshot keys (C4: the manual-trigger full scan
     * of the processed store, src/warehousing_lambda.py:130-134). A table
     * directory whose only content is a crashed, never-committed stage is
     * not a snapshot and is not listed. Underscore-prefixed directories
-    * are BOOKKEEPING by repo-wide convention (`_versions`, `_commits`,
-    * the incremental star path's `_sources` current-snapshot store) and
+    * are BOOKKEEPING by repo-wide convention ([[graft.operators
+    * .VersionedState]]'s version dirs and markers, the incremental star
+    * path's `_sources` current-snapshot store) and
     * never star tables — listing them would feed a full reload garbage. */
   def listSnapshots(root: String): Seq[String] = {
     if (!isDir(root)) Seq.empty
@@ -438,17 +358,15 @@ object LandingLog {
 final class WatermarkStore(path: String) {
   val sentinel = "1970-01-01 00:00:00.000000"
 
-  /** Synchronized with [[update]]: ingest's concurrent gates read here
-    * while a sibling publishes, and a read racing the swap can open the
-    * old file and the new `.crc` (a checksum error) or find neither the
-    * main file nor the `.tmp`. */
-  def read(): Map[String, String] = this.synchronized {
+  /** Lock-free: a read racing a publish — from a sibling gate, another
+    * instance on the same path or another process — is settled by
+    * [[StateFile.read]]'s bounded re-reads. */
+  def read(): Map[String, String] =
     StateFile.read(path) { txt =>
       // A blank file is "no state yet" (same as absent); anything else
       // must parse exactly — malformed state fails loudly, never silently.
       if (txt.trim.isEmpty) Map.empty[String, String] else MiniJson.parseFlat(txt)
     }.getOrElse(Map.empty)
-  }
 
   def watermark(table: String): String = read().getOrElse(table, sentinel)
 

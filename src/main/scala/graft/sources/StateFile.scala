@@ -8,16 +8,14 @@ import org.apache.hadoop.fs.{FileSystem, Path => HPath}
   * roots (and under the hostile test FS, where rename is copy+delete).
   *
   * Protocol: [[write]] fully writes a sibling `.tmp`, drops the old
-  * main file, renames the tmp into place. On a native-rename FS this
-  * is the same atomic swap as before. On a COPY+DELETE FS the swap is
-  * not atomic — but the ordering guarantees that from the moment the
+  * main file, renames the tmp into place. The swap is not atomic (and
+  * a rename is copy+delete on object stores) — but from the moment the
   * old main is dropped until the new one is fully in place, a COMPLETE
-  * `.tmp` exists (a copy deletes its source only after finishing), so
-  * [[read]] recovers through it: a missing or torn main file with a
-  * parseable tmp returns the tmp's content; torn with no readable tmp
-  * still fails loudly — slower or louder, never silently wrong.
-  * Single-writer contract (the callers already hold it); readers may
-  * race the swap and land on the tmp fallback.
+  * `.tmp` exists, so [[read]] recovers through it: a missing or torn
+  * main file with a parseable tmp returns the tmp's content; torn with
+  * no readable tmp still fails loudly. Single-writer contract; a reader
+  * in any process whose probes interleave with a publish re-reads a
+  * bounded number of times and returns the old or the new state.
   */
 private[graft] object StateFile {
 
@@ -44,9 +42,10 @@ private[graft] object StateFile {
   }
 
   /** None = neither main nor (readable) tmp exists. `parse` MUST throw
-    * on torn content — that is what routes a torn main to the tmp
-    * fallback (and a torn main with no readable tmp to the loud
-    * rethrow). */
+    * on torn content. A main that cannot be read is re-read up to 10
+    * times (a publish in flight finishes meanwhile, so reads never go
+    * back to an older state); one that stays torn is a crash's, and
+    * recovers from a complete tmp or fails loudly. */
   def read[T](path: String)(parse: String => T): Option[T] = {
     val f = fs(path)
     val p = new HPath(path)
@@ -56,20 +55,47 @@ private[graft] object StateFile {
       try new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8")
       finally in.close()
     }
+    // An empty tmp is a publish's create still in progress, never a
+    // complete state.
     def fromTmp: Option[T] =
       if (!f.exists(tmp)) None
-      else scala.util.Try(parse(readAll(tmp))).toOption
-    if (!f.exists(p)) fromTmp
-    else
-      try Some(parse(readAll(p)))
-      catch {
-        case e: Exception => fromTmp match {
-          case Some(t) =>
-            System.err.println(
-              s"[graft] StateFile: torn state at $path ($e); recovered from complete .tmp")
-            Some(t)
-          case None => throw e
+      else scala.util.Try(readAll(tmp)).toOption.filter(_.nonEmpty)
+        .flatMap(txt => scala.util.Try(parse(txt)).toOption)
+    def raced = new java.io.FileNotFoundException(s"$path was replaced while being read")
+    // Left = not readable on this pass.
+    def once(last: Boolean): Either[Exception, Option[T]] =
+      try {
+        if (f.exists(p)) {
+          val txt = readAll(p)
+          // An empty main beside a tmp, or one that has grown since, is a
+          // copy-based rename still copying.
+          if (txt.isEmpty && (f.exists(tmp) || f.getFileStatus(p).getLen > 0)) throw raced
+          Right(Some(parse(txt)))
+        } else {
+          val r = fromTmp
+          // A publish renamed its tmp into place meanwhile; the tmp read
+          // may already be the next publish's.
+          if (f.exists(p)) throw raced
+          // Found nothing: once written, the main or a complete tmp always
+          // exists, so only one listing (a single snapshot, unlike the
+          // probes) that shows neither proves "never written".
+          if (r.isEmpty && !last) {
+            val names = try f.listStatus(p.getParent).map(_.getPath.getName).toSet
+              catch { case _: java.io.FileNotFoundException => Set.empty[String] }
+            if (names(p.getName) || names(tmp.getName)) throw raced
+          }
+          Right(r)
         }
+      } catch {
+        case e: Exception if last => fromTmp.map(t => Right(Some(t))).getOrElse(Left(e))
+        case e: Exception => Left(e)
       }
+    @annotation.tailrec
+    def loop(attempt: Int): Option[T] = once(last = attempt >= 10) match {
+      case Right(r) => r
+      case Left(e) if attempt >= 10 => throw e
+      case Left(_) => Thread.sleep(attempt * 5L); loop(attempt + 1)
+    }
+    loop(1)
   }
 }

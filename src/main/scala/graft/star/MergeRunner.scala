@@ -1,7 +1,7 @@
 package graft.star
 
 import graft.model.Schemas
-import graft.operators.WriterLease
+import graft.operators.{VersionedState, WriterLease}
 import graft.sources.{Extract, LandingLog, WatermarkStore}
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -218,6 +218,7 @@ object MergeRunner {
     store.update(Map("intent" -> "1", "policy" -> wanted))
     val written = Seq.newBuilder[String]
 
+    val refsDir = s"$processedRoot/$sourcesDir/$refsTable"
     def currentOf(t: String): DataFrame =
       LandingLog.readSnapshotIfExists(spark, s"$processedRoot/$sourcesDir", t)
         .getOrElse(spark.createDataFrame(
@@ -408,14 +409,13 @@ object MergeRunner {
 
       // ---- refcounts + dim_date --------------------------------------
       val refsRoot = s"$processedRoot/$sourcesDir"
-      val refsVersionOk = state.get("refs_version").map(_.toLong)
-        .contains(LandingLog.currentVersion(refsRoot, refsTable))
+      val refsVersion = VersionedState.currentVersion(fsOf(spark, refsDir), refsDir)
+      val refsVersionOk = state.get("refs_version").map(_.toLong).contains(refsVersion)
       val refsNew = graft.CacheJanitor.register((
         if (recovery || !refsVersionOk) rebuildRefs(spark, processedRoot)
         else {
           val prev =
-            if (LandingLog.currentVersion(refsRoot, refsTable) == 0)
-              emptyRefs(spark)
+            if (refsVersion == 0) emptyRefs(spark)
             else LandingLog.readSnapshot(spark, refsRoot, refsTable)
           deltas.foldLeft(prev)(_ unionByName _)
             .groupBy("date").agg(sum(col("n")).as("n"))
@@ -426,10 +426,10 @@ object MergeRunner {
       // the persist re-RAN the whole fold — measured 0.88 s vs 0.32 s;
       // reading the just-written snapshot back was the old cost).
       ).persist())
-      // keepVersions=2: the pinned-input version must survive one commit
-      // so an intact-chain reader never races the GC.
+      // The version `prev` read stays on disk for the grace period, so a
+      // recompute of the persisted fold after this commit still finds it.
       timed("refs:fold-write") {
-        LandingLog.writeSnapshot(refsNew, refsRoot, refsTable, keepVersions = 2)
+        LandingLog.writeSnapshot(refsNew, refsRoot, refsTable)
       }
       timed("refs:dim-date") {
         // refsNew IS the snapshot version just committed (writeSnapshot
@@ -453,7 +453,7 @@ object MergeRunner {
       "intent" -> "",
       "policy" -> wanted,
       "refs_version" ->
-        LandingLog.currentVersion(s"$processedRoot/$sourcesDir", refsTable).toString))
+        VersionedState.currentVersion(fsOf(spark, refsDir), refsDir).toString))
     graft.CacheJanitor.drain(blocking = true)
     written.result()
   }
@@ -592,11 +592,12 @@ object MergeRunner {
     *
     * View refresh rides the IN-BATCH sinks (each fires right after its
     * table's snapshot commits, BEFORE the merge-state advance), not a
-    * post-merge pass: dims publish under NEW `_versions/<n>` dirs each
-    * batch, so a crash between the state advance and a post-merge view
-    * refresh left the views pointed at version dirs the next batch's GC
-    * deletes — the warehouse leg of the stranding class the r16 replay
-    * state closed (the r16 advisory, Runner-side). A crash BEFORE the
+    * post-merge pass: dims publish a NEW [[graft.operators
+    * .VersionedState]] version each batch, so a crash between the state
+    * advance and a post-merge view refresh left the views pointed at
+    * versions that grace GC later deletes — the warehouse leg of the
+    * stranding class the r16 replay state closed (the r16 advisory,
+    * Runner-side). A crash BEFORE the
     * advance replays the batch and re-registers; a crash after it has
     * already registered. Sink calls may arrive concurrently from the
     * bounded dim pool — distinct view names, and the database is

@@ -230,7 +230,7 @@ object Runner {
       cacheMemoryBound: Long = factCacheMemoryBoundBytes,
       stableRecordIds: Boolean = false): Seq[String] = WriterLease.withLease(spark, processedRoot) {
     // Snapshot commits are atomic against READERS, but two concurrent
-    // WRITERS could still stage the same `_versions/<n>` directory or
+    // WRITERS could still stage the same next version directory or
     // interleave GC with a commit — the same second-writer class the
     // index roots close with this lease (one rebuild per processed root;
     // a second refuses loudly instead of corrupting a stage).

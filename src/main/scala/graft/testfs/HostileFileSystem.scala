@@ -26,8 +26,8 @@ import graft.ForkFreeRawLocalFileSystem
   *     windows into drills. Rename is also STRICT: existing dest or
   *     missing dest parent returns false (HDFS semantics), so code
   *     that leans on POSIX mv leniency fails loudly here.
-  *  2. **Metered metadata ops**: list/stat/open/create/delete/rename/
-  *     mkdirs counts per operation ([[counts]]) — LIST is the cost
+  *  2. **Metered metadata ops**: list/stat/exists/open/create/delete/
+  *     rename/mkdirs counts per operation ([[counts]]) — LIST is the cost
   *     center on object stores, and the fold-manifest work's claim
   *     ("plans scans without listing") is asserted from these counters
   *     rather than believed.
@@ -75,6 +75,29 @@ class HostileFileSystem extends ForkFreeRawLocalFileSystem {
     super.create(f, permission, overwrite, bufferSize, replication, blockSize, progress)
   }
 
+  // RawLocalFileSystem overrides these directly: they never reach the
+  // overloads above.
+
+  override def create(f: Path, overwrite: Boolean, bufferSize: Int,
+      replication: Short, blockSize: Long,
+      progress: Progressable): org.apache.hadoop.fs.FSDataOutputStream = {
+    count("create")
+    super.create(f, overwrite, bufferSize, replication, blockSize, progress)
+  }
+
+  override def createNonRecursive(f: Path, permission: FsPermission,
+      flags: java.util.EnumSet[org.apache.hadoop.fs.CreateFlag], bufferSize: Int,
+      replication: Short, blockSize: Long,
+      progress: Progressable): org.apache.hadoop.fs.FSDataOutputStream = {
+    count("create")
+    super.createNonRecursive(f, permission, flags, bufferSize, replication, blockSize, progress)
+  }
+
+  override def exists(f: Path): Boolean = {
+    count("exists")
+    super.exists(f)
+  }
+
   override def delete(f: Path, recursive: Boolean): Boolean = {
     count("delete")
     super.delete(f, recursive)
@@ -83,6 +106,11 @@ class HostileFileSystem extends ForkFreeRawLocalFileSystem {
   override def mkdirs(f: Path, permission: FsPermission): Boolean = {
     count("mkdirs")
     super.mkdirs(f, permission)
+  }
+
+  override def mkdirs(f: Path): Boolean = {
+    count("mkdirs")
+    super.mkdirs(f)
   }
 
   /** Object stores have no mtime mutation: with [[denySetTimes]] armed
@@ -97,12 +125,13 @@ class HostileFileSystem extends ForkFreeRawLocalFileSystem {
     super.setTimes(f, mtime, atime)
   }
 
-  /** Copy-then-delete with strict preconditions and crash hooks. */
+  /** Copy-then-delete with strict preconditions and crash hooks. The
+    * precondition probes are part of the one counted rename. */
   override def rename(src: Path, dst: Path): Boolean = {
     count("rename")
-    if (!exists(src)) return false
-    if (exists(dst)) return false
-    if (dst.getParent != null && !exists(dst.getParent)) return false
+    if (!super.exists(src)) return false
+    if (super.exists(dst)) return false
+    if (dst.getParent != null && !super.exists(dst.getParent)) return false
     maybeCrash("before-copy", dst)
     val copied = FileUtil.copy(this, src, this, dst, false, getConf)
     // Torn-dest drill: the observable state of dying mid-copy — dest

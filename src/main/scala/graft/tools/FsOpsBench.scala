@@ -66,7 +66,7 @@ object FsOpsBench {
     println(s"# hostile bootstrap+compact ${f(bootSec)}s corpus_sig_rows=$corpusRows")
 
     // --- listing economics: manifest arm vs listing arm -------------
-    val ops = Seq("listStatus", "getFileStatus", "open", "create", "rename", "delete")
+    val ops = Seq("listStatus", "getFileStatus", "exists", "open", "create", "rename", "delete")
     def armCounts(newSigs: DataFrame, key: String, disable: Boolean): (Long, Map[String, Long], Double) = {
       if (disable) sys.props("graft.fold.manifest.disable") = "true"
       try {

@@ -369,28 +369,33 @@ class DedupPipelineSpec extends SparkSpec {
   }
 
   test("pinned snapshot: scheduled materialization, stale until refreshed") {
-    val root = Files.createTempDirectory("graft_dp_pin").toString
-    DedupPipeline.runOnce(spark, root, docs(batchA: _*), batchKey = Some("b1"))
-    DedupPipeline.snapshotManifest(spark, root, keepVersions = 2)
-    def asMap(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => r.getLong(0) -> r.getBoolean(2)).toMap
-    val pinned1 = asMap(DedupPipeline.pinnedManifest(spark, root))
-    assert(pinned1 === asMap(DedupPipeline.keeperManifest(spark, root)),
-      "a fresh pin equals the live manifest")
+    // One superseded pin kept by count, none by grace.
+    SparkSpec.withProps("graft.swap.grace.ms" -> "0", "graft.swap.keep.versions" -> "1") {
+      val root = Files.createTempDirectory("graft_dp_pin").toString
+      DedupPipeline.runOnce(spark, root, docs(batchA: _*), batchKey = Some("b1"))
+      DedupPipeline.snapshotManifest(spark, root)
+      def asMap(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(r => r.getLong(0) -> r.getBoolean(2)).toMap
+      val pinned1 = asMap(DedupPipeline.pinnedManifest(spark, root))
+      assert(pinned1 === asMap(DedupPipeline.keeperManifest(spark, root)),
+        "a fresh pin equals the live manifest")
 
-    DedupPipeline.runOnce(spark, root, docs(batchB: _*), batchKey = Some("b2"))
-    // The pin is reproducible state: batch 2 must NOT move it...
-    assert(asMap(DedupPipeline.pinnedManifest(spark, root)) === pinned1)
-    // ...while the live manifest reflects the merge immediately.
-    assert(asMap(DedupPipeline.keeperManifest(spark, root)) !== pinned1)
-    // A scheduled refresh re-pins; the previous version stays readable
-    // under keepVersions = 2 (time travel / overlapping readers).
-    DedupPipeline.snapshotManifest(spark, root, keepVersions = 2)
-    assert(asMap(DedupPipeline.pinnedManifest(spark, root)) ===
-      asMap(DedupPipeline.keeperManifest(spark, root)))
-    val versions = graft.sources.LandingLog.listVersions(root, "keeper_manifest")
-    assert(versions.size == 2, s"two retained versions expected: $versions")
-    assert(asMap(graft.sources.LandingLog.readSnapshotAt(spark, root,
-      "keeper_manifest", versions.head)) === pinned1)
+      DedupPipeline.runOnce(spark, root, docs(batchB: _*), batchKey = Some("b2"))
+      // The pin is reproducible state: batch 2 must NOT move it...
+      assert(asMap(DedupPipeline.pinnedManifest(spark, root)) === pinned1)
+      // ...while the live manifest reflects the merge immediately.
+      assert(asMap(DedupPipeline.keeperManifest(spark, root)) !== pinned1)
+      // A scheduled refresh re-pins; the previous version stays readable
+      // under graft.swap.keep.versions = 1 (time travel / overlapping
+      // readers).
+      DedupPipeline.snapshotManifest(spark, root)
+      assert(asMap(DedupPipeline.pinnedManifest(spark, root)) ===
+        asMap(DedupPipeline.keeperManifest(spark, root)))
+      val versions = graft.operators.VersionedState.committedVersions(
+        graft.operators.VersionedState.fsOf(spark, root), s"$root/keeper_manifest")
+      assert(versions.size == 2, s"two retained versions expected: $versions")
+      assert(asMap(graft.sources.LandingLog.readSnapshotAt(spark, root,
+        "keeper_manifest", versions.head)) === pinned1)
+    }
   }
 }

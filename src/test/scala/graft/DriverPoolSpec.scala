@@ -5,6 +5,7 @@ import java.util.concurrent.atomic.AtomicBoolean
 
 import graft.sources.{LandingLog, WatermarkStore}
 import graft.star.Runner
+import graft.testfs.HostileFileSystem
 import org.apache.spark.sql.functions._
 
 /** The star package's bounded driver pool ([[Runner.inParallel]]): every
@@ -91,5 +92,35 @@ class DriverPoolSpec extends SparkSpec {
     }
     assert(out.head == 0)
     assert(store.read() == Map("t0" -> updates.toString))
+  }
+
+  test("a second WatermarkStore on the same path reads while the first publishes, and never fails") {
+    // The cross-instance twin of the gate test above: no lock is shared,
+    // so only StateFile.read itself can settle a read that races a
+    // publish. Every read must return a published value — never an
+    // error, never the empty "no state yet" answer, never an older value
+    // than a read before it.
+    HostileFileSystem.install(spark.sparkContext.hadoopConfiguration)
+    val local = Files.createTempDirectory("graft_pool_wm2").toString
+    Seq(s"$local/file", s"hostile://$local/hostile").foreach { root =>
+      val path = s"$root/state/tracking.json"
+      val writer = new WatermarkStore(path)
+      val reader = new WatermarkStore(path)
+      writer.update(Map("t0" -> "0"))
+      val updates = 200
+      Runner.inParallel(List(0, 1), 2) {
+        case 0 => (1 to updates).foreach(i => writer.update(Map("t0" -> i.toString)))
+        case _ =>
+          var last = 0
+          while (last != updates) {
+            val seen = reader.read().get("t0")
+            assert(seen.isDefined, s"$root: a read racing a publish returned no state")
+            val n = seen.get.toInt
+            assert(n >= last, s"$root: read $n after $last")
+            last = n
+          }
+      }
+      assert(reader.read() == Map("t0" -> updates.toString))
+    }
   }
 }

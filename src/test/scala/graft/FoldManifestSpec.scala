@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 
+import graft.SparkSpec.withProps
 import graft.operators.{BatchLog, CosineDedupIndex, SignatureIndex}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -31,16 +32,6 @@ class FoldManifestSpec extends SparkSpec {
 
   private def uniqueText(i: Long): String =
     (0 until 9).map(j => s"w${i}x$j").mkString(" ")
-
-  private def withProps[T](props: (String, String)*)(body: => T): T = {
-    val prev = props.map { case (k, _) => k -> sys.props.get(k) }
-    props.foreach { case (k, v) => sys.props(k) = v }
-    try body
-    finally prev.foreach {
-      case (k, Some(v)) => sys.props(k) = v
-      case (k, None) => sys.props -= k
-    }
-  }
 
   private def fs = org.apache.hadoop.fs.FileSystem.get(
     spark.sparkContext.hadoopConfiguration)

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{AnnIndex, BatchLog, SignatureIndex}
+import graft.operators.{AnnIndex, BatchLog, SignatureIndex, VersionedState}
 import graft.sources.{LandingLog, StateFile, WatermarkStore}
 import graft.testfs.HostileFileSystem
 import org.apache.spark.sql.DataFrame
@@ -59,20 +59,26 @@ class HostileFsSpec extends SparkSpec {
   test("snapshot versioning on a hostile root: stage invisible, marker commits, GC respects retention") {
     val root = hostileRoot("snap")
     import spark.implicits._
-    LandingLog.writeSnapshot(Seq((1L, "a")).toDF("id", "v"), root, "t", keepVersions = 2)
-    assert(rows(LandingLog.readSnapshot(spark, root, "t")) == Set("[1,a]"))
-    // A fully-staged but uncommitted version stays invisible (the crash
-    // -before-marker state).
-    val staged = LandingLog.stageSnapshot(Seq((2L, "b")).toDF("id", "v"), root, "t")
-    assert(rows(LandingLog.readSnapshot(spark, root, "t")) == Set("[1,a]"),
-      "an uncommitted stage must not be readable")
-    LandingLog.commitSnapshot(root, "t", staged, keepVersions = 2)
-    assert(rows(LandingLog.readSnapshot(spark, root, "t")) == Set("[2,b]"))
-    assert(LandingLog.listVersions(root, "t") == Seq(1L, 2L),
-      "keepVersions=2 must retain the previous version")
-    LandingLog.writeSnapshot(Seq((3L, "c")).toDF("id", "v"), root, "t", keepVersions = 1)
-    assert(LandingLog.listVersions(root, "t") == Seq(3L),
-      "keepVersions=1 must GC older versions")
+    def listVersions: Seq[Long] =
+      VersionedState.committedVersions(VersionedState.fsOf(spark, root), s"$root/t")
+    SparkSpec.withProps("graft.swap.grace.ms" -> "0", "graft.swap.keep.versions" -> "1") {
+      LandingLog.writeSnapshot(Seq((1L, "a")).toDF("id", "v"), root, "t")
+      assert(rows(LandingLog.readSnapshot(spark, root, "t")) == Set("[1,a]"))
+      // A fully-staged but uncommitted version stays invisible (the crash
+      // -before-marker state).
+      val staged = LandingLog.stageSnapshot(Seq((2L, "b")).toDF("id", "v"), root, "t")
+      assert(rows(LandingLog.readSnapshot(spark, root, "t")) == Set("[1,a]"),
+        "an uncommitted stage must not be readable")
+      LandingLog.commitSnapshot(root, "t", staged)
+      assert(rows(LandingLog.readSnapshot(spark, root, "t")) == Set("[2,b]"))
+      assert(listVersions == Seq(1L, 2L),
+        "graft.swap.keep.versions=1 must retain the previous version")
+    }
+    SparkSpec.withProps("graft.swap.grace.ms" -> "0", "graft.swap.keep.versions" -> "0") {
+      LandingLog.writeSnapshot(Seq((3L, "c")).toDF("id", "v"), root, "t")
+      assert(listVersions == Seq(3L),
+        "zero grace and no kept versions must GC older versions")
+    }
     assert(rows(LandingLog.readSnapshotAt(spark, root, "t", 3L)) == Set("[3,c]"))
   }
 

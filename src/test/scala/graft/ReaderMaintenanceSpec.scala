@@ -415,32 +415,33 @@ class ReaderMaintenanceSpec extends SparkSpec {
     assert(rows(CosineDedupIndex.readIndex(spark, root)) == clean)
   }
 
-  test("star snapshots: keepVersions is the count-based GRACE knob — an in-flight reader survives one overwrite") {
-    // The versioned-root half of the reader contract (SCALE.md): the
-    // index logs' whole-directory swaps give readers loud-retryable;
-    // the star snapshots' `_versions` layout can do better — with
-    // keepVersions >= 2 the outgoing version outlives in-flight scans
-    // for a full commit interval (the LSM grace answer, count-based),
-    // while keepVersions = 1 is the documented loud missing-file shape.
+  test("star snapshots: an in-flight reader survives an overwrite within the grace period; zero grace fails loud") {
+    // The versioned-root half of the reader contract (SCALE.md): star
+    // snapshots commit through VersionedState like the index logs, so
+    // the outgoing version outlives in-flight scans for the grace
+    // period, while zero grace is the documented loud missing-file
+    // shape.
     import graft.sources.LandingLog
     val root = hostileRoot("snapgrace")
     def df(n: Int) = (0 until n).map(i => (i.toLong, s"v$n-$i")).toDF("id", "s")
     def want(n: Int) = df(n).collect().map(_.toString).toSet
 
-    // keepVersions = 2: the reader's pinned version survives the commit.
-    LandingLog.writeSnapshot(df(100), root, "graced", keepVersions = 2)
+    // Default retention: the reader's pinned version survives the commit.
+    LandingLog.writeSnapshot(df(100), root, "graced")
     val planned = LandingLog.readSnapshot(spark, root, "graced")
-    LandingLog.writeSnapshot(df(200), root, "graced", keepVersions = 2)
+    LandingLog.writeSnapshot(df(200), root, "graced")
     assert(rows(planned) == want(100),
       "a reader planned on version 1 must complete against it under the grace")
     assert(rows(LandingLog.readSnapshot(spark, root, "graced")) == want(200),
       "a fresh read resolves the new committed version")
 
-    // keepVersions = 1: the same interleaving is the loud contract.
-    LandingLog.writeSnapshot(df(100), root, "ungraced", keepVersions = 1)
-    val planned1 = LandingLog.readSnapshot(spark, root, "ungraced")
-    LandingLog.writeSnapshot(df(200), root, "ungraced", keepVersions = 1)
-    val e = intercept[Exception] { planned1.collect() }
+    // Zero grace: the same interleaving is the loud contract.
+    val e = SparkSpec.withProps("graft.swap.grace.ms" -> "0") {
+      LandingLog.writeSnapshot(df(100), root, "ungraced")
+      val planned1 = LandingLog.readSnapshot(spark, root, "ungraced")
+      LandingLog.writeSnapshot(df(200), root, "ungraced")
+      intercept[Exception] { planned1.collect() }
+    }
     def missing(t: Throwable): Boolean = {
       var c: Throwable = t
       while (c != null) {
@@ -451,7 +452,7 @@ class ReaderMaintenanceSpec extends SparkSpec {
       }
       false
     }
-    assert(missing(e), s"keepVersions=1 must fail LOUD (missing file), got: $e")
+    assert(missing(e), s"zero grace must fail LOUD (missing file), got: $e")
   }
 
   test("label compaction crashed MID-COPY (torn dest) heals to the exact labels — the torn dest is never adopted") {

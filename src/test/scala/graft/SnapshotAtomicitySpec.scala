@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import graft.SparkSpec.withProps
+import graft.operators.VersionedState
 import graft.sources.LandingLog
 import org.apache.spark.sql.functions._
 
@@ -19,43 +21,58 @@ import org.apache.spark.sql.functions._
 class SnapshotAtomicitySpec extends SparkSpec {
   import spark.implicits._
 
+  private def currentVersion(root: String, table: String): Long =
+    VersionedState.currentVersion(VersionedState.fsOf(spark, root), s"$root/$table")
+
+  private def listVersions(root: String, table: String): Seq[Long] =
+    VersionedState.committedVersions(VersionedState.fsOf(spark, root), s"$root/$table")
+
   private def rows(df: org.apache.spark.sql.DataFrame): Set[(Long, String)] =
     df.select(col("id").cast("long"), col("v")).collect()
       .map(r => (r.getLong(0), r.getString(1))).toSet
 
   test("a crash before commit leaves the previous snapshot readable") {
-    val root = Files.createTempDirectory("snap_atomic").toString
-    val a = Seq((1L, "a1"), (2L, "a2")).toDF("id", "v")
-    val b = Seq((1L, "b1"), (2L, "b2"), (3L, "b3")).toDF("id", "v")
+    // Zero grace: the superseded version is GC'd by the next commit.
+    withProps("graft.swap.grace.ms" -> "0", "graft.swap.keep.versions" -> "0") {
+      val root = Files.createTempDirectory("snap_atomic").toString
+      val a = Seq((1L, "a1"), (2L, "a2")).toDF("id", "v")
+      val b = Seq((1L, "b1"), (2L, "b2"), (3L, "b3")).toDF("id", "v")
 
-    LandingLog.writeSnapshot(a, root, "t")
-    assert(rows(LandingLog.readSnapshot(spark, root, "t")) === rows(a))
-    assert(LandingLog.currentVersion(root, "t") === 1L)
+      LandingLog.writeSnapshot(a, root, "t")
+      assert(rows(LandingLog.readSnapshot(spark, root, "t")) === rows(a))
+      assert(currentVersion(root, "t") === 1L)
 
-    // Crash AFTER the full data write, BEFORE the commit marker: the
-    // staged v2 directory exists and is complete, but no reader may
-    // resolve it.
-    val staged = LandingLog.stageSnapshot(b, root, "t")
-    assert(staged === 2L)
-    assert(Files.isDirectory(Paths.get(s"$root/t/_versions/00000002")))
-    assert(rows(LandingLog.readSnapshot(spark, root, "t")) === rows(a))
-    assert(LandingLog.readSnapshotIfExists(spark, root, "t").map(rows) === Some(rows(a)))
-    assert(LandingLog.listSnapshots(root) === Seq("t"))
+      // Crash AFTER the full data write, BEFORE the commit marker: the
+      // staged v2 directory exists and is complete, but no reader may
+      // resolve it.
+      val staged = LandingLog.stageSnapshot(b, root, "t")
+      assert(staged === 2L)
+      assert(Files.isDirectory(Paths.get(s"$root/t/_versions/00000002")))
+      assert(rows(LandingLog.readSnapshot(spark, root, "t")) === rows(a))
+      assert(LandingLog.readSnapshotIfExists(spark, root, "t").map(rows) === Some(rows(a)))
+      assert(LandingLog.listSnapshots(root) === Seq("t"))
 
-    // Crash MID-data-write: a partial, non-parquet version directory.
-    val junk = Paths.get(s"$root/t/_versions/00000003")
-    Files.createDirectories(junk)
-    Files.write(junk.resolve("part-00000.parquet"), Array[Byte](1, 2, 3))
-    assert(rows(LandingLog.readSnapshot(spark, root, "t")) === rows(a))
+      // Crash MID-data-write: a partial, non-parquet version directory.
+      val junk = Paths.get(s"$root/t/_versions/00000003")
+      Files.createDirectories(junk)
+      Files.write(junk.resolve("part-00000.parquet"), Array[Byte](1, 2, 3))
+      assert(rows(LandingLog.readSnapshot(spark, root, "t")) === rows(a))
 
-    // Recovery: a clean retry restages the same next version (overwrite
-    // clears the abandoned stage) and commits; GC removes every
-    // superseded/crashed version.
-    LandingLog.writeSnapshot(b, root, "t")
-    assert(LandingLog.currentVersion(root, "t") === 2L)
-    assert(rows(LandingLog.readSnapshot(spark, root, "t")) === rows(b))
-    assert(!Files.exists(Paths.get(s"$root/t/_versions/00000001")))
-    assert(!Files.exists(junk))
+      // Recovery: a clean retry restages the same next version (overwrite
+      // clears the abandoned stage) and commits; GC removes the
+      // superseded version.
+      LandingLog.writeSnapshot(b, root, "t")
+      assert(currentVersion(root, "t") === 2L)
+      assert(rows(LandingLog.readSnapshot(spark, root, "t")) === rows(b))
+      assert(!Files.exists(Paths.get(s"$root/t/_versions/00000001")))
+      // The junk sits above the current version, where only a stage can
+      // write: it is never read, and the next commit that reaches v3
+      // overwrites it.
+      val c = Seq((3L, "c3")).toDF("id", "v")
+      LandingLog.writeSnapshot(c, root, "t")
+      assert(currentVersion(root, "t") === 3L)
+      assert(rows(LandingLog.readSnapshot(spark, root, "t")) === rows(c))
+    }
   }
 
   test("a table whose only write crashed is not a snapshot") {
@@ -81,26 +98,28 @@ class SnapshotAtomicitySpec extends SparkSpec {
     val b = (1 to 100).map(i => (i.toLong, 20240101L, s"s$i")).toDF("id", "created_date", "v")
     LandingLog.writeSnapshot(b, root, "f", partitionBy = Seq("created_date"))
     assert(LandingLog.readSnapshot(spark, root, "f").count() === 100L)
-    assert(LandingLog.currentVersion(root, "f") === 2L)
+    assert(currentVersion(root, "f") === 2L)
   }
 
-  test("time travel: keepVersions retains readable history, GC respects it") {
-    val root = Files.createTempDirectory("snap_atomic").toString
-    def df(tag: String) = Seq((1L, tag)).toDF("id", "v")
-    LandingLog.writeSnapshot(df("v1"), root, "t", keepVersions = 2)
-    LandingLog.writeSnapshot(df("v2"), root, "t", keepVersions = 2)
-    assert(LandingLog.listVersions(root, "t") === Seq(1L, 2L))
-    assert(rows(LandingLog.readSnapshot(spark, root, "t")) === rows(df("v2")))
-    assert(rows(LandingLog.readSnapshotAt(spark, root, "t", 1L)) === rows(df("v1")),
-      "the previous version stays readable under retention")
+  test("time travel: graft.swap.keep.versions retains readable history, GC respects it") {
+    withProps("graft.swap.grace.ms" -> "0", "graft.swap.keep.versions" -> "1") {
+      val root = Files.createTempDirectory("snap_atomic").toString
+      def df(tag: String) = Seq((1L, tag)).toDF("id", "v")
+      LandingLog.writeSnapshot(df("v1"), root, "t")
+      LandingLog.writeSnapshot(df("v2"), root, "t")
+      assert(listVersions(root, "t") === Seq(1L, 2L))
+      assert(rows(LandingLog.readSnapshot(spark, root, "t")) === rows(df("v2")))
+      assert(rows(LandingLog.readSnapshotAt(spark, root, "t", 1L)) === rows(df("v1")),
+        "the previous version stays readable under retention")
 
-    // A third write under keepVersions=2 GCs v1 but keeps v2.
-    LandingLog.writeSnapshot(df("v3"), root, "t", keepVersions = 2)
-    assert(LandingLog.listVersions(root, "t") === Seq(2L, 3L))
-    assert(rows(LandingLog.readSnapshotAt(spark, root, "t", 2L)) === rows(df("v2")))
-    intercept[IllegalArgumentException](
-      LandingLog.readSnapshotAt(spark, root, "t", 1L))
-    assert(!Files.exists(Paths.get(s"$root/t/_versions/00000001")))
+      // A third write keeping one superseded version GCs v1 but keeps v2.
+      LandingLog.writeSnapshot(df("v3"), root, "t")
+      assert(listVersions(root, "t") === Seq(2L, 3L))
+      assert(rows(LandingLog.readSnapshotAt(spark, root, "t", 2L)) === rows(df("v2")))
+      intercept[IllegalArgumentException](
+        LandingLog.readSnapshotAt(spark, root, "t", 1L))
+      assert(!Files.exists(Paths.get(s"$root/t/_versions/00000001")))
+    }
   }
 
   test("legacy unversioned layout still resolves") {

@@ -13,4 +13,16 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
 object SparkSpec {
   lazy val session: SparkSession = GraftSession.build("graft-test")
+
+  /** Run `body` with the given system properties set, restoring the
+    * previous values after. */
+  def withProps[T](props: (String, String)*)(body: => T): T = {
+    val prev = props.map { case (k, _) => k -> sys.props.get(k) }
+    props.foreach { case (k, v) => sys.props(k) = v }
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => sys.props(k) = v
+      case (k, None) => sys.props -= k
+    }
+  }
 }

@@ -48,7 +48,7 @@ private[graft] object BatchLog {
     * [[withManifestSnapshot]]: inside a read-only section every
     * logical→physical resolution of the same table dir answers from the
     * first probe — zero extra FS ops AND one consistent version across
-    * the section's sub-reads (a swap committing mid-section cannot give
+    * the section's sub-reads (a rewrite committing mid-section cannot give
     * the postings read version n and the signatures read version n+1).
     * Same soundness argument as the manifest snapshot: fold state is
     * immutable per version, and a read-only section plans against one
@@ -95,7 +95,7 @@ private[graft] object BatchLog {
     * they ride the directory's commit/replace/compact lifecycle).
     * NOTE: resolution-free — callers on a possibly-versioned LOGICAL
     * table dir use [[dirOfResolved]]; this form is for paths that are
-    * already physical (staged tmps, dirs from a resolved listing). */
+    * already physical (staged versions, dirs from a resolved listing). */
   def dirOf(path: String, key: String): String = dirFor(path, key)
 
   /** [[dirOf]] through the version pointer — the batch directory as a
@@ -348,7 +348,7 @@ private[graft] object BatchLog {
     if (retiredKeys(spark, path).contains(key)) return false
     // Appends land INSIDE the current version of a versioned root —
     // append-only additions to the committed state (readers' earlier
-    // listing snapshots are never invalidated); only a swap commit
+    // listing snapshots are never invalidated); only a rewrite commit
     // advances the version pointer.
     val rp = resolve(spark, path)
     writeMarker(spark, rp)
@@ -488,8 +488,8 @@ private[graft] object BatchLog {
   // ------------------------------------------- fold-file manifests
 
   /** `_fold_manifest.json`, written into a FOLD batch directory in the
-    * same transaction as its data (inside the staged tmp for
-    * compaction/refreeze rewrites — it rides the atomic swap; right
+    * same transaction as its data (inside the staged version for
+    * compaction/refreeze rewrites — it commits with the fold; right
     * after the data commit for rebuild-written derived dirs): the
     * directory's complete data-file list (relative path, length,
     * mtime) plus the data schema (one footer, read at write time) and
@@ -532,8 +532,8 @@ private[graft] object BatchLog {
     * prevented by construction PLUS one granularity guard: fold
     * directories are immutable after commit, and the only way a
     * manifest at a given path can ever change (a root deleted and
-    * rebuilt from scratch, a crashed copy-based swap re-run by
-    * recovery) rewrites the manifest FILE, changing its stat — the
+    * rebuilt from scratch, a crashed stage rewritten by the next one)
+    * rewrites the manifest FILE, changing its stat — the
     * consult then misses and re-reads. The residual window is the
     * STORE'S mtime granularity: object stores report LastModified at
     * 1-second ticks, so a same-length rewrite inside one tick stats
@@ -624,7 +624,7 @@ private[graft] object BatchLog {
     * only for read-only sections: fold directories are immutable after
     * commit and a read-only operation plans against one listing
     * snapshot anyway, so within it the first consult's answer IS the
-    * answer. Never wrap a section that writes or swaps fold
+    * answer. Never wrap a section that writes or rewrites fold
     * directories — a fresh fold would read as its own stale negative.
     *
     * A PLAIN ThreadLocal, deliberately not `DynamicVariable` (whose
@@ -645,24 +645,6 @@ private[graft] object BatchLog {
       resolveSnapshot.set(scala.collection.mutable.Map.empty[String, String])
       try body finally { manifestSnapshot.remove(); resolveSnapshot.remove() }
     }
-
-  /** Run `body` OUTSIDE any open manifest snapshot — the escape hatch
-    * for a fallback path that may RUN RECOVERY (and so replace fold
-    * directories) after its caller already opened a read-only
-    * snapshot. Inside, consults go back to the stat-validated cache,
-    * so a directory recovery just healed can never be answered from
-    * the stale snapshot map (the r16 advisory on
-    * `SignatureIndex.deltaPairsIndexed`'s full-scan fallback). */
-  def withoutManifestSnapshot[T](body: => T): T = {
-    val prev = manifestSnapshot.get()
-    val prevR = resolveSnapshot.get()
-    if (prev == null) body
-    else {
-      manifestSnapshot.remove()
-      resolveSnapshot.remove()
-      try body finally { manifestSnapshot.set(prev); if (prevR != null) resolveSnapshot.set(prevR) }
-    }
-  }
 
   /** The directory's manifest, or None (absent, torn, unsupported
     * shape, or the contrast switch) — None always means "use the
@@ -797,7 +779,7 @@ private[graft] object BatchLog {
   /** Keys folded away by a past rewrite ([[stageRewrite]]) — replays of
     * these must be no-ops, and [[nextAutoKey]] must never re-mint them.
     * Stored as one sanitized key per line in a hidden ledger file that
-    * travels with the log directory through the atomic swap. */
+    * travels with the log directory into every rewritten version. */
   def retiredKeys(spark: SparkSession, path: String): Set[String] = {
     val fs = fsOf(spark, path)
     val f = new HPath(resolve(spark, path), retiredName)
@@ -830,26 +812,37 @@ private[graft] object BatchLog {
   def pointLookupWriteOptions: Map[String, String] =
     Map("parquet.block.size" -> (1L << 20).toString)
 
-  private def writeFold(df: DataFrame, tmpPath: String, key: String,
+  private def writeFold(df: DataFrame, stageDir: String, key: String,
       partitionBy: Seq[String], writeOptions: Map[String, String]): Unit = {
-    writeCounted(df, dirFor(tmpPath, key), partitionBy, writeOptions)
-    // Manifest inside the staged directory — it rides the commit swap
-    // with the data, so a fold is either absent or manifest-described.
-    writeFoldManifest(df.sparkSession, dirFor(tmpPath, key))
-    writeMarker(df.sparkSession, tmpPath)
+    writeCounted(df, dirFor(stageDir, key), partitionBy, writeOptions)
+    // Manifest inside the staged version — it commits with the data,
+    // so a fold is either absent or manifest-described.
+    writeFoldManifest(df.sparkSession, dirFor(stageDir, key))
+    writeMarker(df.sparkSession, stageDir)
   }
 
-  /** Stage a full-log REWRITE (compaction, refreeze) of the log at
-    * `srcPath` into `tmpPath` — one FRESH-auto-keyed fold directory plus
-    * marker plus the retirement ledger carrying every key the fold
-    * absorbs (the prior ledger ∪ the keys being folded), ready for an
-    * atomic swap onto the log root ([[Tombstones.commitCompaction]] or
-    * the operator's own rename commit). Returns the fold's minted batch
-    * key, for operators that stow layout sidecars inside the staged fold
-    * directory before the swap. */
-  def stageRewrite(df: DataFrame, srcPath: String, tmpPath: String,
-      partitionBy: Seq[String] = Nil,
-      writeOptions: Map[String, String] = Map.empty): String = {
+  /** A full-log REWRITE (compaction, refreeze) of the log at `path`:
+    * [[stageRewrite]] `df` into the log's next version
+    * ([[VersionedState.stage]]), let `extras(stageDir, foldKey)` add
+    * what else the version carries (layout sidecars, `_quantizer`,
+    * `_mask`), then publish it with [[VersionedState.commit]]. The new
+    * version has no `_tombstones`, so a rewrite of a live (tombstones-
+    * excluded) frame clears them in the same commit. */
+  def rewrite(df: DataFrame, path: String, partitionBy: Seq[String] = Nil,
+      writeOptions: Map[String, String] = Map.empty)(
+      extras: (String, String) => Unit = (_, _) => ()): Unit = {
+    val fs = fsOf(df.sparkSession, path)
+    val (v, stage) = VersionedState.stage(fs, path)
+    extras(stage, stageRewrite(df, path, stage, partitionBy, writeOptions))
+    VersionedState.commit(fs, path, v)
+  }
+
+  /** Write the fold of [[rewrite]] into `stageDir`: one FRESH-auto-keyed
+    * fold directory plus marker plus the retirement ledger carrying
+    * every key the fold absorbs (the prior ledger ∪ the keys being
+    * folded). Returns the fold's minted batch key. */
+  private[graft] def stageRewrite(df: DataFrame, srcPath: String, stageDir: String,
+      partitionBy: Seq[String], writeOptions: Map[String, String]): String = {
     val spark = df.sparkSession
     // Retire exactly the keys whose files the fold's plan actually READ
     // (`df.inputFiles` — the FileIndex snapshot the scan resolved when
@@ -858,7 +851,7 @@ private[graft] object BatchLog {
     // and the probe would be retired WITHOUT its rows being absorbed —
     // the ledger then vetoes its at-least-once replay forever (permanent
     // loss). Aligned with the plan's own listing, such a batch's
-    // directory still dies in the commit swap, but its key stays
+    // directory is left behind in the superseded version, but its key stays
     // unretired, so the replay lands it again. (Uncommitted partials
     // fall out for free: their files are invisible to the listing.)
     val fs = fsOf(spark, srcPath)
@@ -902,8 +895,8 @@ private[graft] object BatchLog {
         "(lineage truncated?) — it must be derived from the log it rewrites")
     val folded = retiredKeys(spark, srcPath) ++ absorbed
     val foldKey = nextAutoKey(spark, srcPath)
-    writeFold(df, tmpPath, foldKey, partitionBy, writeOptions)
-    writeRetired(spark, tmpPath, folded)
+    writeFold(df, stageDir, foldKey, partitionBy, writeOptions)
+    writeRetired(spark, stageDir, folded)
     foldKey
   }
 }

@@ -26,8 +26,8 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   * Persistence is the same append-only shape as [[SignatureIndex]]: each
   * batch appends only the rows it (re)defines, stamped with a monotone
   * batch number; [[read]] folds the log keep-last per doc (one shuffle on
-  * doc_id); [[compact]] rewrites the fold and atomically swaps it in (the
-  * same versioned commit as [[Tombstones.commitCompaction]]).
+  * doc_id); [[compact]] rewrites the fold as the log's next version
+  * (the same [[VersionedState]] commit as every index rewrite).
   * Batch write cost is O(changed rows); only compaction pays a corpus
   * rewrite, on the operator's schedule.
   *
@@ -43,21 +43,10 @@ object ClusterLabels {
   private def emptyLabels(spark: SparkSession): DataFrame =
     spark.range(0).select(col("id").as("doc_id"), col("id").as("label"))
 
-  /** Crash recovery for [[compact]]'s swap window, run before every
-    * read: the shared intent-recorded protocol
-    * ([[Tombstones.recoverSwap]]). A compaction that died after its
-    * intent is completed from its recorded stage — on a copy+delete FS
-    * a crash mid-copy leaves a TORN version dir, which recovery
-    * replaces from the complete stage instead of adopting; a stage
-    * without an intent never began its commit and is dropped. */
-  private def recover(spark: SparkSession, root: String): Unit =
-    Tombstones.recoverSwap(spark, s"${dir(root)}.__compact_tmp", dir(root))
-
   /** Current labels `(doc_id, label)`: keep-last per doc over the
     * append-only delta log (later batches win). Empty frame when no
     * batch was ever merged. */
   def read(spark: SparkSession, root: String): DataFrame = {
-    ReadGuard.recoverForRead(spark, root)(recover(spark, root))
     // Refuse a legacy (pre-batch-keyed) log BEFORE the hasData probe:
     // hasData sees no batch_key= dirs in a flat-append root and would
     // otherwise report the log as EMPTY — silently ignoring the entire
@@ -76,7 +65,6 @@ object ClusterLabels {
     * [[compact]] repays (reads fold `logRows` rows to produce
     * `liveDocs`). Both are metadata-scale counts. */
   def logDepth(spark: SparkSession, root: String): (Long, Long) = {
-    ReadGuard.recoverForRead(spark, root)(recover(spark, root))
     BatchLog.requireFormat(spark, dir(root), "ClusterLabels.logDepth")
     if (!BatchLog.hasData(spark, dir(root))) (0L, 0L)
     else {
@@ -107,7 +95,6 @@ object ClusterLabels {
     * totals — exposed for the spec that pins fast path == fold. */
   private[graft] def labelStatsDetail(
       spark: SparkSession, root: String): (Long, Long, Long, Boolean) = {
-    ReadGuard.recoverForRead(spark, root)(recover(spark, root))
     BatchLog.requireFormat(spark, dir(root), "ClusterLabels.labelStats")
     if (!BatchLog.hasData(spark, dir(root))) (0L, 0L, 0L, false)
     else {
@@ -367,7 +354,6 @@ object ClusterLabels {
       newDocs: DataFrame, batchKey: Option[String],
       smallGraphMaxEdges: Long = Relational.ccSmallGraphMaxEdges): Option[BatchCounts] =
       WriterLease.withLease(spark, root) {
-    recover(spark, root)
     BatchLog.requireFormat(spark, dir(root), "ClusterLabels")
     val key = BatchLog.resolveKey(spark, dir(root), batchKey)
     val pairCols = pairs.select(col("doc_a").cast("long").as("doc_a"),
@@ -588,7 +574,6 @@ object ClusterLabels {
 
   /** Highest merged batch number (0 = never merged). */
   def latestBatch(spark: SparkSession, root: String): Long = {
-    ReadGuard.recoverForRead(spark, root)(recover(spark, root))
     BatchLog.requireFormat(spark, dir(root), "ClusterLabels.latestBatch")
     if (!BatchLog.hasData(spark, dir(root))) 0L
     else {
@@ -605,22 +590,16 @@ object ClusterLabels {
     * without rescanning the corpus manifest). O(changed rows): the log
     * is batch-stamped, so this is one filtered read. */
   def keeperDelta(spark: SparkSession, root: String, batch: Long): DataFrame = {
-    ReadGuard.recoverForRead(spark, root)(recover(spark, root))
     keeperManifest(BatchLog.read(spark, dir(root), "ClusterLabels")
       .where(col("batch") === batch).select(col("doc_id"), col("label")))
   }
 
-  /** Fold the delta log to one row per doc and atomically swap it in —
-    * the end state is identical to [[read]] (and to a from-scratch
-    * resolve), with the log's history dropped. Same stage-then-rename
-    * commit as snapshot compaction. */
+  /** Fold the delta log to one row per doc and commit it as the log's
+    * next version — the end state is identical to [[read]] (and to a
+    * from-scratch resolve), with the log's history dropped. */
   def compact(spark: SparkSession, root: String): Unit = WriterLease.withLease(spark, root) {
     val dest = dir(root)
-    val tmp = s"$dest.__compact_tmp"
-    BatchLog.stageRewrite(read(spark, root).withColumn("batch", lit(1L)), dest, tmp)
-    // The shared versioned swap; ClusterLabels has no tombstone side
-    // table, so the swap-only form.
-    Tombstones.commitSwap(spark, tmp, dest)
+    BatchLog.rewrite(read(spark, root).withColumn("batch", lit(1L)), dest)()
     // Fresh stats sidecar for the folded directory (the fold dropped any
     // per-batch sidecars with the history) — this is also what HEALS a
     // chain gap left by a crashed sidecar write: post-compaction the

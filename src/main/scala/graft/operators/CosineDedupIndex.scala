@@ -14,14 +14,15 @@ import org.apache.spark.sql.functions._
   * bucket)` rows: the random-hyperplane sign code (codegen'd
   * `graft_lsh_code`) masked to the index's bucket count, plus the norm
   * the exact-cosine verify needs. The BUCKET MASK IS FROZEN at the first
-  * batch (stored in `meta/`, the same freeze discipline as AnnIndex's
-  * quantizer): bucket membership must keep its meaning across appends,
+  * batch (stored as `_mask` inside the code log's version, the same
+  * freeze discipline as AnnIndex's `_quantizer`): bucket membership
+  * must keep its meaning across appends,
   * so later batches reuse it even as the corpus grows past the ladder
   * step the mask was chosen at. The honest cost is bucket occupancy
   * drifting above the ~16-vectors/bucket design point as the corpus
   * outgrows the first batch; [[refreeze]] is the ladder-step migration
   * that pays it down — re-derive the mask from the live count,
-  * re-encode survivors, atomic swap ([[occupancy]] is the drift signal
+  * re-encode survivors, one versioned commit ([[occupancy]] is the drift signal
   * to schedule it on) — exactly FAISS's
   * retrain-when-distribution-shifts contract.
   *
@@ -42,9 +43,8 @@ import org.apache.spark.sql.functions._
   * snapshot is the big side and never moves. Deletion is
   * tombstone-then-compact ([[Tombstones]]), O(removed) per batch.
   *
-  * Give each index family its OWN root: the tombstone side table lives
-  * at `root/tombstones`, so a [[SignatureIndex]] sharing this root
-  * would share (and corrupt) the removal state.
+  * Give each index family its OWN root: the code log lives at
+  * `root/codes`, the same directory [[AnnIndex]]/[[PqIndex]] use.
   */
 object CosineDedupIndex {
 
@@ -125,17 +125,32 @@ object CosineDedupIndex {
       .repartition(col(pgrpCol))
       .sortWithinPartitions(col(pgrpCol), col("vec_id"))
 
-  /** The frozen bucket mask, or None before the first batch. Stored
-    * through the atomic snapshot protocol (`LandingLog.writeSnapshot`):
-    * a crash mid-write of the 1-row meta can never leave a torn state
-    * the next ingest misreads — it either sees the committed mask or
-    * none at all (and re-freezes identically from the same first
-    * batch). Superseded meta versions (one per refreeze) are retained
-    * and expired by [[VersionedState]]'s grace rule, like the codes
-    * log beside them. */
-  def frozenMask(spark: SparkSession, root: String): Option[Long] =
-    graft.sources.LandingLog.readSnapshotIfExists(spark, root, "meta")
-      .map(_.head.getLong(0))
+  private val maskName = "_mask"
+
+  /** The frozen bucket mask, or None before the first batch: the
+    * `_mask` file of the code log's CURRENT version — written into the
+    * log by the first batch, into the staged version by every refreeze
+    * (the new mask) and compaction (carried forward), so mask and
+    * codes resolve as one committed pair. A crash mid-write of the
+    * first batch's mask reads as no mask, and the next ingest freezes
+    * again from its own increment. */
+  def frozenMask(spark: SparkSession, root: String): Option[Long] = {
+    val p = new org.apache.hadoop.fs.Path(
+      BatchLog.resolve(spark, codesDir(root)), maskName)
+    try {
+      val in = fsOf(spark, p.toString).open(p)
+      val s = try new String(
+        org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8").trim
+      finally in.close()
+      s.toLongOption
+    } catch { case _: java.io.IOException => None }
+  }
+
+  private def writeMask(spark: SparkSession, version: String, mask: Long): Unit = {
+    val p = new org.apache.hadoop.fs.Path(version, maskName)
+    val out = fsOf(spark, version).create(p, true)
+    try out.write(mask.toString.getBytes("UTF-8")) finally out.close()
+  }
 
   /** Scan-side code frame `(vec_id, embedding, n2, bucket)` for a
     * `(vec_id, embedding)` frame under a given mask — pure (t69's
@@ -148,19 +163,10 @@ object CosineDedupIndex {
       s"${TextSim.lshCode(TextSim.spark, "embedding")} % ${mask}L AS bucket")
   }
 
-  /** `allCodes` construct-on-first-use (r20) — same contract as
-    * [[IvfIndex.Batch]]: pins the log at first access; the pruned pair
-    * path never consumes it. `deltaPairs` stays eager (the batch's
-    * verified delta at ingest time). */
-  final class Batch private[CosineDedupIndex] (val newCodes: DataFrame,
-      allCodesF: () => DataFrame, val deltaPairs: DataFrame) {
-    lazy val allCodes: DataFrame = allCodesF()
-  }
-  object Batch {
-    def apply(newCodes: DataFrame, allCodes: => DataFrame,
-        deltaPairs: DataFrame): Batch =
-      new Batch(newCodes, () => allCodes, deltaPairs)
-  }
+  /** One ingest's result: the increment's codes and the batch's
+    * verified delta pairs (eager — the delta at ingest time). The full
+    * index is [[readIndex]]. */
+  final case class Batch(newCodes: DataFrame, deltaPairs: DataFrame)
 
   /** One maintenance batch: freeze the mask on the first call (ladder
     * over the first increment's count), encode the increment ONLY,
@@ -171,34 +177,21 @@ object CosineDedupIndex {
     * own files instead of double-appending. */
   def ingest(spark: SparkSession, root: String, increment: DataFrame,
       batchKey: Option[String] = None): Batch = WriterLease.withLease(spark, root) {
-    // Full recovery (refreeze AND compaction swap) BEFORE the append: an
-    // ingest landing inside a crashed compaction's commit window would
-    // append to the old version, and readIndex's recovery below would
-    // then commit the staged fold over it — this increment lost in this
-    // very call.
-    recoverState(spark, root)
     val mask = frozenMask(spark, root).getOrElse {
       val m = TextSim.lshMaskValue(increment.count()).toLong
-      import spark.implicits._
-      graft.sources.LandingLog.writeSnapshot(
-        Seq(m).toDF("mask").coalesce(1), root, "meta")
+      writeMask(spark, BatchLog.resolve(spark, codesDir(root)), m)
       m
     }
     // Cache BEFORE the write so the append populates the cache and the
     // delta join reads it back instead of re-encoding.
     val newCached = graft.CacheJanitor.register(encode(increment, mask).persist())
     val key = BatchLog.append(newCached, codesDir(root), batchKey, "CosineDedupIndex")
-    // Lazy (r20): when the pruned live view serves pair detection, the
-    // full-index frame is never built — its schema-inference job +
-    // listing FS ops only run on the fallback (or at the caller's first
-    // allCodes access). `getOrElse` takes it by name.
-    lazy val all = readIndex(spark, root)
     // Pair detection runs against the PRUNED live view when the fold
     // layout + probe density allow it (see the fold-layout note above) —
-    // answer-identical to the full read by the probe-join argument; the
-    // returned Batch still carries the full index frame.
-    val corpus = prunedLive(spark, root, newCached, mask, key).getOrElse(all)
-    Batch(newCached, all, deltaPairs(corpus, newCached, Some(mask)))
+    // answer-identical to the full read by the probe-join argument.
+    val corpus = prunedLive(spark, root, newCached, mask, key)
+      .getOrElse(readIndex(spark, root))
+    Batch(newCached, deltaPairs(corpus, newCached, Some(mask)))
   }
 
   /** The live rows a probe of `newCodes` can possibly touch, read with
@@ -209,7 +202,9 @@ object CosineDedupIndex {
     * take the plain full read (which is optimal at that density). */
   private[graft] def prunedLive(spark: SparkSession, root: String, newCodes: DataFrame,
       mask: Long, batchKey: String): Option[DataFrame] = {
-    val path = codesDir(root)
+    // One resolution of the current version for every read below,
+    // tombstones included.
+    val path = BatchLog.resolve(spark, codesDir(root))
     val parted = BatchLog.partitionedKeys(spark, path, pgrpCol)
     if (parted.isEmpty) return None
     val withG = parted.toSeq.sorted
@@ -236,10 +231,7 @@ object CosineDedupIndex {
       .selectExpr(s"explode($probesExpr) AS p").where(col("p") < lit(mask))
       .distinct().collect().map(_.getLong(0))
     val flat = BatchLog.committedKeys(spark, path).filterNot(parted)
-    // Tombstones pinned before the fold/flat reads resolve — see
-    // [[Tombstones.excluding]] (hand-rolled here because the data frame
-    // is assembled from several reads).
-    val tomb = Tombstones.read(spark, root, "vec_id")
+    val tomb = Tombstones.read(spark, path, "vec_id")
     val frames = withG.map { case (fk, g0) =>
       val g = g0.get
       val groups = probes.map(p => (p % g).toInt).distinct.toSeq
@@ -252,20 +244,16 @@ object CosineDedupIndex {
     Some(frames.reduce(_ unionByName _).join(tomb, Seq("vec_id"), "left_anti"))
   }
 
-  /** Live code rows: the snapshot minus tombstoned vec_ids (compaction
-    * crash-recovery probed first — see [[Tombstones.recoverSwap]]).
-    * `pgrp` is a fold-layout artifact, never part of the row contract —
-    * dropped whatever mix of fold and flat directories the log holds. */
-  def readIndex(spark: SparkSession, root: String): DataFrame = {
-    ReadGuard.recoverForRead(spark, root)(recoverState(spark, root))
-    // Read-only after recovery: one manifest snapshot for the read.
-    // Tombstones pinned before the codes read — Tombstones.excluding.
+  /** Live code rows: the log minus tombstoned vec_ids, both from one
+    * resolution of the current version. `pgrp` is a fold-layout
+    * artifact, never part of the row contract — dropped whatever mix of
+    * fold and flat directories the log holds. */
+  def readIndex(spark: SparkSession, root: String): DataFrame =
     BatchLog.withManifestSnapshot {
-      Tombstones.excluding(spark, root, "vec_id") {
-        BatchLog.read(spark, codesDir(root), "CosineDedupIndex").drop(pgrpCol)
+      Tombstones.live(spark, codesDir(root), "vec_id") { v =>
+        BatchLog.read(spark, v, "CosineDedupIndex").drop(pgrpCol)
       }
     }
-  }
 
   /** Point lookup: the live code rows for exactly `ids` — the takedown
     * -verification road. The fold layout groups by BUCKET (`pgrp` — the
@@ -281,48 +269,38 @@ object CosineDedupIndex {
   def fetch(spark: SparkSession, root: String, ids: Seq[Long]): DataFrame =
     readIndex(spark, root).where(col("vec_id").isin(ids.map(Long.box): _*))
 
-  /** Crash recovery alone (refreeze + compaction swap windows) — for
-    * callers that probe state without reading rows
-    * ([[DedupPipeline.health]]); see `SignatureIndex.recoverState`. */
-  private[operators] def recoverState(spark: SparkSession, root: String): Unit = {
-    refreezeRecover(spark, root)
-    Tombstones.recoverSwap(spark,
-      s"${codesDir(root)}.__compact_tmp", codesDir(root))
-  }
-
-  /** Tombstone vec_ids out of the index — snapshot files stay
-    * byte-untouched; the ids vanish from reads and deltas immediately.
-    * (Recovery first: a tombstone recorded between a crashed refreeze's
-    * stage and its completion would be silently cleared by the deferred
-    * commit.) */
+  /** Tombstone vec_ids out of the index — log files stay
+    * byte-untouched; the ids vanish from reads and deltas immediately. */
   def remove(spark: SparkSession, root: String, ids: Seq[Long]): Unit = WriterLease.withLease(spark, root) {
     import spark.implicits._
-    // Compaction recovery too: a tombstone appended inside a crashed
-    // compaction's swap window would be cleared when a later reader
-    // adopts the staged fold (the recorded commit clears the side table).
-    recoverState(spark, root)
-    Tombstones.append(root, ids.toDF("vec_id"), "vec_id")
+    Tombstones.append(codesDir(root), ids.toDF("vec_id"), "vec_id")
   }
 
-  /** Rewrite the snapshot minus tombstones (mask unchanged — codes keep
-    * their meaning) and clear the side table; content-identical to a
-    * from-scratch encode of the survivors under the frozen mask. The
-    * fold lands under the `pgrp=` bucket-group layout (sidecar-described)
-    * so later probe batches can skip unprobed groups' bytes. */
+  /** Rewrite the log minus tombstones as its next version (mask
+    * unchanged — codes keep their meaning — and carried into the
+    * version; no tombstones, so the clear commits with the fold);
+    * content-identical to a from-scratch encode of the survivors under
+    * the frozen mask. The fold lands under the `pgrp=` bucket-group
+    * layout (sidecar-described) so later probe batches can skip
+    * unprobed groups' bytes. */
   def compact(spark: SparkSession, root: String): Unit = WriterLease.withLease(spark, root) {
-    val path = codesDir(root)
-    val tmp = s"$path.__compact_tmp"
-    val g = frozenMask(spark, root).map(pgrpGroupsFor).getOrElse(1)
-    val foldKey = BatchLog.stageRewrite(foldFrame(readIndex(spark, root), g),
-      path, tmp, partitionBy = Seq(pgrpCol),
-      writeOptions = BatchLog.pointLookupWriteOptions)
-    writePgrpSidecar(spark, BatchLog.dirOf(tmp, foldKey), g)
-    Tombstones.commitCompaction(spark, root, tmp, path)
+    val mask = frozenMask(spark, root)
+    val g = mask.map(pgrpGroupsFor).getOrElse(1)
+    commitFold(root, foldFrame(readIndex(spark, root), g), g, mask)
   }
+
+  /** Stage `fold` (already in [[foldFrame]] layout under `g` groups) as
+    * the code log's next version with its sidecar and mask, and commit
+    * it — the one commit of [[compact]] and [[refreeze]]. */
+  private def commitFold(root: String, fold: DataFrame, g: Int,
+      mask: Option[Long]): Unit =
+    BatchLog.rewrite(fold, codesDir(root), partitionBy = Seq(pgrpCol),
+        writeOptions = BatchLog.pointLookupWriteOptions) { (stage, foldKey) =>
+      writePgrpSidecar(fold.sparkSession, BatchLog.dirOf(stage, foldKey), g)
+      mask.foreach(writeMask(fold.sparkSession, stage, _))
+    }
 
   // ---------------------------------------------------------------- refreeze
-
-  private def refreezeTmp(root: String): String = s"${codesDir(root)}.__refreeze_tmp"
 
   /** The documented escape hatch for mask drift, implemented: as the
     * corpus outgrows the first batch's ladder step, bucket occupancy
@@ -330,22 +308,19 @@ object CosineDedupIndex {
     * counts grow with it. [[refreeze]] re-derives the mask from the
     * CURRENT live count, re-encodes the survivors under it (embeddings
     * are stored in the code rows, so no external corpus is needed),
-    * folds tombstones out, and swaps — afterwards the on-disk state is
+    * folds tombstones out, and commits — afterwards the on-disk state is
     * content-identical to a from-scratch first-batch ingest of the
     * survivors ([[deltaPairs]] semantics carry over unchanged under the
     * new bucketing). This is FAISS's retrain-when-distribution-shifts
     * contract, scheduled by the operator (see [[occupancy]] for the
     * "when").
     *
-    * Crash safety: the re-encoded codes are FULLY staged, then a
-    * completion marker lands (its presence = "stage complete, commit
-    * intended"), then the commit runs — meta snapshot (atomic), codes
-    * swap, tombstone clear. Every read/ingest/remove path first calls
-    * [[refreezeRecover]]: marker present → the commit is completed
-    * idempotently; marker absent → the partial stage is dropped. A
-    * crash can therefore never mix old buckets with a new mask. */
+    * Crash safety: the re-encoded codes and the new `_mask` are staged
+    * into the code log's next version and published by its one marker
+    * ([[VersionedState]]): before the marker every reader resolves the
+    * old codes with the old mask, after it the new pair — a crash can
+    * never mix old buckets with a new mask, and needs no recovery. */
   def refreeze(spark: SparkSession, root: String): Unit = WriterLease.withLease(spark, root) {
-    refreezeRecover(spark, root, deletePartial = true) // clear any prior attempt
     // With no takedowns pending, the live count is the committed log row
     // count — served driver-side from the write-time sidecars (r20, the
     // DedupPipeline.health pattern). The fold below is then the frame's
@@ -355,28 +330,22 @@ object CosineDedupIndex {
     // differs — persist + count as before (the re-encode reads the
     // cache).
     val sidecarN =
-      if (Tombstones.isEmpty(spark, root))
+      if (Tombstones.isEmpty(spark, codesDir(root)))
         BatchLog.committedRowCount(spark, codesDir(root))
       else None
     val live =
       if (sidecarN.isDefined) readIndex(spark, root)
       else graft.CacheJanitor.register(readIndex(spark, root).persist())
-    // finally, not a happy-path tail call: an abort (sealStage's staged
-    // -data require, a failed write) must not leak the corpus-sized
-    // persisted frame.
+    // finally, not a happy-path tail call: an abort (a failed write)
+    // must not leak the corpus-sized persisted frame.
     try {
       val liveN = sidecarN.getOrElse(live.count()) // 0-gate and ladder share it
       if (liveN == 0L) return // nothing to migrate
       val newMask = TextSim.lshMaskValue(liveN).toLong
-      val tmp = refreezeTmp(root)
       val g = pgrpGroupsFor(newMask)
-      val foldKey = BatchLog.stageRewrite(
+      commitFold(root,
         foldFrame(encode(live.select(col("vec_id"), col("embedding")), newMask), g),
-        codesDir(root), tmp, partitionBy = Seq(pgrpCol),
-        writeOptions = BatchLog.pointLookupWriteOptions)
-      writePgrpSidecar(spark, BatchLog.dirOf(tmp, foldKey), g)
-      RefreezeProtocol.sealStage(spark, tmp, newMask.toString)
-      commitRefreeze(spark, root, newMask)
+        g, Some(newMask))
     } finally graft.CacheJanitor.drain()
   }
 
@@ -393,19 +362,15 @@ object CosineDedupIndex {
   /** Packaged ops snapshot ([[IndexHealth]] — one shape across the
     * index family): live/tombstoned counts, bucket-universe size
     * (`frozenCells` = the frozen modulus), occupancy, and the drift
-    * predicate, in one scan of the code log. Crash recovery runs first
-    * (same contract as [[DedupPipeline.health]]): during a swap window
-    * the log dir is legitimately absent while the staged fold is
-    * complete — probing without recovering would report live = 0. */
+    * predicate, in one scan of the code log. */
   def health(spark: SparkSession, root: String): IndexHealth = {
-    ReadGuard.recoverForRead(spark, root)(recoverState(spark, root))
     frozenMask(spark, root) match {
       case None => IndexHealth.virgin
       case Some(m) =>
         BatchLog.requireFormat(spark, codesDir(root), "CosineDedupIndex.health")
         if (!BatchLog.hasData(spark, codesDir(root)))
-          IndexHealth.emptyLog(spark, root, "vec_id", m)
-        else IndexHealth.probe(spark, root, readIndex(spark, root),
+          IndexHealth.emptyLog(spark, codesDir(root), "vec_id", m)
+        else IndexHealth.probe(spark, codesDir(root), readIndex(spark, root),
           "bucket", "vec_id", m, n => TextSim.lshMaskValue(n).toLong > m)
     }
   }
@@ -439,34 +404,6 @@ object CosineDedupIndex {
     val r = live.agg(count(lit(1)).cast("double").as("n"),
       count_distinct(col("bucket")).cast("double").as("b")).head
     if (r.getDouble(1) == 0.0) 0.0 else r.getDouble(0) / r.getDouble(1)
-  }
-
-  private def commitRefreeze(spark: SparkSession, root: String, mask: Long): Unit = {
-    import spark.implicits._
-    graft.sources.LandingLog.writeSnapshot(
-      Seq(mask).toDF("mask").coalesce(1), root, "meta")
-    Tombstones.commitCompaction(spark, root, refreezeTmp(root), codesDir(root))
-  }
-
-  /** Complete or abandon a crashed [[refreeze]] — see its scaladoc.
-    * Read paths pass `deletePartial = false`: an UNMARKED stage is
-    * invisible to them, and deleting it from a reader would race a
-    * refreeze that is legitimately mid-stage in another session
-    * (whose later marker write would then resurrect an EMPTY stage —
-    * see [[RefreezeProtocol.hasStagedData]]). Only [[refreeze]] itself
-    * clears partials, and only before it starts a fresh stage. A
-    * MARKED stage is committed only after the staged-data check — a
-    * marker-only husk is dropped, never swapped over live codes. */
-  private def refreezeRecover(spark: SparkSession, root: String,
-      deletePartial: Boolean = false): Unit = {
-    val tmp = refreezeTmp(root)
-    if (RefreezeProtocol.exists(spark, tmp))
-      RefreezeProtocol.readMarker(spark, tmp) match {
-        case Some(mask) if RefreezeProtocol.hasStagedData(spark, tmp) =>
-          commitRefreeze(spark, root, mask.toLong)
-        case Some(_) => RefreezeProtocol.deleteIfExists(spark, tmp)
-        case None => if (deletePartial) RefreezeProtocol.deleteIfExists(spark, tmp)
-      }
   }
 
   /** True when `df` is served from the block-manager cache — directly

@@ -128,15 +128,8 @@ object DedupPipeline {
     */
   def health(spark: SparkSession, root: String,
       vector: Boolean = false): Health = {
-    // Crash recovery BEFORE any probe (the same contract as
-    // ClusterLabels.recover): a compaction/refreeze commit that died
-    // after its intent is completed first, so the probe reports the
-    // state that commit was landing (tombstones cleared with it).
-    ReadGuard.recoverForRead(spark, root)(
-      if (vector) CosineDedupIndex.recoverState(spark, root)
-      else SignatureIndex.recoverState(spark, root))
     val logDir =
-      if (vector) CosineDedupIndex.codesDir(root) else s"$root/signatures"
+      if (vector) CosineDedupIndex.codesDir(root) else SignatureIndex.sigDir(root)
     // Legacy flat roots refuse loudly here too — a silent liveDocs = 0
     // for a root full of pre-format rows is the bug class the format
     // marker exists to prevent (read paths must agree).
@@ -144,8 +137,8 @@ object DedupPipeline {
     // Virgin-root guard: the natural FIRST poll of an ops loop happens
     // before any batch lands — report zeros, don't throw on the missing
     // log directory.
-    val tombstoned =
-      Tombstones.read(spark, root, if (vector) "vec_id" else "doc_id").count()
+    val tombstoned = Tombstones.read(spark, BatchLog.resolve(spark, logDir),
+      if (vector) "vec_id" else "doc_id").count()
     // With no tombstones pending, live == the raw log row count (one row
     // per ingested doc/vec; replays overwrite their own directory) —
     // served from the per-directory row-count sidecars when the chain is
@@ -188,7 +181,7 @@ object DedupPipeline {
     *
     *  1. refreeze, when the drift predicate fires (vector roots only —
     *     text roots freeze no corpus-derived parameter). Runs FIRST: the
-    *     re-encode folds tombstones into its own swap, so a tripped
+    *     re-encode folds tombstones into its own commit, so a tripped
     *     tombstone threshold is satisfied by the same rewrite;
     *  2. index compaction, when pending tombstones exceed
     *     `tombstoneRatio` × live (skipped when a refreeze just folded
@@ -203,9 +196,9 @@ object DedupPipeline {
     *     useful rows) — or, same as above, past `maxLogDirs`
     *     directories.
     *
-    * All three run under the operators' existing crash protocols
-    * (marker-gated refreeze, stage-then-swap compaction), so a crash
-    * anywhere in maintenance recovers exactly as those specs pin.
+    * Every rewrite commits through [[VersionedState]]'s one marker, so
+    * a crash anywhere in maintenance leaves the last committed state
+    * readable as is, and re-running maintenance converges.
     * Answers are invariant by construction — each step is spec-pinned
     * content-identical to from-scratch over the survivors — and the
     * spec re-pins it end-to-end through this entry. Returns what fired
@@ -221,7 +214,7 @@ object DedupPipeline {
     // clear the side table, and those tombstones must keep suppressing a
     // later ingest of the same ids (same contract as IvfIndex.maintain).
     val logDir =
-      if (vector) CosineDedupIndex.codesDir(root) else s"$root/signatures"
+      if (vector) CosineDedupIndex.codesDir(root) else SignatureIndex.sigDir(root)
     val indexCompacted = !refrozen && BatchLog.hasData(spark, logDir) && (
       (before.tombstoned > 0 &&
         before.tombstoned >= tombstoneRatio * math.max(before.liveDocs, 1L)) ||

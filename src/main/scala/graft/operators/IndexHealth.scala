@@ -35,11 +35,10 @@ final case class IndexHealth(
 /** What one index-maintenance poll did ([[CosineDedupIndex.maintain]],
   * [[IvfIndex.maintain]] — the standalone-index
   * mirror of [[DedupPipeline.maintainOnce]]): refreeze when the drift
-  * predicate fired (the rewrite folds tombstones into its own swap, so
+  * predicate fired (the rewrite folds tombstones into its own commit, so
   * the separate compaction is skipped as redundant), else compaction
   * when pending tombstones exceeded the caller's ratio of live rows.
-  * Both run under the operators' existing marker-gated / stage-swap
-  * crash protocols. */
+  * Both commit through [[VersionedState]]'s one marker. */
 final case class IndexMaintenance(
     refrozen: Boolean, compacted: Boolean,
     before: IndexHealth, after: IndexHealth)
@@ -56,10 +55,10 @@ object IndexHealth {
     * before the first ingest — it wins over a later re-add of the same
     * id), so report them instead of hard-coding 0; otherwise an ops
     * consumer alerting on pending takedowns never sees them. */
-  private[operators] def emptyLog(spark: SparkSession, root: String,
+  private[operators] def emptyLog(spark: SparkSession, logDir: String,
       idCol: String, frozenCells: Long): IndexHealth =
     virgin.copy(
-      tombstoned = Tombstones.read(spark, root, idCol).count(),
+      tombstoned = Tombstones.read(spark, BatchLog.resolve(spark, logDir), idCol).count(),
       frozenCells = frozenCells)
 
   /** Shared probe: ONE aggregate over the live log computes row count
@@ -67,7 +66,7 @@ object IndexHealth {
     * scan per log" — the [[DedupPipeline.health]] contract); the drift
     * predicate is evaluated from that already-computed count, never a
     * second scan. */
-  private[operators] def probe(spark: SparkSession, root: String,
+  private[operators] def probe(spark: SparkSession, logDir: String,
       live: DataFrame, cellCol: String, idCol: String,
       frozenCells: Long, drift: Long => Boolean): IndexHealth = {
     val r = live.agg(count(lit(1)).as("n"),
@@ -75,7 +74,7 @@ object IndexHealth {
     val (n, occ) = (r.getLong(0), r.getLong(1))
     IndexHealth(
       live = n,
-      tombstoned = Tombstones.read(spark, root, idCol).count(),
+      tombstoned = Tombstones.read(spark, BatchLog.resolve(spark, logDir), idCol).count(),
       frozenCells = frozenCells, occupiedCells = occ,
       occupancy = if (occ == 0L) 0.0 else n.toDouble / occ,
       needsRefreeze = drift(n))

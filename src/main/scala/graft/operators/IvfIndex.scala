@@ -3,6 +3,7 @@ package graft.operators
 import graft.functions.TextSim
 import graft.functions.TextSim.{spark => sprk}
 import graft.queries.TrainingData
+import org.apache.hadoop.fs.{FileUtil, Path => HPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -12,8 +13,8 @@ import org.apache.spark.sql.functions._
   * (4-bit product-quantizer codes): one index structure with pluggable
   * compression. A codec supplies the quantizer artifact it freezes
   * beside the coarse centroids (`Q`), its training, encoding and
-  * scoring, and its re-rank pool; recovery, ingest, remove, compact,
-  * health, maintain, the refreeze protocol and the probe/rank/re-rank
+  * scoring, and its re-rank pool; ingest, remove, compact,
+  * health, maintain, refreeze and the probe/rank/re-rank
   * query live here once.
   *
   * State layout under `root/`: `quantizer/centroids` (`(cell, centroid)`
@@ -32,7 +33,7 @@ import org.apache.spark.sql.functions._
 private[graft] abstract class IvfIndex[Q] {
 
   /** Operator name (`AnnIndex`) — the [[BatchLog]] op tag; its short
-    * form (`ann`) tags the seal marker, temp views and errors. */
+    * form (`ann`) tags temp views and errors. */
   protected def name: String
   private def tag = name.stripSuffix("Index").toLowerCase
   /** Exact re-rank pool per query (never below k). */
@@ -65,20 +66,17 @@ private[graft] abstract class IvfIndex[Q] {
     * keep their pinned nprobe=3 form. */
   def probesFor(cells: Int): Int = math.max(probeCells, cells / 4)
 
-  /** An ingest's result. `allCodes` is CONSTRUCT-ON-FIRST-USE (r20): the
-    * full-index frame costs a schema-inference job plus listing FS ops
-    * and no production caller consumes it; it pins the log state at
-    * FIRST ACCESS, not at ingest return. */
-  final class Batch private[IvfIndex] (val newCodes: DataFrame,
-      allCodesF: () => DataFrame) {
-    lazy val allCodes: DataFrame = allCodesF()
-  }
-  object Batch {
-    def apply(newCodes: DataFrame, allCodes: => DataFrame): Batch =
-      new Batch(newCodes, () => allCodes)
-  }
+  /** An ingest's result: the increment's codes. The full index is
+    * read through [[topK]] / [[health]]. */
+  final class Batch(val newCodes: DataFrame)
 
-  private val quantStage = RefreezeProtocol.quantStageName
+  /** Hidden subdir of a codes version holding the quantizer artifacts
+    * paired with those codes: written into the staged version by every
+    * refreeze and carried forward by compaction, so quantizer + codes
+    * are ONE committed version — a read resolves either the old pair or
+    * the new, never a mix. Underscore-prefixed: invisible to parquet
+    * readers and every BatchLog walk. */
+  private val quantStage = "_quantizer"
 
   /** The directory the CURRENT quantizer lives in: inside the resolved
     * codes version (`codes/_versions/<n>/_quantizer` — written by every
@@ -139,18 +137,15 @@ private[graft] abstract class IvfIndex[Q] {
     * index family): live/tombstoned counts, frozen coarse-cell count,
     * occupied cells + occupancy, and the drift predicate, in one scan
     * of the code log (the predicate reuses the probe's live count
-    * instead of re-scanning like [[needsRefreeze]] would). Crash
-    * recovery runs before any probe — a swap-window poll reports the
-    * state the crashed commit was landing. */
+    * instead of re-scanning like [[needsRefreeze]] would). */
   def health(spark: SparkSession, root: String): IndexHealth = {
-    ReadGuard.recoverForRead(spark, root)(recoverState(spark, root))
     loadQuantizer(spark, root) match {
       case None => IndexHealth.virgin
       case Some((cents, _)) =>
         BatchLog.requireFormat(spark, s"$root/codes", s"$name.health")
         if (!BatchLog.hasData(spark, s"$root/codes"))
-          IndexHealth.emptyLog(spark, root, "vec_id", cents.length.toLong)
-        else IndexHealth.probe(spark, root, readCodes(spark, root),
+          IndexHealth.emptyLog(spark, s"$root/codes", "vec_id", cents.length.toLong)
+        else IndexHealth.probe(spark, s"$root/codes", readCodes(spark, root),
           "cell", "vec_id", cents.length.toLong,
           n => TextSim.ivfCellsValue(n) > cents.length)
     }
@@ -181,18 +176,13 @@ private[graft] abstract class IvfIndex[Q] {
 
   /** One maintenance batch: encode `increment` ONLY (first batch also
     * trains the quantizer from it), append its code files under their
-    * `cell=` directories, return the new codes and the full index. The
+    * `cell=` directories, return the new codes. The
     * increment must carry vec_ids not already indexed — keep-last dedup
     * is the landing layer's job, upstream of this (same contract as
     * [[SignatureIndex.ingest]]). `batchKey` is the replay-idempotence
     * handle ([[BatchLog]]). */
   def ingest(spark: SparkSession, root: String, increment: DataFrame,
       batchKey: Option[String] = None): Batch = WriterLease.withLease(spark, root) {
-    // Full recovery BEFORE the append: appending inside a crashed
-    // compaction's swap window would recreate the codes dir with only
-    // this increment, and the staged fold would then be dropped as
-    // abandoned — the corpus lost in this very call.
-    recoverState(spark, root)
     // The first batch trains and persists the quantizer (a crashed first
     // write retrains deterministically over the partial); later load it.
     val (cents, q) = loadQuantizer(spark, root).getOrElse {
@@ -207,98 +197,74 @@ private[graft] abstract class IvfIndex[Q] {
     // instead of double-appending; `cell` stays a partition column one
     // level down, so the static cell pruning is unchanged.
     BatchLog.append(enc, s"$root/codes", batchKey, name, partitionBy = Seq("cell"))
-    Batch(enc, readCodes(spark, root))
-  }
-
-  /** Crash recovery alone (refreeze + compaction swap windows) — run
-    * by every mutating or reading entry point before touching state. */
-  private[operators] def recoverState(spark: SparkSession, root: String): Unit = {
-    refreezeRecover(spark, root)
-    Tombstones.recoverSwap(spark, s"$root/codes.__compact_tmp", s"$root/codes")
+    new Batch(enc)
   }
 
   /** Live code rows: the snapshot (cell cast back to its canonical
     * BIGINT — partition-column inference reads `cell=` dirs as INT)
-    * minus tombstoned vec_ids. */
-  private def readCodes(spark: SparkSession, root: String): DataFrame = {
-    ReadGuard.recoverForRead(spark, root)(recoverState(spark, root))
-    // Tombstones pinned BEFORE the codes read resolves (excluding): the
-    // versioned swap protocol's one silent-wrong interleaving is old
-    // codes paired with a just-cleared side table.
-    Tombstones.excluding(spark, root, "vec_id") {
-      BatchLog.read(spark, s"$root/codes", name)
-        .withColumn("cell", col("cell").cast("long"))
+    * minus tombstoned vec_ids, both from one resolution of the current
+    * version. */
+  private[graft] def readCodes(spark: SparkSession, root: String): DataFrame =
+    Tombstones.live(spark, s"$root/codes", "vec_id") { v =>
+      BatchLog.read(spark, v, name).withColumn("cell", col("cell").cast("long"))
     }
-  }
 
   /** Tombstone vec_ids out of the index (takedowns, re-embeds, dedup
     * keeper changes). Appends to the side table only — `cell=` code
     * files stay byte-untouched (spec-pinned); the ids stop appearing as
     * [[topK]] neighbors from this call on. The frozen quantizer is
     * unaffected: removal never retrains (same contract as ingest). */
-  def remove(spark: SparkSession, root: String, ids: DataFrame): Unit = WriterLease.withLease(spark, root) {
-    // Compaction recovery too: a tombstone appended inside a crashed
-    // compaction's swap window would be cleared when a later reader
-    // adopts the staged fold (the recorded commit clears the side table).
-    recoverState(ids.sparkSession, root)
-    Tombstones.append(root, ids, "vec_id")
-  }
+  def remove(spark: SparkSession, root: String, ids: DataFrame): Unit =
+    WriterLease.withLease(spark, root)(Tombstones.append(s"$root/codes", ids, "vec_id"))
 
   def remove(spark: SparkSession, root: String, ids: Seq[Long]): Unit = {
     import spark.implicits._
     remove(spark, root, ids.toDF("vec_id"))
   }
 
-  /** Rewrite `codes/` minus tombstones (same `cell=` layout, so the
-    * probed-partition-only read path is unchanged) and clear the side
-    * table. Content-identical to a frozen-quantizer encode of the
-    * surviving vectors (spec-pinned). */
+  /** Rewrite `codes/` minus tombstones as its next version (same
+    * `cell=` layout, so the probed-partition-only read path is
+    * unchanged; no tombstones, so the clear commits with the fold).
+    * Content-identical to a frozen-quantizer encode of the surviving
+    * vectors (spec-pinned). The current quantizer is copied into the
+    * version, so every committed codes version is SELF-CONTAINED —
+    * without it, a compaction committed after a refreeze would resolve
+    * the stale top-level quantizer (silently wrong cells). */
   def compact(spark: SparkSession, root: String): Unit = WriterLease.withLease(spark, root) {
-    val dest = s"$root/codes"
-    val tmp = s"$root/codes.__compact_tmp"
-    BatchLog.stageRewrite(readCodes(spark, root), dest, tmp, partitionBy = Seq("cell"))
-    copyQuantizerIntoStage(spark, root, tmp)
-    Tombstones.commitCompaction(spark, root, tmp, dest)
-  }
-
-  /** Carry the current quantizer into a codes stage (`_quantizer`
-    * subdir): every committed codes version is then SELF-CONTAINED —
-    * without this, a compaction committed after a versioned refreeze
-    * would create a version whose quantizer fallback resolves to the
-    * stale top-level dir (silently wrong cells). KB-scale copy. */
-  private def copyQuantizerIntoStage(spark: SparkSession, root: String,
-      tmp: String): Unit = {
     val src = quantizerDir(spark, root)
-    if (BatchLog.hasCommittedFiles(spark, s"$src/centroids"))
-      RefreezeProtocol.copyDir(spark, src, s"$tmp/$quantStage")
+    BatchLog.rewrite(readCodes(spark, root), s"$root/codes",
+        partitionBy = Seq("cell")) { (stage, _) =>
+      if (BatchLog.hasCommittedFiles(spark, s"$src/centroids")) {
+        val fs = VersionedState.fsOf(spark, src)
+        require(FileUtil.copy(fs, new HPath(src), fs, new HPath(s"$stage/$quantStage"),
+          false, true, spark.sparkContext.hadoopConfiguration),
+          s"could not copy $src into $stage")
+      }
+    }
   }
 
   // ---------------------------------------------------------------- refreeze
-
-  private def codesRefreezeTmp(root: String): String = s"$root/codes.__refreeze_tmp"
 
   /** Ladder-step migration for a quantizer frozen on a first batch the
     * corpus has outgrown: retrains both quantizers on the SURVIVING
     * vectors (`corpus` supplies `(vec_id, embedding)` floats for at least
     * the live ids — codes are lossy), re-encodes every survivor, folds
-    * tombstones out, and atomically swaps quantizer + codes. The result
-    * is content-identical to a from-scratch first ingest of the
+    * tombstones out, and commits quantizer + codes as one version. The
+    * result is content-identical to a from-scratch first ingest of the
     * survivors.
     *
-    * Crash safety: the codes are FULLY staged, then the quantizer lands
-    * INSIDE the same stage (`_quantizer` — one directory, so no failure
-    * can split the pair), a completion marker lands last, then
-    * [[commitRefreeze]] runs. [[refreezeRecover]] completes a marked,
-    * whole stage idempotently and drops anything else. */
+    * Crash safety: the codes and then the quantizer (`_quantizer`) are
+    * staged into the code log's next version, which its one marker
+    * publishes — a reader resolves the old pair or the new, and a crash
+    * before the marker leaves a stage the next rewrite replaces. */
   def refreeze(spark: SparkSession, root: String, corpus: DataFrame): Unit = WriterLease.withLease(spark, root) {
-    refreezeRecover(spark, root, deletePartial = true) // clear any prior attempt
     val liveIds = readCodes(spark, root).select("vec_id")
     // With no tombstones pending, live == committed log rows, served
     // driver-side from the write-time sidecars (the DedupPipeline.health
     // pattern, r20) — the full-scan count job runs only while takedowns
     // are pending (when the anti-joined count genuinely differs).
     val liveN =
-      if (Tombstones.isEmpty(spark, root))
+      if (Tombstones.isEmpty(spark, s"$root/codes"))
         BatchLog.committedRowCount(spark, s"$root/codes").getOrElse(liveIds.count())
       else liveIds.count()
     if (liveN == 0L) return // nothing to migrate
@@ -325,69 +291,23 @@ private[graft] abstract class IvfIndex[Q] {
       // The validated liveN IS the view's row count (the require above
       // pinned count == liveN) — no trainer re-count job (r20).
       val (cents, q) = train(spark, s"graft_${tag}_refreeze", Some(liveN))
-      val ctmp = codesRefreezeTmp(root)
-      RefreezeProtocol.deleteIfExists(spark, ctmp)
-      BatchLog.stageRewrite(encodeWith(survivors, cents, q),
-        s"$root/codes", ctmp, partitionBy = Seq("cell"))
-      writeQuantizer(spark, s"$ctmp/$quantStage", cents, q)
-      RefreezeProtocol.sealStage(spark, ctmp, tag)
-      commitRefreeze(spark, root)
+      BatchLog.rewrite(encodeWith(survivors, cents, q), s"$root/codes",
+          partitionBy = Seq("cell")) { (stage, _) =>
+        writeQuantizer(spark, s"$stage/$quantStage", cents, q)
+      }
     } finally graft.CacheJanitor.drain()
   }
 
-  /** Commit a sealed stage: one versioned codes commit lands quantizer
-    * + codes together as `codes/_versions/<n+1>` — a read resolves the
-    * old pair or the new, never a mix, never a retry. The top-level
-    * `root/quantizer` stays as the fallback of readers pinned to
-    * versions that predate the first refreeze. Idempotent under
-    * crash-and-rerun. */
-  private def commitRefreeze(spark: SparkSession, root: String): Unit =
-    Tombstones.commitCompaction(spark, root, codesRefreezeTmp(root), s"$root/codes")
-
-  /** Complete or abandon a crashed [[refreeze]]. A marked stage commits
-    * only when whole: staged codes with committed data files AND its
-    * in-stage quantizer (the commit never moves it out of the stage).
-    * Anything else is a husk — its stage deleted out from under an
-    * in-flight refreeze — and committing it would install new codes
-    * under the old quantizer, so it is dropped. Unmarked partials are
-    * dropped only by a fresh refreeze (`deletePartial`): a reader could
-    * race one legitimately mid-stage. */
-  private def refreezeRecover(spark: SparkSession, root: String,
-      deletePartial: Boolean = false): Unit = {
-    val ctmp = codesRefreezeTmp(root)
-    if (RefreezeProtocol.exists(spark, ctmp)) {
-      if (RefreezeProtocol.readMarker(spark, ctmp).isDefined) {
-        val whole = RefreezeProtocol.hasStagedData(spark, ctmp) &&
-          BatchLog.hasCommittedFiles(spark, s"$ctmp/$quantStage/centroids")
-        if (whole) commitRefreeze(spark, root)
-        else RefreezeProtocol.deleteIfExists(spark, ctmp)
-      } else if (deletePartial) RefreezeProtocol.deleteIfExists(spark, ctmp)
-    }
-  }
-
   /** Approximate (or exactly re-ranked) top-k neighbors for a
-    * `(query_id, embedding)` frame against the persisted index. */
+    * `(query_id, embedding)` frame against the persisted index. Runs
+    * against one manifest snapshot, which also pins ONE resolution of
+    * the codes log: quantizer, codes and tombstones all come from the
+    * same version. */
   def topK(spark: SparkSession, root: String, queries: DataFrame, k: Int = 3,
-      rerank: Option[DataFrame] = None, nprobe: Option[Int] = None): DataFrame = {
-    // FULL recovery (refreeze AND compaction swap), matching readCodes.
-    // Lease-guarded (ReadGuard): with a live writer mid-swap the read
-    // serves the committed version and leaves the debris to the writer.
-    ReadGuard.recoverForRead(spark, root)(recoverState(spark, root))
-    topKRecovered(spark, root, queries, k, rerank, nprobe)
-  }
-
-  /** [[topK]] after recovery — read-only, so the whole query runs
-    * against one manifest snapshot (repeat consults of the codes log's
-    * fold manifests cost zero FS ops). */
-  private def topKRecovered(spark: SparkSession, root: String, queries: DataFrame,
-      k: Int, rerank: Option[DataFrame],
-      nprobe: Option[Int]): DataFrame = BatchLog.withManifestSnapshot {
-    // Tombstones pinned FIRST, before the quantizer load resolves the
-    // codes version ([[Tombstones.excluding]]'s order): the reverse could
-    // pair old codes with a just-cleared side table. The codes read
-    // shares this section's snapshot, so quantizer and codes pin ONE
-    // version.
-    val tomb = Tombstones.read(spark, root, "vec_id")
+      rerank: Option[DataFrame] = None,
+      nprobe: Option[Int] = None): DataFrame = BatchLog.withManifestSnapshot {
+    val codesV = BatchLog.resolve(spark, s"$root/codes")
+    val tomb = Tombstones.read(spark, codesV, "vec_id")
     val (cents, q) = loadQuantizer(spark, root).getOrElse(sys.error(
       s"no ${tag.toUpperCase} index at $root — ingest at least one batch first"))
     val d = sprk
@@ -411,7 +331,7 @@ private[graft] abstract class IvfIndex[Q] {
     // `cell=` pruning within each batch_key dir; folds serve their files
     // from the fold manifest, zero listings), then the tombstone
     // anti-join against the side table pinned at entry.
-    val codes = BatchLog.read(spark, s"$root/codes", name)
+    val codes = BatchLog.read(spark, codesV, name)
       .where(col("cell").isin(probed: _*))
       .withColumn("cell", col("cell").cast("long"))
       .join(tomb, Seq("vec_id"), "left_anti")

@@ -75,53 +75,33 @@ object SignatureIndex {
         s"sort_array(array_distinct(${TextSim.shingleHashes(sprk, "wh")})) AS shs")
   }
 
-  /** `allSigs` is construct-on-first-use (r20, same contract as
-    * [[IvfIndex.Batch]]): its construction costs a schema-inference job
-    * + the log's listing FS ops, and on the indexed pair path nothing
-    * consumes it. It pins the log state at FIRST ACCESS — read it before
-    * further mutations of the root (every existing caller does).
-    * `deltaPairs` stays EAGER: it is the batch's verified delta at
-    * ingest time, and specs legitimately read an old batch's pairs after
-    * later appends. */
-  final class Batch private[SignatureIndex] (val newSigs: DataFrame,
-      allSigsF: () => DataFrame, val deltaPairs: DataFrame) {
-    lazy val allSigs: DataFrame = allSigsF()
-  }
-  object Batch {
-    def apply(newSigs: DataFrame, allSigs: => DataFrame,
-        deltaPairs: DataFrame): Batch =
-      new Batch(newSigs, () => allSigs, deltaPairs)
-  }
+  /** One ingest's result: the increment's signatures and the batch's
+    * verified delta pairs (eager — the delta at ingest time). The full
+    * index is [[readIndex]]. */
+  final case class Batch(newSigs: DataFrame, deltaPairs: DataFrame)
+
+  private[graft] def sigDir(root: String): String = s"$root/signatures"
 
   /** One maintenance batch: signatures for `increment` ONLY, appended to
-    * the snapshot at `root/table`; returns the new-side signatures, the
-    * full index as read back from disk, and the batch's verified delta
-    * pairs. The increment must carry doc_ids not already in the index
-    * (keep-last dedup is the landing layer's job, upstream of this).
+    * the log at `root/signatures`; returns the new-side signatures and
+    * the batch's verified delta pairs. The increment must carry doc_ids
+    * not already in the index (keep-last dedup is the landing layer's
+    * job, upstream of this).
     *
     * `batchKey` is the replay-idempotence handle ([[BatchLog]]): pass
     * the landing batch id and a crash-after-commit retry of the same
     * batch REPLACES its own files instead of double-appending; `None`
     * mints a fresh auto key (not replay-idempotent). */
   def ingest(spark: SparkSession, root: String, increment: DataFrame,
-      table: String = "signatures", batchKey: Option[String] = None): Batch = WriterLease.withLease(spark, root) {
-    val path = s"$root/$table"
-    // Recovery BEFORE the append: an ingest landing inside a crashed
-    // compaction's commit window would otherwise append to the old
-    // version — and the recovery probe below (readIndex) would commit
-    // the staged fold over it: this increment lost in this very call.
-    recoverState(spark, root, table)
+      batchKey: Option[String] = None): Batch = WriterLease.withLease(spark, root) {
+    val path = sigDir(root)
     // Cache BEFORE the write so the append populates the cache and the
     // delta join below reads it back instead of re-scanning the text.
     val newCached = graft.CacheJanitor.register(signatures(increment).persist())
     val key = BatchLog.resolveKey(spark, path, batchKey)
-    val coveredBefore = derivedCovered(spark, root, table)
+    val coveredBefore = derivedCovered(spark, root)
     BatchLog.appendResolved(newCached, path, key, "SignatureIndex")
-    maintainDerived(spark, root, table, key, newCached, coveredBefore)
-    // Lazy (r20): the indexed pair path below never touches the full-
-    // index frame, so its schema-inference job + listing FS ops only
-    // run on the frame path (or at the caller's first allSigs access).
-    lazy val all = readIndex(spark, root, table)
+    maintainDerived(spark, root, key, newCached, coveredBefore)
     // Cost-based path choice, decided from the row-count sidecars
     // (driver-side file reads, zero Spark jobs): the indexed path's
     // per-batch cost is FLAT (broadcast-round scheduling ~constant,
@@ -146,9 +126,9 @@ object SignatureIndex {
       .getOrElse(newCached.count())
     val pairs =
       if (corpusRows >= indexedPathMinRows && incrementRows <= indexedPathMaxIncrementRows)
-        deltaPairsIndexed(spark, root, table, newCached, Some(key))
-      else deltaPairs(all, newCached)
-    Batch(newCached, all, pairs)
+        deltaPairsIndexed(spark, root, newCached, Some(key))
+      else deltaPairs(readIndex(spark, root), newCached)
+    Batch(newCached, pairs)
   }
 
   /** Signature-log row count at which [[ingest]] switches pair
@@ -169,27 +149,23 @@ object SignatureIndex {
     * steady loop compacts long before that). */
   val tombstoneBroadcastMaxBytes: Long = 32L << 20
 
-  /** Live signature rows: the snapshot minus tombstoned doc_ids. Every
-    * read path goes through this, so a removed doc stops contributing
-    * postings, candidates, and exact-verify rows immediately — without
-    * touching the append-only snapshot files. A pre-batch-format root is
-    * refused here (its arrays predate the sorted-at-build contract the
-    * intersect kernel needs). */
-  def readIndex(spark: SparkSession, root: String, table: String = "signatures"): DataFrame = {
-    ReadGuard.recoverForRead(spark, root)(recoverState(spark, root, table))
-    // Read-only from here: one manifest snapshot for the whole read
-    // (repeat consults cost zero FS ops). Starts AFTER recovery — a
-    // heal rewrites directories, which a snapshot must never straddle.
+  /** Live signature rows: the log minus tombstoned doc_ids, both taken
+    * from one resolution of the current version. Every read path goes
+    * through this, so a removed doc stops contributing postings,
+    * candidates, and exact-verify rows immediately — without touching
+    * the append-only log files. A pre-batch-format root is refused here
+    * (its arrays predate the sorted-at-build contract the intersect
+    * kernel needs). */
+  def readIndex(spark: SparkSession, root: String): DataFrame =
+    // One manifest snapshot for the whole read (repeat consults cost
+    // zero FS ops). `dgrp` is a fold-layout artifact, never part of the
+    // row contract (BatchLog.read drops it in mixed layouts; an
+    // all-fold log keeps common partition columns, so drop explicitly).
     BatchLog.withManifestSnapshot {
-      // `dgrp` is a fold-layout artifact, never part of the row contract
-      // (BatchLog.read drops it in mixed layouts; an all-fold log keeps
-      // common partition columns, so drop explicitly). Tombstones pinned
-      // before the log read — Tombstones.excluding.
-      Tombstones.excluding(spark, root, "doc_id") {
-        BatchLog.read(spark, s"$root/$table", "SignatureIndex").drop(dgrpCol)
+      Tombstones.live(spark, sigDir(root), "doc_id") { v =>
+        BatchLog.read(spark, v, "SignatureIndex").drop(dgrpCol)
       }
     }
-  }
 
   /** Point lookup: the LIVE signature rows for exactly `ids` — the
     * takedown-verification / spot-audit road, reading through every
@@ -204,25 +180,22 @@ object SignatureIndex {
     *    which prunes ROW GROUPS by min/max inside the hit group: fold
     *    files are id-sorted with ~1 MB row groups since r19, so a K-id
     *    probe reads ~K row groups (~K MB), not K whole group files;
-    *  - tombstones pinned BEFORE the data read (the versioned-swap
-    *    consistency order), so a removed id can never resurface.
+    *  - data and tombstones from one resolution of the version, so a
+    *    removed id can never resurface.
     *
     * Exactness does not depend on the layout: flat-era increments are
     * read whole (filter applied in the scan) and pre-r19 folds simply
     * prune less — the answer is the same rows [[readIndex]] would
     * produce filtered to `ids`. */
-  def fetch(spark: SparkSession, root: String, ids: Seq[Long],
-      table: String = "signatures"): DataFrame = {
+  def fetch(spark: SparkSession, root: String, ids: Seq[Long]): DataFrame = {
     // Above this many hit groups the probe unions one scan LEG per
     // group; the cap bounds plan size — past it, one global-In scan
     // (the saturated regime: with that many spread ids most row groups
     // match their own group's ids anyway).
     val maxLegs = 64
-    ReadGuard.recoverForRead(spark, root)(recoverState(spark, root, table))
     BatchLog.withManifestSnapshot {
-      val path = s"$root/$table"
       val inIds = (df: DataFrame) => df.where(col("doc_id").isin(ids.map(Long.box): _*))
-      Tombstones.excluding(spark, root, "doc_id") {
+      Tombstones.live(spark, sigDir(root), "doc_id") { path =>
         val ks = BatchLog.committedKeys(spark, path)
         if (ks.isEmpty)
           inIds(BatchLog.read(spark, path, "SignatureIndex.fetch").drop(dgrpCol))
@@ -263,44 +236,30 @@ object SignatureIndex {
     }
   }
 
-  /** Crash recovery alone (the compaction swap window) — for callers
-    * that probe state without reading rows ([[DedupPipeline.health]]):
-    * an existence probe during the swap window would otherwise misread
-    * a fully-staged compaction as an empty index. */
-  private[operators] def recoverState(spark: SparkSession, root: String,
-      table: String = "signatures"): Unit =
-    Tombstones.recoverSwap(spark, s"$root/$table.__compact_tmp", s"$root/$table")
-
-  /** Tombstone doc_ids out of the index. Appends to the side table only
-    * — snapshot files stay byte-untouched (spec-pinned); the ids vanish
-    * from [[readIndex]]/[[deltaPairs]] results from this call on.
-    * Pair deltas ALREADY emitted in prior batches are the caller's
-    * accumulated table, not index state — filter them there or rerun
-    * `deltaPairs(all, all)` when retroactive exactness matters. */
-  def remove(spark: SparkSession, root: String, ids: DataFrame): Unit = WriterLease.withLease(spark, root) {
-    // Recovery first: a tombstone appended inside a crashed compaction's
-    // swap window would be cleared when a later reader adopts the staged
-    // fold (the recorded commit clears the side table, whose removals the
-    // fold already absorbed — this id's removal would vanish with them).
-    recoverState(spark, root)
-    Tombstones.append(root, ids, "doc_id")
-  }
+  /** Tombstone doc_ids out of the index. Appends to the current
+    * version's side table only — log files stay byte-untouched
+    * (spec-pinned); the ids vanish from [[readIndex]]/[[deltaPairs]]
+    * results from this call on. Pair deltas ALREADY emitted in prior
+    * batches are the caller's accumulated table, not index state —
+    * filter them there or rerun `deltaPairs(all, all)` when retroactive
+    * exactness matters. */
+  def remove(spark: SparkSession, root: String, ids: DataFrame): Unit =
+    WriterLease.withLease(spark, root)(Tombstones.append(sigDir(root), ids, "doc_id"))
 
   def remove(spark: SparkSession, root: String, ids: Seq[Long]): Unit = {
     import spark.implicits._
     remove(spark, root, ids.toDF("doc_id"))
   }
 
-  /** Rewrite the snapshot minus tombstones and clear the side table.
-    * After this the on-disk state is content-identical to a
-    * from-scratch [[signatures]] build over the surviving docs
-    * (spec-pinned) — the reference's full-refresh end state
-    * (`src/warehousing_lambda.py:64-71`) at a schedule the operator
-    * chooses instead of per takedown. */
-  def compact(spark: SparkSession, root: String, table: String = "signatures"): Unit = WriterLease.withLease(spark, root) {
-    val path = s"$root/$table"
-    val tmp = s"$path.__compact_tmp"
-    val live = readIndex(spark, root, table)
+  /** Rewrite the log minus tombstones as its next version (which has
+    * no tombstones, so the clear commits with the fold). After this the
+    * on-disk state is content-identical to a from-scratch
+    * [[signatures]] build over the surviving docs (spec-pinned) — the
+    * reference's full-refresh end state (`src/warehousing_lambda.py:64-71`)
+    * at a schedule the operator chooses instead of per takedown. */
+  def compact(spark: SparkSession, root: String): Unit = WriterLease.withLease(spark, root) {
+    val path = sigDir(root)
+    val live = readIndex(spark, root)
     // Corpus-scale folds land under the `dgrp=` doc-group layout (see
     // the fold-layout note) so later verify reads can skip non-candidate
     // groups' heavy shingle arrays. G from the live log's MEASURED
@@ -310,9 +269,9 @@ object SignatureIndex {
     val rowsOpt = BatchLog.committedRowCount(spark, path)
     // Bytes over the RESOLVED current version, not the logical dir: a
     // versioned root's top-level content summary includes retained
-    // superseded `_versions` and the first swap's flat state inside the
-    // grace window — 2-3× the live log, silently oversizing G (the r18
-    // advisory's sibling of the Tombstones.bytesOnDisk fix).
+    // superseded `_versions` and the flat state before the first
+    // commit inside the grace window — 2-3× the live log, silently
+    // oversizing G.
     val g = groupsForBytes(dirBytes(spark, BatchLog.resolve(spark, path)))
     // Point-lookup layout ADOPTED (r18 pricing, shipped r19): rows are
     // id-sorted WITHIN each group (partition-local sort, no extra
@@ -322,20 +281,20 @@ object SignatureIndex {
     // k=1, SCALEBENCH_r18_pointlookup). Row SET unchanged — the
     // content-identical-to-rebuild contract is order-free.
     val opts = BatchLog.pointLookupWriteOptions
-    if (g >= 2 && rowsOpt.exists(_ >= foldLayoutMinRows)) {
-      val fk = BatchLog.stageRewrite(
+    if (g >= 2 && rowsOpt.exists(_ >= foldLayoutMinRows))
+      BatchLog.rewrite(
         live.withColumn(dgrpCol, pmod(col("doc_id"), lit(g.toLong)).cast("int"))
           .repartition(col(dgrpCol)).sortWithinPartitions(col(dgrpCol), col("doc_id")),
-        path, tmp, partitionBy = Seq(dgrpCol), writeOptions = opts)
-      BatchLog.writeGroupsSidecar(spark, BatchLog.dirOf(tmp, fk), dgrpSidecarName, g)
-    } else BatchLog.stageRewrite(live.sortWithinPartitions(col("doc_id")),
-      path, tmp, writeOptions = opts)
-    Tombstones.commitCompaction(spark, root, tmp, path)
+        path, partitionBy = Seq(dgrpCol), writeOptions = opts) { (stage, fk) =>
+        BatchLog.writeGroupsSidecar(spark, BatchLog.dirOf(stage, fk), dgrpSidecarName, g)
+      }
+    else BatchLog.rewrite(live.sortWithinPartitions(col("doc_id")), path,
+      writeOptions = opts)()
     // Rebuild the derived posting/df logs from the fold eagerly —
     // maintenance does the corpus-sized work, not the next batch. A
     // crash mid-rebuild only leaves the coverage markers stale, and the
     // next ingest heals (rebuilds) them.
-    rebuildDerived(spark, root, table)
+    rebuildDerived(spark, root)
   }
 
   /** Near-dup pairs touching at least one `newSigs` doc: df-capped
@@ -379,10 +338,10 @@ object SignatureIndex {
     * side tables make the batch path O(increment) in shuffle and
     * broadcast-filtered-scan in disk:
     *
-    *  - `<table>_postings`: `(doc_id, h)` — the signature arrays
+    *  - `signatures_postings`: `(doc_id, h)` — the signature arrays
     *    pre-exploded, appended per batch under the SAME batch key as
     *    the signature log (replay replaces all three together);
-    *  - `<table>_dfcounts`: `(h, n)` — each batch's per-shingle doc
+    *  - `signatures_dfcounts`: `(h, n)` — each batch's per-shingle doc
     *    counts. Live df(h) = Σ n over the log, minus pending-tombstoned
     *    docs' posting rows at READ time — so [[remove]] stays a pure
     *    O(removed) tombstone append (no crash window between a df
@@ -418,10 +377,8 @@ object SignatureIndex {
     * maintains does. Worst case (every batch shares a shingle with the
     * increment) degrades to r11's full slim scans; a novel-content
     * crawl batch reads ~its own directory. */
-  private[graft] def postingsDir(root: String, table: String = "signatures"): String =
-    s"$root/${table}_postings"
-  private[graft] def dfDir(root: String, table: String = "signatures"): String =
-    s"$root/${table}_dfcounts"
+  private[graft] def postingsDir(root: String): String = s"$root/signatures_postings"
+  private[graft] def dfDir(root: String): String = s"$root/signatures_dfcounts"
 
   // --------------------------------------- shingle-group fold layout
   //
@@ -556,7 +513,7 @@ object SignatureIndex {
     * saturation gate has just bounded by ~1.2·G. None ⇒ callers take
     * the unpruned reads (optimal at saturating density, and the only
     * sound choice when a sidecar is missing). */
-  private def hgrpProbeSet(spark: SparkSession, root: String, table: String,
+  private def hgrpProbeSet(spark: SparkSession, root: String,
       incShingles: DataFrame, batchKey: Option[String],
       dfGs: Map[String, Option[Int]],
       postGs: Map[String, Option[Int]]): Option[Array[Long]] = {
@@ -570,7 +527,7 @@ object SignatureIndex {
     // perfectly prunable postings read; each directory's own
     // saturation is re-checked against its own G in the read.
     val maxG = gs.flatten.max
-    val k = batchKey.flatMap(BatchLog.rowCountOf(spark, dfDir(root, table), _))
+    val k = batchKey.flatMap(BatchLog.rowCountOf(spark, dfDir(root), _))
       .getOrElse(incShingles.count())
     val expectedHit = 1.0 - math.pow(1.0 - 1.0 / maxG, k.toDouble)
     if (expectedHit >= hgrpSaturation) None
@@ -624,17 +581,15 @@ object SignatureIndex {
 
   private val coversPrefix = "_covers_"
 
-  private def markerPath(spark: SparkSession, root: String, table: String,
-      key: String) =
+  private def markerPath(spark: SparkSession, root: String, key: String) =
     new org.apache.hadoop.fs.Path(
-      BatchLog.resolve(spark, postingsDir(root, table)), s"$coversPrefix$key")
+      BatchLog.resolve(spark, postingsDir(root)), s"$coversPrefix$key")
 
   /** Signature-batch keys whose derived rows are committed (marker set). */
-  private[graft] def coveredKeys(spark: SparkSession, root: String,
-      table: String = "signatures"): Set[String] = {
+  private[graft] def coveredKeys(spark: SparkSession, root: String): Set[String] = {
     val dir = new org.apache.hadoop.fs.Path(
-      BatchLog.resolve(spark, postingsDir(root, table)))
-    val fs = fsOf(spark, postingsDir(root, table))
+      BatchLog.resolve(spark, postingsDir(root)))
+    val fs = fsOf(spark, postingsDir(root))
     if (!fs.exists(dir)) Set.empty
     else fs.listStatus(dir).toSeq.filter(_.isFile).map(_.getPath.getName)
       .filter(_.startsWith(coversPrefix)).map(_.stripPrefix(coversPrefix)).toSet
@@ -642,26 +597,24 @@ object SignatureIndex {
 
   /** True iff the derived cache covers exactly the signature log's
     * committed batches — the fast path's soundness gate. */
-  private[graft] def derivedCovered(spark: SparkSession, root: String,
-      table: String = "signatures"): Boolean = {
-    val sigKeys = BatchLog.committedKeys(spark, s"$root/$table").toSet
-    sigKeys.nonEmpty && coveredKeys(spark, root, table) == sigKeys
+  private[graft] def derivedCovered(spark: SparkSession, root: String): Boolean = {
+    val sigKeys = BatchLog.committedKeys(spark, sigDir(root)).toSet
+    sigKeys.nonEmpty && coveredKeys(spark, root) == sigKeys
   }
 
-  private def writeMarker(spark: SparkSession, root: String, table: String,
-      key: String): Unit =
-    fsOf(spark, postingsDir(root, table))
-      .create(markerPath(spark, root, table, key), true).close()
+  private def writeMarker(spark: SparkSession, root: String, key: String): Unit =
+    fsOf(spark, postingsDir(root))
+      .create(markerPath(spark, root, key), true).close()
 
   /** Bring the derived logs up to date after this batch's signature
     * append: the incremental path appends the increment's posting/df
     * rows under the same key; any coverage anomaly rebuilds instead. */
-  private[graft] def maintainDerived(spark: SparkSession, root: String, table: String,
+  private[graft] def maintainDerived(spark: SparkSession, root: String,
       key: String, newSigs: DataFrame, coveredBefore: Boolean): Unit = {
     // A compaction-retired key's rows already live in the fold — the
     // signature append above was vetoed, and appending derived rows
     // here would double them beside the fold.
-    if (BatchLog.retiredKeys(spark, s"$root/$table").contains(key)) return
+    if (BatchLog.retiredKeys(spark, sigDir(root)).contains(key)) return
     // A replay of an already-covered key does NOT early-return: the
     // signature append above just overwrote the batch directory, and a
     // contract-violating replay with DIVERGENT content would leave the
@@ -685,16 +638,16 @@ object SignatureIndex {
       // exchange that keeps the explode parallel while the (small)
       // write lands in one task.
       val newPost = newSigs.select(col("doc_id"), explode(col("shs")).as("h"))
-      val smallIncrement = BatchLog.rowCountOf(spark, s"$root/$table", key)
+      val smallIncrement = BatchLog.rowCountOf(spark, sigDir(root), key)
         .exists(_ <= 50000L)
       BatchLog.appendResolved(
         if (smallIncrement) newPost.coalesce(1) else newPost.repartition(1),
-        postingsDir(root, table), key, "SignatureIndex.postings")
+        postingsDir(root), key, "SignatureIndex.postings")
       BatchLog.appendResolved(
         newPost.groupBy("h").agg(count(lit(1)).as("n")).coalesce(1),
-        dfDir(root, table), key, "SignatureIndex.dfcounts")
-      writeMarker(spark, root, table, key)
-    } else rebuildDerived(spark, root, table)
+        dfDir(root), key, "SignatureIndex.dfcounts")
+      writeMarker(spark, root, key)
+    } else rebuildDerived(spark, root)
   }
 
   /** Re-derive both side tables from the raw signature log (coverage
@@ -706,12 +659,11 @@ object SignatureIndex {
     * with the increment" directly into the posting/signature
     * directories it must read — including the post-compaction fold,
     * which is just one more key preserved through here. */
-  private[graft] def rebuildDerived(spark: SparkSession, root: String,
-      table: String = "signatures"): Unit = {
-    val path = s"$root/$table"
-    val fs = fsOf(spark, postingsDir(root, table))
-    fs.delete(new org.apache.hadoop.fs.Path(postingsDir(root, table)), true)
-    fs.delete(new org.apache.hadoop.fs.Path(dfDir(root, table)), true)
+  private[graft] def rebuildDerived(spark: SparkSession, root: String): Unit = {
+    val path = sigDir(root)
+    val fs = fsOf(spark, postingsDir(root))
+    fs.delete(new org.apache.hadoop.fs.Path(postingsDir(root)), true)
+    fs.delete(new org.apache.hadoop.fs.Path(dfDir(root)), true)
     if (!BatchLog.hasData(spark, path)) return
     // RAW log, not readIndex: pending tombstones stay a read-side
     // subtraction — deriving from the live view would double-subtract.
@@ -765,10 +717,10 @@ object SignatureIndex {
           if (BatchLog.appendResolved(frame.repartition(nFiles), dir, k, op))
             BatchLog.writeFoldManifest(spark, BatchLog.dirOfResolved(spark, dir, k))
         }
-      writeLog(post, postingsDir(root, table), gPost, "SignatureIndex.postings")
-      writeLog(df, dfDir(root, table), gDf, "SignatureIndex.dfcounts")
+      writeLog(post, postingsDir(root), gPost, "SignatureIndex.postings")
+      writeLog(df, dfDir(root), gDf, "SignatureIndex.dfcounts")
     }
-    BatchLog.committedKeys(spark, path).foreach(k => writeMarker(spark, root, table, k))
+    BatchLog.committedKeys(spark, path).foreach(k => writeMarker(spark, root, k))
   }
 
   /** [[deltaPairs]]'s exact semantics served from the persisted side
@@ -783,34 +735,23 @@ object SignatureIndex {
     * increment/candidate-bounded side — the corpus-side logs are only
     * ever scanned, never shuffled. */
   private[graft] def deltaPairsIndexed(spark: SparkSession, root: String,
-      table: String, newSigs: DataFrame,
+      newSigs: DataFrame,
       batchKey: Option[String] = None): DataFrame = BatchLog.withManifestSnapshot {
     // Read-only probe: one manifest snapshot across the df gate, the
     // posting read, and the verify scan — the repeat consults the three
     // helper calls otherwise each pay (a stat per directory per call,
-    // the probe's object-store round-trip budget). Recovery runs in the
-    // CALLER (ingest) before this; the one internal path that can run
-    // recovery itself (the full-scan fallback below) executes OUTSIDE
-    // this snapshot via withoutManifestSnapshot, so a snapshot entry
-    // can never alias a healed directory — belt on top of the existing
-    // braces (recovery only adopts never-seen batch keys).
-    // Tombstone state pinned FIRST — before ANY data resolution in this
-    // path (the r18 advisory: the df-log read below resolved before the
-    // tombstone pin, the exact data-before-tombstones order the
-    // versioned swap protocol's one silent-wrong interleaving needs;
-    // lease-held ingest was safe, but the unleased tool/query callers —
-    // TrainingData, FsOpsBench — racing a compaction could
-    // pair old df counts with a cleared side table). Tombstones.read
-    // lists the resolved side table eagerly, so the set is pinned here.
-    val tombRaw = Tombstones.read(spark, root, "doc_id")
-    val tombBytes = Tombstones.bytesOnDisk(spark, root)
+    // the probe's object-store round-trip budget). The snapshot also
+    // pins ONE resolution of the signature log, so the tombstones read
+    // here and the verify scan below see the same version.
+    val tombRaw = Tombstones.read(spark, BatchLog.resolve(spark, sigDir(root)), "doc_id")
+    val tombBytes = Tombstones.bytesOnDisk(spark, sigDir(root))
     val tombPending = tombBytes > 0L
     // Degenerate-root guard: a first batch whose increment produced no
     // signature rows can leave the derived logs absent (an empty write
     // may commit no data file) — there is nothing to pair against, and
     // reading an absent parquet dir would throw instead.
-    if (!BatchLog.hasData(spark, postingsDir(root, table)) ||
-        !BatchLog.hasData(spark, dfDir(root, table)))
+    if (!BatchLog.hasData(spark, postingsDir(root)) ||
+        !BatchLog.hasData(spark, dfDir(root)))
       return spark.range(0).selectExpr("id AS doc_a", "id AS doc_b",
         "CAST(0.0 AS DOUBLE) AS jaccard").where(lit(false))
     val newPost = newSigs.select(col("doc_id"), explode(col("shs")).as("h"))
@@ -840,15 +781,15 @@ object SignatureIndex {
     // the posting scan below read only the groups the increment's
     // shingles hash into — exact, because every consumer of either log
     // equi-joins on `h` against the increment's shingle set first.
-    val dfParted = BatchLog.partitionedKeys(spark, dfDir(root, table), hgrpCol)
-    val postParted = BatchLog.partitionedKeys(spark, postingsDir(root, table), hgrpCol)
-    val dfGs = sidecarGs(spark, dfDir(root, table), dfParted, hgrpSidecarName)
-    val postGs = sidecarGs(spark, postingsDir(root, table), postParted, hgrpSidecarName)
-    val hProbe = hgrpProbeSet(spark, root, table, incShingles, batchKey,
+    val dfParted = BatchLog.partitionedKeys(spark, dfDir(root), hgrpCol)
+    val postParted = BatchLog.partitionedKeys(spark, postingsDir(root), hgrpCol)
+    val dfGs = sidecarGs(spark, dfDir(root), dfParted, hgrpSidecarName)
+    val postGs = sidecarGs(spark, postingsDir(root), postParted, hgrpSidecarName)
+    val hProbe = hgrpProbeSet(spark, root, incShingles, batchKey,
       dfGs, postGs)
     val dfHits = graft.CacheJanitor.register(
-      groupPrunedRead(spark, dfDir(root, table),
-        BatchLog.committedKeys(spark, dfDir(root, table)), dfParted,
+      groupPrunedRead(spark, dfDir(root),
+        BatchLog.committedKeys(spark, dfDir(root)), dfParted,
         hgrpCol, dfGs, hProbe,
         keepKey = true, "SignatureIndex.dfcounts")
         .join(broadcast(incShingles), Seq("h")).persist())
@@ -861,8 +802,8 @@ object SignatureIndex {
     // it carries one independently-minted fold key instead). Misaligned
     // roots fall back to the previous full scans — never a silent
     // under-read — until their next rebuild re-keys them.
-    val sigKeys = BatchLog.committedKeys(spark, s"$root/$table").toSet
-    val postKeys = BatchLog.committedKeys(spark, postingsDir(root, table)).toSet
+    val sigKeys = BatchLog.committedKeys(spark, sigDir(root)).toSet
+    val postKeys = BatchLog.committedKeys(spark, postingsDir(root)).toSet
     val aligned = matched.nonEmpty && matched.forall(k => sigKeys(k) && postKeys(k))
     if (matched.isEmpty) {
       // An increment WITH shingles always matches at least its own batch
@@ -875,33 +816,19 @@ object SignatureIndex {
       if (incShingles.isEmpty)
         return spark.range(0).selectExpr("id AS doc_a", "id AS doc_b",
           "CAST(0.0 AS DOUBLE) AS jaccard").where(lit(false))
-      // ESCAPE the manifest snapshot for the fallback: readIndex may run
-      // recovery (replace fold directories), and a consult answered from
-      // the snapshot opened above could alias a just-healed directory.
-      // Today's recovery only adopts NEVER-seen batch keys, but the
-      // fallback must stay sound without that non-local invariant
-      // (the r16 advisory).
-      return BatchLog.withoutManifestSnapshot {
-        deltaPairs(readIndex(spark, root, table), newSigs)
-      }
+      return deltaPairs(readIndex(spark, root), newSigs)
     }
-    // (Tombstone state was pinned at entry, before the df read resolved
-    // — the versioned-swap consistency order. Its LIVE bytes probe goes
-    // through the version pointer: a cleared-but-versioned side table —
-    // empty current version — reads as 0 bytes, so the pending branches
-    // below switch off exactly as the old dir-existence probe did on a
-    // deleted table.)
     val post =
-      if (aligned) groupPrunedRead(spark, postingsDir(root, table), matched,
+      if (aligned) groupPrunedRead(spark, postingsDir(root), matched,
         postParted, hgrpCol, postGs, hProbe,
         keepKey = false, "SignatureIndex.postings")
-      else BatchLog.read(spark, postingsDir(root, table), "SignatureIndex.postings")
+      else BatchLog.read(spark, postingsDir(root), "SignatureIndex.postings")
         .drop(hgrpCol)
     // The broadcast hint is gated on the side table's measured on-disk
     // size: steady-state removals are tiny and the hint saves a
     // shuffle, but a BULK takedown's pending set is bounded only by
     // removed-doc count — past the bound the strategy is left to the
-    // planner, mirroring the frame path's Tombstones.exclude.
+    // planner, mirroring the frame path's plain anti-join.
     val tomb =
       if (tombBytes <= tombstoneBroadcastMaxBytes) broadcast(tombRaw)
       else tombRaw
@@ -945,9 +872,9 @@ object SignatureIndex {
     // The verify scan obeys the same matched-batch restriction: a
     // candidate doc's signature row lives in the batch directory whose
     // posting rows surfaced it (same key, by the identity-mapping
-    // invariant) — recovery/tombstone semantics unchanged
-    // (recoverState ran at entry; exclusion applied to the restricted
-    // read exactly as readIndex applies it to the full one).
+    // invariant) — tombstone semantics unchanged (exclusion applied to
+    // the restricted read exactly as readIndex applies it to the full
+    // one).
     // Doc-group pruning on the verify scan (the fold's HEAVY shingle
     // arrays): the read only has to produce candidate docs' rows, and a
     // candidate id outside its `dgrp=` groups cannot exist — exact. The
@@ -955,18 +882,18 @@ object SignatureIndex {
     // the verify joins below), so collecting it costs one job over the
     // persisted `cand` frame, paid only when a partitioned fold is
     // among the matched directories.
-    val sigParted = BatchLog.partitionedKeys(spark, s"$root/$table", dgrpCol)
-    val sigGs = sidecarGs(spark, s"$root/$table", sigParted, dgrpSidecarName)
+    val sigParted = BatchLog.partitionedKeys(spark, sigDir(root), dgrpCol)
+    val sigGs = sidecarGs(spark, sigDir(root), sigParted, dgrpSidecarName)
     val candProbe =
       if (!aligned || !matched.exists(sigParted)) None
       else Some(candIds.collect().map(_.getLong(0)))
     val sigsBase =
       if (aligned)
-        groupPrunedRead(spark, s"$root/$table", matched, sigParted,
+        groupPrunedRead(spark, sigDir(root), matched, sigParted,
           dgrpCol, sigGs,
           candProbe, keepKey = false, "SignatureIndex.verify")
-          .join(tombRaw, Seq("doc_id"), "left_anti") // pinned above, pre-read
-      else readIndex(spark, root, table)
+          .join(tombRaw, Seq("doc_id"), "left_anti") // the version resolved above
+      else readIndex(spark, root)
     val sigs = graft.CacheJanitor.register(
       sigsBase.join(broadcast(candIds), Seq("doc_id"), "left_semi").persist())
     val sa = sigs.select(col("doc_id").as("doc_a"), col("shs").as("shs_a"))

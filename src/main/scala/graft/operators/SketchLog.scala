@@ -34,7 +34,8 @@ import org.apache.spark.sql.functions._
   * sketch cannot subtract a removed document — there is no tombstone
   * path here by construction. [[rebuild]] is the escape hatch (the same
   * role refreeze plays for the frozen-parameter indexes): re-sketch the
-  * surviving corpus from source and atomically swap, on the operator's
+  * surviving corpus from source and commit it as the log's next
+  * version, on the operator's
   * schedule. [[compact]] needs no such rebuild — merging batch rows is
   * pure sketch union, so it folds the log to one row per scope with
   * bit-equal estimates.
@@ -65,13 +66,6 @@ object SketchLog {
   def ingest(spark: SparkSession, root: String, increment: DataFrame,
       scopeCol: String, valueCol: String,
       table: String = "sketches", batchKey: Option[String] = None): Unit = WriterLease.withLease(spark, root) {
-    // Recovery FIRST: an ingest landing inside a crashed compact/rebuild
-    // swap window (dest deleted, fold fully staged in tmp) would
-    // otherwise recreate the log root with only this increment — and the
-    // next reader's recovery, seeing dest present ∧ tmp present, would
-    // then drop the staged fold as an abandoned stage: every
-    // pre-compaction sketch row and the retirement ledger lost silently.
-    recoverState(spark, root, table)
     BatchLog.append(sketch(increment, scopeCol, valueCol),
       s"$root/$table", batchKey, "SketchLog")
   }
@@ -81,7 +75,6 @@ object SketchLog {
     * from the corpus. */
   def estimate(spark: SparkSession, root: String, scopeCol: String,
       table: String = "sketches"): DataFrame = {
-    ReadGuard.recoverForRead(spark, root)(recoverState(spark, root, table))
     BatchLog.read(spark, s"$root/$table", "SketchLog")
       .groupBy(col(scopeCol))
       .agg(
@@ -90,53 +83,36 @@ object SketchLog {
         sum(col("n_rows")).as("n_rows"))
   }
 
-  /** Crash recovery for the compaction swap window (same protocol as
-    * the index logs — a swap that died after its intent is completed
-    * from the recorded stage). This operator commits with
-    * [[Tombstones.commitSwap]], whose intent records no tombstone root:
-    * `root/tombstones` — if present — belongs to a sibling index sharing
-    * the root, and `commitCompaction` would clear it, silently
-    * resurrecting that index's removed ids. */
-  private def recoverState(spark: SparkSession, root: String, table: String): Unit =
-    Tombstones.recoverSwap(spark, s"$root/$table.__compact_tmp", s"$root/$table")
-
   /** Fold the log to one row per scope (pure sketch union — estimates
-    * are bit-equal before and after, spec-pinned) with the atomic
-    * stage-then-swap commit. Read fan-in drops from `batches × scopes`
+    * are bit-equal before and after, spec-pinned), committed as the
+    * log's next version. Read fan-in drops from `batches × scopes`
     * rows to `scopes`. */
   def compact(spark: SparkSession, root: String, scopeCol: String,
       table: String = "sketches"): Unit = WriterLease.withLease(spark, root) {
     val path = s"$root/$table"
-    val tmp = s"$path.__compact_tmp"
-    recoverState(spark, root, table)
     val folded = BatchLog.read(spark, path, "SketchLog")
       .groupBy(col(scopeCol))
       .agg(
         hll_union_agg(col("sk"), lit(false)).as("sk"),
         sum(col("n_rows")).as("n_rows"))
-    BatchLog.stageRewrite(folded, path, tmp)
-    Tombstones.commitSwap(spark, tmp, path)
+    BatchLog.rewrite(folded, path)()
   }
 
   /** From-scratch replacement over `corpus` (the deletion escape hatch:
     * sketches cannot subtract, so takedowns re-sketch the survivors).
-    * Atomic swap via the same staged-commit protocol; the new log holds
-    * one batch. */
+    * Committed like [[compact]]; the new log holds one batch. */
   def rebuild(spark: SparkSession, root: String, corpus: DataFrame,
       scopeCol: String, valueCol: String, table: String = "sketches"): Unit = WriterLease.withLease(spark, root) {
     val path = s"$root/$table"
-    val tmp = s"$path.__compact_tmp"
-    recoverState(spark, root, table)
-    // Stage the fresh sketch rows under a rewrite of the existing log so
-    // the swap inherits crash recovery; the fold frame must derive from
-    // the log it rewrites (stageRewrite's lineage check), so union the
+    // Stage the fresh sketch rows as a rewrite of the existing log; the
+    // fold frame must derive from the log it rewrites (the rewrite's
+    // lineage check, which keeps the retired-keys ledger), so union the
     // log's rows in and drop them — their scopes are re-sketched from
     // source, which supersedes every logged register.
     val old = BatchLog.read(spark, path, "SketchLog")
       .select(col(scopeCol), col("sk"), col("n_rows"))
       .where(lit(false))
     val fresh = sketch(corpus, scopeCol, valueCol).unionByName(old)
-    BatchLog.stageRewrite(fresh, path, tmp)
-    Tombstones.commitSwap(spark, tmp, path)
+    BatchLog.rewrite(fresh, path)()
   }
 }

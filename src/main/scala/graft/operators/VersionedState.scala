@@ -4,47 +4,54 @@ import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.sql.SparkSession
 
 /** Pointer-indirected versioned layout: the ONE commit protocol for
-  * every whole-directory state the engine replaces — the swapped index
-  * state directories (fold logs, sketch tables, the tombstone side
-  * table) and the snapshots ([[graft.sources.LandingLog.writeSnapshot]]:
-  * star tables, source currents, CosineDedupIndex `meta`, the pinned
-  * keeper manifest) — and what makes reads WAIT-FREE under maintenance
-  * and star commits. A commit never replaces the table directory in
-  * place (the LSM answer: retired state lingers for in-flight readers,
-  * GC'd after a grace period); a whole table directory is the version:
+  * every whole-directory state the engine replaces — the index logs'
+  * rewrites (compaction and refreeze of the fold logs, sketch tables,
+  * label logs) and the snapshots ([[graft.sources.LandingLog.writeSnapshot]]:
+  * star tables, source currents, the pinned keeper manifest) — and what
+  * makes reads WAIT-FREE under maintenance and star commits. A commit
+  * never replaces the table directory in place (the LSM answer: retired
+  * state lingers for in-flight readers, GC'd after a grace period); a
+  * whole table directory is the version:
   *
   * {{{
   * root/codes/                      # the LOGICAL table dir (pointer)
   *   _versions/00000001/            # one complete table-dir state
   *     batch_key=a00001/...         #   (fold + later increments +
-  *     _graft_batched_v1            #    marker + ledgers ride inside)
-  *   _versions/00000002/...
-  *   _commits/00000002              # marker NAME is the commit
-  *   batch_key=b2026.../...         # FLAT state before the first swap
+  *     _graft_batched_v1            #    marker + ledgers + the
+  *     _tombstones/...              #    version's pending removals)
+  *   _versions/00000002/...         # an unmarked version: a stage
+  *   _commits/00000001              # marker NAME is the commit
+  *   batch_key=b2026.../...         # FLAT state before the first commit
   * }}}                              #   ("v0"), GC'd like any superseded version
   *
   * Readers resolve the newest committed version ONCE at plan time
-  * ([[resolve]]) and scan inside it; a root that has never been swapped
-  * resolves to its flat top level. A commit fills the NEXT version
-  * directory (a staged tmp renamed in, or a snapshot written there —
-  * the committed state is never deleted, renamed or partially visible)
-  * and publishes it with one marker create ([[writeMarker]]). [[gc]]
-  * keeps the newest [[keepVersions]] superseded versions and deletes an
-  * older one only once its successor's marker is [[graceMs]] old, so a
-  * reader completes against its planned files as long as its scan is
-  * shorter than the grace period; the same two knobs are the snapshots'
-  * time-travel window ([[graft.sources.LandingLog.readSnapshotAt]]).
-  * Refreeze stages its quantizer INSIDE the codes stage, so quantizer +
-  * codes commit as ONE version — see [[RefreezeProtocol.quantStageName]].
+  * ([[resolve]]) and scan inside it; a root that has never been
+  * rewritten resolves to its flat top level. A writer [[stage]]s the
+  * NEXT version directory — writing straight into it, invisible to
+  * readers until its marker exists — and [[commit]]s it with one marker
+  * create plus [[gc]]. The committed state is never deleted, renamed or
+  * partially visible, so a reader needs no recovery: a crash before the
+  * marker leaves an unmarked stage nobody resolves, and the next stage
+  * at that number deletes it. Everything that must change together
+  * rides inside the one version: a rewrite's fold, the retired-keys
+  * ledger, IVF's `_quantizer`, CosineDedupIndex's `_mask`, and the
+  * cleared tombstone set (a new version simply has no `_tombstones`).
   *
-  * Increments APPEND INSIDE the current version directory (fold
-  * directories stay immutable; the version dir gains sibling
-  * `batch_key=` dirs) — append-only, so a reader's earlier listing
-  * snapshot is never invalidated by them. Only a swap advances the
-  * version.
+  * [[gc]] keeps the newest [[keepVersions]] superseded versions and
+  * deletes an older one only once its successor's marker is [[graceMs]]
+  * old, so a reader completes against its planned files as long as its
+  * scan is shorter than the grace period; the same two knobs are the
+  * snapshots' time-travel window
+  * ([[graft.sources.LandingLog.readSnapshotAt]]).
+  *
+  * Increments and tombstones APPEND INSIDE the current version
+  * directory (fold directories stay immutable; the version dir gains
+  * sibling `batch_key=` dirs and `_tombstones` files) — append-only, so
+  * a reader's earlier listing snapshot is never invalidated by them.
+  * Only a rewrite advances the version.
   *
   * A raw `spark.read.parquet(<logical dir>)` bypasses the pointer: once
-  * the root has been swapped it reads the superseded flat state until
+  * the root has been rewritten it reads the superseded flat state until
   * [[gc]] sweeps it, then nothing. Read through [[resolve]] (or
   * [[BatchLog.resolve]]) instead.
   *
@@ -100,21 +107,43 @@ private[graft] object VersionedState {
       .filter(v => fs.exists(new HPath(versionDir(dir, v))))
       .sorted
 
-  /** Highest committed version, 0 = a root never swapped (flat state). */
+  /** Highest committed version, 0 = a root never rewritten (flat state). */
   def currentVersion(fs: FileSystem, dir: String): Long =
     committedVersions(fs, dir).lastOption.getOrElse(0L)
 
   /** The physical directory holding the CURRENT committed state: the
     * newest committed version dir, or the logical dir itself for
-    * roots never swapped (and never written). Idempotent — a version
-    * directory has no `_commits` child, so resolving a resolved path
-    * returns it unchanged. Readers call this ONCE at plan time; the
-    * returned directory's committed content is immutable except for
-    * append-only `batch_key=` additions. */
-  def resolve(spark: SparkSession, dir: String): String = {
-    val fs = fsOf(spark, dir)
-    val v = currentVersion(fs, dir)
-    if (v > 0) versionDir(dir, v) else dir
+    * roots never rewritten (and never written). Idempotent and free on
+    * an already-resolved path: a directory directly under `_versions`
+    * is returned unchanged without a filesystem call. Readers call this
+    * ONCE at plan time; the returned directory's committed content is
+    * immutable except for append-only `batch_key=` and `_tombstones`
+    * additions. */
+  def resolve(spark: SparkSession, dir: String): String =
+    if (Option(new HPath(dir).getParent).exists(_.getName == "_versions")) dir
+    else {
+      val v = currentVersion(fsOf(spark, dir), dir)
+      if (v > 0) versionDir(dir, v) else dir
+    }
+
+  /** Open the next version of `dir` for writing: returns its number
+    * and physical directory, which no reader resolves until [[commit]].
+    * Anything already at that number is a crashed stage's leftover —
+    * the caller's writer lease proves no other writer is mid-stage —
+    * and is deleted first. */
+  def stage(fs: FileSystem, dir: String): (Long, String) = {
+    val next = currentVersion(fs, dir) + 1
+    val vdir = versionDir(dir, next)
+    fs.delete(new HPath(vdir), true)
+    (next, vdir)
+  }
+
+  /** Publish a fully written [[stage]]: the marker create is the
+    * commit point; the grace GC after it may be cut short by a crash
+    * harmlessly (the next commit's GC redoes it). */
+  def commit(fs: FileSystem, dir: String, v: Long): Unit = {
+    writeMarker(fs, dir, v)
+    gc(fs, dir)
   }
 
   /** Create the commit marker for `v` (idempotent). The marker BODY is
@@ -135,10 +164,15 @@ private[graft] object VersionedState {
   }
 
   /** The conservative commit time of a marker: max(FS mtime, recorded
-    * committing-driver wall time). Torn/empty/garbled body ⇒ mtime. */
+    * committing-driver wall time). Torn/empty/garbled body ⇒ mtime. A
+    * marker whose mtime is younger than [[graceMs]] is not opened: the
+    * max can only be younger still, so the mtime already proves it
+    * expires nothing — the common case of a commit within the grace
+    * window costs no marker reads. */
   private def markerCommitTime(fs: FileSystem, dir: String, name: String,
-      mtime: Long): Long =
-    try {
+      mtime: Long, now: Long): Long =
+    if (now - mtime < graceMs) mtime
+    else try {
       val in = fs.open(new HPath(commitsDir(dir), name))
       val s = try new String(
         org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8").trim
@@ -191,7 +225,8 @@ private[graft] object VersionedState {
   }
 
   /** Superseded-state GC, grace-aware (single-writer contract — runs
-    * under the root's lease, from commit and recovery paths):
+    * under the root's lease, from commit paths and the maintenance
+    * sweeps):
     *
     *  - the current version always survives;
     *  - the newest [[keepVersions]] superseded versions survive;
@@ -199,25 +234,25 @@ private[graft] object VersionedState {
     *    its SUCCESSOR (the commit that made it stale) is ≥ [[graceMs]]
     *    old — i.e. every reader that could have planned against it had
     *    a full grace period to finish;
-    *  - the FLAT state a root held before its first swap (the logical
-    *    dir's own `batch_key=` dirs, marker, ledgers — "version 0") is
-    *    GC'd by the same rule, keyed to version 1's marker age;
+    *  - the FLAT state a root held before its first commit (the logical
+    *    dir's own `batch_key=` dirs, marker, ledgers, tombstones —
+    *    "version 0") is GC'd by the same rule, keyed to version 1's
+    *    marker age;
     *  - an UNMARKED version dir BELOW the current version is a crashed
-    *    commit's abandoned partial — deleted (an unmarked dir above
-    *    current is an IN-FLIGHT commit and is never touched here; its
-    *    intent marker owns it, and a crashed snapshot stage there is
-    *    overwritten by the next stage that reaches its number). */
+    *    stage's leftover — deleted. An unmarked dir above current is
+    *    never touched here: the next [[stage]] at its number replaces
+    *    it. */
   def gc(fs: FileSystem, dir: String): Unit = {
     // Commit times are the conservative max(mtime, recorded wall) —
-    // see [[writeMarker]]; content reads happen only here, in the
-    // maintenance path, never on reads.
+    // see [[writeMarker]]; marker bodies are read only here, only for
+    // markers old enough to matter, and never on reads.
+    val now = System.currentTimeMillis()
     val marks = markerNames(fs, dir)
       .filter { case (n, _) => n.nonEmpty && n.forall(_.isDigit) }
-      .map { case (n, mt) => (n.toLong, markerCommitTime(fs, dir, n, mt)) }
+      .map { case (n, mt) => (n.toLong, markerCommitTime(fs, dir, n, mt, now)) }
       .sortBy(_._1)
     if (marks.isEmpty) return
     val current = marks.last._1
-    val now = System.currentTimeMillis()
     // Age since SUPERSEDED = age of the next marker up.
     val successorMtime: Map[Long, Long] =
       marks.sliding(2).collect { case Seq((v, _), (_, mt2)) => v -> mt2 }.toMap
@@ -239,8 +274,8 @@ private[graft] object VersionedState {
       .filter(v => v < current && !marks.exists(_._1 == v))
       .foreach(v => fs.delete(new HPath(versionDir(dir, v)), true))
     // Flat "version 0": everything at the logical dir's top level other
-    // than the version machinery is the state before the first swap,
-    // superseded by version 1's commit.
+    // than the version machinery is the state before the first commit,
+    // superseded by version 1.
     val v1Mtime = marks.headOption.map(_._2)
     if (v1Mtime.exists(mt => now - mt >= graceMs))
       list(fs, new HPath(dir))

@@ -17,11 +17,11 @@ final class ConcurrentWriterException(msg: String) extends RuntimeException(msg)
   * ([[SignatureIndex]], [[CosineDedupIndex]], [[AnnIndex]], [[PqIndex]],
   * [[ClusterLabels]], [[SketchLog]], [[DedupPipeline]]) runs under
   * `withLease(root)`. The crash protocols those operators already carry
-  * (marker-gated refreeze, stage-then-swap compaction, batch-keyed
-  * replay) make every mutation atomic against READERS — but two
-  * concurrent WRITERS could still interleave, e.g. a compaction's
-  * versioned swap with another process's ingest appending to the
-  * version it supersedes. The
+  * (one-marker versioned commits, batch-keyed replay) make every
+  * mutation atomic against READERS — but two concurrent WRITERS could
+  * still interleave, e.g. a compaction's commit with another process's
+  * ingest appending to the version it supersedes, or two rewrites
+  * staging the same next version. The
   * lease closes that: one writer proceeds, any second writer refuses
   * loudly ([[ConcurrentWriterException]]) instead of corrupting state.
   *

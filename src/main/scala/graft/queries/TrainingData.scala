@@ -2841,7 +2841,7 @@ object TrainingData {
         graft.operators.ClusterLabels.mergeFrames(none, pairs1, even.select("doc_id"))
           .persist())
       // The takedown: %10=6 tombstoned between batches. Every read goes
-      // through Tombstones.exclude — this filter IS that anti-join's
+      // through Tombstones.live — this filter IS that anti-join's
       // effect on the live index (the persisted form is spec-pinned).
       val live = sigs.where("doc_id % 10 <> 6")
       val odd = live.where("doc_id % 2 = 1")
@@ -3018,7 +3018,7 @@ object TrainingData {
       val b2 = graft.operators.SignatureIndex.ingest(s, root,
         docs.where("doc_id % 2 = 1"), batchKey = Some("b2"))
       graft.operators.SignatureIndex
-        .deltaPairsIndexed(s, root, "signatures", b2.newSigs)
+        .deltaPairsIndexed(s, root, b2.newSigs)
         .orderBy(col("doc_a"), col("doc_b"))
     },
     oracle = t67.oracle) // same semantics, same replay — by design

@@ -212,16 +212,15 @@ object LandingLog {
   }
 
   /** Stage (but do not publish) the next snapshot version: the full data
-    * write, into a version directory invisible to readers. Returns the
-    * staged version number for [[commitSnapshot]]. Crash-safe by
-    * construction: the staged dir is resolved by nobody until its commit
-    * marker lands, and a retry after a crash restages the SAME version
-    * (mode overwrite clears any partial files). */
+    * write, into [[VersionedState.stage]]'s version directory, invisible
+    * to readers. Returns the staged version number for [[commitSnapshot]].
+    * Crash-safe by construction: the staged dir is resolved by nobody
+    * until its commit marker lands, and a retry after a crash restages
+    * the SAME version over the deleted leftover. */
   def stageSnapshot(df: DataFrame, root: String, table: String,
       partitionBy: Seq[String] = Nil, rangeSize: Long = 100): Long = {
     val dir = s"$root/$table"
-    val next = VersionedState.currentVersion(fsOf(dir), dir) + 1
-    val dest = VersionedState.versionDir(dir, next)
+    val (next, dest) = VersionedState.stage(fsOf(dir), dir)
     if (partitionBy.isEmpty) df.write.mode("overwrite").parquet(dest)
     else writePartitioned(df, dest, partitionBy, rangeSize)
     next
@@ -244,14 +243,11 @@ object LandingLog {
       .write.mode("overwrite").partitionBy(mirrors: _*).parquet(dest)
   }
 
-  /** Publish a staged version: VersionedState's marker create (the
-    * staged directory is complete by [[stageSnapshot]]'s contract), then
-    * its grace GC, which a crash may cut short harmlessly. */
+  /** Publish a staged version with [[VersionedState.commit]] (the
+    * staged directory is complete by [[stageSnapshot]]'s contract). */
   def commitSnapshot(root: String, table: String, version: Long): Unit = {
     val dir = s"$root/$table"
-    val fs = fsOf(dir)
-    VersionedState.writeMarker(fs, dir, version)
-    VersionedState.gc(fs, dir)
+    VersionedState.commit(fsOf(dir), dir, version)
   }
 
   /** Time-travel read of a committed version still inside

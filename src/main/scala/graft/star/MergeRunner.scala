@@ -83,7 +83,7 @@ object MergeRunner {
     * same class of gate as SignatureIndex's tombstone broadcast — a
     * bulk backfill falls back to a planner-decided shuffle join. */
   val pkProbeBroadcastMaxBytes: Long = 256L << 20
-  private val sourcesDir = "_sources"
+  private[star] val sourcesDir = "_sources"
   private val refsTable = "_date_refs"
 
   /** Fact snapshot key per fact source. */
@@ -455,6 +455,7 @@ object MergeRunner {
       "refs_version" ->
         VersionedState.currentVersion(fsOf(spark, refsDir), refsDir).toString))
     graft.CacheJanitor.drain(blocking = true)
+    Runner.sweepVersions(spark, processedRoot)
     written.result()
   }
 

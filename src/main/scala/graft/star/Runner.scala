@@ -362,8 +362,19 @@ object Runner {
     // Release operator-internal persists (sequentialId's sorted frames)
     // now that every snapshot write has materialized them.
     graft.CacheJanitor.drain(blocking = true)
+    sweepVersions(spark, processedRoot)
     w
   }
+
+  /** Grace-GC every snapshot table under the processed root and its
+    * source currents, amortized to the grace timescale
+    * ([[graft.operators.VersionedState.gcAllAmortized]]). A snapshot's
+    * own commit GCs only its own table, so without this sweep a table
+    * that stops changing keeps its last superseded version (a full
+    * copy) until it is rewritten. Runs under the batch's lease. */
+  private[star] def sweepVersions(spark: SparkSession, processedRoot: String): Unit =
+    Seq(processedRoot, s"$processedRoot/${MergeRunner.sourcesDir}").foreach(
+      graft.operators.VersionedState.gcAllAmortized(spark, _, force = false))
 
   /** Stored record-id policy marker (`_id_policy.json` at the processed
     * root, atomic-rename committed like every state file here): true =

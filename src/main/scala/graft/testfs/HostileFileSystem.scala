@@ -72,6 +72,7 @@ class HostileFileSystem extends ForkFreeRawLocalFileSystem {
       bufferSize: Int, replication: Short, blockSize: Long,
       progress: Progressable): org.apache.hadoop.fs.FSDataOutputStream = {
     count("create")
+    maybeCrash("create", f)
     super.create(f, permission, overwrite, bufferSize, replication, blockSize, progress)
   }
 
@@ -82,6 +83,7 @@ class HostileFileSystem extends ForkFreeRawLocalFileSystem {
       replication: Short, blockSize: Long,
       progress: Progressable): org.apache.hadoop.fs.FSDataOutputStream = {
     count("create")
+    maybeCrash("create", f)
     super.create(f, overwrite, bufferSize, replication, blockSize, progress)
   }
 
@@ -90,6 +92,7 @@ class HostileFileSystem extends ForkFreeRawLocalFileSystem {
       replication: Short, blockSize: Long,
       progress: Progressable): org.apache.hadoop.fs.FSDataOutputStream = {
     count("create")
+    maybeCrash("create", f)
     super.createNonRecursive(f, permission, flags, bufferSize, replication, blockSize, progress)
   }
 
@@ -237,10 +240,11 @@ object HostileFileSystem {
   /** One-shot injected crash: fires (throws) when a rename whose dest
     * path ENDS WITH `dstSuffix` reaches `phase` — one of
     * "before-copy", "after-copy" (dest complete, src present),
-    * "torn-dest" (dest incomplete, src present). Suffix matching keeps
-    * the hook off the committer's internal renames (their dests end in
-    * part-file names, a swap's dest is the log directory itself).
-    * `skip` matching renames pass through unharmed before the next one
+    * "torn-dest" (dest incomplete, src present) — or, with phase
+    * "create", when a file whose path ends with `dstSuffix` is about to
+    * be created (nothing is created — the commit-marker drill). Suffix
+    * matching keeps the hook off unrelated renames and creates.
+    * `skip` matching operations pass through unharmed before the next one
     * fires — the lever that targets e.g. a state file's SECOND swap of
     * a batch (the commit-point advance) instead of its first (the
     * intent set). Disarms on fire. */
@@ -274,6 +278,11 @@ object HostileFileSystem {
 
   private def maybeCrash(phase: String, dst: Path): Unit =
     if (shouldFire(phase, dst))
-      throw new java.io.IOException(
-        s"[hostile] injected crash at $phase renaming to $dst")
+      throw new java.io.IOException(s"[hostile] injected crash at $phase of $dst")
+
+  /** True when `e`, or any of its causes, is an injected crash (Spark
+    * wraps a crash inside a task or job commit). */
+  def crashedBy(e: Throwable): Boolean =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).map(_.getMessage)
+      .exists(m => m != null && m.contains("injected crash"))
 }

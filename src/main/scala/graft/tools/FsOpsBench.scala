@@ -19,12 +19,11 @@ import org.apache.spark.sql.functions._
   *     driver+executor `listStatus`/`getFileStatus`/`open` counts of
   *     the manifest-backed arm next to the force-disabled listing arm
   *     (`graft.fold.manifest.disable`), pair answers required equal.
-  *  2. **Crash drills**: the compaction swap crashed at `after-copy`
-  *     and `torn-dest` (the state a copy-based mover leaves when it
-  *     dies mid-copy — what the pre-intent protocol would have adopted
-  *     as the log), and the watermark swap crashed at all three
-  *     phases; each drill records whether the next read healed to the
-  *     exact expected state.
+  *  2. **Crash drills**: a compaction crashed at its first commit
+  *     rename, `after-copy` and `torn-dest` (the state a copy-based
+  *     mover leaves when it dies mid-copy), and the watermark swap
+  *     crashed at all three phases; each drill records whether the next
+  *     read returned the exact expected state.
   *
   * Env: `SPARK_GRAFT_SF_DIR` (seed, default sf0.1),
   * `SPARK_GRAFT_FSOPS_FACTOR` (corpus replicas, default 20),
@@ -72,7 +71,7 @@ object FsOpsBench {
       try {
         HostileFileSystem.reset()
         val w0 = System.nanoTime()
-        val pairs = SignatureIndex.deltaPairsIndexed(spark, root, "signatures",
+        val pairs = SignatureIndex.deltaPairsIndexed(spark, root,
           newSigs, Some(BatchLog.sanitize(key))).count()
         val wall = (System.nanoTime() - w0) / 1e9
         val c = HostileFileSystem.counts
@@ -97,7 +96,7 @@ object FsOpsBench {
     }
 
     // --- crash drills ------------------------------------------------
-    // Swap drills on a small separate root (fold layout forced down to
+    // Compaction drills on a small separate root (fold layout forced down to
     // spec scale so the drill stays seconds, not minutes).
     sys.props("graft.fold.min.rows") = "1024"
     sys.props("graft.fold.group.bytes") = "2048"
@@ -112,9 +111,9 @@ object FsOpsBench {
         graft.CacheJanitor.drain()
         SignatureIndex.remove(spark, r, Seq(5L))
         val expect = rows(SignatureIndex.readIndex(spark, r))
-        HostileFileSystem.armCrash(phase, "/signatures")
+        HostileFileSystem.armCrash(phase, "")
         val crashed = try { SignatureIndex.compact(spark, r); false }
-        catch { case e: Exception => e.getMessage != null && e.getMessage.contains("injected crash") }
+        catch { case e: Exception => HostileFileSystem.crashedBy(e) }
         HostileFileSystem.disarm()
         val healed = crashed && rows(SignatureIndex.readIndex(spark, r)) == expect
         graft.CacheJanitor.drain()
@@ -127,7 +126,7 @@ object FsOpsBench {
           val v = s"v_$phase"
           HostileFileSystem.armCrash(phase, "/wm/tracking.json")
           val crashed = try { store.update(Map("t" -> v)); false }
-          catch { case e: Exception => e.getMessage != null && e.getMessage.contains("injected crash") }
+          catch { case e: Exception => HostileFileSystem.crashedBy(e) }
           HostileFileSystem.disarm()
           val healed = crashed && store.watermark("t") == v
           println(s"#   watermark drill $phase crashed=$crashed healed=$healed")
@@ -150,11 +149,7 @@ object FsOpsBench {
           .awaitTermination(120000)
         HostileFileSystem.armCrash("before-copy", "_spark_metadata/0")
         val crashed = try { drain(); false }
-        catch { case e: Exception =>
-          def has(t: Throwable): Boolean = t != null &&
-            ((t.getMessage != null && t.getMessage.contains("injected crash")) || has(t.getCause))
-          has(e)
-        }
+        catch { case e: Exception => HostileFileSystem.crashedBy(e) }
         HostileFileSystem.disarm()
         drain()
         val healed = crashed && spark.read.parquet(dest).count() == 64L

@@ -35,7 +35,7 @@ class AnnIndexSpec extends SparkSpec {
 
     val b2 = AnnIndex.ingest(spark, root, vecs.where(col("vec_id") >= 250))
     assert(b2.newCodes.count() == 250)
-    assert(b2.allCodes.count() == 500)
+    assert(AnnIndex.readCodes(spark, root).count() == 500)
     CacheJanitor.drain()
     val after2 = files(root)
     after1.foreach { case (f, mtime) =>
@@ -55,7 +55,7 @@ class AnnIndexSpec extends SparkSpec {
       (cents, st.map(_.getDouble(1)), st.map(_.getDouble(2)))
     }
     val oneShot = AnnIndex.encode(vecs, quantizer._1, quantizer._2, quantizer._3)
-    assert(codeSet(b2.allCodes) == codeSet(oneShot),
+    assert(codeSet(AnnIndex.readCodes(spark, root)) == codeSet(oneShot),
       "incremental codes must be identical to a frozen-quantizer full encode")
   }
 
@@ -209,7 +209,7 @@ class AnnIndexSpec extends SparkSpec {
       .withColumn("cell", col("cell").cast("long")).drop("batch_key")
     assert(codeSet(compacted) == rebuilt,
       "compacted codes must equal a frozen-quantizer encode of the surviving vectors")
-    assert(graft.operators.Tombstones.bytesOnDisk(spark, root) == 0L,
+    assert(graft.operators.Tombstones.bytesOnDisk(spark, s"$root/codes") == 0L,
       "compaction must clear the tombstone table (empty current version)")
     assert(files(s"$root/quantizer") == quantBefore, "compaction must not touch the frozen quantizer")
     assert(neighbors() == afterRemove, "topK must be identical before and after compaction")

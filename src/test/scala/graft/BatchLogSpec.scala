@@ -3,7 +3,7 @@ package graft
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
-import graft.operators.{AnnIndex, BatchLog, ClusterLabels, CosineDedupIndex, PqIndex, RefreezeProtocol, SignatureIndex, Tombstones, VersionedState}
+import graft.operators.{AnnIndex, BatchLog, ClusterLabels, CosineDedupIndex, PqIndex, SignatureIndex, VersionedState}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -130,21 +130,21 @@ class BatchLogSpec extends SparkSpec {
 
     val rootA = Files.createTempDirectory("graft_bk_ann").toString
     AnnIndex.ingest(spark, rootA, vecs.where(col("vec_id") < 250), batchKey = Some("b1"))
-    val b2 = AnnIndex.ingest(spark, rootA, vecs.where(col("vec_id") >= 250), batchKey = Some("b2"))
-    val want = codeSet(b2.allCodes); CacheJanitor.drain()
-    val rep = AnnIndex.ingest(spark, rootA, vecs.where(col("vec_id") >= 250), batchKey = Some("b2"))
-    assert(codeSet(rep.allCodes) == want)
-    assert(rep.allCodes.count() == want.size, "no duplicate rows after replay")
+    AnnIndex.ingest(spark, rootA, vecs.where(col("vec_id") >= 250), batchKey = Some("b2"))
+    val want = codeSet(AnnIndex.readCodes(spark, rootA)); CacheJanitor.drain()
+    AnnIndex.ingest(spark, rootA, vecs.where(col("vec_id") >= 250), batchKey = Some("b2"))
+    assert(codeSet(AnnIndex.readCodes(spark, rootA)) == want)
+    assert(AnnIndex.readCodes(spark, rootA).count() == want.size, "no duplicate rows after replay")
     CacheJanitor.drain()
     assert(batchDirs(s"$rootA/codes") == Seq("batch_key=bb1", "batch_key=bb2"))
 
     val rootP = Files.createTempDirectory("graft_bk_pq").toString
     PqIndex.ingest(spark, rootP, vecs.where(col("vec_id") < 250), batchKey = Some("b1"))
-    val p2 = PqIndex.ingest(spark, rootP, vecs.where(col("vec_id") >= 250), batchKey = Some("b2"))
-    val wantP = codeSet(p2.allCodes); CacheJanitor.drain()
-    val repP = PqIndex.ingest(spark, rootP, vecs.where(col("vec_id") >= 250), batchKey = Some("b2"))
-    assert(codeSet(repP.allCodes) == wantP)
-    assert(repP.allCodes.count() == wantP.size, "no duplicate rows after replay")
+    PqIndex.ingest(spark, rootP, vecs.where(col("vec_id") >= 250), batchKey = Some("b2"))
+    val wantP = codeSet(PqIndex.readCodes(spark, rootP)); CacheJanitor.drain()
+    PqIndex.ingest(spark, rootP, vecs.where(col("vec_id") >= 250), batchKey = Some("b2"))
+    assert(codeSet(PqIndex.readCodes(spark, rootP)) == wantP)
+    assert(PqIndex.readCodes(spark, rootP).count() == wantP.size, "no duplicate rows after replay")
     CacheJanitor.drain()
   }
 
@@ -258,7 +258,6 @@ class BatchLogSpec extends SparkSpec {
   test("compaction retires only the batches its fold actually read") {
     val root = Files.createTempDirectory("graft_bk_race").toString
     val dest = s"$root/signatures"
-    val tmp = s"$dest.__compact_tmp"
     SignatureIndex.ingest(spark, root, docs(batchA: _*), batchKey = Some("mb0"))
     CacheJanitor.drain()
     // The fold frame lists the log's files NOW (scan snapshot)…
@@ -267,9 +266,8 @@ class BatchLogSpec extends SparkSpec {
     // listing, so the fold holds none of its rows.
     SignatureIndex.ingest(spark, root, docs(batchB: _*), batchKey = Some("mb1"))
     CacheJanitor.drain()
-    BatchLog.stageRewrite(fold, dest, tmp)
-    Tombstones.commitCompaction(spark, root, tmp, dest)
-    // mb1's directory died in the swap — but its key must NOT be
+    BatchLog.rewrite(fold, dest)()
+    // mb1's directory stays behind in the superseded version — but its key must NOT be
     // retired (the fold never absorbed it), so the replay still lands
     // the batch instead of being vetoed forever.
     assert(SignatureIndex.readIndex(spark, root).count() == 3)
@@ -281,6 +279,7 @@ class BatchLogSpec extends SparkSpec {
 
   test("a sealed IVF refreeze stage without its in-stage quantizer is dropped, never committed") {
     val root = Files.createTempDirectory("graft_bk_husk").toString
+    val codes = s"$root/codes"
     val vecs = Tables.embeddings(spark, "/root/testdata/sf0.01")
       .select("vec_id", "embedding")
     AnnIndex.ingest(spark, root, vecs.where(col("vec_id") < 100))
@@ -292,23 +291,35 @@ class BatchLogSpec extends SparkSpec {
     def files(dir: String): Map[String, (Long, Long)] =
       Files.walk(Paths.get(dir)).iterator().asScala.filter(Files.isRegularFile(_))
         .map(f => f.toString -> (Files.size(f), Files.getLastModifiedTime(f).toMillis)).toMap
-    val before = files(s"$root/codes") ++ files(s"$root/quantizer")
-    val resolvedBefore = BatchLog.resolve(spark, s"$root/codes")
-    // A husk: staged codes and the completion marker, but no in-stage
-    // `_quantizer`. Committing it would install new codes under the old
-    // quantizer; recovery must drop it like a marker-only husk.
-    val ctmp = s"$root/codes.__refreeze_tmp"
-    BatchLog.stageRewrite(
-      BatchLog.read(spark, s"$root/codes", "test"), s"$root/codes", ctmp,
-      partitionBy = Seq("cell"))
-    RefreezeProtocol.sealStage(spark, ctmp, "ann")
+    val before = files(codes) ++ files(s"$root/quantizer")
+    val resolvedBefore = BatchLog.resolve(spark, codes)
+    // A husk: a refreeze died after sealing its staged codes (every code
+    // file written into the unmarked next version) but before its
+    // in-stage `_quantizer` landed. Committing it would install new codes
+    // under the old quantizer; it must never resolve.
+    val fs = VersionedState.fsOf(spark, codes)
+    val (v, stage) = VersionedState.stage(fs, codes)
+    BatchLog.stageRewrite(BatchLog.read(spark, codes, "test"), codes, stage,
+      Seq("cell"), Map.empty)
+    val husk = files(stage)
+    assert(husk.keys.exists(_.endsWith(".parquet")), "spec shape broken: the husk holds codes")
     assert(top() == clean)
     CacheJanitor.drain()
-    assert(!Files.exists(Paths.get(ctmp)), "recovery must drop the husk")
-    assert(BatchLog.resolve(spark, s"$root/codes") == resolvedBefore,
+    assert(BatchLog.resolve(spark, codes) == resolvedBefore,
       "the husk must not commit a new codes version")
-    assert(files(s"$root/codes") ++ files(s"$root/quantizer") == before,
+    assert(files(codes) -- husk.keys ++ files(s"$root/quantizer") == before,
       "live codes and quantizer must be left untouched")
+    assert(files(stage) == husk, "a read must not touch the husk")
+    // The next rewrite drops the husk: it stages over it at the same
+    // number and commits a version that carries the live quantizer.
+    AnnIndex.compact(spark, root)
+    CacheJanitor.drain()
+    assert(BatchLog.resolve(spark, codes) == stage)
+    assert(husk.keys.filter(_.endsWith(".parquet")).forall(f => !Files.exists(Paths.get(f))),
+      "the husk's codes must be dropped")
+    assert(Files.exists(Paths.get(s"$stage/_quantizer/centroids")),
+      "the committed version must carry its quantizer")
+    assert(top() == clean)
   }
 
   test("refreeze refuses a corpus with missing or duplicate live ids") {
@@ -403,119 +414,31 @@ class BatchLogSpec extends SparkSpec {
     CacheJanitor.drain()
   }
 
-  // ----------------------- swap-intent cross-protocol recovery (r16 HIGH)
-
-  /** Stage a full fold of the log at `dest` into `tmp`, as a swap's
-    * stage step would (the raw log: tombstoned rows included). */
-  private def stageFold(dest: String, tmp: String): Unit = {
-    BatchLog.stageRewrite(BatchLog.read(spark, dest, "test"), dest, tmp)
-    ()
-  }
-
-  test("a finished swap's dangling intent must not make compaction recovery clear tombstones") {
-    // The r16 advisory's HIGH finding: several protocols swap into one
-    // dest, and a crash after a swap's rename but before its intent
-    // delete leaves the marker with NO tmp on disk. A dest-keyed,
-    // content-less marker made the next reader's compaction recovery —
-    // probing its OWN __compact_tmp, absent — conclude "rename
-    // finished" and CLEAR the tombstone side table: removed ids
-    // silently resurfacing. The marker records the swap; a swap that
-    // records no tombstone root never clears tombstones.
-    val root = Files.createTempDirectory("graft_bk_intent1").toString
+  test("a partial unmarked stage is never read and the next rewrite replaces it") {
+    val root = Files.createTempDirectory("graft_bk_stage").toString
     val dest = s"$root/signatures"
     SignatureIndex.ingest(spark, root, docs(batchA: _*), batchKey = Some("b1"))
     CacheJanitor.drain()
     SignatureIndex.remove(spark, root, Seq(2L))
-    assert(!SignatureIndex.readIndex(spark, root).collect().map(_.getLong(0)).contains(2L))
-    // Crash state: another swap (any tmp but the reader's own
-    // __compact_tmp) renamed its stage into version 1 — tmp gone — and
-    // lost its commit marker and intent delete. Its fold still holds
-    // the tombstoned row 2.
-    val tmp = s"$dest.__other_tmp"
-    stageFold(dest, tmp)
-    Files.createDirectories(Paths.get(VersionedState.versionsDir(dest)))
-    Files.move(Paths.get(tmp), Paths.get(VersionedState.versionDir(dest, 1)))
-    SwapCrash.intent(spark, dest, tmp, ver = 1, clears = None)
-    // Any reader path runs recoverSwap(dest.__compact_tmp, dest).
-    val ids = SignatureIndex.readIndex(spark, root).collect().map(_.getLong(0)).toSet
-    assert(ids == Set(1L, 3L),
-      s"a foreign intent must not clear the tombstone table: $ids")
-    assert(!Files.exists(Paths.get(s"$dest.__swap_intent")),
-      "recovery must clear the completed swap's intent")
-    assert(BatchLog.resolve(spark, dest) == VersionedState.versionDir(dest, 1),
-      "recovery must commit the version the intent records")
-    CacheJanitor.drain()
-  }
-
-  test("a swap crashed mid-rename is completed from ITS recorded tmp by any recoverer") {
-    val root = Files.createTempDirectory("graft_bk_intent2").toString
-    val dest = s"$root/signatures"
-    SignatureIndex.ingest(spark, root, docs(batchA: _*), batchKey = Some("b1"))
-    CacheJanitor.drain()
-    val want = SignatureIndex.readIndex(spark, root)
+    def rows() = SignatureIndex.readIndex(spark, root)
       .collect().map(r => (r.getLong(0), r.getSeq[Long](1))).toSet
-    // Crash state: the staged tmp is complete, the intent records it,
-    // and a copy-based rename died mid-copy — version 1 holds a torn
-    // partial copy and no commit marker.
-    val tmp = s"$dest.__other_tmp"
-    stageFold(dest, tmp)
-    SwapCrash.intent(spark, dest, tmp, ver = 1, clears = None)
+    val want = rows()
+    assert(want.map(_._1) == Set(1L, 3L))
+    // Crash state: a rewrite died mid-stage — version 1 holds a torn
+    // partial and no commit marker.
     val torn = Paths.get(VersionedState.versionDir(dest, 1))
-    Files.createDirectories(torn)
-    Files.write(torn.resolve("garbage.parquet"), "torn".getBytes("UTF-8"))
-    // The reader's recovery (probing __compact_tmp) must adopt the
-    // RECORDED tmp, not conclude completion over the torn version.
-    val got = SignatureIndex.readIndex(spark, root)
-      .collect().map(r => (r.getLong(0), r.getSeq[Long](1))).toSet
-    assert(got == want, "recovery must complete the recorded swap")
-    assert(!Files.exists(Paths.get(tmp)) && !Files.exists(Paths.get(s"$dest.__swap_intent")))
-    assert(BatchLog.resolve(spark, dest) == VersionedState.versionDir(dest, 1),
-      "the recorded tmp must land as the recorded version")
+    Files.createDirectories(torn.resolve("batch_key=a00002"))
+    Files.write(torn.resolve("batch_key=a00002/garbage.parquet"), "torn".getBytes("UTF-8"))
+    assert(rows() == want, "an unmarked stage must never be read")
+    assert(BatchLog.resolve(spark, dest) == dest)
+    assert(Files.exists(torn.resolve("batch_key=a00002/garbage.parquet")),
+      "a read must not touch the stage")
+    // The next rewrite stages over the leftover and commits version 1.
+    SignatureIndex.compact(spark, root)
     CacheJanitor.drain()
-  }
-
-  test("a compaction intent whose tombstone clear was lost is completed — table cleared — by recovery") {
-    val root = Files.createTempDirectory("graft_bk_intent3").toString
-    val dest = s"$root/signatures"
-    SignatureIndex.ingest(spark, root, docs(batchA: _*), batchKey = Some("b1"))
-    CacheJanitor.drain()
-    SignatureIndex.remove(spark, root, Seq(2L))
-    SignatureIndex.compact(spark, root) // clean commit: tombstones cleared
-    CacheJanitor.drain()
-    // Crash state: the rename into version 1 finished, tombstone clear +
-    // intent delete lost (the fold already excludes id 2; the side table
-    // still lists it).
-    Tombstones.append(root, Seq(2L).toDF("doc_id"), "doc_id")
-    SwapCrash.intent(spark, dest, s"$dest.__compact_tmp", ver = 1, clears = Some(root))
-    val ids = SignatureIndex.readIndex(spark, root).collect().map(_.getLong(0)).toSet
-    assert(ids == Set(1L, 3L))
-    assert(graft.operators.Tombstones.bytesOnDisk(spark, root) == 0L,
-      "recovery must re-run the recorded compaction's tombstone clear")
-    assert(!Files.exists(Paths.get(s"$dest.__swap_intent")))
-    CacheJanitor.drain()
-  }
-
-  test("a torn (empty) intent marker is dropped and a partial abandoned stage is NOT adopted") {
-    val root = Files.createTempDirectory("graft_bk_intent4").toString
-    val dest = s"$root/signatures"
-    SignatureIndex.ingest(spark, root, docs(batchA: _*), batchKey = Some("b1"))
-    CacheJanitor.drain()
-    val want = SignatureIndex.readIndex(spark, root)
-      .collect().map(r => (r.getLong(0), r.getSeq[Long](1))).toSet
-    // Crash state: a writer died INSIDE the marker write (zero bytes
-    // landed) — before any destructive step — with a PARTIAL abandoned
-    // stage from an earlier unrelated crash also on disk. Recovery must
-    // trust dest (no destructive step ran) and drop the partial stage,
-    // never adopt it.
-    val tmp = Paths.get(s"$dest.__compact_tmp")
-    Files.createDirectories(tmp)
-    Files.write(tmp.resolve("garbage.parquet"), "not parquet".getBytes("UTF-8"))
-    Files.write(Paths.get(s"$dest.__swap_intent"), Array.empty[Byte])
-    val got = SignatureIndex.readIndex(spark, root)
-      .collect().map(r => (r.getLong(0), r.getSeq[Long](1))).toSet
-    assert(got == want, "a torn marker must leave dest authoritative")
-    assert(!Files.exists(tmp), "the partial abandoned stage must be dropped")
-    assert(!Files.exists(Paths.get(s"$dest.__swap_intent")))
+    assert(BatchLog.resolve(spark, dest) == VersionedState.versionDir(dest, 1))
+    assert(!Files.exists(torn.resolve("batch_key=a00002/garbage.parquet")))
+    assert(rows() == want)
     CacheJanitor.drain()
   }
 }

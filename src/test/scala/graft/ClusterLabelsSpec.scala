@@ -137,19 +137,20 @@ class ClusterLabelsSpec extends SparkSpec {
     ClusterLabels.merge(spark, root,
       Seq((1L, 2L)).toDF("doc_a", "doc_b"), Seq(1L, 2L, 3L).toDF("doc_id"))
     val before = labelMap(ClusterLabels.read(spark, root))
-    // Crash between compact's intent and its rename: tmp complete, the
-    // intent records it; read() must land it, not leave it dangling.
-    val dest = java.nio.file.Paths.get(ClusterLabels.dir(root))
-    val tmp = java.nio.file.Paths.get(SwapCrash.beforeRename(spark, dest.toString,
-      graft.operators.BatchLog.read(spark, dest.toString, "test"), clears = None))
+    // Crash before compact's commit marker: the fold complete in the
+    // unmarked next version; read() must serve the committed log.
+    val dest = ClusterLabels.dir(root)
+    val stage = java.nio.file.Paths.get(SparkSpec.crashedStage(spark, dest,
+      graft.operators.BatchLog.read(spark, dest, "test")))
     assert(labelMap(ClusterLabels.read(spark, root)) === before,
-      "read must complete the crashed swap and return the full state")
-    assert(Files.isDirectory(dest) && !Files.exists(tmp))
-    // Crash mid-tmp-write (both present): tmp is an abandoned stage.
-    Files.createDirectories(tmp)
-    Files.write(tmp.resolve("part-junk.parquet"), Array[Byte](1))
+      "read must return the full committed state")
+    // Crash mid-stage-write: a junk partial in the stage is never read.
+    Files.write(stage.resolve("part-junk.parquet"), Array[Byte](1))
     assert(labelMap(ClusterLabels.read(spark, root)) === before)
-    assert(!Files.exists(tmp), "abandoned stage must be cleared")
+    // The re-run compaction replaces the stage and commits it.
+    ClusterLabels.compact(spark, root)
+    assert(labelMap(ClusterLabels.read(spark, root)) === before)
+    assert(!Files.exists(stage.resolve("part-junk.parquet")), "the leftover must be replaced")
   }
 
   test("compact folds the log to one row per doc with identical state") {

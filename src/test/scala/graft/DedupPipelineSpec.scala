@@ -224,24 +224,22 @@ class DedupPipelineSpec extends SparkSpec {
   }
 
   test("health: recovers a crashed compaction swap before probing; refuses legacy roots") {
-    import java.nio.file.Paths
-    import graft.operators.{SignatureIndex, Tombstones}
-    // Crash state: compaction died between commitCompaction's intent
-    // and the rename of the fully-staged tmp. Health must run the
-    // index's crash recovery first, landing the recorded stage.
+    import graft.operators.{BatchLog, SignatureIndex}
+    // Crash state: compaction died before its commit marker, the fold
+    // fully written into the unmarked next version. Health probes the
+    // committed state and leaves the stage alone.
     val root = Files.createTempDirectory("graft_dp_health_swap").toString
     DedupPipeline.runOnce(spark, root, docs(batchA: _*), batchKey = Some("b1"))
     CacheJanitor.drain()
     val dest = s"$root/signatures"
-    val tmp = SwapCrash.beforeRename(spark, dest,
-      SignatureIndex.readIndex(spark, root), clears = Some(root))
+    val stage = SparkSpec.crashedStage(spark, dest, SignatureIndex.readIndex(spark, root))
     CacheJanitor.drain()
     val h = DedupPipeline.health(spark, root)
     // 3, not 4: doc 7 is unshingleable and never enters the signature
     // log (it is a singleton by definition in the label state).
-    assert(h.liveDocs == 3, s"health must adopt the staged compaction, got $h")
-    assert(Tombstones.dir(root) != null && !java.nio.file.Files.exists(Paths.get(tmp)),
-      "recovery must complete the swap, not leave the stage behind")
+    assert(h.liveDocs == 3, s"health must report the committed state, got $h")
+    assert(BatchLog.resolve(spark, dest) == dest && java.nio.file.Files.exists(
+      java.nio.file.Paths.get(stage)), "health must neither commit nor delete the stage")
 
     // A legacy flat-append root refuses loudly — a silent liveDocs = 0
     // for a root full of pre-format rows is the bug class the format

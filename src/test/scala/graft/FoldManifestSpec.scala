@@ -88,13 +88,13 @@ class FoldManifestSpec extends SparkSpec {
       // 2. Full-log read and pruned probe: manifest arm == listing arm.
       val viaManifest = rows(SignatureIndex.readIndex(spark, root))
       val pairsManifest = rows(SignatureIndex.deltaPairsIndexed(spark, root,
-        "signatures", b2.newSigs, Some(BatchLog.sanitize("b2"))))
+        b2.newSigs, Some(BatchLog.sanitize("b2"))))
       CacheJanitor.drain()
       val (viaListing, pairsListing) =
         withProps("graft.fold.manifest.disable" -> "true") {
           val a = rows(SignatureIndex.readIndex(spark, root))
           val b = rows(SignatureIndex.deltaPairsIndexed(spark, root,
-            "signatures", b2.newSigs, Some(BatchLog.sanitize("b2"))))
+            b2.newSigs, Some(BatchLog.sanitize("b2"))))
           (a, b)
         }
       CacheJanitor.drain()

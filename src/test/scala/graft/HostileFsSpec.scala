@@ -17,10 +17,10 @@ import org.apache.spark.sql.functions.col
   *  2. watermark state: crashes at every swap phase (before-copy,
   *     after-copy, torn-dest) leave a recoverable state — the landing
   *     batch's watermark is never silently lost NOR torn;
-  *  3. the index swap: a compaction crashed AFTER its copy and with a
-  *     TORN dest both heal on the next read — the torn-dest case is
-  *     exactly what the pre-intent protocol would have adopted as the
-  *     log (the drill that motivated the `__swap_intent` marker);
+  *  3. the index rewrite: a compaction crashed AFTER a commit rename's
+  *     copy and with a TORN dest both leave the committed version as
+  *     the only state a read sees (RewriteCrashSpec sweeps every
+  *     rename and the marker create of every rewrite);
   *  4. manifest listing economics: the manifest-backed probe issues
   *     strictly fewer listStatus calls than the force-disabled listing
   *     arm, with identical answers.
@@ -136,16 +136,15 @@ class HostileFsSpec extends SparkSpec {
       SignatureIndex.remove(spark, root, Seq(5L))
       val expectLive = rows(SignatureIndex.readIndex(spark, root))
       assert(expectLive.nonEmpty && !expectLive.exists(_.startsWith("[5,")))
-      // Crash the compaction's swap at the hostile phase: dest is the
-      // signatures dir itself (suffix match keeps committer renames out).
-      HostileFileSystem.armCrash(phase, "/signatures/_versions/00000001")
+      // Crash the compaction at its first rename (a commit rename of
+      // the fold written into the unmarked next version) at the
+      // hostile phase.
+      HostileFileSystem.armCrash(phase, "")
       val crashed = intercept[Exception] { SignatureIndex.compact(spark, root) }
       HostileFileSystem.disarm()
-      assert(crashed.getMessage.contains("injected crash"),
-        s"wrong failure at $phase: $crashed")
-      // The next read heals through the __swap_intent recovery: the torn
-      // dest is never adopted, the staged fold (complete by construction)
-      // is — and the answer equals the pre-crash live view.
+      assert(HostileFileSystem.crashedBy(crashed), s"wrong failure at $phase: $crashed")
+      // The next read serves the committed version: the torn stage is
+      // never resolved — the answer equals the pre-crash live view.
       val healed = rows(SignatureIndex.readIndex(spark, root))
       assert(healed == expectLive, s"swap crash at $phase corrupted the index")
       // Post-heal the root keeps working end-to-end: a fresh near-dup
@@ -153,7 +152,7 @@ class HostileFsSpec extends SparkSpec {
       val b3 = SignatureIndex.ingest(spark, root,
         corpus(Seq(9002L), _ => uniqueText(8L).split(" ").init.mkString(" ") + " altered"),
         batchKey = Some("b3"))
-      val pairs = rows(SignatureIndex.deltaPairsIndexed(spark, root, "signatures",
+      val pairs = rows(SignatureIndex.deltaPairsIndexed(spark, root,
         b3.newSigs, Some(BatchLog.sanitize("b3"))))
       assert(pairs.exists(_.startsWith("[8,9002,")),
         s"post-heal increment must pair with its original: $pairs")
@@ -162,11 +161,9 @@ class HostileFsSpec extends SparkSpec {
   }}
 
   test("ANN topK heals a compaction swap crashed mid-copy — full recovery on the query path") {
-    // The r16 advisory's MEDIUM finding: topK ran only refreezeRecover;
-    // a compaction crashed mid-copy (torn codes dir, intent + tmp
-    // siblings present) would be read WITHOUT the swap recovery —
-    // silently partial neighbors through the listing fallback, or a
-    // FileNotFound through a half-copied fold manifest.
+    // A compaction crashed mid-copy leaves a torn, unmarked next
+    // version: topK must answer from the committed version alone —
+    // never partial neighbors from the torn stage.
     val root = hostileRoot("anntopk")
     val vecs = Tables.embeddings(spark, "/root/testdata/sf0.01")
       .select("vec_id", "embedding")
@@ -182,13 +179,13 @@ class HostileFsSpec extends SparkSpec {
         .select("query_id", "neighbor_id", "rnk"))
     val want = tops()
     assert(want.nonEmpty)
-    HostileFileSystem.armCrash("torn-dest", "/codes/_versions/00000001")
+    HostileFileSystem.armCrash("torn-dest", "")
     val crashed = intercept[Exception] { AnnIndex.compact(spark, root) }
     HostileFileSystem.disarm()
-    assert(crashed.getMessage.contains("injected crash"), s"wrong failure: $crashed")
-    // topK alone (no ingest/readCodes in between) must heal the swap and
-    // answer exactly as before the crash.
-    assert(tops() == want, "topK must recover the crashed swap, not read the torn codes")
+    assert(HostileFileSystem.crashedBy(crashed), s"wrong failure: $crashed")
+    // topK alone (no ingest/readCodes in between) answers exactly as
+    // before the crash.
+    assert(tops() == want, "topK must serve the committed codes, not the torn stage")
     CacheJanitor.drain()
   }
 
@@ -205,7 +202,7 @@ class HostileFsSpec extends SparkSpec {
       if (disable) sys.props("graft.fold.manifest.disable") = "true"
       try {
         HostileFileSystem.reset()
-        val pairs = rows(SignatureIndex.deltaPairsIndexed(spark, root, "signatures",
+        val pairs = rows(SignatureIndex.deltaPairsIndexed(spark, root,
           bt.newSigs, Some(BatchLog.sanitize("b2"))))
         val c = HostileFileSystem.counts
         CacheJanitor.drain()

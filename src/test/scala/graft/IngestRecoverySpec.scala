@@ -1,23 +1,20 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 
 import graft.operators.{AnnIndex, BatchLog, CosineDedupIndex, PqIndex, SignatureIndex}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Mutating entry points must run swap recovery BEFORE touching state.
+/** Mutating entry points after a crashed rewrite land on the committed
+  * version, and the next rewrite converges.
   *
-  * The failure this pins (found in review, fixed across every index):
-  * a compaction that crashed between its intent and its rename leaves
-  * the fold fully staged in `__compact_tmp` and the intent recording it.
-  * An ingest landing in that window without recovering first appends
-  * its increment to the OLD version — after which recovery commits the
-  * staged fold as the next version, and the increment is silently
-  * lost. Likewise a tombstone appended in the window is cleared when
-  * the fold is adopted (the intent records the tombstone clear). Each
-  * test stages the window for real and proves the sequencing: adopt
-  * first, then mutate. */
+  * A compaction that crashed before its commit marker leaves its fold
+  * written into the log's unmarked next version. An ingest or remove in
+  * that state must act on the committed version (the only one readers
+  * resolve), and the re-run compaction must restage over the leftover —
+  * neither the increment nor the tombstone may be lost to the stale
+  * stage. Each test writes the crashed stage for real. */
 class IngestRecoverySpec extends SparkSpec {
   import spark.implicits._
 
@@ -26,13 +23,12 @@ class IngestRecoverySpec extends SparkSpec {
   private def vecs: DataFrame =
     Tables.embeddings(spark, dir).select("vec_id", "embedding")
 
-  /** Stage a compaction fold of `path` into its tmp and put up its
-    * intent — the exact on-disk state of a compact() that died before
-    * its rename. */
+  /** Write a compaction fold of `path` into its unmarked next version —
+    * the exact on-disk state of a compact() that died before its
+    * commit marker. */
   private def stageCrashWindow(path: String, op: String,
       partitionBy: Seq[String] = Nil): Unit = {
-    SwapCrash.beforeRename(spark, path, BatchLog.read(spark, path, op),
-      clears = Some(Paths.get(path).getParent.toString), partitionBy)
+    SparkSpec.crashedStage(spark, path, BatchLog.read(spark, path, op), partitionBy)
     ()
   }
 
@@ -44,15 +40,19 @@ class IngestRecoverySpec extends SparkSpec {
   private val batchB = Seq(
     3L -> "rain in spain falls mainly on the plain every year")
 
-  test("SignatureIndex: ingest inside a crashed compaction window adopts the fold first") {
+  private def sigIds(root: String) = SignatureIndex.readIndex(spark, root)
+    .select("doc_id").collect().map(_.getLong(0)).toSet
+
+  test("SignatureIndex: ingest after a crashed compaction stage is kept") {
     val root = Files.createTempDirectory("graft_recov").toString
     SignatureIndex.ingest(spark, root, docs(batchA: _*), batchKey = Some("b1"))
     stageCrashWindow(s"$root/signatures", "SignatureIndex")
     SignatureIndex.ingest(spark, root, docs(batchB: _*), batchKey = Some("b2"))
-    val ids = SignatureIndex.readIndex(spark, root)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(ids === Set(1L, 2L, 3L),
-      s"pre-compaction corpus must survive an in-window ingest, got $ids")
+    assert(sigIds(root) === Set(1L, 2L, 3L),
+      s"the corpus and the increment must both be live, got ${sigIds(root)}")
+    SignatureIndex.compact(spark, root)
+    assert(sigIds(root) === Set(1L, 2L, 3L), "the re-run compaction must keep the increment")
+    CacheJanitor.drain()
   }
 
   test("SignatureIndex: remove inside a crashed compaction window keeps the tombstone") {
@@ -60,46 +60,55 @@ class IngestRecoverySpec extends SparkSpec {
     SignatureIndex.ingest(spark, root, docs(batchA: _*), batchKey = Some("b1"))
     stageCrashWindow(s"$root/signatures", "SignatureIndex")
     SignatureIndex.remove(spark, root, Seq(1L))
-    val ids = SignatureIndex.readIndex(spark, root)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(ids === Set(2L),
-      s"the in-window tombstone must survive fold adoption, got $ids")
+    assert(sigIds(root) === Set(2L), s"the tombstone must apply, got ${sigIds(root)}")
+    SignatureIndex.compact(spark, root)
+    assert(sigIds(root) === Set(2L), "the re-run compaction must fold the tombstone out")
+    CacheJanitor.drain()
   }
 
-  test("CosineDedupIndex: ingest inside a crashed compaction window adopts the fold first") {
+  test("CosineDedupIndex: ingest after a crashed compaction stage is kept") {
     val root = Files.createTempDirectory("graft_recov").toString
     CosineDedupIndex.ingest(spark, root, vecs.where(col("vec_id") < 100),
       batchKey = Some("b1"))
     CacheJanitor.drain()
     stageCrashWindow(s"$root/codes", "CosineDedupIndex")
-    val b2 = CosineDedupIndex.ingest(spark, root,
+    CosineDedupIndex.ingest(spark, root,
       vecs.where(col("vec_id") >= 100 && col("vec_id") < 120), batchKey = Some("b2"))
-    assert(b2.allCodes.count() === 120,
-      "pre-compaction code rows must survive an in-window ingest")
+    assert(CosineDedupIndex.readIndex(spark, root).count() === 120,
+      "the corpus and the increment must both be live")
+    CosineDedupIndex.compact(spark, root)
+    assert(CosineDedupIndex.readIndex(spark, root).count() === 120,
+      "the re-run compaction must keep the increment")
     CacheJanitor.drain()
   }
 
-  test("AnnIndex: ingest inside a crashed compaction window adopts the fold first") {
+  test("AnnIndex: ingest after a crashed compaction stage is kept") {
     val root = Files.createTempDirectory("graft_recov").toString
     AnnIndex.ingest(spark, root, vecs.where(col("vec_id") < 100), batchKey = Some("b1"))
     CacheJanitor.drain()
     stageCrashWindow(s"$root/codes", "AnnIndex", partitionBy = Seq("cell"))
-    val b2 = AnnIndex.ingest(spark, root,
+    AnnIndex.ingest(spark, root,
       vecs.where(col("vec_id") >= 100 && col("vec_id") < 120), batchKey = Some("b2"))
-    assert(b2.allCodes.count() === 120,
-      "pre-compaction code rows must survive an in-window ingest")
+    assert(AnnIndex.readCodes(spark, root).count() === 120,
+      "the corpus and the increment must both be live")
+    AnnIndex.compact(spark, root)
+    assert(AnnIndex.readCodes(spark, root).count() === 120,
+      "the re-run compaction must keep the increment")
     CacheJanitor.drain()
   }
 
-  test("PqIndex: ingest inside a crashed compaction window adopts the fold first") {
+  test("PqIndex: ingest after a crashed compaction stage is kept") {
     val root = Files.createTempDirectory("graft_recov").toString
     PqIndex.ingest(spark, root, vecs.where(col("vec_id") < 100), batchKey = Some("b1"))
     CacheJanitor.drain()
     stageCrashWindow(s"$root/codes", "PqIndex", partitionBy = Seq("cell"))
-    val b2 = PqIndex.ingest(spark, root,
+    PqIndex.ingest(spark, root,
       vecs.where(col("vec_id") >= 100 && col("vec_id") < 120), batchKey = Some("b2"))
-    assert(b2.allCodes.count() === 120,
-      "pre-compaction code rows must survive an in-window ingest")
+    assert(PqIndex.readCodes(spark, root).count() === 120,
+      "the corpus and the increment must both be live")
+    PqIndex.compact(spark, root)
+    assert(PqIndex.readCodes(spark, root).count() === 120,
+      "the re-run compaction must keep the increment")
     CacheJanitor.drain()
   }
 }

@@ -51,7 +51,7 @@ class PqIndexSpec extends SparkSpec {
 
     val b2 = PqIndex.ingest(spark, root, vecs.where(col("vec_id") >= 250))
     assert(b2.newCodes.count() == 250)
-    assert(b2.allCodes.count() == 500)
+    assert(PqIndex.readCodes(spark, root).count() == 500)
     CacheJanitor.drain()
     val after2 = files(root)
     after1.foreach { case (f, mtime) =>
@@ -63,7 +63,7 @@ class PqIndexSpec extends SparkSpec {
     assert(cb.length == graft.queries.TrainingData.pqM &&
       cb.forall(_.length == graft.queries.TrainingData.pqK))
     val oneShot = PqIndex.encode(vecs, cents, cb)
-    assert(codeSet(b2.allCodes) == codeSet(oneShot),
+    assert(codeSet(PqIndex.readCodes(spark, root)) == codeSet(oneShot),
       "incremental codes must be identical to a frozen-quantizer full encode")
   }
 
@@ -193,7 +193,7 @@ class PqIndexSpec extends SparkSpec {
       .withColumn("cell", col("cell").cast("long"))
     assert(codeSet(compacted) == rebuilt,
       "compacted codes must equal a frozen-quantizer encode of the surviving vectors")
-    assert(graft.operators.Tombstones.bytesOnDisk(spark, root) == 0L,
+    assert(graft.operators.Tombstones.bytesOnDisk(spark, s"$root/codes") == 0L,
       "compaction must clear the tombstone table (empty current version)")
     assert(files(s"$root/quantizer") == quantBefore, "compaction must not touch the frozen quantizers")
     assert(neighbors() == afterRemove, "topK must be identical before and after compaction")

@@ -21,13 +21,12 @@ import org.apache.spark.sql.DataFrame
   *     knob says so, and is swept once expired — after which a stale
   *     planned frame fails LOUDLY (missing file), the documented
   *     longest-query bound every LSM store has;
-  *  3. a read ENTRY during a live writer's commit window (intent up,
-  *     stage on disk, lease held) serves the committed state — no
-  *     exception, no retry;
-  *  4. crashed commits (mid-copy torn version dirs, lost intents) heal
-  *     on the next read, under the lease, with concurrent readers
-  *     converging — and the committed state stays readable THROUGHOUT
-  *     the crash window (the versioned protocol's whole point).
+  *  3. a read ENTRY during a live writer's commit window (the next
+  *     version staged, its marker not yet written, lease held) serves
+  *     the committed state — no exception, no retry;
+  *  4. a crashed commit (a torn, unmarked stage) is never read: the
+  *     committed state stays readable THROUGHOUT, and the next rewrite
+  *     converges (RewriteCrashSpec drills every rewrite's crash points).
   */
 class ReaderMaintenanceSpec extends SparkSpec {
   import spark.implicits._
@@ -174,11 +173,11 @@ class ReaderMaintenanceSpec extends SparkSpec {
     CosineDedupIndex.compact(spark, root); CacheJanitor.drain()
     assert(rows(CosineDedupIndex.readIndex(spark, root)) == before)
     assertWallClockMarkers(codes)
-    // The tombstone side table's clear commits through the same markers.
+    // The tombstone clear commits with the fold, through the same markers.
     CosineDedupIndex.remove(spark, root, Seq(5L))
     CosineDedupIndex.compact(spark, root); CacheJanitor.drain()
-    assert(Tombstones.bytesOnDisk(spark, root) == 0L, "compaction must clear the tombstones")
-    assertWallClockMarkers(Tombstones.dir(root))
+    assert(Tombstones.bytesOnDisk(spark, codes) == 0L, "compaction must clear the tombstones")
+    assertWallClockMarkers(codes)
     assert(rows(CosineDedupIndex.readIndex(spark, root)).size == before.size - 1)
   }
 
@@ -317,86 +316,106 @@ class ReaderMaintenanceSpec extends SparkSpec {
   }
 
   test("a SEALED refreeze stage on a versioned root never blocks readers, with or without its in-stage quantizer") {
-    import graft.operators.AnnIndex
+    import graft.operators.{AnnIndex, VersionedState}
     import org.apache.spark.sql.functions.col
     val root = hostileRoot("sealednonblock")
+    val codes = s"$root/codes"
     val vecs = Tables.embeddings(spark, "/root/testdata/sf0.001")
       .select("vec_id", "embedding")
     AnnIndex.ingest(spark, root, vecs.where(col("vec_id") < 400), Some("b1"))
     CacheJanitor.drain()
+    // A compaction commits version 1: the root is versioned and its
+    // quantizer lives in-version.
+    AnnIndex.compact(spark, root)
+    CacheJanitor.drain()
+    assert(BatchLog.resolve(spark, codes) == VersionedState.versionDir(codes, 1))
     val queries = vecs.where(col("vec_id") < 3)
       .select(col("vec_id").as("query_id"), col("embedding"))
     val clean = rows(AnnIndex.topK(spark, root, queries, k = 3))
     val fs = fsOf(root)
-    val tmp = s"$root/codes.__refreeze_tmp"
-    // Synthesize a SEALED new-protocol stage (committed data file +
-    // in-stage quantizer + completion marker) and hold the writer lease
-    // live around it — the exact mid-refreeze window.
-    import spark.implicits._
-    Seq((1L, 1L, Array(1.toByte))).toDF("vec_id", "cell", "codes")
-      .coalesce(1).write.mode("overwrite").parquet(s"$tmp/batch_key=a00001")
-    fs.mkdirs(new org.apache.hadoop.fs.Path(s"$tmp/_quantizer"))
-    fs.create(new org.apache.hadoop.fs.Path(s"$tmp/_refreeze_complete"), true).close()
+    val stage = new org.apache.hadoop.fs.Path(VersionedState.versionDir(codes, 2))
     val inWindow = new CountDownLatch(1)
     val release = new CountDownLatch(1)
     @volatile var writerErr: Option[Throwable] = None
     val writer = new Thread(() => {
       try WriterLease.withLease(spark, root) {
+        // A SEALED refreeze stage: its codes (one row of the log, so a
+        // read of the stage would show) and its in-stage quantizer fully written
+        // into the unmarked next version — only the marker create is
+        // left, and the live writer holds it back.
+        val (_, dir) = VersionedState.stage(fs, codes)
+        BatchLog.stageRewrite(BatchLog.read(spark, codes, "test").limit(1),
+          codes, dir, Seq("cell"), Map.empty)
+        require(org.apache.hadoop.fs.FileUtil.copy(fs,
+          new org.apache.hadoop.fs.Path(s"${VersionedState.versionDir(codes, 1)}/_quantizer"),
+          fs, new org.apache.hadoop.fs.Path(s"$dir/_quantizer"), false, true,
+          spark.sparkContext.hadoopConfiguration))
         inWindow.countDown(); release.await()
       } catch { case t: Throwable => writerErr = Some(t); inWindow.countDown() }
     }, "sealed-writer")
     writer.start(); inWindow.await()
+    // A read serves the committed version and mutates nothing.
+    def pureRead(why: String): Unit = {
+      HostileFileSystem.reset()
+      assert(rows(AnnIndex.topK(spark, root, queries, k = 3)) == clean, why)
+      val ops = HostileFileSystem.counts
+      Seq("create", "delete", "rename", "mkdirs").foreach { op =>
+        assert(ops.getOrElse(op, 0L) == 0L, s"$why: a read issued $op ($ops)")
+      }
+    }
     try {
       assert(writerErr.isEmpty, s"writer thread failed: $writerErr")
-      // New-protocol sealed stage: WAIT-FREE — the commit would be one
-      // versioned rename; the committed state is untouched either way.
-      assert(rows(AnnIndex.topK(spark, root, queries, k = 3)) == clean,
-        "a sealed in-stage-quantizer stage must not block reads")
-      // No in-stage quantizer: a husk the versioned commit would never
-      // install (recovery drops it) — the committed state is untouched,
-      // so the read still serves it.
-      fs.delete(new org.apache.hadoop.fs.Path(s"$tmp/_quantizer"), true)
-      assert(rows(AnnIndex.topK(spark, root, queries, k = 3)) == clean,
-        "a sealed stage without its quantizer must not block reads")
+      assert(fs.exists(new org.apache.hadoop.fs.Path(stage, "_quantizer")),
+        "spec shape broken: the stage must hold its quantizer")
+      pureRead("a sealed in-stage-quantizer stage must not block reads")
+      // No in-stage quantizer: a husk no commit installs; the committed
+      // state is untouched, so the read still serves it.
+      fs.delete(new org.apache.hadoop.fs.Path(stage, "_quantizer"), true)
+      pureRead("a sealed stage without its quantizer must not block reads")
     } finally { release.countDown(); writer.join(30000) }
     assert(!writer.isAlive)
-    // Writer gone: the stage is crash debris now; recovery under the
-    // lease drops the husk, and reads converge.
-    assert(rows(AnnIndex.topK(spark, root, queries, k = 3)) == clean)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(tmp)), "recovery must drop the husk")
+    assert(writerErr.isEmpty, s"writer thread failed: $writerErr")
+    // Writer gone without its marker: the stage is crash debris that
+    // reads neither see nor recover; the next rewrite replaces it.
+    pureRead("crash debris must not block reads")
+    assert(fs.exists(stage) && BatchLog.resolve(spark, codes) == VersionedState.versionDir(codes, 1))
+    AnnIndex.refreeze(spark, root, vecs.where(col("vec_id") < 400))
+    CacheJanitor.drain()
+    assert(BatchLog.resolve(spark, codes) == VersionedState.versionDir(codes, 2))
+    assert(fs.exists(new org.apache.hadoop.fs.Path(stage, "_quantizer/centroids")),
+      "the refrozen version must carry its quantizer")
+    assert(AnnIndex.topK(spark, root, queries, k = 3).count() == 9)
   }
 
   test("a read entry during a live writer's commit window serves the committed state without an exception") {
-    import graft.operators.{Tombstones, VersionedState}
+    import graft.operators.VersionedState
     val root = hostileRoot("livewriter")
     seed(root)
     val clean = rows(CosineDedupIndex.readIndex(spark, root))
     val codes = s"$root/codes"
-    val tmp = s"$codes.__compact_tmp"
-    val intent = new org.apache.hadoop.fs.Path(s"$codes.__swap_intent")
     val fs = fsOf(root)
     val inWindow = new CountDownLatch(1)
     val release = new CountDownLatch(1)
     @volatile var writerErr: Option[Throwable] = None
     val writer = new Thread(() => {
       try WriterLease.withLease(spark, root) {
-        // The commit window of a compaction: its fold staged, its
-        // intent (recording the stage and the target version) up, the
-        // rename not yet run — while the lease is live.
-        SwapCrash.beforeRename(spark, codes, BatchLog.read(spark, codes, "test"),
-          clears = Some(root))
+        // The commit window of a compaction: its fold written into the
+        // unmarked next version, the marker not yet created — while the
+        // lease is live.
+        val (v, stage) = VersionedState.stage(fs, codes)
+        BatchLog.stageRewrite(BatchLog.read(spark, codes, "test"), codes, stage,
+          Nil, Map.empty)
         inWindow.countDown()
         release.await()
-        // Finish the commit the way a restarted writer would.
-        Tombstones.recoverSwap(spark, tmp, codes)
+        VersionedState.commit(fs, codes, v)
       } catch { case t: Throwable => writerErr = Some(t); inWindow.countDown() }
     }, "rdrmaint-writer")
     writer.start()
     inWindow.await()
     assert(writerErr.isEmpty, s"writer thread failed: $writerErr")
     try {
-      assert(fs.exists(intent) && fs.exists(new org.apache.hadoop.fs.Path(tmp)),
-        "spec shape broken: the window must hold the intent and its stage")
+      assert(fs.exists(new org.apache.hadoop.fs.Path(VersionedState.versionDir(codes, 1))),
+        "spec shape broken: the window must hold the staged version")
       // Every read entry serves the committed (flat) state as is.
       assert(rows(CosineDedupIndex.readIndex(spark, root)) == clean)
       assert(CosineDedupIndex.health(spark, root).live == clean.size)
@@ -411,7 +430,6 @@ class ReaderMaintenanceSpec extends SparkSpec {
     assert(writerErr.isEmpty, s"writer thread failed: $writerErr")
     // The window closed: the commit landed and reads serve it.
     assert(BatchLog.resolve(spark, codes) == VersionedState.versionDir(codes, 1))
-    assert(!fs.exists(intent))
     assert(rows(CosineDedupIndex.readIndex(spark, root)) == clean)
   }
 
@@ -456,12 +474,9 @@ class ReaderMaintenanceSpec extends SparkSpec {
   }
 
   test("label compaction crashed MID-COPY (torn dest) heals to the exact labels — the torn dest is never adopted") {
-    // Round-17 fix drilled: ClusterLabels.compact was the last
-    // hand-rolled delete+rename commit; on the copy+delete FS a crash
-    // mid-copy leaves a PARTIAL dest with tmp present, and the
-    // pre-intent recovery rule ("both present ⇒ drop tmp") adopted the
-    // torn dest as the label log — silent label loss. The intent-marked
-    // swap recovers from the complete tmp instead.
+    // On the copy+delete FS a crash mid-copy leaves a PARTIAL file in
+    // the unmarked stage; the label log a read resolves is the
+    // committed version, never the torn stage.
     import graft.operators.ClusterLabels
     val root = hostileRoot("labeltorn")
     ClusterLabels.merge(spark, root,
@@ -474,61 +489,19 @@ class ReaderMaintenanceSpec extends SparkSpec {
     CacheJanitor.drain()
     val want = rows(ClusterLabels.read(spark, root))
     assert(want.nonEmpty)
-    HostileFileSystem.armCrash("torn-dest", "/labels/_versions/00000001")
+    HostileFileSystem.armCrash("torn-dest", "")
     val e = intercept[Exception] { ClusterLabels.compact(spark, root) }
     HostileFileSystem.disarm()
     CacheJanitor.drain()
-    assert(e != null)
+    assert(HostileFileSystem.crashedBy(e), s"wrong failure: $e")
     assert(rows(ClusterLabels.read(spark, root)) == want,
-      "recovery must serve the complete staged fold, never the torn dest")
+      "a read must serve the committed labels, never the torn stage")
     // A clean compact afterwards converges to the same labels.
     ClusterLabels.compact(spark, root)
     CacheJanitor.drain()
     assert(rows(ClusterLabels.read(spark, root)) == want)
   }
 
-  test("crashed blocking debris with a free lease: concurrent readers converge through lease-guarded recovery") {
-    val root = hostileRoot("crashrace")
-    seed(root)
-    val clean = rows(CosineDedupIndex.readIndex(spark, root))
-    // Crash a compaction inside its commit swap: intent up, the new
-    // version not yet copied, tmp complete — with no live writer.
-    HostileFileSystem.armCrash("before-copy", "/codes/_versions/00000001")
-    val e = intercept[Exception] { CosineDedupIndex.compact(spark, root) }
-    HostileFileSystem.disarm()
-    assert(e.getMessage != null || e.getCause != null)
-    CacheJanitor.drain()
-    assert(fsOf(root).exists(new org.apache.hadoop.fs.Path(s"$root/codes.__swap_intent")),
-      "spec shape broken: the crash must land inside the intent window")
-    // N concurrent readers: recovery must run under the lease (at most
-    // one recoverer), every reader converges to the clean answer.
-    val results = new java.util.concurrent.ConcurrentHashMap[Int, Set[String]]()
-    val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
-    val readers = (0 until 3).map { i =>
-      new Thread(() => {
-        try {
-          var got: Option[Set[String]] = None
-          var tries = 0
-          while (got.isEmpty && tries < 20) {
-            tries += 1
-            try got = Some(rows(CosineDedupIndex.readIndex(spark, root)))
-            catch {
-              case _: graft.operators.ConcurrentWriterException => Thread.sleep(100)
-            }
-          }
-          results.put(i, got.getOrElse(sys.error(s"reader $i never converged")))
-        } catch { case t: Throwable => errs.add(t) }
-      }, s"rdrmaint-reader-$i")
-    }
-    readers.foreach(_.start())
-    readers.foreach(_.join(120000))
-    assert(errs.isEmpty, s"reader failures: ${errs.toArray.mkString("; ")}")
-    (0 until 3).foreach { i =>
-      assert(results.get(i) == clean, s"reader $i diverged from the clean answer")
-    }
-    assert(!fsOf(root).exists(new org.apache.hadoop.fs.Path(s"$root/codes.__swap_intent")),
-      "recovery must have completed the crashed swap")
-  }
 }
 
 /** `listfail://` over local disk: counts every listStatus, and throws

@@ -3,7 +3,8 @@ package graft
 import java.nio.file.{Files, Paths}
 
 import graft.functions.TextSim
-import graft.operators.{AnnIndex, BatchLog, CosineDedupIndex, PqIndex, RefreezeProtocol}
+import graft.operators.{AnnIndex, CosineDedupIndex, PqIndex, VersionedState}
+import graft.testfs.HostileFileSystem
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -11,8 +12,8 @@ import org.apache.spark.sql.functions._
   * post-refreeze state must equal a from-scratch build over the
   * survivors at the NEW ladder step (tombstones folded out), delta-pair
   * semantics must carry across the migration, occupancy drift must
-  * justify the operation, and the marker-gated crash protocol must
-  * never mix old codes with new parameters. */
+  * justify the operation, and a crashed refreeze must never mix old
+  * codes with new parameters. */
 class RefreezeSpec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.01"
@@ -41,7 +42,7 @@ class RefreezeSpec extends SparkSpec {
     val occAfter = CosineDedupIndex.occupancy(spark, root)
     assert(occAfter < occBefore,
       s"refreeze must reduce bucket occupancy ($occBefore -> $occAfter)")
-    assert(graft.operators.Tombstones.bytesOnDisk(spark, root) == 0L,
+    assert(graft.operators.Tombstones.bytesOnDisk(spark, s"$root/codes") == 0L,
       "refreeze folds tombstones out and clears the side table")
     CacheJanitor.drain()
 
@@ -75,53 +76,37 @@ class RefreezeSpec extends SparkSpec {
   }
 
   test("cosine index: crashed refreeze commits iff the completion marker landed") {
-    val root = Files.createTempDirectory("graft_rf_crash").toString
+    HostileFileSystem.install(spark.sparkContext.hadoopConfiguration)
+    val root = s"hostile://${Files.createTempDirectory("graft_rf_crash")}"
+    val codes = s"$root/codes"
     CosineDedupIndex.ingest(spark, root, vecs.where(col("vec_id") < 100))
     CosineDedupIndex.ingest(spark, root, vecs.where(col("vec_id") >= 100))
     val oldMask = CosineDedupIndex.frozenMask(spark, root).get
-    val tmp = s"$root/codes.__refreeze_tmp"
+    val newMask = TextSim.lshMaskValue(500L).toLong
+    def buckets() = CosineDedupIndex.readIndex(spark, root)
+      .select("vec_id", "bucket").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val oldBuckets = buckets()
 
-    // (a) Crash BEFORE the marker: a partial stage must be dropped and
-    // the old state kept intact.
-    val live = CosineDedupIndex.readIndex(spark, root)
-    val newMask = TextSim.lshMaskValue(live.count()).toLong
-    BatchLog.stageRewrite(CosineDedupIndex.encode(
-      live.select(col("vec_id"), col("embedding")), newMask), s"$root/codes", tmp)
+    // (a) Crash AT the commit marker: codes and mask are fully staged in
+    // the unmarked next version; the old pair stays in force.
+    HostileFileSystem.armCrash("create", "/codes/_commits/00000001")
+    try intercept[Exception](CosineDedupIndex.refreeze(spark, root))
+    finally HostileFileSystem.disarm()
     CacheJanitor.drain()
-    assert(CosineDedupIndex.readIndex(spark, root).count() == 500)
     assert(CosineDedupIndex.frozenMask(spark, root).contains(oldMask),
-      "unmarked stage must not change the mask")
-    // Readers leave the unmarked partial ALONE — deleting it could race
-    // a refreeze legitimately mid-stage in another session, whose later
-    // marker write would resurrect an empty stage. Only a fresh
-    // refreeze clears partials, before staging anew.
-    assert(Files.isDirectory(Paths.get(tmp)),
-      "readers must not delete an unmarked stage")
-    CosineDedupIndex.refreeze(spark, root)
-    CacheJanitor.drain()
-    assert(!Files.isDirectory(Paths.get(tmp)),
-      "a fresh refreeze clears the prior partial")
-    assert(CosineDedupIndex.frozenMask(spark, root).contains(newMask))
+      "an unmarked stage must not change the mask")
+    assert(buckets() == oldBuckets, "an unmarked stage must not change the codes")
 
-    // (b) Crash AFTER the marker but before any commit step: the next
-    // read completes the whole commit — new mask AND new codes together.
-    val live2 = CosineDedupIndex.readIndex(spark, root)
-    BatchLog.stageRewrite(CosineDedupIndex.encode(
-      live2.select(col("vec_id"), col("embedding")), newMask), s"$root/codes", tmp)
-    RefreezeProtocol.writeMarker(spark, tmp, newMask.toString)
-    CacheJanitor.drain()
-    val recovered = CosineDedupIndex.readIndex(spark, root)
+    // (b) The marker landing IS the commit: new mask and new codes
+    // resolve together.
+    VersionedState.writeMarker(VersionedState.fsOf(spark, codes), codes, 1)
     assert(CosineDedupIndex.frozenMask(spark, root).contains(newMask),
-      "marked stage must commit the new mask on recovery")
-    val wantBuckets = CosineDedupIndex.encode(
-      vecs, newMask).select("vec_id", "bucket").collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val gotBuckets = recovered.select("vec_id", "bucket").collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      "the marked version must carry the new mask")
+    val wantBuckets = CosineDedupIndex.encode(vecs, newMask).select("vec_id", "bucket")
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(buckets() == wantBuckets,
+      "committed codes must be the re-encoded ones — never old buckets under a new mask")
     CacheJanitor.drain()
-    assert(gotBuckets == wantBuckets,
-      "recovered codes must be the re-encoded ones — never old buckets under a new mask")
-    assert(!Files.isDirectory(Paths.get(tmp)))
   }
 
   test("IVF-SQ8 index: refreeze == from-scratch build over survivors; orphan stages are cleaned") {
@@ -142,15 +127,13 @@ class RefreezeSpec extends SparkSpec {
     AnnIndex.ingest(spark, fresh, survivors)
     CacheJanitor.drain()
     def codeSet(r0: String) = {
-      val b = AnnIndex.ingest(spark, r0,
-        vecs.where(lit(false))) // empty increment: read-back handle
-      b.allCodes.select("vec_id", "cell", "codes").collect()
+      AnnIndex.readCodes(spark, r0).select("vec_id", "cell", "codes").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getSeq[Long](2))).toSet
     }
     assert(codeSet(root) == codeSet(fresh),
       "refrozen codes must equal a from-scratch ingest of the survivors")
     CacheJanitor.drain()
-    assert(graft.operators.Tombstones.bytesOnDisk(spark, root) == 0L)
+    assert(graft.operators.Tombstones.bytesOnDisk(spark, s"$root/codes") == 0L)
     // The retrained quantizer equals the fresh root's (same training set,
     // deterministic k-means) — frozen-artifact parity. Read through the
     // family's resolution: since r19 a refrozen root's CURRENT quantizer
@@ -170,40 +153,6 @@ class RefreezeSpec extends SparkSpec {
     CacheJanitor.drain()
   }
 
-  test("a marker-only refreeze husk is abandoned — never swapped over live codes") {
-    val root = Files.createTempDirectory("graft_rf_husk").toString
-    CosineDedupIndex.ingest(spark, root, vecs.where(col("vec_id") < 200))
-    CacheJanitor.drain()
-    val before = CosineDedupIndex.readIndex(spark, root).count()
-    assert(before == 200)
-    // Adversarial state: the staged data was deleted out from under an
-    // in-flight refreeze, whose marker write then recreated the tmp dir
-    // holding ONLY the marker (fs.create auto-creates parents). A
-    // recovery that trusted the marker alone would swap this husk over
-    // the live codes and destroy the index.
-    val tmp = s"$root/codes.__refreeze_tmp"
-    Files.createDirectories(Paths.get(tmp))
-    Files.write(Paths.get(s"$tmp/${RefreezeProtocol.markerName}"),
-      "32".getBytes("UTF-8"))
-    val after = CosineDedupIndex.readIndex(spark, root).count()
-    assert(after == before, "a marker-only husk must never replace live codes")
-    assert(!Files.isDirectory(Paths.get(tmp)), "the husk must be dropped")
-    // Same guard on the quantized family.
-    val aroot = Files.createTempDirectory("graft_rf_husk_ann").toString
-    AnnIndex.ingest(spark, aroot, vecs.where(col("vec_id") < 200))
-    CacheJanitor.drain()
-    val ctmp = s"$aroot/codes.__refreeze_tmp"
-    Files.createDirectories(Paths.get(ctmp))
-    Files.write(Paths.get(s"$ctmp/${RefreezeProtocol.markerName}"),
-      "ann".getBytes("UTF-8"))
-    val q0 = vecs.where(col("vec_id") === 0)
-      .select(col("vec_id").as("query_id"), col("embedding"))
-    assert(AnnIndex.topK(spark, aroot, q0, k = 1).count() == 1,
-      "the index must keep answering")
-    assert(!Files.isDirectory(Paths.get(ctmp)))
-    CacheJanitor.drain()
-  }
-
   test("a crash DURING the centroids write reads as never trained, not a bricked quantizer") {
     val root = Files.createTempDirectory("graft_rf_qpartial").toString
     // Crash state: the centroids directory exists but holds only
@@ -213,9 +162,8 @@ class RefreezeSpec extends SparkSpec {
     Files.createDirectories(Paths.get(s"$root/quantizer/centroids/_temporary"))
     Files.write(Paths.get(s"$root/quantizer/centroids/_temporary/part-x"),
       "partial".getBytes("UTF-8"))
-    val b = AnnIndex.ingest(spark, root, vecs.where(col("vec_id") < 100),
-      batchKey = Some("b1"))
-    assert(b.allCodes.count() == 100, "the first batch must retrain over the partial")
+    AnnIndex.ingest(spark, root, vecs.where(col("vec_id") < 100), batchKey = Some("b1"))
+    assert(AnnIndex.readCodes(spark, root).count() == 100, "the first batch must retrain over the partial")
     CacheJanitor.drain()
   }
 
@@ -240,8 +188,8 @@ class RefreezeSpec extends SparkSpec {
     rmrf(Paths.get(s"$crashed/quantizer/centroids"))
     rmrf(Paths.get(s"$crashed/codes"))
     // The replayed first batch retrains and lands the identical state.
-    val b = AnnIndex.ingest(spark, crashed, vecs.where(col("vec_id") < 100), batchKey = Some("b1"))
-    assert(b.allCodes.count() == 100)
+    AnnIndex.ingest(spark, crashed, vecs.where(col("vec_id") < 100), batchKey = Some("b1"))
+    assert(AnnIndex.readCodes(spark, crashed).count() == 100)
     def slurp(r0: String, t: String) = spark.read.parquet(s"$r0/quantizer/$t")
       .collect().map(_.toString).sorted.toSeq
     assert(slurp(crashed, "centroids") == slurp(clean, "centroids"))
@@ -264,13 +212,12 @@ class RefreezeSpec extends SparkSpec {
     PqIndex.ingest(spark, fresh, vecs.where(!col("vec_id").isin(5L, 17L)))
     CacheJanitor.drain()
     def codeSet(r0: String) = {
-      val b = PqIndex.ingest(spark, r0, vecs.where(lit(false)))
-      b.allCodes.select("vec_id", "cell", "codes").collect()
+      PqIndex.readCodes(spark, r0).select("vec_id", "cell", "codes").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getSeq[Long](2))).toSet
     }
     assert(codeSet(root) == codeSet(fresh),
       "refrozen PQ codes must equal a from-scratch ingest of the survivors")
-    assert(graft.operators.Tombstones.bytesOnDisk(spark, root) == 0L)
+    assert(graft.operators.Tombstones.bytesOnDisk(spark, s"$root/codes") == 0L)
     CacheJanitor.drain()
   }
 }

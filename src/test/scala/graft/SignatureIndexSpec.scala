@@ -47,7 +47,7 @@ class SignatureIndexSpec extends SparkSpec {
     val b2 = SignatureIndex.ingest(spark, root, docs(batchB: _*))
     // The increment side is exactly batch B — no corpus recompute.
     assert(b2.newSigs.count() == batchB.size)
-    assert(b2.allSigs.count() == 3 + batchB.size)
+    assert(SignatureIndex.readIndex(spark, root).count() == 3 + batchB.size)
     CacheJanitor.drain()
     // Append-only: every batch-1 file still present, byte-untouched.
     val filesAfter2 = parquetFiles(java.nio.file.Paths.get(root))
@@ -67,7 +67,7 @@ class SignatureIndexSpec extends SparkSpec {
     val b2 = SignatureIndex.ingest(spark, root, docs(batchB: _*))
     val d2 = pairSet(b2.deltaPairs)
     // From-scratch: deltaPairs(all, all) IS the t35 batch pipeline.
-    val full = pairSet(SignatureIndex.deltaPairs(b2.allSigs, b2.allSigs))
+    val full = pairSet(SignatureIndex.deltaPairs(SignatureIndex.readIndex(spark, root), SignatureIndex.readIndex(spark, root)))
     CacheJanitor.drain()
 
     assert(d1 == Set((1L, 2L)))
@@ -96,8 +96,8 @@ class SignatureIndexSpec extends SparkSpec {
     // Call the indexed path DIRECTLY: ingest's size switch would route a
     // corpus this small to the frame path, and the equality would test
     // nothing.
-    val fast = pairMap(SignatureIndex.deltaPairsIndexed(spark, root, "signatures", b2.newSigs))
-    val truth = pairMap(SignatureIndex.deltaPairs(b2.allSigs, b2.newSigs))
+    val fast = pairMap(SignatureIndex.deltaPairsIndexed(spark, root, b2.newSigs))
+    val truth = pairMap(SignatureIndex.deltaPairs(SignatureIndex.readIndex(spark, root), b2.newSigs))
     CacheJanitor.drain()
     assert(fast.nonEmpty && fast == truth, s"fast $fast != frame $truth")
   }
@@ -114,8 +114,8 @@ class SignatureIndexSpec extends SparkSpec {
     CacheJanitor.drain()
     SignatureIndex.remove(spark, root, (20L to 25L))
     val b2 = SignatureIndex.ingest(spark, root, docs(26L -> text), batchKey = Some("b2"))
-    val fast = pairMap(SignatureIndex.deltaPairsIndexed(spark, root, "signatures", b2.newSigs))
-    val truth = pairMap(SignatureIndex.deltaPairs(b2.allSigs, b2.newSigs))
+    val fast = pairMap(SignatureIndex.deltaPairsIndexed(spark, root, b2.newSigs))
+    val truth = pairMap(SignatureIndex.deltaPairs(SignatureIndex.readIndex(spark, root), b2.newSigs))
     CacheJanitor.drain()
     assert(fast == truth, s"fast $fast != frame $truth")
     assert(fast.keySet == (1L to 19L).map(i => (i, 26L)).toSet, fast)
@@ -136,8 +136,8 @@ class SignatureIndexSpec extends SparkSpec {
     assert(!SignatureIndex.derivedCovered(spark, root),
       "a gapped cache must fail the coverage check")
     val b2 = SignatureIndex.ingest(spark, root, docs(batchB: _*), batchKey = Some("b2"))
-    val fast = pairMap(SignatureIndex.deltaPairsIndexed(spark, root, "signatures", b2.newSigs))
-    val truth = pairMap(SignatureIndex.deltaPairs(b2.allSigs, b2.newSigs))
+    val fast = pairMap(SignatureIndex.deltaPairsIndexed(spark, root, b2.newSigs))
+    val truth = pairMap(SignatureIndex.deltaPairs(SignatureIndex.readIndex(spark, root), b2.newSigs))
     CacheJanitor.drain()
     assert(SignatureIndex.derivedCovered(spark, root),
       "the next ingest must heal the cache")
@@ -148,7 +148,7 @@ class SignatureIndexSpec extends SparkSpec {
     val root = Files.createTempDirectory("graft_sigidx_degenerate").toString
     val b = SignatureIndex.ingest(spark, root, docs(7L -> "short doc"), batchKey = Some("b1"))
     assert(b.newSigs.count() == 0)
-    val fast = SignatureIndex.deltaPairsIndexed(spark, root, "signatures", b.newSigs)
+    val fast = SignatureIndex.deltaPairsIndexed(spark, root, b.newSigs)
     assert(fast.count() == 0)
     assert(fast.columns.toSeq == Seq("doc_a", "doc_b", "jaccard"))
     CacheJanitor.drain()
@@ -162,8 +162,8 @@ class SignatureIndexSpec extends SparkSpec {
     CacheJanitor.drain()
     // Crash-retry shape: batch b2 lands again.
     val b2r = SignatureIndex.ingest(spark, root, docs(batchB: _*), batchKey = Some("b2"))
-    val fast = pairMap(SignatureIndex.deltaPairsIndexed(spark, root, "signatures", b2r.newSigs))
-    val truth = pairMap(SignatureIndex.deltaPairs(b2r.allSigs, b2r.newSigs))
+    val fast = pairMap(SignatureIndex.deltaPairsIndexed(spark, root, b2r.newSigs))
+    val truth = pairMap(SignatureIndex.deltaPairs(SignatureIndex.readIndex(spark, root), b2r.newSigs))
     CacheJanitor.drain()
     assert(fast == truth, s"replayed fast $fast != frame $truth")
     // df must not have double-counted the replayed batch: a doubled df
@@ -194,8 +194,8 @@ class SignatureIndexSpec extends SparkSpec {
       8L -> "thunder over iceland wakes the glacier birds at dawn sometimes",
       10L -> "another unrelated document with entirely distinct words inside")
     val b2r = SignatureIndex.ingest(spark, root, docs(divergent: _*), batchKey = Some("b2"))
-    val fast = pairMap(SignatureIndex.deltaPairsIndexed(spark, root, "signatures", b2r.newSigs))
-    val truth = pairMap(SignatureIndex.deltaPairs(b2r.allSigs, b2r.newSigs))
+    val fast = pairMap(SignatureIndex.deltaPairsIndexed(spark, root, b2r.newSigs))
+    val truth = pairMap(SignatureIndex.deltaPairs(SignatureIndex.readIndex(spark, root), b2r.newSigs))
     CacheJanitor.drain()
     assert(fast == truth, s"divergent-replay fast $fast != frame $truth")
     assert(fast.keySet.contains((5L, 10L)), fast)
@@ -205,12 +205,12 @@ class SignatureIndexSpec extends SparkSpec {
 
   test("tombstone side-table size probe: 0 when absent, >0 after appends (the broadcast-gate input)") {
     val root = Files.createTempDirectory("graft_sigidx_tombsize").toString
-    assert(graft.operators.Tombstones.bytesOnDisk(spark, root) == 0L)
+    assert(graft.operators.Tombstones.bytesOnDisk(spark, s"$root/signatures") == 0L)
     SignatureIndex.ingest(spark, root, docs(batchA: _*), batchKey = Some("b1"))
     CacheJanitor.drain()
     SignatureIndex.remove(spark, root, Seq(1L, 2L))
-    assert(graft.operators.Tombstones.bytesOnDisk(spark, root) > 0L)
-    assert(graft.operators.Tombstones.bytesOnDisk(spark, root) <=
+    assert(graft.operators.Tombstones.bytesOnDisk(spark, s"$root/signatures") > 0L)
+    assert(graft.operators.Tombstones.bytesOnDisk(spark, s"$root/signatures") <=
       SignatureIndex.tombstoneBroadcastMaxBytes,
       "a 2-id side table must stay far under the broadcast bound")
   }
@@ -254,7 +254,7 @@ class SignatureIndexSpec extends SparkSpec {
     val rebuilt = sigSet(SignatureIndex.signatures(docs(surviving: _*)))
     assert(sigSet(spark.read.parquet(graft.operators.BatchLog.resolve(spark, s"$root/signatures"))) == rebuilt,
       "compacted snapshot must equal a from-scratch build on the surviving set")
-    assert(graft.operators.Tombstones.bytesOnDisk(spark, root) == 0L,
+    assert(graft.operators.Tombstones.bytesOnDisk(spark, s"$root/signatures") == 0L,
       "compaction must clear the tombstone table (empty current version)")
     // Post-compaction reads no longer depend on the side table.
     assert(SignatureIndex.readIndex(spark, root).count() == rebuilt.size)
@@ -285,8 +285,8 @@ class SignatureIndexSpec extends SparkSpec {
     SignatureIndex.ingest(spark, root, docs(batchA: _*), batchKey = Some("b1"))
     CacheJanitor.drain()
     val b2 = SignatureIndex.ingest(spark, root, docs(batchDisjoint: _*), batchKey = Some("b2"))
-    val pairs = SignatureIndex.deltaPairsIndexed(spark, root, "signatures", b2.newSigs)
-    val truth = pairMap(SignatureIndex.deltaPairs(b2.allSigs, b2.newSigs))
+    val pairs = SignatureIndex.deltaPairsIndexed(spark, root, b2.newSigs)
+    val truth = pairMap(SignatureIndex.deltaPairs(SignatureIndex.readIndex(spark, root), b2.newSigs))
     assert(pairMap(pairs) == truth && truth.keySet == Set((21L, 22L)),
       "pruned fast path must still equal the frame recompute")
     val k1 = graft.operators.BatchLog.sanitize("b1")
@@ -316,8 +316,8 @@ class SignatureIndexSpec extends SparkSpec {
       spark, SignatureIndex.dfDir(root)).toSet == sigKeys.toSet)
     // A disjoint increment skips the fold's posting/signature dirs...
     val b3 = SignatureIndex.ingest(spark, root, docs(batchDisjoint: _*), batchKey = Some("b3"))
-    val pairs = SignatureIndex.deltaPairsIndexed(spark, root, "signatures", b3.newSigs)
-    assert(pairMap(pairs) == pairMap(SignatureIndex.deltaPairs(b3.allSigs, b3.newSigs)))
+    val pairs = SignatureIndex.deltaPairsIndexed(spark, root, b3.newSigs)
+    assert(pairMap(pairs) == pairMap(SignatureIndex.deltaPairs(SignatureIndex.readIndex(spark, root), b3.newSigs)))
     val foldKey = sigKeys.head
     val files = scanFiles(pairs)
     assert(!files.exists(_.contains(s"signatures_postings/batch_key=$foldKey")),
@@ -330,8 +330,8 @@ class SignatureIndexSpec extends SparkSpec {
     val b4 = SignatureIndex.ingest(spark, root,
       docs(10L -> "the quick brown fox jumps over the lazy dog tonight"),
       batchKey = Some("b4"))
-    val d4 = pairMap(SignatureIndex.deltaPairsIndexed(spark, root, "signatures", b4.newSigs))
-    assert(d4 == pairMap(SignatureIndex.deltaPairs(b4.allSigs, b4.newSigs)))
+    val d4 = pairMap(SignatureIndex.deltaPairsIndexed(spark, root, b4.newSigs))
+    assert(d4 == pairMap(SignatureIndex.deltaPairs(SignatureIndex.readIndex(spark, root), b4.newSigs)))
     assert(d4.keySet.exists { case (a, b) => b == 10L && a <= 4L },
       s"new-vs-old pair through the fold must survive pruning: $d4")
     CacheJanitor.drain()

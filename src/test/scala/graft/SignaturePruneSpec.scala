@@ -150,9 +150,9 @@ class SignaturePruneSpec extends SparkSpec {
     // Increment appends stay FLAT — the LSM shape.
     assert(BatchLog.partitionedKeys(spark, dfLog, SignatureIndex.hgrpCol) == Set(k1))
 
-    val pairs = SignatureIndex.deltaPairsIndexed(spark, root, "signatures",
+    val pairs = SignatureIndex.deltaPairsIndexed(spark, root,
       b2.newSigs, Some(BatchLog.sanitize("b2")))
-    val truth = pairMap(SignatureIndex.deltaPairs(b2.allSigs, b2.newSigs))
+    val truth = pairMap(SignatureIndex.deltaPairs(SignatureIndex.readIndex(spark, root), b2.newSigs))
     assert(pairMap(pairs) == truth,
       "pruned indexed path must equal the frame recompute exactly")
     assert(truth.contains((7L, 9001L)),
@@ -198,10 +198,10 @@ class SignaturePruneSpec extends SparkSpec {
     val b3 = SignatureIndex.ingest(spark, root,
       corpus(Seq(9003L), _ => uniqueText(7L).split(" ").init.mkString(" ") + " altered"),
       batchKey = Some("b3"))
-    val pairs3 = SignatureIndex.deltaPairsIndexed(spark, root, "signatures",
+    val pairs3 = SignatureIndex.deltaPairsIndexed(spark, root,
       b3.newSigs, Some(BatchLog.sanitize("b3")))
     val p3 = pairMap(pairs3)
-    assert(p3 == pairMap(SignatureIndex.deltaPairs(b3.allSigs, b3.newSigs)))
+    assert(p3 == pairMap(SignatureIndex.deltaPairs(SignatureIndex.readIndex(spark, root), b3.newSigs)))
     assert(p3.keySet.contains((7L, 9003L)) && p3.keySet.contains((9001L, 9003L)),
       s"near-dup pairs through the re-fold must survive pruning: ${p3.keySet}")
     // dgrp verify pin: the signature fold contributes exactly the
@@ -245,9 +245,9 @@ class SignaturePruneSpec extends SparkSpec {
       if (i == 8000L) uniqueText(5L).split(" ").init.mkString(" ") + " changed"
       else uniqueText(i))
     val bb = SignatureIndex.ingest(spark, root, bulk, batchKey = Some("bb"))
-    val pairsB = SignatureIndex.deltaPairsIndexed(spark, root, "signatures",
+    val pairsB = SignatureIndex.deltaPairsIndexed(spark, root,
       bb.newSigs, Some(BatchLog.sanitize("bb")))
-    assert(pairMap(pairsB) == pairMap(SignatureIndex.deltaPairs(bb.allSigs, bb.newSigs)))
+    assert(pairMap(pairsB) == pairMap(SignatureIndex.deltaPairs(SignatureIndex.readIndex(spark, root), bb.newSigs)))
     assert(pairMap(pairsB).keySet.contains((5L, 8000L)))
     assert(scannedFiles(pairsB, "signatures_dfcounts") == occDf.size + 1L,
       "a saturating probe set must take the full df read")
@@ -262,9 +262,9 @@ class SignaturePruneSpec extends SparkSpec {
       BatchLog.dirOfResolved(spark, dfLog, k1), SignatureIndex.hgrpSidecarName), false))
     val tiny = corpus(Seq(9100L), _ => uniqueText(6L).split(" ").init.mkString(" ") + " shifted")
     val bt = SignatureIndex.ingest(spark, root, tiny, batchKey = Some("bt"))
-    val pairsT = SignatureIndex.deltaPairsIndexed(spark, root, "signatures",
+    val pairsT = SignatureIndex.deltaPairsIndexed(spark, root,
       bt.newSigs, Some(BatchLog.sanitize("bt")))
-    assert(pairMap(pairsT) == pairMap(SignatureIndex.deltaPairs(bt.allSigs, bt.newSigs)))
+    assert(pairMap(pairsT) == pairMap(SignatureIndex.deltaPairs(SignatureIndex.readIndex(spark, root), bt.newSigs)))
     assert(pairMap(pairsT).keySet.contains((6L, 9100L)))
     assert(scannedFiles(pairsT, "signatures_dfcounts") >= occDf.size + 2L,
       "an un-sidecarred fold must be read in full (no pruning)")

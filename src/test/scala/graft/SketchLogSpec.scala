@@ -82,37 +82,40 @@ class SketchLogSpec extends SparkSpec {
 
   test("compact and ingest leave a sibling operator's tombstone table untouched") {
     // The table param invites co-locating the sketch log under an index
-    // root; a commit/recovery that cleared root/tombstones would
+    // root; a commit that cleared the index log's tombstones would
     // silently resurrect the index's removed ids.
     val root = Files.createTempDirectory("graft_sklog").toString
-    graft.operators.Tombstones.append(root, Seq(99L).toDF("doc_id"), "doc_id")
+    val sibling = s"$root/signatures"
+    graft.operators.Tombstones.append(sibling, Seq(99L).toDF("doc_id"), "doc_id")
     SketchLog.ingest(spark, root, events(batchA: _*), "event_type", "user_id",
       batchKey = Some("b1"))
     SketchLog.compact(spark, root, "event_type")
     SketchLog.rebuild(spark, root, events(batchA: _*), "event_type", "user_id")
     val ids = graft.operators.Tombstones
-      .read(spark, root, "doc_id").collect().map(_.getLong(0)).toSet
+      .read(spark, graft.operators.BatchLog.resolve(spark, sibling), "doc_id")
+      .collect().map(_.getLong(0)).toSet
     assert(ids === Set(99L), "sketch-log maintenance must not clear a sibling's tombstones")
   }
 
-  test("an ingest landing inside a crashed compaction swap adopts the staged fold first") {
+  test("an ingest after a crashed compaction lands on the committed log") {
     val root = Files.createTempDirectory("graft_sklog").toString
     SketchLog.ingest(spark, root, events(batchA: _*), "event_type", "user_id",
       batchKey = Some("b1"))
     val before = estimates(root)
-    // Simulate the swap window: fold fully staged, intent up, crash
-    // before the rename.
+    // A compaction that crashed before its commit marker: the fold
+    // (batch A only) complete in the unmarked next version. The ingest
+    // must append batch B to the committed version, and the re-run
+    // compaction must fold both.
     val path = java.nio.file.Paths.get(root, "sketches")
     val folded = graft.operators.BatchLog.read(spark, path.toString, "SketchLog")
-    SwapCrash.beforeRename(spark, path.toString, folded, clears = None)
-    // Without recovery-first this ingest would append batch B to the
-    // old state, and the next reader's recovery would commit the staged
-    // fold (batch A only) over it.
+    SparkSpec.crashedStage(spark, path.toString, folded)
     SketchLog.ingest(spark, root, events(batchB: _*), "event_type", "user_id",
       batchKey = Some("b2"))
-    assert(estimates(root) === Map(
-      "click" -> ((3L, 5L)), "view" -> ((3L, 4L)), "buy" -> ((1L, 1L))))
+    val want = Map("click" -> ((3L, 5L)), "view" -> ((3L, 4L)), "buy" -> ((1L, 1L)))
+    assert(estimates(root) === want)
     assert(before.keySet.subsetOf(estimates(root).keySet))
+    SketchLog.compact(spark, root, "event_type")
+    assert(estimates(root) === want, "the re-run compaction must fold both batches")
   }
 
   test("rebuild swaps in survivors-only sketches (the deletion escape hatch)") {

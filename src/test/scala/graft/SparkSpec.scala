@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.operators.{BatchLog, VersionedState}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -24,5 +25,15 @@ object SparkSpec {
       case (k, Some(v)) => sys.props(k) = v
       case (k, None) => sys.props -= k
     }
+  }
+
+  /** The on-disk state of a rewrite of the log at `dest` that crashed
+    * before its commit marker: `fold` written into the unmarked next
+    * version. Returns that version's directory. */
+  def crashedStage(spark: SparkSession, dest: String, fold: DataFrame,
+      partitionBy: Seq[String] = Nil): String = {
+    val (_, stage) = VersionedState.stage(VersionedState.fsOf(spark, dest), dest)
+    BatchLog.stageRewrite(fold, dest, stage, partitionBy, Map.empty)
+    stage
   }
 }

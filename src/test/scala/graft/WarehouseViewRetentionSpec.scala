@@ -75,4 +75,54 @@ class WarehouseViewRetentionSpec extends SparkSpec {
         missing(t.getCause))
     assert(missing(e), s"zero grace must fail LOUD (missing file), got: $e")
   }
+
+  /** Three batches: address changes in every one, currency only in the
+    * first two. */
+  private def sweepSources(v: Int): Map[String, DataFrame] = {
+    val addr = addressSrc(math.min(v, 2)).union(
+      if (v >= 3) Seq((23, "9 Beta Rd", "Unit 5", "East", "York", "YO1", "UK", "222",
+        ts("2025-09-01 12:30:00"))).toDF(addressSrc(1).columns.toSeq: _*)
+      else addressSrc(1).limit(0))
+    val cur = Seq((1, "GBP", ts("2025-09-01 08:00:00"))) ++
+      (if (v >= 2) Seq((2, "USD", ts("2025-09-01 11:00:00"))) else Nil)
+    Map("address" -> addr,
+      "currency" -> cur.toDF("currency_id", "currency_code", "last_updated"))
+  }
+
+  /** Versions of the star table `dim-currency` and of the source
+    * current `_sources/currency` on disk (the latter only where the
+    * runner keeps currents). */
+  private def versionDirs(dir: String): Int = {
+    val p = java.nio.file.Paths.get(dir, "_versions")
+    if (!Files.isDirectory(p)) 0 else Files.list(p).count().toInt
+  }
+
+  // Each runner with the name its batch reports for dim-currency
+  // (MergeRunner: the snapshot; Runner: the loaded warehouse table).
+  for ((name, currency, run) <- Seq[(String, String, (String, Int) => Seq[String])](
+    ("MergeRunner", "dim-currency", { (root, v) =>
+      MergeRunner.runOnce(spark, sweepSources(v), s"$root/landing", s"$root/processed",
+        s"$root/state/tracking.json", sweepBatchIds(v - 1)) }),
+    ("Runner", "currency", { (root, v) =>
+      Runner.runOnce(spark, sweepSources(v), s"$root/landing", s"$root/processed",
+        s"$root/warehouse", s"$root/state/tracking.json", sweepBatchIds(v - 1)) })))
+    test(s"$name: a batch sweeps the superseded version of a table it does not touch") {
+      val root = Files.createTempDirectory(s"graft_sweep_$name").toString
+      val dim = s"$root/processed/dim-currency"
+      run(root, 1); CacheJanitor.drain()
+      assert(run(root, 2).contains(currency)); CacheJanitor.drain()
+      assert(versionDirs(dim) == 2, "the default grace keeps the superseded version")
+      SparkSpec.withProps("graft.swap.grace.ms" -> "0") {
+        assert(!run(root, 3).contains(currency), "batch 3 must not touch currency")
+      }
+      CacheJanitor.drain()
+      assert(versionDirs(dim) == 1,
+        "past grace, the batch's sweep must drop dim-currency's superseded version")
+      if (name == "MergeRunner")
+        assert(versionDirs(s"$root/processed/_sources/currency") == 1,
+          "the sweep must cover the source currents too")
+    }
+
+  private val sweepBatchIds =
+    Seq("2025-09-01 10:00:00.000", "2025-09-01 11:30:00.000", "2025-09-01 13:00:00.000")
 }
